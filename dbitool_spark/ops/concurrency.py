@@ -1,8 +1,8 @@
 """Driver-thread overlap for independent eager legs of composite
-entries (r16 optimization round; guide §2.6: Spark's scheduler happily
-runs several jobs at once — legs are only sequential because the
-driver calls them sequentially, and each streaming drain / staged
-write serializes republish jobs, query starts and micro-batch waits).
+entries. Spark's scheduler runs several jobs at once; legs are only
+sequential because the driver calls them sequentially, and each
+streaming drain / staged write serializes republish jobs, query starts
+and micro-batch waits.
 
 Correctness contract: ONLY for legs that are independent by
 construction — each must own its scratch/checkpoint/sink namespace
@@ -21,22 +21,15 @@ from pyspark.sql import DataFrame, SparkSession
 def run_parallel(
     spark: SparkSession,
     tagged_thunks: list[tuple[str, Callable[[], DataFrame]]],
-    *,
-    shuffle_partitions: str | int | None = None,
 ) -> dict[str, DataFrame]:
     """Run the thunks on InheritableThreads; return {tag: result}.
     Leg failures re-raise AFTER every thread has joined (no orphaned
     streams/writes): one failure re-raises as itself, several raise
-    together as an ExceptionGroup so no sibling's diagnostics are
-    lost (ADVICE r16).
+    together as a BaseExceptionGroup so no leg's diagnostics are lost.
 
-    shuffle_partitions: when set, spark.sql.shuffle.partitions is
-    pinned around the whole region so a leg whose own set/restore
-    races another thread's still sees the value it wanted (callers
-    that scope state partitioning per-drain all use the same value —
-    the race is benign-by-value, the pin makes it invariant;
-    StreamExecution additionally clones the session per query).
-    Restored in a finally."""
+    Legs share `spark` and must not change its conf: a leg that needs
+    its own SQL conf (the streaming drains' state partitions) runs in
+    a child session (session.drain_session)."""
     from pyspark import InheritableThread
 
     results: dict[str, DataFrame] = {}
@@ -48,29 +41,16 @@ def run_parallel(
         except BaseException as exc:  # joined + re-raised below
             errors.append(exc)
 
-    prev = (
-        spark.conf.get("spark.sql.shuffle.partitions")
-        if shuffle_partitions is not None
-        else None
-    )
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        threads = [
-            InheritableThread(target=_run, args=(tag, thunk))
-            for tag, thunk in tagged_thunks
-        ]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+    threads = [
+        InheritableThread(target=_run, args=(tag, thunk))
+        for tag, thunk in tagged_thunks
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
     if errors:
         if len(errors) > 1:
-            # a multi-leg failure must not silently discard the
-            # sibling legs' diagnostics (ADVICE r16)
             raise BaseExceptionGroup(
                 f"{len(errors)} parallel legs failed", errors
             )

@@ -13,13 +13,14 @@ import os
 import shutil
 import tempfile
 import threading
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbitool_spark import catalog
 from dbitool_spark.ndb import NdbTable
+from dbitool_spark.ops.concurrency import run_parallel
+from dbitool_spark.session import drain_session
 
 
 # sentinel: the pid's /proc entry EXISTS but is unreadable (hidepid
@@ -366,25 +367,6 @@ ORDER BY kind, user_id
 """
 
 
-def _run_parallel_entries(
-    spark: SparkSession,
-    tagged_thunks: list[tuple[str, Callable[[], DataFrame]]],
-    *,
-    state_partitions: int | None = None,
-) -> dict[str, DataFrame]:
-    """Streaming-entry wrapper over ops.concurrency.run_parallel —
-    independent drains own their scratch/checkpoint/sink namespaces
-    via _scratch_dir's per-thread leaf and uuid-named memory sinks, so
-    overlapping them changes job interleaving, never a query's own
-    micro-batch boundaries or values (the contract is documented on
-    run_parallel)."""
-    from dbitool_spark.ops.concurrency import run_parallel
-
-    return run_parallel(
-        spark, tagged_thunks, shuffle_partitions=state_partitions
-    )
-
-
 def _drain_streaming_entry(
     spark: SparkSession,
     sf_dir: str,
@@ -394,33 +376,35 @@ def _drain_streaming_entry(
     schema: str,
     plan,
     output_mode: str,
-    state_partitions: int = 8,
     src_files: int | None = None,
     max_files_per_trigger: int = 4,
 ) -> DataFrame:
     """Shared scaffold of every streaming driver entry (one place to
-    fix, five entries that can't drift): drop the previous call's
-    memory-sink views for this prefix, re-publish the source as NDJSON
+    fix, entries that can't drift): re-publish the source as NDJSON
     in the per-(query, sf, pid, thread) scratch dir, consume it as a
     file-watch stream with bounded triggers (maxFilesPerTrigger=4 —
     the reference's --streamsize backpressure knob), apply `plan` to
-    the stream, drain with trigger=availableNow into a uuid-named
-    memory table, and return it as a DataFrame. drain_to_memory raises
-    on an expired drain, so a partial sink can never read as a
-    result.
+    the stream, drain with trigger=availableNow into a memory table,
+    and return it as a DataFrame. drain_to_memory raises on an expired
+    drain, so a partial sink can never read as a result.
 
-    state_partitions scopes spark.sql.shuffle.partitions around the
-    drain (restored in a finally). Streaming state cost scales with
-    the partition count, not the data — every stateful operator opens
-    one state store per shuffle partition per state type (a
-    stream-stream join opens FOUR per partition), so a sub-second
-    drain at 32 partitions pays 128 store setups for a handful of
-    rows each (measured 6.1s -> 2.7s on the interval-join entry at
-    sf0.1). This is the streaming analogue of AQE partition
-    coalescing, which does not apply to stateful streaming plans:
-    state partitioning is fixed at query start. A production
-    continuous run sizes the same knob to cluster parallelism x state
-    volume instead.
+    The stream is built in a per-call child session
+    (session.drain_session), so the query runs with
+    session.STATE_PARTITIONS (8) shuffle partitions while the caller's
+    spark.sql.shuffle.partitions never changes, and concurrent drains
+    (run_parallel legs) cannot race on it. `plan` may join parent-
+    session frames. The memory table is a temp view of the child, so
+    it is invisible to `spark` and lives as long as the returned
+    frame; the returned frame and anything derived from it run under
+    the child's conf. Streaming state cost scales with the partition
+    count, not the data — every stateful operator opens one state
+    store per shuffle partition per state type (a stream-stream join
+    opens FOUR per partition), so a sub-second drain at 32 partitions
+    pays 128 store setups for a handful of rows each (measured 6.1s ->
+    2.7s on the interval-join entry at sf0.1). AQE partition
+    coalescing does not apply to stateful streaming plans: state
+    partitioning is fixed at query start. A production continuous run
+    sizes the same knob to cluster parallelism x state volume instead.
 
     src_files (r15, STATELESS entries only): republish the source as
     this many NDJSON files instead of the source frame's own
@@ -448,32 +432,20 @@ def _drain_streaming_entry(
     interleaves event time across files, so an early batch's
     watermark would discard later rows as late), so their republish
     stays exactly as written."""
-    import uuid
-
     from dbitool_spark import streaming
     from dbitool_spark.io import json_io
 
-    # bounded-lifetime contract: memory-sink tables from EARLIER calls
-    # are dropped here (the current call's table must outlive the
-    # return, so each call cleans up its predecessor's)
-    for t in spark.catalog.listTables():
-        if t.name.startswith(prefix):
-            spark.catalog.dropTempView(t.name)
-    src = os.path.join(_scratch_dir(prefix.rstrip("_"), sf_dir), "ndjson")
+    name = prefix.rstrip("_")
+    src = os.path.join(_scratch_dir(name, sf_dir), "ndjson")
     if src_files is not None:
         source_df = source_df.repartition(src_files)
     json_io.write_ndjson(source_df, src)
+    child = drain_session(spark)
     stream = streaming.stream_ndjson(
-        spark, src, schema, max_files_per_trigger=max_files_per_trigger
+        child, src, schema, max_files_per_trigger=max_files_per_trigger
     )
-    name = f"{prefix}{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        streaming.drain_to_memory(plan(stream), name, output_mode=output_mode)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(name)
+    streaming.drain_to_memory(plan(stream), name, output_mode=output_mode)
+    return child.table(name)
 
 
 
@@ -661,26 +633,20 @@ def streaming_hourly_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = events_ops.events_hourly_stats(spark, sf_dir).select(
         F.lit("batch").alias("variant"), "hour", "event_type", "n", "sum_value"
     )
-    # r16 optimization round (guide §2.6 — overlap independent jobs):
-    # the two drains are independent end to end (own scratch dirs via
-    # _scratch_dir's per-thread leaf, own checkpoints, own uuid-named
-    # memory sinks, different prefixes), and each one serializes a
-    # republish job, a stream start, and micro-batch waits — so run
-    # them from two driver threads and let the scheduler back-fill.
-    # Each query's OWN file set and trigger cap are unchanged, so the
-    # per-query micro-batch boundaries — and therefore the emitted
-    # sets — are exactly the sequential run's. The shuffle-partition
-    # conf both inner calls scope to 8 is pinned to 8 around the whole
-    # region (they then set/restore 8 -> 8, so the thread race on the
-    # session conf is benign-by-value); the batch variant is lazy and
-    # computes later under the caller's restored conf.
-    drained = _run_parallel_entries(
+    # The two drains are independent end to end (own scratch dirs via
+    # _scratch_dir's per-thread leaf, own child sessions and memory
+    # sinks), and each one serializes a republish job, a stream start,
+    # and micro-batch waits — so run them from two driver threads and
+    # let the scheduler back-fill. Each query's OWN file set and
+    # trigger cap are unchanged, so the per-query micro-batch
+    # boundaries — and therefore the emitted sets — are exactly the
+    # sequential run's.
+    drained = run_parallel(
         spark,
         [
             ("complete", lambda: streaming_hourly_stats_events(spark, sf_dir)),
             ("append", lambda: streaming_hourly_append_events(spark, sf_dir)),
         ],
-        state_partitions=8,
     )
     complete = drained["complete"].select(
         F.lit("complete").alias("variant"), "hour", "event_type", "n", null_sum
@@ -979,7 +945,10 @@ def streaming_lsh_near_dup_documents(spark: SparkSession, sf_dir: str) -> DataFr
     corpus = _perturbed_corpus(docs)
     scratch = _scratch_dir("streaming_lsh_near_dup", sf_dir)
     src = os.path.join(scratch, "ndjson")
-    index = NdbTable(spark, os.path.join(scratch, "lsh_index"), key="bucket", n_buckets=8)
+    # the drain and its per-batch index merges run in a child session
+    # with the drains' state partitioning (see _drain_streaming_entry)
+    child = drain_session(spark)
+    index = NdbTable(child, os.path.join(scratch, "lsh_index"), key="bucket", n_buckets=8)
     flags_dir = os.path.join(scratch, "flags")
 
     from dbitool_spark.ops import scale as _scale
@@ -1011,7 +980,7 @@ def streaming_lsh_near_dup_documents(spark: SparkSession, sf_dir: str) -> DataFr
         # minimum that proves cross-batch index increments.
         json_io.write_ndjson(corpus.coalesce(4), src)
         stream = streaming.stream_ndjson(
-            spark, src, "doc_id long, text string", max_files_per_trigger=2
+            child, src, "doc_id long, text string", max_files_per_trigger=2
         )
         streaming.stream_near_dup_lsh(
             stream, "doc_id", "text",
@@ -1034,14 +1003,8 @@ def streaming_lsh_near_dup_documents(spark: SparkSession, sf_dir: str) -> DataFr
         b.count()
         return b
 
-    # shuffle partitions pinned to the drain's state partitioning (8)
-    # around the region — the value the drain scoped for itself before
-    # (the streaming_hourly_composite pattern); the parity leg's
-    # aggregates are partition-invariant.
-    legs = _run_parallel_entries(
-        spark,
-        [("drain", _drain_leg), ("parity", _parity_leg)],
-        state_partitions=8,
+    legs = run_parallel(
+        spark, [("drain", _drain_leg), ("parity", _parity_leg)]
     )
 
     def _mismatches(a: str, b: str, alias: str):
@@ -1332,15 +1295,13 @@ def streaming_rollup_ndb_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id bigint, event_type string, ts_us bigint, value decimal(18,6)",
         max_files_per_trigger=2,
     )
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    streaming._drain(
+        stream.writeStream.foreachBatch(merge_batch).option(
+            "checkpointLocation", ckpt
+        ),
+        "of the ndb rollup stream",
+        300,
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("availableNow rollup stream did not finish in 300s")
     return (
         table.replay()
         .filter(F.col("rollup_key") != _ROLLUP_WATERMARK_KEY)

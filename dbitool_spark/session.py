@@ -66,19 +66,39 @@ def get_session(app_name: str = "dbitool_spark", cpus: str | None = None) -> Spa
 
 def _apply_runtime_confs(spark: SparkSession) -> None:
     """Set the runtime-settable SQL confs the engine's semantics depend
-    on. Safe on any session (these are not static confs); failures are
-    tolerated per-conf so a locked-down deployment degrades loudly at
-    read time rather than here."""
+    on (none is a static conf, so any session accepts them). A failed
+    set raises: oracle parity depends on UTC, so a session that cannot
+    take these confs must not run the engine."""
     for key, value in (
         ("spark.sql.session.timeZone", "UTC"),
         ("spark.sql.legacy.parquet.nanosAsLong", "true"),
         ("spark.sql.adaptive.enabled", "true"),
         ("spark.sql.execution.arrow.pyspark.enabled", "true"),
     ):
-        try:
-            spark.conf.set(key, value)
-        except Exception:
-            pass
+        spark.conf.set(key, value)
+
+
+#: Shuffle partitions of a drain session. Every stateful streaming
+#: operator opens one state store per shuffle partition, fixed at query
+#: start, so this sizes state, not data (see
+#: plans.state_ops._drain_streaming_entry).
+STATE_PARTITIONS = 8
+
+
+def drain_session(spark: SparkSession) -> SparkSession:
+    """Child of `spark` for one streaming drain: same SparkContext,
+    catalog and cached data, but its own SQL conf, temp views and
+    spark.streams, so the drain's conf never touches `spark` and runs
+    safely beside concurrent callers. newSession() copies only the
+    confs `spark` was built with, not those set on it at runtime, so
+    the engine's runtime confs are applied again here. Queries started
+    in the child are not seen by a StreamProgressLogger attached to
+    `spark`. Each child adds one StreamingQueryListenerBus to the
+    SparkContext once it starts a query."""
+    child = spark.newSession()
+    _apply_runtime_confs(child)
+    child.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
+    return child
 
 
 def stop_session() -> None:

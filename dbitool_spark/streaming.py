@@ -7,9 +7,21 @@ or rate source replaces stdin, watermarks bound state like streamsize
 bounds buffers, and query termination replaces EOF cascade.
 
 Surface: thin wrappers that keep the engine's format option surface
-(same sep/quote/schema args as the batch readers) and the two
-canonical stateful shapes — windowed aggregation with late-data
-watermarking, and availableNow draining for batch-equivalent tests.
+(same sep/quote/schema args as the batch readers), the canonical
+stateful shapes (windowed aggregation with late-data watermarking,
+session windows, first-wins dedup, interval joins), and the sinks.
+
+Drain contract: every bounded sink (drain_to_memory, drain_to_parquet,
+stream_upsert_ndb, stream_near_dup_lsh, and the ndb rollup stream of
+plans.state_ops) goes through the one primitive _drain —
+trigger=availableNow processes everything available at start, then
+the query stops itself (the EOF cascade). A drain that does not finish
+within timeout_sec is stopped, never leaked, and raises TimeoutError,
+because its sink then holds a partial result. A query runs in the
+session of the frame it drains and creates no session of its own; the
+registry's streaming entries build their streams in a per-drain child
+session (session.drain_session), and queries started there are not
+seen by a StreamProgressLogger attached to the parent's spark.streams.
 """
 
 from __future__ import annotations
@@ -18,7 +30,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 
 def stream_csv(
@@ -132,37 +144,41 @@ def stream_user_sessions(
     )
 
 
+def _drain(writer: DataStreamWriter, what: str, timeout_sec: int) -> StreamingQuery:
+    """Start `writer` with trigger=availableNow and wait until it has
+    processed everything available at start. On expiry the query is
+    stopped and TimeoutError raised: the sink holds a partial result,
+    which must never read as an answer."""
+    q = writer.trigger(availableNow=True).start()
+    if not q.awaitTermination(timeout_sec):
+        q.stop()
+        raise TimeoutError(
+            f"availableNow drain {what} did not finish within {timeout_sec}s; "
+            "the sink holds a PARTIAL result. Either the drain is slow "
+            "(raise timeout_sec; a checkpointed sink resumes cleanly) or the "
+            "plan registered processing-time timers, which availableNow never "
+            "runs to completion (use start_parquet_stream)."
+        )
+    return q
+
+
 def drain_to_memory(
     df: DataFrame, name: str, *, output_mode: str = "append", timeout_sec: int = 120
 ) -> StreamingQuery:
     """Process everything currently available, then stop
     (trigger=availableNow) — makes a streaming plan batch-comparable
-    in tests. Results land in the in-memory table `name`.
+    in tests. Results land in the in-memory table `name` of the
+    session `df` belongs to.
 
     Do NOT drain a plan that registered processing-time timers
     (stream_dedup_first_wins with state_timeout_ms): with a pending
     timer an availableNow query never reaches self-termination
     (observed on Spark 4.1 — the pending timer counts as outstanding
     work the one-shot trigger will never run). Such plans need a
-    continuous trigger: see start_parquet_stream. As a guard, an
-    expired awaitTermination stops the query instead of leaking it."""
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"availableNow drain into memory table {name!r} did not finish "
-            f"within {timeout_sec}s — the sink holds a PARTIAL result. "
-            "Either the drain is genuinely slow (raise timeout_sec) or the "
-            "plan registered processing-time timers, which availableNow can "
-            "never run to completion (use start_parquet_stream)."
-        )
-    return q
+    continuous trigger: see start_parquet_stream. Such a drain expires
+    and raises TimeoutError (see _drain)."""
+    writer = df.writeStream.format("memory").queryName(name).outputMode(output_mode)
+    return _drain(writer, f"into memory table {name!r}", timeout_sec)
 
 
 def stream_dedup_first_wins(
@@ -234,21 +250,13 @@ def drain_to_parquet(
     """availableNow drain into parquet with a checkpoint — the
     restartable batch-drain pattern (exactly-once sink semantics via
     the checkpoint's commit log)."""
-    q = (
+    writer = (
         df.writeStream.format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
         .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
     )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()  # never leak the query...
-        raise TimeoutError(  # ...but a partial sink is a wrong answer, not a result
-            f"availableNow drain into {path!r} did not finish within "
-            f"{timeout_sec}s; the checkpoint allows a clean re-drain"
-        )
-    return q
+    return _drain(writer, f"into {path!r}", timeout_sec)
 
 
 def start_parquet_stream(
@@ -409,20 +417,10 @@ def stream_upsert_ndb(
             return
         table.upsert(batch_df, order_by=order_by)
 
-    q = (
-        stream.writeStream.foreachBatch(upsert_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    writer = stream.writeStream.foreachBatch(upsert_batch).option(
+        "checkpointLocation", checkpoint
     )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"availableNow ndb upsert stream did not finish within "
-            f"{timeout_sec}s — the table may hold only a prefix of the "
-            "input batches; the checkpoint allows a clean resume"
-        )
-    return q
+    return _drain(writer, "of the ndb upsert stream", timeout_sec)
 
 
 def stream_near_dup_lsh(
@@ -464,8 +462,7 @@ def stream_near_dup_lsh(
       order — order-insensitive and exactly the batch rule
       (ops.dedup.lsh_near_dup_flags); arrival flags are the
       first-arrival-wins view of the same index.
-    - availableNow + checkpoint give exactly-once per input file; an
-      expired drain stops the query rather than leaking it.
+    - availableNow + checkpoint give exactly-once per input file.
     - honest cost note: NdbTable.upsert is a BUCKET-PRUNED partial
       rewrite (only the hash buckets a batch's keys touch are merged
       and rewritten; the rest hardlink forward — ndb.py). For THIS
@@ -528,17 +525,7 @@ def stream_near_dup_lsh(
         finally:
             joined.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    writer = stream.writeStream.foreachBatch(process).option(
+        "checkpointLocation", checkpoint
     )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"availableNow LSH near-dup stream did not finish within "
-            f"{timeout_sec}s — the index holds only a prefix of the input; "
-            "the checkpoint allows a clean resume"
-        )
-    return q
+    return _drain(writer, "of the LSH near-dup stream", timeout_sec)

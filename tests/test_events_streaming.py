@@ -208,6 +208,122 @@ def test_stream_dedup_state_timeout_reemits(spark, tmpdir):
     assert got.count() == 3
 
 
+def test_drain_expiry_stops_query_and_raises(spark, tmpdir):
+    """An availableNow drain that can never finish — a pending
+    processing-time timer (stream_dedup_first_wins docstring) — must
+    raise TimeoutError and leave its query stopped, not leaked."""
+    src = os.path.join(tmpdir, "src")
+    json_io.write_ndjson(
+        spark.range(20).selectExpr("id AS user_id", "id AS event_id"), src
+    )
+    stream = streaming.stream_ndjson(spark, src, "user_id bigint, event_id bigint")
+    deduped = streaming.stream_dedup_first_wins(
+        stream, ["user_id"], state_timeout_ms=600_000
+    )
+    name = "drain_expiry_test"
+    try:
+        with pytest.raises(TimeoutError, match="PARTIAL"):
+            streaming.drain_to_memory(deduped, name, timeout_sec=3)
+        assert [q.name for q in spark.streams.active if q.name == name] == []
+    finally:
+        spark.catalog.dropTempView(name)
+
+
+def test_drain_state_partitions_scoped_to_child_session(spark, monkeypatch):
+    """Registry drains run their stateful queries with
+    session.STATE_PARTITIONS shuffle partitions (read from each query's
+    progress), while the caller's spark.sql.shuffle.partitions never
+    changes — also while streaming_hourly_composite drains its two
+    legs concurrently."""
+    from pyspark.errors import AnalysisException
+
+    from dbitool_spark.plans import state_ops
+    from dbitool_spark.session import STATE_PARTITIONS
+
+    key = "spark.sql.shuffle.partitions"
+    seen = []  # (caller conf before, after, state partitions) per drain
+    drain = streaming.drain_to_memory
+
+    def spy(df, name, **kwargs):
+        before = spark.conf.get(key)
+        q = drain(df, name, **kwargs)
+        parts = {
+            op.numShufflePartitions
+            for p in q.recentProgress
+            for op in p.stateOperators
+        }
+        seen.append((before, spark.conf.get(key), parts))
+        return q
+
+    monkeypatch.setattr(streaming, "drain_to_memory", spy)
+    prev = spark.conf.get(key)
+    caller = "3"
+    assert int(caller) != STATE_PARTITIONS
+    spark.conf.set(key, caller)
+    try:
+        ev = catalog.load(spark, SF_SMOKE, "events").select("user_id", "event_type")
+        sink = state_ops._drain_streaming_entry(
+            spark,
+            SF_SMOKE,
+            prefix="stream_parts_",
+            source_df=ev,
+            schema="user_id bigint, event_type string",
+            plan=lambda stream: stream.dropDuplicates(["user_id", "event_type"]),
+            output_mode="append",
+        )
+        assert sink.count() == ev.distinct().count()
+        with pytest.raises(AnalysisException):
+            spark.table("stream_parts")  # the sink view lives in the child
+        state_ops.streaming_hourly_composite(spark, SF_SMOKE)
+        assert spark.conf.get(key) == caller
+    finally:
+        spark.conf.set(key, prev)
+    assert len(seen) == 3
+    for before, after, parts in seen:
+        assert before == after == caller
+        assert parts == {STATE_PARTITIONS}
+
+
+def test_drain_session_applies_runtime_confs():
+    """newSession() copies only the confs a session was built with. A
+    parent whose UTC time zone and nanosAsLong were set at runtime
+    must still give a drain session with both, since oracle parity
+    depends on UTC. Runs in a fresh process: the test session was built
+    with these confs, so its children inherit them either way."""
+    import ast
+    import subprocess
+    import sys
+
+    child_src = r"""
+from pyspark.sql import SparkSession
+from dbitool_spark.session import drain_session
+spark = (
+    SparkSession.builder.master("local[1]")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.session.timeZone", "America/New_York")
+    .getOrCreate()
+)
+spark.conf.set("spark.sql.session.timeZone", "UTC")
+spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+keys = ("spark.sql.session.timeZone", "spark.sql.legacy.parquet.nanosAsLong")
+bare, child = spark.newSession(), drain_session(spark)
+print(repr(([bare.conf.get(k) for k in keys], [child.conf.get(k) for k in keys])))
+spark.stop()
+"""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+        filter(None, [repo, os.environ.get("PYTHONPATH")])
+    ))
+    out = subprocess.run(
+        [sys.executable, "-c", child_src],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    bare, child = ast.literal_eval(out.stdout.strip().splitlines()[-1])
+    assert bare == ["America/New_York", "false"]  # the runtime sets are lost
+    assert child == ["UTC", "true"]
+
+
 def test_stream_dedup_first_wins(spark, tmpdir):
     """Stateful streaming dedup: duplicated keys across the input emit
     exactly once (applyInPandasWithState custom operator)."""

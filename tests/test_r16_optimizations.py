@@ -196,32 +196,46 @@ def test_format_chain_parallel_legs_round_trip(spark):
     # that neither leg lost or duplicated rows under the thread overlap
 
 
-def test_parallel_entries_helper_returns_all_and_propagates_errors(spark):
-    """_run_parallel_entries must hand back every leg's frame keyed by
-    tag, restore the shuffle-partition conf, and re-raise a leg
-    failure after joining (no silent partial composite)."""
+def test_run_parallel_returns_all_legs_and_propagates_errors(spark):
+    """run_parallel must hand back every leg's frame keyed by tag,
+    re-raise a single leg failure as itself after joining (no silent
+    partial composite), and raise several failures together as a
+    BaseExceptionGroup carrying each leg's exception."""
     import pytest
 
-    from dbitool_spark.plans.state_ops import _run_parallel_entries
+    from dbitool_spark.ops.concurrency import run_parallel
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    out = _run_parallel_entries(
+    out = run_parallel(
         spark,
         [
             ("a", lambda: spark.range(3)),
             ("b", lambda: spark.range(5)),
         ],
-        state_partitions=8,
     )
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    assert out.keys() == {"a", "b"}
     assert out["a"].count() == 3 and out["b"].count() == 5
 
-    def boom():
-        raise RuntimeError("leg failed")
+    def failing(msg):
+        def leg():
+            raise RuntimeError(msg)
 
-    with pytest.raises(RuntimeError, match="leg failed"):
-        _run_parallel_entries(spark, [("ok", lambda: spark.range(1)), ("bad", boom)])
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+        return leg
+
+    with pytest.raises(RuntimeError, match="leg failed") as one:
+        run_parallel(spark, [("ok", lambda: spark.range(1)), ("bad", failing("leg failed"))])
+    assert type(one.value) is RuntimeError
+
+    with pytest.raises(BaseExceptionGroup) as many:
+        run_parallel(
+            spark,
+            [
+                ("x", failing("x failed")),
+                ("ok", lambda: spark.range(1)),
+                ("y", failing("y failed")),
+            ],
+        )
+    assert sorted(str(e) for e in many.value.exceptions) == ["x failed", "y failed"]
+    assert all(type(e) is RuntimeError for e in many.value.exceptions)
 
 
 def test_dedup_representatives_agg_equals_window_argmax(spark):

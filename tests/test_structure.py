@@ -1,0 +1,36 @@
+"""Structural guards over the package source: properties a grep can
+check and a refactor can silently break."""
+
+from __future__ import annotations
+
+import re
+from pathlib import Path
+
+PKG = Path(__file__).resolve().parent.parent / "dbitool_spark"
+
+
+def _sources() -> dict[str, str]:
+    return {p.relative_to(PKG).as_posix(): p.read_text() for p in PKG.rglob("*.py")}
+
+
+def test_one_availablenow_drain_site():
+    """Every availableNow drain goes through streaming._drain, the one
+    place that starts, awaits and stops on expiry."""
+    sites = {
+        rel: src.count("awaitTermination(")
+        for rel, src in _sources().items()
+        if "awaitTermination(" in src
+    }
+    assert sites == {"streaming.py": 1}
+
+
+def test_shuffle_partitions_written_only_in_session_module():
+    """Only session.py writes spark.sql.shuffle.partitions (the engine
+    session and the per-drain child session); a write anywhere else
+    mutates a conf that concurrent legs share."""
+    write = re.compile(r"""conf\.set\(\s*["']spark\.sql\.shuffle\.partitions""")
+    hits = [
+        rel for rel, src in _sources().items()
+        if rel != "session.py" and write.search(src)
+    ]
+    assert hits == []
