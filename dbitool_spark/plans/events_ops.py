@@ -545,9 +545,8 @@ ORDER BY variant, event_id
 
 
 def skew_composite_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Variant-tagged composite of the two skew-shape entries — the
-    r14 merge candidate per the registry ledger's retirement/merge
-    policy: one driver row drives BOTH ops/scale skew answers through
+    """Variant-tagged composite of the two skew-shape entries: one
+    driver row drives BOTH ops/scale skew answers through
     their full original codepaths — salted AGGREGATION
     (skewed_user_rollup_events: partial agg on (key, salt-of-16),
     final recombine) and salted JOIN (skewed_segment_join_events:
@@ -560,8 +559,8 @@ def skew_composite_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale notes are the constituents': a hot key fans over 16 tasks in
     both shapes — the fix for the skew cases AQE does not cover
-    (aggregation; a dimension too big to broadcast). Retirees keep
-    standalone parity rows per the retirement contract."""
+    (aggregation; a dimension too big to broadcast). Both constituents
+    keep standalone parity rows."""
     agg = skewed_user_rollup_events(spark, sf_dir).select(
         F.lit("salted_agg").alias("variant"),
         F.col("user_id").cast("string").alias("key1"),

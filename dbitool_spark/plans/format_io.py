@@ -354,17 +354,15 @@ XMLBSON_ROUNDTRIP_SUPPLIER_SQL = (
 
 
 def format_chain_nation_xmlbson(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The registry ledger's named r11 merge candidate, STAGED ahead of
-    registration (the text_profile precedent): nation → fixed-width →
-    xlsx → bounded JSON → XML → BSON → back, one driver row covering
-    the fixedwidth, spreadsheet, json, xml, and bson write/read pairs
-    — the union of format_chain_nation and xmlbson_roundtrip_supplier's
-    codepaths (XML/BSON are table-agnostic; the supplier entry's
-    parity row stays in tests/test_oracle_parity.py on retirement).
-    Values re-type between hops exactly as the constituents did
-    (first three hops shared with format_chain_nation via
-    _nation_fw_xlsx_json, so the pair cannot diverge before the r11
-    swap retires the constituent)."""
+    """Five-format chain: nation → fixed-width → xlsx → bounded JSON →
+    XML → BSON → back, one entry covering the fixedwidth, spreadsheet,
+    json, xml, and bson write/read pairs — the union of
+    format_chain_nation and xmlbson_roundtrip_supplier's codepaths
+    (XML/BSON are table-agnostic; both constituents keep their own
+    parity rows). Values re-type between hops exactly as the
+    constituents did (the first three hops are shared with
+    format_chain_nation via _nation_fw_xlsx_json, so the two cannot
+    diverge)."""
     d = _scratch("chain_nation5")
     schema = "n_nationkey int, n_name string, n_regionkey int"
     hop3 = _nation_fw_xlsx_json(spark, sf_dir, d)

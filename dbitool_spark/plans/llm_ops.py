@@ -862,13 +862,10 @@ LANGID_DOCUMENTS_SQL = _langid_sql()
 def text_profile_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column-composite of the three per-document text projections —
     text_stats + quality_score + the per-doc langid label joined on
-    doc_id (the token_repetition_metrics precedent; registry merge
-    ledger's named next candidate). STAGED, not yet registered: the
-    r9 window held zero slack, so this lands in the registry in r10,
-    retiring the three constituent rows and freeing two slots. One
-    row per doc drives all three codepaths; oracle = the constituent
-    SQLs' per-doc forms joined on doc_id. Until registration it keeps
-    full oracle-parity coverage in tests/test_oracle_parity.py."""
+    doc_id (the token_repetition_metrics precedent). One row per doc
+    drives all three codepaths; oracle = the constituent SQLs' per-doc
+    forms joined on doc_id. The three constituents keep standalone
+    parity rows."""
     stats = text_stats_documents(spark, sf_dir)
     qual = quality_scores_documents(spark, sf_dir)
     docs = catalog.load(spark, sf_dir, "documents")
@@ -1030,14 +1027,13 @@ ORDER BY id_a, id_b
 def ngram_jaccard_variants_documents(
     spark: SparkSession, sf_dir: str, *, materialize: bool = True
 ) -> DataFrame:
-    """r8 fifth-wave merge of ngram_jaccard_documents +
-    ngram_jaccard_skewguard_documents (registry capacity policy,
-    plans/registry.py ledger — both constituent functions and their
-    pytest coverage remain; only the registry rows merged). Variant-
-    tagged union: the unguarded inverted-index exact path and the
-    max_doc_freq skew-guarded path run in one entry, so a single green
-    row proves both the complete-recall arithmetic and the guard's
-    exact drop/keep behavior.
+    """Merge of ngram_jaccard_documents +
+    ngram_jaccard_skewguard_documents (both constituent functions and
+    their pytest coverage remain). Variant-tagged union: the unguarded
+    inverted-index exact path and the max_doc_freq skew-guarded path
+    run in one entry, so a single green row proves both the
+    complete-recall arithmetic and the guard's exact drop/keep
+    behavior.
 
     r16 optimization round: the two legs now run off ONE shared
     shingle/frequency pass (dedup.ngram_jaccard_pairs_variants) —
@@ -3963,10 +3959,9 @@ FROM scored GROUP BY doc_id ORDER BY doc_id
 def embedding_audit_composite(
     spark: SparkSession, sf_dir: str, *, materialize: bool = True
 ) -> DataFrame:
-    """Kind-tagged merge candidate for kmeans_embeddings +
-    semantic_outliers_documents (the r15 capacity note in the registry
-    ledger — both constituents keep standalone parity rows when it
-    registers): one driver row drives the distributed Lloyd's kernel
+    """Kind-tagged merge of kmeans_embeddings +
+    semantic_outliers_documents (both keep standalone parity rows):
+    one driver row drives the distributed Lloyd's kernel
     (kind='kmeans': per-cluster size + rounded inertia, key =
     cluster id) AND the per-source centroid/cosine outlier gate
     (kind='outliers': doc counts, outlier counts, rounded avg/min
@@ -4008,17 +4003,16 @@ ORDER BY kind, key
 
 
 def semantic_dedup_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kind-tagged merge candidate for embedding_near_dup +
-    semdedup_embeddings (registry ledger r15 capacity note — both
-    constituents keep standalone parity rows when it registers), and
-    a real plan IMPROVEMENT over running both: the LSH-bucketed
-    cosine pair table is computed ONCE (localCheckpointed) and feeds
-    both the pair listing (kind='pairs': id_a, id_b, rounded cosine)
-    and the SemDeDup keep/drop decision table (kind='dedup': vec_id
-    as id_a, cluster id as id_b, kept flag) — the two standalone
-    entries each pay that candidate-generation cost today. Scale
-    shapes otherwise unchanged (bucketed candidates, min-label
-    components — see the constituents)."""
+    """Kind-tagged merge of embedding_near_dup + semdedup_embeddings
+    (both keep standalone parity rows), and a real plan IMPROVEMENT
+    over running both: the LSH-bucketed cosine pair table is computed
+    ONCE (localCheckpointed) and feeds both the pair listing
+    (kind='pairs': id_a, id_b, rounded cosine) and the SemDeDup
+    keep/drop decision table (kind='dedup': vec_id as id_a, cluster id
+    as id_b, kept flag) — run separately, the two constituents each
+    pay that candidate-generation cost. Scale shapes otherwise
+    unchanged (bucketed candidates, min-label components — see the
+    constituents)."""
     emb = catalog.load(spark, sf_dir, "embeddings")
     base = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     corpus = base.unionAll(_perturbed_embeddings(base))
@@ -4073,10 +4067,9 @@ def quality_ensemble_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     perplexity counts as a pass; a strict AND is degenerate on this
     corpus — the repetition and classifier gates each pass only
     ~12-14% of the synthetic docs, measured, so the conjunction keeps
-    ~0.2%). Staged as quality_prune_documents' eventual SUPERSEDER
-    (it drives
-    the same percent-rank window plus three more signal codepaths in
-    one row; registry ledger r15 capacity note).
+    ~0.2%). It drives quality_prune_documents' percent-rank window
+    plus three more signal codepaths in one row, so it can supersede
+    that entry.
 
     Scale shape: each signal keeps its own documented shape (one
     window, three scan-shaped token aggregations); the ensemble adds

@@ -693,9 +693,8 @@ ORDER BY pos
 
 
 def split_sample_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kind-tagged merge candidate for deterministic_split_documents +
-    sample_stratified_documents (registry ledger r15 capacity note —
-    both constituents keep standalone parity rows when it registers):
+    """Kind-tagged merge of deterministic_split_documents +
+    sample_stratified_documents (both keep standalone parity rows):
     the two realizations of the multiplicative id-hash partitioning
     family in one row — the 80/10/10 split stats (kind='split', key =
     split name, sum_metric = total chars) and the per-language

@@ -1,457 +1,30 @@
 """Central registry: query name -> (spark, sf_dir) -> DataFrame, plus
-the DuckDB oracle SQL per query.
+the DuckDB oracle SQL per query, declared once in ``_ENTRIES``.
 
-Conventions (driver contract, __spark_entry__.py):
-- column names identical between the Spark result and the oracle SQL;
-- aggregate doubles produced via the decimal-exact path
-  (functions.numeric) so value hashes match bit-for-bit;
-- timestamps never emitted raw: formatted to strings or epoch ints;
-- queries without an oracle entry are non-SQL-expressible (driver
-  records a rows-only check) — keep that set minimal.
+Conventions (driver contract, __spark_entry__.py): column names match
+between the Spark result and the oracle SQL; aggregate doubles go
+through the decimal-exact path (functions.numeric) so value hashes
+match bit-for-bit; timestamps are emitted as strings or epoch ints.
+Every entry carries an oracle.
 
-REGISTRATION ORDER IS A ROTATION, not taxonomy: the driver's
-correctness gate checks only the FIRST 50 entries (observed cap,
-CORRECTNESS_r01-r05), so entries are ordered least-driver-verified
-first — new queries, then entries whose plans changed this round,
-then the shortest green streaks. The tail (positions 51+) holds the
-longest-streak unchanged veterans; every entry regardless of position
-runs in pytest's oracle-parity suite each round
-(tests/test_oracle_parity.py), so rotating out of the driver window
-never removes oracle coverage. Standing policy (r5 judge brief):
-NO entry goes more than 2 rounds without a driver row — tail entries
-rotate back toward the front on that clock, and this ordering is
-documented here precisely so the independent verifier can audit what
-rotated out and why rather than discovering it.
-
-RETIREMENT/MERGE POLICY (r8, the capacity answer — a 50-slot window
-on a 2-round clock saturates at 100 entries): when coverage overlaps,
-entries MERGE into one composite that drives every constituent
-codepath (the reference's own chained-conversion example,
-scripts/dbitool.pl:3273-3276), or RETIRE when a newer entry strictly
-supersedes them. Retired entries keep their functions and their
-pytest coverage (tests/test_io_roundtrip.py et al.) — only the
-registry row is reclaimed. Ledger:
-
-r8 retirements (9 rows reclaimed, all still pytest-covered):
-- csv_roundtrip_customer + ndjson_roundtrip_orders  -> merged into
-  format_chain_orders (ndjson -> csv with sep/gzip, typed doubles +
-  timestamps);
-- csv_roundtrip_documents                           -> merged into
-  format_chain_documents (quoted csv -> ndjson on hostile text);
-- json_roundtrip_region + fixedwidth_roundtrip_nation +
-  xlsx_roundtrip_nation                             -> merged into
-  format_chain_nation (fixedwidth -> xlsx -> bounded json);
-- xml_roundtrip_supplier + bson_roundtrip_region    -> merged into
-  xmlbson_roundtrip_supplier (xml -> bson chain);
-- sqlite_roundtrip_part                             -> superseded by
-  sqlite_query_from_stream_part (same sqliteinsert + partitioned
-  sqliteselect pair PLUS the streamed-SQL entry point).
-
-r8 second wave (the jdbc_roundtrip_part addition made 51 entries due
-an r8 row against 50 slots, so both previously-flagged merge
-candidates executed):
-- quarantine_corrupt_csv + quarantine_corrupt_ndjson -> merged into
-  quarantine_corrupt_formats (both splits, format-tagged);
-- events_asof_recent_order + events_asof_latest_order -> merged into
-  events_asof_orders (variant-tagged; tolerance is a parameter of the
-  shared union+window plan family).
-
-r8 third wave (the streaming_click_purchase_join addition needed a
-window slot and the window held ZERO r7-green slack — every one of
-the 50 was r6-only and due its r8 row):
-- ann_lsh_recall + ann_ivf_recall -> merged into ann_recall_planted
-  (method-tagged, one driver row runs both indexes against the shared
-  planted fixture);
-- token_count_bpe_documents + ngram_repetition_documents -> merged
-  into token_repetition_metrics_documents (column-composite: both are
-  one-row-per-doc projections on documents, joined on doc_id), which
-  freed the slot for skewed_segment_join_events (salted_join made
-  driver-visible).
-
-r8 fourth wave (bucketed_orders_customer_join — the bucketing leg of
-the ops/scale.py family — needed a slot):
-- hll_accuracy_events + quantile_sketch_lineitem -> merged into
-  sketch_accuracy_gates (gate-composite: both emit one 1-row boolean
-  gate, crossJoined into one two-column row; also removes the two
-  noisiest sub-half-second bench entries flagged in the r7 verdict).
-
-r8 fifth wave (the email/chart TODO-closing entry needed a slot and
-the window held zero slack — every prior slot was due its r8 row):
-- email_roundtrip_documents + chart_roundtrip_events -> registered
-  from birth as the kind-tagged composite email_chart_roundtrip
-  (both are driver-side document-sink round-trips, the same family
-  the format_chain merges established);
-- ngram_jaccard_documents + ngram_jaccard_skewguard_documents ->
-  merged into ngram_jaccard_variants_documents (variant-tagged union;
-  one row proves both the complete-recall arithmetic and the skew
-  guard's exact drop/keep behavior).
-
-r8 sixth wave (streaming_lsh_near_dup_documents — incremental LSH
-dedup-on-ingest, the stateful streaming operator the LLM family was
-missing — needed a slot, window still zero-slack):
-- simhash_near_dup_documents RETIRED, superseded by its oracle-backed
-  companion simhash_recall_planted, which drives the same
-  simhash_signatures + simhash_band_candidates codepaths with a
-  STRONGER check (constant-1.0 recall hash vs rows-only); the
-  radius-filter wrapper (dedup.simhash_candidates) keeps pytest +
-  lazy-plan-shape coverage. Net effect: the rows-only set shrinks
-  from 3 entries to 2 — aligned with "keep that set minimal" above.
-
-r9 rotation (no merges needed): concat_positional_supplier_customer
-joined as the one net-new entry (reference TODO:74-76 closed), and
-the head-50 = that + the 3 veterans whose executed code changed this
-round (streaming_lsh: ndb partial rewrite; ann_recall_planted: gemm
-IVF kernel; skewed_segment_join: salted_join guard) + ALL 46 entries
-whose last driver row was r7 — the 2-round clock satisfied exactly.
-
-r10 rotation (the staged merge executed + one net-new operator):
-text_stats_documents + langid_documents + quality_scores_documents
-RETIRED into the column-composite text_profile_documents
-(llm_ops.py:601 — one row per doc drives all three codepaths; its
-oracle-parity row was green one full round BEFORE registration as
-staged_text_profile_documents), and bm25_topk_documents joined as the
-net-new text-retrieval operator. Head-50 = text_profile + bm25 (new)
-+ concat_positional (its concat duplicate-suffix code changed this
-round, ADVICE r9 fix) + ALL 47 entries whose last driver row was r8 —
-the tripwire's printed list, satisfied exactly at 50/50. The three
-retirees keep standalone oracle-parity rows in
-tests/test_oracle_parity.py per the retirement contract.
-
-r11 rotation (the staged swaps executed, exactly as planned in r10):
-format_chain_nation + xmlbson_roundtrip_supplier RETIRED into the
-five-format composite format_io.format_chain_nation_xmlbson
-(fixedwidth -> xlsx -> xml -> bson -> bounded json; oracle-proven one
-full round early as staged_format_chain_nation_xmlbson), freeing one
-net slot; the two staged net-new operators registered:
-llm_ops.source_overlap_matrix (cross-source 3-gram overlap/Jaccard
-matrix) and llm_ops.quality_prune_documents (per-source top-half
-quality cut on the rounded score). Head-50 = those 3 + ALL 46 entries
-whose last driver row was r9 (the tripwire's printed list) +
-bucketed_orders_customer_join (r10-green, pulled forward into the
-spare 50th slot: the r10 verdict flagged its 1.43× no-plan-change
-bench stamp as suspected noise, so it gets both a fresh driver row
-and a standalone re-measure this round). The two retirees keep
-standalone oracle-parity rows in tests/test_oracle_parity.py per the
-retirement contract.
-
-r12 rotation (all four staged swaps executed, exactly as planned in
-r11): streaming_hourly_append_events + streaming_hourly_stats_events
-+ events_hourly_stats RETIRED into the variant-tagged union
-state_ops.streaming_hourly_composite (batch + streaming-complete +
-streaming-append-with-watermark hourly aggregation in one driver row;
-oracle-proven a round early as staged_streaming_hourly_composite);
-near_dup_clusters_documents RETIRED, superseded by
-llm_ops.dedup_representatives_documents (the dedup ACTION — drives
-the same pairs+CC codepaths PLUS representative selection); the two
-staged net-new operators registered: llm_ops.strip_markup_documents
-(HTML/boilerplate strip, one JVM regexp projection) and
-pipeline_ops.bloom_decontaminate_documents (broadcast-Bloom
-decontamination) in the freed spare slot. Head-50 = those 4 + ALL 46
-entries whose last driver row was r10 (the tripwire's printed list
-minus the retired near_dup_clusters_documents). All four retirees
-keep standalone oracle-parity rows in tests/test_oracle_parity.py per
-the retirement contract.
-
-r13 rotation (EXECUTED — the staged plan plus the r12 judge's item 5,
-which zeroed the rows-only set, and the slot-neutral funnel pair):
-- the six staged entries registered exactly as ledgered:
-  redact_pii_documents, strip_repetition_documents,
-  trim_duplicate_spans_documents, curation_text_chain_documents,
-  ann_recall_composite (RETIRING ann_recall_planted +
-  ann_topk_bruteforce, both due r13), and
-  state_ops.ndb_range_pruned_replay (SUPERSEDING ndb_upsert_replay,
-  due r13, through the files_per_bucket pruned write path);
-- llm_ops.ann_topk_planted_hits registered (r12 verdict item 5),
-  RETIRING the two rows-only entries ann_topk_lsh + ann_topk_ivf
-  (both due r13): it drives the same lsh_topk/ivf_topk kernels
-  against the planted fixture and emits per-(method, query) hit rows
-  the oracle states outright — oracle_sql() now covers 100% of
-  queries() and the rows-only exception is GONE (the retired pair
-  keeps pytest recall/top-k coverage in tests/test_llm_ops.py);
-- the slot-neutral pair registered in the remaining slack:
-  events_ops.funnel_steps_events (net-new ordered-funnel operator)
-  + events_ops.events_audit_composite (kind-tagged merge RETIRING
-  events_daily_type_pivot, r12-green, and events_json_props, due
-  r13 — both keep standalone parity rows).
-r13 math: 47 due − 2 (ann merge) − 1 (ndb supersede) − 2 (rows-only
-retirees) − 1 (events_json_props) = 41 due + 9 registrations = 50,
-exactly full. Registry after r13: 97 − 7 retirees + 9 = 99; tail =
-the 49 r12-green entries (r12 head-50 minus the retired
-events_daily_type_pivot), due r14.
-
-r14 rotation (EXECUTED — the staged plan, plus one capacity
-pull-forward; all nine registrations were oracle-proven a round
-early as staged_ parity rows):
-- the five staged merge composites registered exactly as ledgered:
-  state_ops.sessions_composite_events (RETIRING user_sessions +
-  user_sessions_window + streaming_user_sessions_events — three
-  realizations of the >30-min-gap semantics, one union hash),
-  format_io.format_chain_docs_orders (RETIRING format_chain_documents
-  + format_chain_orders — kind-tagged, lossless column-per-field
-  normalization), events_ops.skew_composite_events (RETIRING
-  skewed_user_rollup_events + skewed_segment_join_events),
-  llm_ops.repetition_profile_documents (RETIRING
-  token_repetition_metrics_documents + repetition_stats_documents),
-  llm_ops.source_profile_documents (RETIRING domain_stats_documents +
-  top_terms_per_source);
-- minhash_near_dup_documents RETIRED superseded by
-  dedup_representatives_documents (same dedup.minhash_near_dup_pairs
-  call, threshold 0.7, plus CC + selection — the near_dup_clusters
-  precedent);
-- the three staged net-new operators registered:
-  llm_ops.bpe_pair_counts_documents (BPE merge-iteration pair
-  statistics, bounded-alphabet exchange),
-  state_ops.streaming_curation_chain_documents (clean-on-ingest: the
-  curation chain as a stateless streaming projection, drained against
-  the BATCH chain's oracle — micro-batch-boundary invariance), and
-  llm_ops.pagerank_links_documents (link-graph PageRank quality
-  signal: integer-arithmetic ranks, per-iteration checkpoint
-  discipline, oracle unrolls the iterations as chained CTEs);
-- CAPACITY PULL-FORWARD: the r15-staged merge
-  llm_ops.embedding_audit_composite registered a round early
-  (RETIRING kmeans_embeddings + semantic_outliers_documents, both
-  r13-green, in one kind-tagged row). Rationale: the original plan's
-  8 registrations left the 50th head slot empty (the plan's "7
-  head-slot retirees" undercounted — the due tail holds EIGHT
-  retirees once user_sessions_window is counted), and pulling this
-  merge forward both fills the slot and shrinks r15's due list so
-  r15 closes EXACTLY with its six staged net-new candidates.
-r14 math: 49 due − 8 due-tail retirees (user_sessions_window,
-format_chain_documents, format_chain_orders, skewed_user_rollup,
-token_repetition_metrics, domain_stats, top_terms_per_source,
-minhash_near_dup) = 41 survivors + 9 registrations = 50, exactly
-full. Registry after r14: 99 − 14 retirees + 9 = 94; tail = the 44
-r13-green entries (r13 head-50 minus the six retirees that sat in
-it: user_sessions, streaming_user_sessions_events,
-skewed_segment_join_events, repetition_stats_documents,
-kmeans_embeddings, semantic_outliers_documents), due r15. All 14
-retirees keep standalone retired_ oracle-parity rows in
-tests/test_oracle_parity.py per the retirement contract.
-
-r15 rotation (EXECUTED — exactly the staged plan, no deviation):
-the six staged net-new candidates registered, all oracle-proven a
-round early as staged_ parity rows: classifier_score_documents,
-ndb_time_travel_replay, streaming_rollup_ndb_events,
-quantized_ann_topk_embeddings, perplexity_score_documents,
-dsir_weights_documents. r15 math: 44 due (the r13-green tail) +
-6 net-new = 50, exactly full; registry lands at 100 — the 50-slot /
-2-round-clock SATURATION POINT. Zero retirements this round (the
-reserve merges were not needed; they carry the r16 ledger below).
-The three r14 code-changed tail entries the r14 verdict flagged
-(funnel_steps_events, ndb_range_pruned_replay,
-streaming_lsh_near_dup_documents) all sit in the due-44 and land
-their driver rows this round by construction.
-
-r16 rotation (EXECUTED — exactly the committed r16 capacity ledger,
-no deviation; the registry opened at its 100-entry saturation point
-with ZERO slack, so every registration retired a due member):
-- semantic_dedup_composite REGISTERED, retiring semdedup_embeddings
-  (due r16) + embedding_near_dup (r15-green tail): due 50->49, +1
-  registration -> 50. Also cuts ~1.5s of bench (3.30s vs the
-  constituents' combined 4.82s at sf0.1).
-- split_sample_composite REGISTERED, retiring
-  deterministic_split_documents (due r16) + sample_stratified
-  (r15-green tail): due 49->48, +1 -> 50.
-- bpe_pipeline_documents REGISTERED, superseding
-  bpe_pair_counts_documents (due r16): due 48->47, +1 -> 50 — and
-  makes bpe_learn_merges + bpe_encode driver-visible in the slot.
-r16 math: 47 surviving due + 3 registrations = 50, exactly full.
-Registry after r16: 100 - 5 retirees + 3 = 98. All five retirees
-keep standalone retired_ parity rows per the retirement contract
-(tests/test_oracle_parity.py). The two complete-mode streaming
-drains due this round (streaming_hourly_composite,
-sessions_composite_events) additionally got the src_files drain
-parallelization (batch-boundary-invariant by semantics — the r15
-stateless-drain treatment), landing the code change WITH its driver
-row per the code-change-rotation rule.
-
-r17 rotation (EXECUTED — PURE ROTATION ONLY): r17 was an optimization
-round, where registrations, retirements and supersessions are feature
-work and therefore out of scope — so NONE of the capacity ledger's
-four staged moves below executed (they stay queued, parity-green, for
-the next build round). The head-50 = the 48 due entries (the r15 head
-minus the two r16 retirees that sat in it) + the 2 structural-slack
-slots filled by the two r16-head entries whose CODE changed in the
-optimization round (bpe_pipeline_documents — shared learn chain;
-simhash_recall_planted — rebalance revert), per the
-code-change-rotation rule. Zero entries added, removed or renamed;
-registry stays at 98, every entry oracle-backed.
-
-r17 CAPACITY LEDGER (committed at r16 HEAD — recomputed arithmetic;
-NOT executed in r17, see the rotation note above — these moves are
-the next build round's plan):
-due r17 = the r15 head (50) minus the two r16 retirees that sat in
-it (embedding_near_dup, sample_stratified_documents) = 48 due, so 2
-slots of structural slack. Four slot-neutral-or-freeing moves
-compete, all parity-staged (staged_ rows green):
-- lm_scores_composite REGISTERS, retiring perplexity_score_documents
-  (due r17; keeps a retired_ row) — makes bigram_lm_score
-  driver-visible and cuts ~0.5s (one tokenize pass feeds both LMs):
-  due 48->47, +1 -> 48.
-- quality_ensemble_documents REGISTERS, superseding
-  quality_prune_documents (due r17): 47->46, +1 -> 48.
-- media_pipeline_documents REGISTERS, superseding
-  media_decode_roundtrip (due r17) and registering the staged
-  media_resize codepath in the same slot: 46->45, +1 -> 48.
-- ndb_replay_lookup_composite REGISTERS, superseding
-  ndb_range_pruned_replay (due r17) — makes the bucket+range-PRUNED
-  NdbTable.lookup() path (ndb.py, reference TODO:61-65)
-  driver-visible per the r15 verdict item 5 (staged r16 as
-  staged_ndb_replay_lookup_composite): 45->44, +1 -> 48.
-If all four execute: head = 44 surviving due + 4 registrations = 48,
-leaving the 2 structural slots for net-new operators; registry lands
-at 98 - 4 retirees + 4 = 98. Capacity stays closeable through r17
-without further merges.
-The 2 structural slots have two staged net-new competitors (both
-parity-green at r16 HEAD, both in the scaling-gate list):
-- winnow_near_dup_documents — winnowing fingerprints (Schleimer et
-  al. 2003 / MOSS): per-doc density profile + shared-rare-
-  fingerprint pairs, selection by lexicographic order so both
-  engines pick the identical set (staged_winnow_near_dup_documents);
-- edit_distance_join_documents — q-gram prefix-filtered edit-
-  distance self-join (Gravano et al. 2001 / Ed-Join) on document
-  titles with planted 1-deletion copies; brute-force oracle proves
-  filter recall 1.0 (staged_edit_distance_join_documents).
-r17 closes at exactly 50 iff both register alongside the four moves
-above; registering fewer leaves the head under 50, which the window
-test permits (<= 50 is the constraint).
-Look-ahead (commit the exact math at r17 HEAD): if all six r17 moves
-execute, the registry returns to the 100-entry saturation point and
-r18 opens ZERO-SLACK again (due r18 = the full r16 head — none of
-the r17 retirees sit in it). TWO r18 moves are staged and
-parity-green at r16 HEAD:
-- leakage_safe_split_composite SUPERSEDES split_sample_composite
-  (slot-neutral; staged_leakage_safe_split_composite): both
-  constituent legs verbatim plus the near-dup-aware kind='safe' leg
-  — clusters assigned to train/val/test atomically, the oracle
-  recomputing the clusters via recursive closure.
-- global_pack_documents (net-new; staged_global_pack_documents)
-  still needs a reserve merge to free its slot; natural candidates
-  inside the due-50: repetition_profile_documents +
-  strip_repetition_documents (the detect and act halves of one
-  repetition semantics), or folding pagerank_links into a
-  link-graph composite. Name ONE in the r17 ledger update so r18
-  opens mechanical.
-
-Staged for that r15 slack (green parity rows at r12 HEAD —
-tests/test_oracle_parity.py staged_ entries):
-- llm_ops.classifier_score_documents — model-based quality filtering,
-  the inference half (CCNet/LLaMA shape): deterministic rank->weight
-  vocab via distributed top-k, tiny-build-side lookup join, exact
-  rational logit + label; pure-Python differential test on top of
-  the DuckDB hash parity;
-- state_ops.ndb_time_travel_replay — ndb snapshot reads
-  (keep_versions retention + replay(as_of=gen)); every retained
-  snapshot hash-matches the last-write-wins resolution over its
-  batch prefix — the transaction-log read of the Delta/Iceberg swap;
-- state_ops.streaming_rollup_ndb_events — continuous aggregate
-  maintained in ndb by per-micro-batch read-modify-write merge (the
-  incremental-materialized-view / hypertable-rollup shape); the
-  final table hash-matches the batch GROUP BY regardless of
-  micro-batch boundaries;
-- llm_ops.quantized_ann_topk_embeddings — int8-quantized ANN (l2
-  scale): integer-exact dot-product top-k, bit-exact across engines
-  by IEEE determinism (norm bit-identity pinned in pytest), recall@5
-  ~0.98 vs the float cosine baseline.
-r15 math: 46 due + these 4 = 50, exactly full.
-
-Staged toward r15/r16 slack (net-new r13, parity rows
-staged_perplexity_score_documents / staged_dsir_weights_documents):
-- llm_ops.perplexity_score_documents — CCNet-style unigram-LM
-  cross-entropy quality scoring (Wenzek et al. 2020), integer
-  milli-bit surprisal so the per-doc sum is exact in both engines;
-  the model-statistics quality signal completing the rule-based
-  text_profile / classifier_score family.
-- llm_ops.dsir_weights_documents — DSIR importance-resampling
-  weights (Xie et al. 2023): per-doc sum of target-vs-raw unigram
-  log-ratios (one conditional-count pass builds both distributions),
-  same integer milli-bit quantization; the data-MIXING primitive
-  between quality filtering and dedup.
-- llm_ops.bpe_learn_merges_documents — the full BPE merge-LEARNING
-  loop (Sennrich et al. 2016): K unrolled rounds of pair-count /
-  argmax / merge-everywhere over the VOCAB-sized word-frequency
-  table (iterative state never corpus-sized); merges applied as
-  two-pass literal replace with property-pinned semantics, identical
-  in both engines, so the oracle unrolls the loop exactly (the
-  kmeans/pagerank iterative-oracle family). Completes the tokenizer
-  story bpe_pair_counts_documents opens — a later kind-tagged
-  composite can merge the two.
-- llm_ops.bpe_encode_documents (net-new r14, parity row
-  staged_bpe_encode_documents) — the APPLY half: re-derive the K
-  learned merges, encode every corpus token through the vocab-sized
-  distinct-word table, emit the per-doc symbol-count audit (exact
-  integer compression). pair_counts -> learn -> encode is the full
-  tokenizer story.
-- llm_ops.bigram_lm_score_documents (net-new r14, parity row
-  staged_bigram_lm_score_documents) — interpolated BIGRAM-LM
-  cross-entropy (Jelinek-Mercer lambda=1/2, even/odd train/score
-  split): the n-gram upgrade of perplexity_score toward CCNet's
-  KenLM shape — the model carries token ORDER (order-sensitivity
-  pinned in pytest: a reversed-word salad scores worse than the
-  fluent original under an identical unigram mix). Exact-rational
-  milli-bit surprisal with unigram backoff and the 2^53 cluster
-  branch (the DSIR machinery); three-implementation boundary test.
-  A natural r16 composite partner for perplexity_score (kind-tagged
-  "lm_scores" row) once both are registered.
-- llm_ops.bpe_pipeline_documents (net-new r14, parity row
-  staged_bpe_pipeline_documents) — the tokenizer-story composite:
-  kind-tagged union of pair statistics, the K learned merges, and the
-  encode audit. Registering it SUPERSEDES bpe_pair_counts_documents
-  (r14 head, due r16) and makes bpe_learn_merges + bpe_encode
-  driver-visible in the same slot — schedule r16, where it frees the
-  pair_counts slot net of itself.
-
-r15 CAPACITY NOTE (recomputed at r14 HEAD — the
-embedding_audit_composite pull-forward above made the gap vanish):
-r15 due = 44, slack = 6 = exactly the six staged net-new candidates
-(classifier_score, ndb_time_travel, streaming_rollup_ndb,
-quantized_ann, perplexity_score, dsir_weights). The remaining merge
-candidates stay in RESERVE for r15/r16 flexibility:
-- llm_ops.semantic_dedup_composite — embedding_near_dup +
-  semdedup_embeddings sharing ONE checkpointed pair table (STAGED
-  r13, parity row staged_semantic_dedup_composite; measured 3.30s vs
-  the constituents' combined 4.82s at sf0.1 — registering it frees 1
-  slot AND cuts ~1.5s of bench; both constituents sit in the r15 due
-  tail, so executing it in r15 frees a slot for
-  bpe_learn_merges_documents);
-- pipeline_ops.split_sample_composite — deterministic_split_documents
-  + sample_stratified_documents, the two multiplicative-id-hash
-  partitioning entries in one kind-tagged row (STAGED r13, parity row
-  staged_split_sample_composite — frees 1 slot);
-- SUPERSEDER: llm_ops.quality_ensemble_documents (STAGED r13, parity
-  row staged_quality_ensemble_documents) — the capstone per-doc
-  keep/drop verdict (quorum >= 3 of: per-source rule prune,
-  repetition gate, classifier label, perplexity tail) — drives
-  quality_prune's percent-rank window plus three more signal
-  codepaths, so registering it RETIRES quality_prune_documents
-  slot-neutrally.
-
-Staged toward r16 (media family): media_resize_documents (pixel
-decode -> nearest-neighbor 8x8 -> channel means, fully arithmetic
-oracle) and its merge composite media_pipeline_documents (ONE synth
-pass -> container decode + pixel resize joined on media_id), which
-registers by SUPERSEDING media_decode_roundtrip +
-media_resize_documents — net-zero slots while adding the resize
-codepath to the driver window.
-
-Staged as a PAIR with no round assigned yet (slot-neutral: the merge
-frees exactly the slot the net-new entry needs — schedule both in
-whichever window next has its constituents due, e.g. r14 where
-events_daily_type_pivot and events_json_props both sit):
-- events_ops.funnel_steps_events — ordered funnel analysis (morning
-  view -> midday click -> evening purchase, hour-banded so the step
-  distribution is non-degenerate at every SF): one shuffle, per-user
-  sort_array + higher-order fold; the oracle is the INDEPENDENT
-  min-seq-after three-join formulation, so the hash cross-checks two
-  constructions of funnel semantics;
-- events_ops.events_audit_composite — kind-tagged merge of
-  events_daily_type_pivot + events_json_props (both keep standalone
-  parity rows per the retirement contract).
+The driver checks only the first 50 entries of ``queries()`` and
+stores its verdicts in CORRECTNESS_r<NN>.json at the repo root. The
+order is computed, not declared: ``rotation()`` puts entries with no
+green row (new, or red in every record) first, then the oldest last
+green round; ties keep declaration order. While at most 50 entries
+lack a green row in the newest record, every entry outside the head
+got one last round, so no entry waits more than 2 rounds for a driver
+row. A code change needs no pull-forward: pytest runs oracle parity on
+every entry every round (tests/test_oracle_parity.py), and this clock
+bounds how stale any entry's driver row can get.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import json
+import re
+from collections.abc import Callable, Mapping, Sequence
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -467,572 +40,240 @@ from dbitool_spark.plans import (
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-_QUERIES: dict[str, QueryFn] = {}
-_ORACLES: dict[str, str] = {}
+_REPO = Path(__file__).resolve().parents[2]
+_RECORD_NAME = re.compile(r"CORRECTNESS_r(\d+)\.json")
+
+_ENTRIES: tuple[tuple[str, QueryFn, str], ...] = (
+    # relational
+    ("brand_bracket_revenue", relational.brand_bracket_revenue,
+     relational.BRAND_BRACKET_SQL),
+    ("bucketed_orders_customer_join", relational.bucketed_orders_customer_join,
+     relational.BUCKETED_ORDERS_CUSTOMER_SQL),
+    ("customer_order_distribution", relational.customer_order_distribution,
+     relational.CUSTOMER_ORDER_DISTRIBUTION_SQL),
+    ("customer_segment_stats", relational.customer_segment_stats,
+     relational.CUSTOMER_SEGMENT_SQL),
+    ("customers_without_recent_orders", relational.customers_without_recent_orders,
+     relational.CUSTOMERS_WITHOUT_RECENT_ORDERS_SQL),
+    ("dormant_rich_customers", relational.dormant_rich_customers,
+     relational.DORMANT_RICH_SQL),
+    ("large_volume_customers", relational.large_volume_customers,
+     relational.LARGE_VOLUME_SQL),
+    ("nation_market_share", relational.nation_market_share,
+     relational.NATION_MARKET_SHARE_SQL),
+    ("nation_trade_flows", relational.nation_trade_flows, relational.NATION_TRADE_SQL),
+    ("order_priority_counts", relational.order_priority_counts,
+     relational.ORDER_PRIORITY_SQL),
+    ("priority_by_shipyear", relational.priority_by_shipyear,
+     relational.PRIORITY_BY_SHIPYEAR_SQL),
+    ("promo_revenue_share", relational.promo_revenue_share,
+     relational.PROMO_REVENUE_SQL),
+    ("q11_important_stock", relational.q11_important_stock, relational.Q11_SQL),
+    ("q16_supplier_part_counts", relational.q16_supplier_part_counts,
+     relational.Q16_SQL),
+    ("q1_pricing_summary", relational.q1_pricing_summary, relational.Q1_SQL),
+    ("q20_potential_part_promotion", relational.q20_potential_part_promotion,
+     relational.Q20_SQL),
+    ("q21_waiting_suppliers", relational.q21_waiting_suppliers, relational.Q21_SQL),
+    ("q2_min_cost_supplier", relational.q2_min_cost_supplier, relational.Q2_SQL),
+    ("q3_shipping_priority", relational.q3_shipping_priority, relational.Q3_SQL),
+    ("q5_region_revenue", relational.q5_region_revenue, relational.Q5_SQL),
+    ("q6_forecast_revenue", relational.q6_forecast_revenue, relational.Q6_SQL),
+    ("returned_item_revenue", relational.returned_item_revenue,
+     relational.RETURNED_ITEM_SQL),
+    ("revenue_rollup", relational.revenue_rollup, relational.REVENUE_ROLLUP_SQL),
+    ("small_quantity_revenue", relational.small_quantity_revenue,
+     relational.SMALL_QUANTITY_REVENUE_SQL),
+    ("supplier_nation_profit", relational.supplier_nation_profit,
+     relational.SUPPLIER_NATION_PROFIT_SQL),
+    ("top_parts_per_brand", relational.top_parts_per_brand, relational.TOP_PARTS_SQL),
+    ("top_revenue_suppliers", relational.top_revenue_suppliers,
+     relational.TOP_REVENUE_SUPPLIERS_SQL),
+    # scalar_ops
+    ("array_functions_embeddings", scalar_ops.array_functions_embeddings,
+     scalar_ops.ARRAY_FUNCTIONS_EMBEDDINGS_SQL),
+    ("brand_type_cube", scalar_ops.brand_type_cube, scalar_ops.BRAND_TYPE_CUBE_SQL),
+    ("date_functions_orders", scalar_ops.date_functions_orders,
+     scalar_ops.DATE_FUNCTIONS_ORDERS_SQL),
+    ("segment_set_ops", scalar_ops.segment_set_ops, scalar_ops.SEGMENT_SET_OPS_SQL),
+    ("sketch_accuracy_gates", scalar_ops.sketch_accuracy_gates,
+     scalar_ops.SKETCH_ACCURACY_GATES_SQL),
+    ("stats_functions_lineitem", scalar_ops.stats_functions_lineitem,
+     scalar_ops.STATS_FUNCTIONS_LINEITEM_SQL),
+    ("string_functions_part", scalar_ops.string_functions_part,
+     scalar_ops.STRING_FUNCTIONS_PART_SQL),
+    # events_ops
+    ("events_after_busy_hours", events_ops.events_after_busy_hours,
+     events_ops.EVENTS_AFTER_BUSY_SQL),
+    ("events_asof_orders", events_ops.events_asof_orders,
+     events_ops.EVENTS_ASOF_ORDERS_SQL),
+    ("events_audit_composite", events_ops.events_audit_composite,
+     events_ops.EVENTS_AUDIT_COMPOSITE_SQL),
+    ("funnel_steps_events", events_ops.funnel_steps_events,
+     events_ops.FUNNEL_STEPS_EVENTS_SQL),
+    ("skew_composite_events", events_ops.skew_composite_events,
+     events_ops.SKEW_COMPOSITE_SQL),
+    # format_io
+    ("email_chart_roundtrip", format_io.email_chart_roundtrip,
+     format_io.EMAIL_CHART_ROUNDTRIP_SQL),
+    ("format_chain_docs_orders", format_io.format_chain_docs_orders,
+     format_io.FORMAT_CHAIN_DOCS_ORDERS_SQL),
+    ("format_chain_nation_xmlbson", format_io.format_chain_nation_xmlbson,
+     format_io.FORMAT_CHAIN_NATION_XMLBSON_SQL),
+    ("jdbc_roundtrip_part", format_io.jdbc_roundtrip_part,
+     format_io.JDBC_ROUNDTRIP_PART_SQL),
+    ("quarantine_corrupt_formats", format_io.quarantine_corrupt_formats,
+     format_io.QUARANTINE_CORRUPT_FORMATS_SQL),
+    ("sqlite_query_from_stream_part", format_io.sqlite_query_from_stream_part,
+     format_io.SQLITE_QUERY_FROM_STREAM_PART_SQL),
+    ("xls_roundtrip_nation", format_io.xls_roundtrip_nation,
+     format_io.XLS_ROUNDTRIP_NATION_SQL),
+    # pipeline_ops
+    ("bloom_decontaminate_documents", pipeline_ops.bloom_decontaminate_documents,
+     pipeline_ops.BLOOM_DECONTAMINATE_SQL),
+    ("chunk_documents", pipeline_ops.chunk_documents, pipeline_ops.CHUNK_DOCUMENTS_SQL),
+    ("concat_positional_supplier_customer",
+     pipeline_ops.concat_positional_supplier_customer,
+     pipeline_ops.CONCAT_POSITIONAL_SQL),
+    ("corpus_mix_weighted", pipeline_ops.corpus_mix_weighted,
+     pipeline_ops.CORPUS_MIX_WEIGHTED_SQL),
+    ("curation_pipeline_documents", pipeline_ops.curation_pipeline_documents,
+     pipeline_ops.CURATION_PIPELINE_SQL),
+    ("decontaminate_documents", pipeline_ops.decontaminate_documents,
+     pipeline_ops.DECONTAMINATE_DOCUMENTS_SQL),
+    ("pack_sequences_documents", pipeline_ops.pack_sequences_documents,
+     pipeline_ops.PACK_SEQUENCES_SQL),
+    ("split_sample_composite", pipeline_ops.split_sample_composite,
+     pipeline_ops.SPLIT_SAMPLE_COMPOSITE_SQL),
+    ("vocab_topk_documents", pipeline_ops.vocab_topk_documents,
+     pipeline_ops.VOCAB_TOPK_SQL),
+    # state_ops
+    ("ndb_range_pruned_replay", state_ops.ndb_range_pruned_replay,
+     state_ops.NDB_RANGE_PRUNED_REPLAY_SQL),
+    ("ndb_time_travel_replay", state_ops.ndb_time_travel_replay,
+     state_ops.NDB_TIME_TRAVEL_SQL),
+    ("sessions_composite_events", state_ops.sessions_composite_events,
+     state_ops.SESSIONS_COMPOSITE_SQL),
+    ("streaming_click_purchase_join", state_ops.streaming_click_purchase_join,
+     state_ops.STREAMING_CLICK_PURCHASE_JOIN_SQL),
+    ("streaming_curation_chain_documents", state_ops.streaming_curation_chain_documents,
+     llm_ops.CURATION_TEXT_CHAIN_SQL),
+    ("streaming_decontaminate_documents", state_ops.streaming_decontaminate_documents,
+     state_ops.STREAMING_DECONTAMINATE_SQL),
+    ("streaming_dedup_events", state_ops.streaming_dedup_events,
+     state_ops.STREAMING_DEDUP_EVENTS_SQL),
+    ("streaming_hourly_composite", state_ops.streaming_hourly_composite,
+     state_ops.STREAMING_HOURLY_COMPOSITE_SQL),
+    ("streaming_lsh_near_dup_documents", state_ops.streaming_lsh_near_dup_documents,
+     state_ops.STREAMING_LSH_NEAR_DUP_SQL),
+    ("streaming_rollup_ndb_events", state_ops.streaming_rollup_ndb_events,
+     state_ops.STREAMING_ROLLUP_NDB_SQL),
+    # llm_ops
+    ("ann_recall_composite", llm_ops.ann_recall_composite,
+     llm_ops.ANN_RECALL_COMPOSITE_SQL),
+    ("ann_topk_planted_hits", llm_ops.ann_topk_planted_hits,
+     llm_ops.ANN_TOPK_PLANTED_HITS_SQL),
+    ("bm25_topk_documents", llm_ops.bm25_topk_documents,
+     llm_ops.BM25_TOPK_DOCUMENTS_SQL),
+    ("bpe_pipeline_documents", llm_ops.bpe_pipeline_documents,
+     llm_ops.BPE_PIPELINE_DOCUMENTS_SQL),
+    ("classifier_score_documents", llm_ops.classifier_score_documents,
+     llm_ops.CLASSIFIER_SCORE_SQL),
+    ("curation_text_chain_documents", llm_ops.curation_text_chain_documents,
+     llm_ops.CURATION_TEXT_CHAIN_SQL),
+    ("dedup_representatives_documents", llm_ops.dedup_representatives_documents,
+     llm_ops.DEDUP_REPRESENTATIVES_SQL),
+    ("dsir_weights_documents", llm_ops.dsir_weights_documents,
+     llm_ops.DSIR_WEIGHTS_SQL),
+    ("duplicate_spans_documents", llm_ops.duplicate_spans_documents,
+     llm_ops.DUPLICATE_SPANS_SQL),
+    ("embedding_audit_composite", llm_ops.embedding_audit_composite,
+     llm_ops.EMBEDDING_AUDIT_COMPOSITE_SQL),
+    ("exact_dedup_documents", llm_ops.exact_dedup_documents,
+     llm_ops.EXACT_DEDUP_DOCUMENTS_SQL),
+    ("fingerprint_dedup_counts", llm_ops.fingerprint_dedup_counts,
+     llm_ops.FINGERPRINT_DEDUP_COUNTS_SQL),
+    ("frame_sample_documents", llm_ops.frame_sample_documents,
+     llm_ops.FRAME_SAMPLE_DOCUMENTS_SQL),
+    ("last_event_per_user", llm_ops.last_event_per_user,
+     llm_ops.LAST_EVENT_PER_USER_SQL),
+    ("media_decode_roundtrip", llm_ops.media_decode_roundtrip,
+     llm_ops.MEDIA_DECODE_ROUNDTRIP_SQL),
+    ("media_features_documents", llm_ops.media_features_documents,
+     llm_ops.MEDIA_FEATURES_DOCUMENTS_SQL),
+    ("ngram_containment_documents", llm_ops.ngram_containment_documents,
+     llm_ops.NGRAM_CONTAINMENT_SQL),
+    ("ngram_jaccard_variants_documents", llm_ops.ngram_jaccard_variants_documents,
+     llm_ops.NGRAM_JACCARD_VARIANTS_SQL),
+    ("pagerank_links_documents", llm_ops.pagerank_links_documents,
+     llm_ops.PAGERANK_LINKS_SQL),
+    ("perplexity_score_documents", llm_ops.perplexity_score_documents,
+     llm_ops.PERPLEXITY_SCORE_SQL),
+    ("pii_scan_documents", llm_ops.pii_scan_documents, llm_ops.PII_SCAN_SQL),
+    ("quality_prune_documents", llm_ops.quality_prune_documents,
+     llm_ops.QUALITY_PRUNE_DOCUMENTS_SQL),
+    ("quantized_ann_topk_embeddings", llm_ops.quantized_ann_topk_embeddings,
+     llm_ops.QUANTIZED_ANN_TOPK_SQL),
+    ("redact_pii_documents", llm_ops.redact_pii_documents, llm_ops.REDACT_PII_SQL),
+    ("repetition_profile_documents", llm_ops.repetition_profile_documents,
+     llm_ops.REPETITION_PROFILE_SQL),
+    ("semantic_dedup_composite", llm_ops.semantic_dedup_composite,
+     llm_ops.SEMANTIC_DEDUP_COMPOSITE_SQL),
+    ("simhash_recall_planted", llm_ops.simhash_recall_planted,
+     llm_ops.CONST_RECALL_SQL),
+    ("source_overlap_matrix", llm_ops.source_overlap_matrix,
+     llm_ops.SOURCE_OVERLAP_MATRIX_SQL),
+    ("source_profile_documents", llm_ops.source_profile_documents,
+     llm_ops.SOURCE_PROFILE_SQL),
+    ("strip_markup_documents", llm_ops.strip_markup_documents,
+     llm_ops.STRIP_MARKUP_DOCUMENTS_SQL),
+    ("strip_repetition_documents", llm_ops.strip_repetition_documents,
+     llm_ops.STRIP_REPETITION_SQL),
+    ("text_profile_documents", llm_ops.text_profile_documents,
+     llm_ops.TEXT_PROFILE_DOCUMENTS_SQL),
+    ("trim_duplicate_spans_documents", llm_ops.trim_duplicate_spans_documents,
+     llm_ops.TRIM_DUPLICATE_SPANS_SQL),
+)
 
 
-def register(name: str, fn: QueryFn, oracle: str | None = None) -> None:
-    _QUERIES[name] = fn
-    if oracle is not None:
-        _ORACLES[name] = oracle
+def _green(row: Mapping) -> bool:
+    return (
+        row.get("rows_match") is True
+        and row.get("schema_match") is True
+        and row.get("hash_match") is True
+        and row.get("err") is None
+    )
+
+
+def rotation(
+    names: Sequence[str], records: Mapping[int, Mapping[str, Mapping]]
+) -> list[str]:
+    """``names`` ordered by the last round (key of ``records``) in
+    which the entry's row was green, -1 when it never was; the sort is
+    stable, so ties keep the order of ``names``."""
+    last_green: dict[str, int] = {}
+    for rnd, record in records.items():
+        for name, row in record.items():
+            if _green(row) and rnd > last_green.get(name, -1):
+                last_green[name] = rnd
+    return sorted(names, key=lambda name: last_green.get(name, -1))
+
+
+def correctness_records() -> dict[int, dict]:
+    """Round number -> the driver's CORRECTNESS_r<NN>.json at the repo
+    root; empty when no record is present."""
+    records = {}
+    for path in _REPO.glob("CORRECTNESS_r*.json"):
+        m = _RECORD_NAME.fullmatch(path.name)
+        if m:
+            records[int(m.group(1))] = json.loads(path.read_text())
+    return records
 
 
 def queries() -> dict[str, QueryFn]:
-    return dict(_QUERIES)
+    fns = {name: fn for name, fn, _ in _ENTRIES}
+    return {name: fns[name] for name in rotation(list(fns), correctness_records())}
 
 
 def oracle_sql() -> dict[str, str]:
-    return dict(_ORACLES)
-
-
-# =====================================================================
-# r17 WINDOW (head-50): PURE ROTATION (r17 is an optimization round —
-# no registrations, retirements or feature moves; the capacity
-# ledger's four staged registration moves stay queued for the next
-# build round). Head = the 48 entries due their r17 driver row (the
-# r15 head minus the two r16 retirees that sat in it) + the 2
-# structural-slack slots filled by the two r16-head entries whose
-# CODE changed this optimization round (bpe_pipeline_documents'
-# shared learn chain, simhash_recall_planted's rebalance revert) —
-# the code-change-rotation rule: a changed entry lands its fresh
-# driver row in the same round as the change.
-# =====================================================================
-
-# NEW (r15): model-based quality filtering, the inference half
-# (CCNet/LLaMA shape): deterministic rank->weight vocab via
-# distributed top-k, tiny-build-side lookup join, exact rational
-# logit + label (oracle-proven a round early as
-# staged_classifier_score_documents).
-register(
-    "classifier_score_documents",
-    llm_ops.classifier_score_documents,
-    llm_ops.CLASSIFIER_SCORE_SQL,
-)
-# NEW (r15): ndb TIME TRAVEL — keep_versions retention +
-# replay(as_of=gen); every retained snapshot hash-matches the
-# last-write-wins resolution over its batch prefix — the
-# transaction-log read of the Delta/Iceberg swap (oracle-proven a
-# round early as staged_ndb_time_travel_replay).
-register(
-    "ndb_time_travel_replay",
-    state_ops.ndb_time_travel_replay,
-    state_ops.NDB_TIME_TRAVEL_SQL,
-)
-# NEW (r15): continuous aggregate maintained in ndb by per-micro-batch
-# read-modify-write merge (the incremental-materialized-view /
-# hypertable-rollup shape); the final table hash-matches the batch
-# GROUP BY regardless of micro-batch boundaries (oracle-proven a
-# round early as staged_streaming_rollup_ndb_events).
-register(
-    "streaming_rollup_ndb_events",
-    state_ops.streaming_rollup_ndb_events,
-    state_ops.STREAMING_ROLLUP_NDB_SQL,
-)
-# NEW (r15): int8-quantized ANN (l2 scale) — integer-exact
-# dot-product top-k, bit-exact across engines by IEEE determinism
-# (norm bit-identity pinned in pytest), recall@5 ~0.98 vs the float
-# cosine baseline (oracle-proven a round early as
-# staged_quantized_ann_topk_embeddings).
-register(
-    "quantized_ann_topk_embeddings",
-    llm_ops.quantized_ann_topk_embeddings,
-    llm_ops.QUANTIZED_ANN_TOPK_SQL,
-)
-# NEW (r15): CCNet-style unigram-LM cross-entropy quality scoring
-# (Wenzek et al. 2020) — integer milli-bit surprisal so the per-doc
-# sum is exact in both engines; completes the rule-based
-# text_profile / classifier_score quality family (oracle-proven a
-# round early as staged_perplexity_score_documents).
-register(
-    "perplexity_score_documents",
-    llm_ops.perplexity_score_documents,
-    llm_ops.PERPLEXITY_SCORE_SQL,
-)
-# NEW (r15): DSIR importance-resampling weights (Xie et al. 2023) —
-# per-doc sum of target-vs-raw unigram log-ratios, one
-# conditional-count pass builds both distributions, integer milli-bit
-# quantization + the 2^53 cluster-scale branch (oracle-proven a round
-# early as staged_dsir_weights_documents).
-register(
-    "dsir_weights_documents",
-    llm_ops.dsir_weights_documents,
-    llm_ops.DSIR_WEIGHTS_SQL,
-)
-
-# --- the 44 entries due their r15 row (last driver row: r13) ----------
-
-
-# NEW (r13): the PII ACTION — mask the classes pii_scan detects via a
-# regexp_replace cascade over the SAME pattern constants (one knob,
-# both engines), emitting redacted text + per-class counts
-# (oracle-proven a round early as staged_redact_pii_documents).
-register(
-    "redact_pii_documents",
-    llm_ops.redact_pii_documents,
-    llm_ops.REDACT_PII_SQL,
-)
-# NEW (r13): within-document repeated-line removal — first-occurrence-
-# preserving, ONE higher-order-filter projection, no shuffle
-# (oracle-proven a round early as staged_strip_repetition_documents).
-register(
-    "strip_repetition_documents",
-    llm_ops.strip_repetition_documents,
-    llm_ops.STRIP_REPETITION_SQL,
-)
-# NEW (r13): the cross-doc substring dedup ACTION (Lee et al. 2022
-# shape) — cut the shared-span suffix from the lower-priority doc of
-# each duplicate_spans pair; candidate volume bounded by the existing
-# hash-gram join (oracle-proven a round early as
-# staged_trim_duplicate_spans_documents).
-register(
-    "trim_duplicate_spans_documents",
-    llm_ops.trim_duplicate_spans_documents,
-    llm_ops.TRIM_DUPLICATE_SPANS_SQL,
-)
-# NEW (r13): the end-to-end text-cleaning chain (strip_markup ->
-# repeated-line removal -> PII redaction) proven by ONE oracle hash,
-# every stage non-vacuous via disjoint plant moduli (%3/%5/%7;
-# oracle-proven a round early as staged_curation_text_chain_documents).
-register(
-    "curation_text_chain_documents",
-    llm_ops.curation_text_chain_documents,
-    llm_ops.CURATION_TEXT_CHAIN_SQL,
-)
-# NEW (r13): method-tagged merge of ann_recall_planted +
-# ann_topk_bruteforce (both RETIRED with standalone parity rows) —
-# one driver row drives the brute-force exact top-k kernel AND both
-# approximate indexes against the planted fixture (oracle-proven a
-# round early as staged_ann_recall_composite).
-register(
-    "ann_recall_composite",
-    llm_ops.ann_recall_composite,
-    llm_ops.ANN_RECALL_COMPOSITE_SQL,
-)
-# NEW (r13): ndb upsert/replay through the r12 files_per_bucket
-# intra-bucket pruned write path — SUPERSEDES ndb_upsert_replay
-# (strictly more codepath; retiree keeps a standalone parity row;
-# oracle-proven a round early as staged_ndb_range_pruned_replay).
-register(
-    "ndb_range_pruned_replay",
-    state_ops.ndb_range_pruned_replay,
-    state_ops.NDB_RANGE_PRUNED_REPLAY_SQL,
-)
-# NEW (r13, r12 verdict item 5): per-(method, query) planted-neighbor
-# hits for the LSH and IVF top-k paths — the oracle-backed SUPERSEDER
-# of the rows-only ann_topk_lsh/ann_topk_ivf entries (both RETIRED;
-# they keep pytest recall/top-k coverage in tests/test_llm_ops.py).
-# oracle_sql() now covers 100% of queries().
-register(
-    "ann_topk_planted_hits",
-    llm_ops.ann_topk_planted_hits,
-    llm_ops.ANN_TOPK_PLANTED_HITS_SQL,
-)
-# NEW (r13): ordered funnel analysis (morning view -> midday click ->
-# evening purchase, hour-banded): one shuffle, per-user sort_array +
-# higher-order fold; the oracle is the INDEPENDENT min-seq-after
-# three-join formulation (oracle-proven a round early as
-# staged_funnel_steps_events).
-register(
-    "funnel_steps_events",
-    events_ops.funnel_steps_events,
-    events_ops.FUNNEL_STEPS_EVENTS_SQL,
-)
-# NEW (r13): kind-tagged merge of events_daily_type_pivot +
-# events_json_props (both RETIRED with standalone parity rows) — the
-# slot-neutral pair with funnel_steps_events per the ledger.
-register(
-    "events_audit_composite",
-    events_ops.events_audit_composite,
-    events_ops.EVENTS_AUDIT_COMPOSITE_SQL,
-)
-register(
-    "format_chain_nation_xmlbson",
-    format_io.format_chain_nation_xmlbson,
-    format_io.FORMAT_CHAIN_NATION_XMLBSON_SQL,
-)
-register(
-    "source_overlap_matrix",
-    llm_ops.source_overlap_matrix,
-    llm_ops.SOURCE_OVERLAP_MATRIX_SQL,
-)
-register(
-    "quality_prune_documents",
-    llm_ops.quality_prune_documents,
-    llm_ops.QUALITY_PRUNE_DOCUMENTS_SQL,
-)
-register(
-    "streaming_lsh_near_dup_documents",
-    state_ops.streaming_lsh_near_dup_documents,
-    state_ops.STREAMING_LSH_NEAR_DUP_SQL,
-)
-register(
-    "streaming_dedup_events",
-    state_ops.streaming_dedup_events,
-    state_ops.STREAMING_DEDUP_EVENTS_SQL,
-)
-register(
-    "curation_pipeline_documents",
-    pipeline_ops.curation_pipeline_documents,
-    pipeline_ops.CURATION_PIPELINE_SQL,
-)
-register(
-    "ngram_containment_documents",
-    llm_ops.ngram_containment_documents,
-    llm_ops.NGRAM_CONTAINMENT_SQL,
-)
-register(
-    "streaming_decontaminate_documents",
-    state_ops.streaming_decontaminate_documents,
-    state_ops.STREAMING_DECONTAMINATE_SQL,
-)
-register(
-    "media_decode_roundtrip",
-    llm_ops.media_decode_roundtrip,
-    llm_ops.MEDIA_DECODE_ROUNDTRIP_SQL,
-)
-register("nation_trade_flows", relational.nation_trade_flows, relational.NATION_TRADE_SQL)
-register(
-    "array_functions_embeddings",
-    scalar_ops.array_functions_embeddings,
-    scalar_ops.ARRAY_FUNCTIONS_EMBEDDINGS_SQL,
-)
-register(
-    "stats_functions_lineitem",
-    scalar_ops.stats_functions_lineitem,
-    scalar_ops.STATS_FUNCTIONS_LINEITEM_SQL,
-)
-register("string_functions_part", scalar_ops.string_functions_part, scalar_ops.STRING_FUNCTIONS_PART_SQL)
-register("date_functions_orders", scalar_ops.date_functions_orders, scalar_ops.DATE_FUNCTIONS_ORDERS_SQL)
-register("brand_type_cube", scalar_ops.brand_type_cube, scalar_ops.BRAND_TYPE_CUBE_SQL)
-register("segment_set_ops", scalar_ops.segment_set_ops, scalar_ops.SEGMENT_SET_OPS_SQL)
-register("nation_market_share", relational.nation_market_share, relational.NATION_MARKET_SHARE_SQL)
-register("q6_forecast_revenue", relational.q6_forecast_revenue, relational.Q6_SQL)
-register("returned_item_revenue", relational.returned_item_revenue, relational.RETURNED_ITEM_SQL)
-register("promo_revenue_share", relational.promo_revenue_share, relational.PROMO_REVENUE_SQL)
-register("large_volume_customers", relational.large_volume_customers, relational.LARGE_VOLUME_SQL)
-register("brand_bracket_revenue", relational.brand_bracket_revenue, relational.BRAND_BRACKET_SQL)
-register(
-    "fingerprint_dedup_counts",
-    llm_ops.fingerprint_dedup_counts,
-    llm_ops.FINGERPRINT_DEDUP_COUNTS_SQL,
-)
-register(
-    "media_features_documents",
-    llm_ops.media_features_documents,
-    llm_ops.MEDIA_FEATURES_DOCUMENTS_SQL,
-)
-register(
-    "frame_sample_documents",
-    llm_ops.frame_sample_documents,
-    llm_ops.FRAME_SAMPLE_DOCUMENTS_SQL,
-)
-register("exact_dedup_documents", llm_ops.exact_dedup_documents, llm_ops.EXACT_DEDUP_DOCUMENTS_SQL)
-register("last_event_per_user", llm_ops.last_event_per_user, llm_ops.LAST_EVENT_PER_USER_SQL)
-register(
-    "decontaminate_documents",
-    pipeline_ops.decontaminate_documents,
-    pipeline_ops.DECONTAMINATE_DOCUMENTS_SQL,
-)
-register("chunk_documents", pipeline_ops.chunk_documents, pipeline_ops.CHUNK_DOCUMENTS_SQL)
-register("vocab_topk_documents", pipeline_ops.vocab_topk_documents, pipeline_ops.VOCAB_TOPK_SQL)
-register("pii_scan_documents", llm_ops.pii_scan_documents, llm_ops.PII_SCAN_SQL)
-register(
-    "customer_order_distribution",
-    relational.customer_order_distribution,
-    relational.CUSTOMER_ORDER_DISTRIBUTION_SQL,
-)
-register(
-    "bucketed_orders_customer_join",
-    relational.bucketed_orders_customer_join,
-    relational.BUCKETED_ORDERS_CUSTOMER_SQL,
-)
-
-# Rotated INTO the r17 head (code-change-rotation rule; see banner):
-# NEW (r16): the tokenizer-story composite — SUPERSEDES
-# bpe_pair_counts_documents (retired with a standalone parity row)
-# and makes bpe_learn_merges + bpe_encode driver-visible in the same
-# slot: one row drives pair statistics (kind='pair'), the K-round
-# merge-learning loop (kind='merge'), and the corpus encode audit
-# (kind='encode'), each through its full original codepath
-# (oracle-proven since r14 as staged_bpe_pipeline_documents).
-register(
-    "bpe_pipeline_documents",
-    llm_ops.bpe_pipeline_documents,
-    llm_ops.BPE_PIPELINE_DOCUMENTS_SQL,
-)
-
-register("simhash_recall_planted", llm_ops.simhash_recall_planted, llm_ops.CONST_RECALL_SQL)
-
-# ===================== driver-window boundary (50) ====================
-# Everything below was driver-green in r16 (CORRECTNESS_r16) and —
-# except the two code-changed entries rotated into the head above —
-# unchanged this round; full pytest oracle-parity coverage continues
-# every round regardless of position. Due their next driver row in
-# r18 (48 entries).
-
-
-
-# NEW (r16): kind-tagged merge of embedding_near_dup +
-# semdedup_embeddings (both RETIRED with standalone parity rows) —
-# and a real plan improvement: the LSH-bucketed cosine pair table is
-# computed ONCE (localCheckpointed) and feeds both the pair listing
-# and the SemDeDup keep/drop table, where the two standalone entries
-# each paid candidate generation separately (3.30s vs the
-# constituents' combined 4.82s at sf0.1; oracle-proven since r13 as
-# staged_semantic_dedup_composite).
-register(
-    "semantic_dedup_composite",
-    llm_ops.semantic_dedup_composite,
-    llm_ops.SEMANTIC_DEDUP_COMPOSITE_SQL,
-)
-# NEW (r16): kind-tagged merge of deterministic_split_documents +
-# sample_stratified_documents (both RETIRED with standalone parity
-# rows) — the two realizations of the multiplicative id-hash
-# partitioning family in one row; both single scan-shaped aggregates,
-# the union adds no shuffle beyond the constituents' (oracle-proven
-# since r13 as staged_split_sample_composite).
-register(
-    "split_sample_composite",
-    pipeline_ops.split_sample_composite,
-    pipeline_ops.SPLIT_SAMPLE_COMPOSITE_SQL,
-)
-
-# --- the 47 entries due their r16 row (last driver row: r14) ----------
-
-
-# NEW (r14): variant-tagged merge of user_sessions +
-# user_sessions_window + streaming_user_sessions_events (all three
-# RETIRED with standalone parity rows) — three realizations of the
-# >30-min-gap session semantics (lag+cumsum, native session_window,
-# streaming drain) cross-checked by ONE union hash (oracle-proven a
-# round early as staged_sessions_composite_events).
-register(
-    "sessions_composite_events",
-    state_ops.sessions_composite_events,
-    state_ops.SESSIONS_COMPOSITE_SQL,
-)
-# NEW (r14): kind-tagged merge of format_chain_documents +
-# format_chain_orders (both RETIRED with standalone parity rows) —
-# both multi-hop sink/source chains plus an ORC hop on the recovered
-# typed orders rows, lossless column-per-field normalization
-# (oracle-proven a round early as staged_format_chain_docs_orders).
-register(
-    "format_chain_docs_orders",
-    format_io.format_chain_docs_orders,
-    format_io.FORMAT_CHAIN_DOCS_ORDERS_SQL,
-)
-# NEW (r14): variant-tagged merge of skewed_user_rollup_events +
-# skewed_segment_join_events (both RETIRED with standalone parity
-# rows) — the salted-aggregation and salted-join skew answers in one
-# driver row (oracle-proven a round early as
-# staged_skew_composite_events).
-register(
-    "skew_composite_events",
-    events_ops.skew_composite_events,
-    events_ops.SKEW_COMPOSITE_SQL,
-)
-# NEW (r14): per-doc column-composite merge of
-# token_repetition_metrics_documents + repetition_stats_documents
-# (both RETIRED with standalone parity rows; oracle-proven a round
-# early as staged_repetition_profile_documents).
-register(
-    "repetition_profile_documents",
-    llm_ops.repetition_profile_documents,
-    llm_ops.REPETITION_PROFILE_SQL,
-)
-# NEW (r14): kind-tagged per-source corpus audit merging
-# domain_stats_documents + top_terms_per_source (both RETIRED with
-# standalone parity rows; oracle-proven a round early as
-# staged_source_profile_documents).
-register(
-    "source_profile_documents",
-    llm_ops.source_profile_documents,
-    llm_ops.SOURCE_PROFILE_SQL,
-)
-# NEW (r14, capacity pull-forward from the r15 reserve): kind-tagged
-# merge of kmeans_embeddings + semantic_outliers_documents (both
-# RETIRED with standalone parity rows) — fills the 50th head slot the
-# original 8-registration plan left empty and makes r15 close exactly
-# with its six staged net-new candidates (oracle-proven a round early
-# as staged_embedding_audit_composite).
-register(
-    "embedding_audit_composite",
-    llm_ops.embedding_audit_composite,
-    llm_ops.EMBEDDING_AUDIT_COMPOSITE_SQL,
-)
-# NEW (r14): clean-on-ingest — the full text-curation chain
-# (strip_markup -> repeated-line removal -> PII redaction) as a
-# stateless streaming projection, drained against the BATCH chain's
-# oracle: micro-batch-boundary invariance is the claim (oracle-proven
-# a round early as staged_streaming_curation_chain_documents).
-register(
-    "streaming_curation_chain_documents",
-    state_ops.streaming_curation_chain_documents,
-    llm_ops.CURATION_TEXT_CHAIN_SQL,
-)
-# NEW (r14): link-graph PageRank quality signal (Page et al. 1999)
-# — integer-arithmetic ranks are bit-identical cross-engine (no float
-# summation order dependence), per-iteration checkpoint discipline,
-# and the oracle unrolls the iterations as chained CTEs (the
-# kmeans iterative-oracle family; oracle-proven a round early as
-# staged_pagerank_links_documents).
-register(
-    "pagerank_links_documents",
-    llm_ops.pagerank_links_documents,
-    llm_ops.PAGERANK_LINKS_SQL,
-)
-
-# --- the 41 entries due their r14 row (last driver row: r12) ----------
-
-register(
-    "streaming_hourly_composite",
-    state_ops.streaming_hourly_composite,
-    state_ops.STREAMING_HOURLY_COMPOSITE_SQL,
-)
-register(
-    "strip_markup_documents",
-    llm_ops.strip_markup_documents,
-    llm_ops.STRIP_MARKUP_DOCUMENTS_SQL,
-)
-register(
-    "dedup_representatives_documents",
-    llm_ops.dedup_representatives_documents,
-    llm_ops.DEDUP_REPRESENTATIVES_SQL,
-)
-register(
-    "bloom_decontaminate_documents",
-    pipeline_ops.bloom_decontaminate_documents,
-    pipeline_ops.BLOOM_DECONTAMINATE_SQL,
-)
-register(
-    "text_profile_documents",
-    llm_ops.text_profile_documents,
-    llm_ops.TEXT_PROFILE_DOCUMENTS_SQL,
-)
-register(
-    "bm25_topk_documents",
-    llm_ops.bm25_topk_documents,
-    llm_ops.BM25_TOPK_DOCUMENTS_SQL,
-)
-register(
-    "concat_positional_supplier_customer",
-    pipeline_ops.concat_positional_supplier_customer,
-    pipeline_ops.CONCAT_POSITIONAL_SQL,
-)
-register(
-    "email_chart_roundtrip",
-    format_io.email_chart_roundtrip,
-    format_io.EMAIL_CHART_ROUNDTRIP_SQL,
-)
-register(
-    "ngram_jaccard_variants_documents",
-    llm_ops.ngram_jaccard_variants_documents,
-    llm_ops.NGRAM_JACCARD_VARIANTS_SQL,
-)
-register(
-    "streaming_click_purchase_join",
-    state_ops.streaming_click_purchase_join,
-    state_ops.STREAMING_CLICK_PURCHASE_JOIN_SQL,
-)
-register(
-    "sketch_accuracy_gates",
-    scalar_ops.sketch_accuracy_gates,
-    scalar_ops.SKETCH_ACCURACY_GATES_SQL,
-)
-register(
-    "xls_roundtrip_nation",
-    format_io.xls_roundtrip_nation,
-    format_io.XLS_ROUNDTRIP_NATION_SQL,
-)
-register(
-    "sqlite_query_from_stream_part",
-    format_io.sqlite_query_from_stream_part,
-    format_io.SQLITE_QUERY_FROM_STREAM_PART_SQL,
-)
-register(
-    "jdbc_roundtrip_part",
-    format_io.jdbc_roundtrip_part,
-    format_io.JDBC_ROUNDTRIP_PART_SQL,
-)
-register("q2_min_cost_supplier", relational.q2_min_cost_supplier, relational.Q2_SQL)
-register("q11_important_stock", relational.q11_important_stock, relational.Q11_SQL)
-register(
-    "q16_supplier_part_counts",
-    relational.q16_supplier_part_counts,
-    relational.Q16_SQL,
-)
-register(
-    "q20_potential_part_promotion",
-    relational.q20_potential_part_promotion,
-    relational.Q20_SQL,
-)
-register("q21_waiting_suppliers", relational.q21_waiting_suppliers, relational.Q21_SQL)
-register(
-    "dormant_rich_customers",
-    relational.dormant_rich_customers,
-    relational.DORMANT_RICH_SQL,
-)
-register(
-    "corpus_mix_weighted",
-    pipeline_ops.corpus_mix_weighted,
-    pipeline_ops.CORPUS_MIX_WEIGHTED_SQL,
-)
-register(
-    "events_asof_orders",
-    events_ops.events_asof_orders,
-    events_ops.EVENTS_ASOF_ORDERS_SQL,
-)
-register(
-    "quarantine_corrupt_formats",
-    format_io.quarantine_corrupt_formats,
-    format_io.QUARANTINE_CORRUPT_FORMATS_SQL,
-)
-# (events_daily_type_pivot retired r13 into events_audit_composite —
-# standalone parity row kept in tests/test_oracle_parity.py)
-register(
-    "duplicate_spans_documents",
-    llm_ops.duplicate_spans_documents,
-    llm_ops.DUPLICATE_SPANS_SQL,
-)
-register(
-    "supplier_nation_profit",
-    relational.supplier_nation_profit,
-    relational.SUPPLIER_NATION_PROFIT_SQL,
-)
-register(
-    "priority_by_shipyear",
-    relational.priority_by_shipyear,
-    relational.PRIORITY_BY_SHIPYEAR_SQL,
-)
-register(
-    "top_revenue_suppliers",
-    relational.top_revenue_suppliers,
-    relational.TOP_REVENUE_SUPPLIERS_SQL,
-)
-register(
-    "small_quantity_revenue",
-    relational.small_quantity_revenue,
-    relational.SMALL_QUANTITY_REVENUE_SQL,
-)
-register(
-    "events_after_busy_hours",
-    events_ops.events_after_busy_hours,
-    events_ops.EVENTS_AFTER_BUSY_SQL,
-)
-register("q1_pricing_summary", relational.q1_pricing_summary, relational.Q1_SQL)
-register("q3_shipping_priority", relational.q3_shipping_priority, relational.Q3_SQL)
-register("q5_region_revenue", relational.q5_region_revenue, relational.Q5_SQL)
-register("top_parts_per_brand", relational.top_parts_per_brand, relational.TOP_PARTS_SQL)
-register("customer_segment_stats", relational.customer_segment_stats, relational.CUSTOMER_SEGMENT_SQL)
-register("revenue_rollup", relational.revenue_rollup, relational.REVENUE_ROLLUP_SQL)
-register(
-    "customers_without_recent_orders",
-    relational.customers_without_recent_orders,
-    relational.CUSTOMERS_WITHOUT_RECENT_ORDERS_SQL,
-)
-register("order_priority_counts", relational.order_priority_counts, relational.ORDER_PRIORITY_SQL)
-register(
-    "pack_sequences_documents",
-    pipeline_ops.pack_sequences_documents,
-    pipeline_ops.PACK_SEQUENCES_SQL,
-)
+    return {name: sql for name, _, sql in _ENTRIES}

@@ -612,9 +612,8 @@ ORDER BY hour, event_type
 
 def streaming_hourly_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Variant-tagged composite of the three hourly tumbling-window
-    entries — the r12 merge candidate per the registry ledger's
-    retirement/merge policy (the events_asof_orders /
-    ngram_jaccard_variants pattern): one driver row drives the BATCH
+    entries (the events_asof_orders / ngram_jaccard_variants
+    pattern): one driver row drives the BATCH
     hourly agg (count + exact-decimal sum), the COMPLETE-mode stream
     drain (watermark 0, state flushed whole), and the APPEND-mode
     production path (1-hour watermark, closed-window emission rule) —
@@ -625,8 +624,8 @@ def streaming_hourly_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale notes are the constituents': one (hour, type) shuffle for
     the batch agg; bounded (hour, type) state for complete mode;
-    watermark-evicted state for append. STAGED r11 for the r12 window
-    (parity row staged_streaming_hourly_composite)."""
+    watermark-evicted state for append. The three constituents keep
+    standalone parity rows."""
     from dbitool_spark.plans import events_ops
 
     null_sum = F.lit(None).cast("double").alias("sum_value")
@@ -1056,9 +1055,8 @@ WHERE doc_id % 2 = 0
 
 
 def sessions_composite_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Variant-tagged composite of the THREE sessionization entries —
-    the r14 merge candidate per the registry ledger's retirement/merge
-    policy (the streaming_hourly_composite pattern): one driver row
+    """Variant-tagged composite of the THREE sessionization entries
+    (the streaming_hourly_composite pattern): one driver row
     drives the batch lag+cumsum plan (user_sessions), the batch native
     session_window plan (user_sessions_window), and the incremental
     stateful session_window drain (streaming_user_sessions_events) —
@@ -1071,8 +1069,8 @@ def sessions_composite_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale notes are the constituents': one shuffle on user_id for each
     batch variant (both window passes reuse the partitioning); the
     streaming variant holds per-user open-session state, merged on
-    overlap, complete-mode drained. Retirees keep standalone parity
-    rows per the retirement contract."""
+    overlap, complete-mode drained. The three constituents keep
+    standalone parity rows."""
     from dbitool_spark.plans import events_ops
 
     cols = ["user_id", "n_sessions", "n_events", "longest_session_us"]

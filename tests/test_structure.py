@@ -34,3 +34,18 @@ def test_shuffle_partitions_written_only_in_session_module():
         if rel != "session.py" and write.search(src)
     ]
     assert hits == []
+
+
+def test_driver_window_is_the_computed_rotation():
+    """The driver checks the first 50 entries of __spark_entry__.queries();
+    they must be the head of registry.rotation() over the declared names
+    and the stored CORRECTNESS records, and each carries an oracle."""
+    import __spark_entry__
+    from dbitool_spark.plans import registry
+
+    declared = [name for name, _fn, _sql in registry._ENTRIES]
+    expected = registry.rotation(declared, registry.correctness_records())[:50]
+    head = list(__spark_entry__.queries())[:50]
+    assert head == expected
+    oracles = __spark_entry__.oracle_sql()
+    assert [n for n in head if n not in oracles] == []
