@@ -113,6 +113,8 @@ SCALING_SF_BIG = "/root/testdata/sf0.1"
 def _scaling_ops():
     """Op-level (not registry-level) thunks so both SFs run the exact
     same parameters; count() drives the full candidate plan."""
+    from pyspark.sql import functions as F
+
     from dbitool_spark import catalog
     from dbitool_spark.ops import dedup
 
@@ -150,20 +152,28 @@ def _scaling_ops():
 
         return skewed_user_rollup_events(spark, d)
 
-    def lsh_topk(spark, d):
-        # ANN scale path #1 (r9 verdict task): bucketed candidate probe
-        # — growth must track corpus size (bucket equi-join), never
-        # queries*corpus all-pairs
-        from dbitool_spark.plans.llm_ops import ann_topk_lsh
+    def _ann_inputs(spark, d):
+        from dbitool_spark.plans.llm_ops import _N_ANN_QUERIES
 
-        return ann_topk_lsh(spark, d)
+        emb = catalog.load(spark, d, "embeddings")
+        return emb, emb.filter(F.col("vec_id") < _N_ANN_QUERIES)
+
+    def lsh_topk(spark, d):
+        # ANN scale path #1: bucketed candidate probe — growth must
+        # track corpus size (bucket equi-join), never queries*corpus
+        # all-pairs
+        from dbitool_spark.ops import similarity
+
+        return similarity.lsh_topk(*_ann_inputs(spark, d), k=5)
 
     def ivf_topk(spark, d):
         # ANN scale path #2: the gemm-identity assignment kernel is
         # O(N*C + N*dim) per Arrow batch; cell-pruned probe after
-        from dbitool_spark.plans.llm_ops import ann_topk_ivf
+        from dbitool_spark.ops import similarity
 
-        return ann_topk_ivf(spark, d)
+        return similarity.ivf_topk(
+            *_ann_inputs(spark, d), k=5, n_centroids=16, n_probe=4
+        )
 
     def bm25(spark, d):
         # r11 (verdict task 5): corpus-wide work is one tokenize +
@@ -305,30 +315,6 @@ def _scaling_ops():
 
         return funnel_steps_events(spark, d)
 
-    def bpe_learn_merges(spark, d):
-        # r13 staged: the iterative loop runs over the VOCAB-sized
-        # word-frequency table, so growth must track the one-time
-        # token-stream aggregation, not K x corpus
-        from dbitool_spark.plans.llm_ops import bpe_learn_merges_documents
-
-        return bpe_learn_merges_documents(spark, d)
-
-    def bigram_lm(spark, d):
-        # r14 staged: bigram/context/unigram count tables (vocab- and
-        # bigram-sized) + three keyed joins over the scored half —
-        # growth must track the token stream
-        from dbitool_spark.plans.llm_ops import bigram_lm_score_documents
-
-        return bigram_lm_score_documents(spark, d)
-
-    def bpe_encode(spark, d):
-        # r14 staged: learn loop (vocab-sized) + ONE token-stream join
-        # against the encoded distinct-word lengths — growth must
-        # track the token stream, never K x corpus
-        from dbitool_spark.plans.llm_ops import bpe_encode_documents
-
-        return bpe_encode_documents(spark, d)
-
     def streaming_curation(spark, d):
         # r14 registration (gated r15): the curation chain as a
         # stateless streaming projection — the drain's fixed overhead
@@ -358,21 +344,13 @@ def _scaling_ops():
         return sessions_composite_events(spark, d)
 
     def bpe_pipeline(spark, d):
-        # r16 superseder (gated ahead of registration, the pagerank
-        # precedent): pair stats + learn loop + encode share the one
-        # token-stream aggregation; growth must track the token
+        # pair stats + the K-round learn loop + encode: the loop runs
+        # over the vocabulary-sized word-frequency table and encode is
+        # one token-stream join, so growth must track the token
         # stream, never K x corpus
         from dbitool_spark.plans.llm_ops import bpe_pipeline_documents
 
         return bpe_pipeline_documents(spark, d)
-
-    def lm_scores(spark, d):
-        # r15 staged (r17 merge candidate): both LM scorers off ONE
-        # corpus pass — same token-stream contract as the
-        # constituents it supersedes
-        from dbitool_spark.plans.llm_ops import lm_scores_composite
-
-        return lm_scores_composite(spark, d)
 
     def semantic_dedup(spark, d):
         # r16 registration: ONE checkpointed LSH-bucketed pair table
@@ -389,50 +367,43 @@ def _scaling_ops():
 
         return split_sample_composite(spark, d)
 
-    def ndb_replay_lookup(spark, d):
-        # r16 staged (r17 superseder candidate): the range-pruned
-        # write path plus a K-key pruned lookup — the lookup leg's
-        # cost must track K/n_buckets of the table + the probe's
-        # bounded bucket aggregation, never the full state
-        from dbitool_spark.plans.state_ops import ndb_replay_lookup_composite
-
-        return ndb_replay_lookup_composite(spark, d)
-
-    def winnow_near_dup(spark, d):
-        # r16 staged (r17 net-new candidate): fingerprint selection is
-        # a pure projection; pair generation is an inverted-index join
-        # whose posting lists the MOSS DF cap bounds, so pair volume —
-        # and the op's cost — must grow linearly with the corpus
-        from dbitool_spark.plans.llm_ops import winnow_near_dup_documents
-
-        return winnow_near_dup_documents(spark, d)
-
     def edit_distance_join(spark, d):
-        # r16 staged (r17 net-new candidate): constant-size (d*q+1)
-        # rarest-first prefixes keyed on the gram — candidate volume
-        # tracks the sparse-gram frequency profile, and the sparse
-        # title corpus keeps the TRUE result near-linear in rows
-        from dbitool_spark.plans.llm_ops import edit_distance_join_documents
-
-        return edit_distance_join_documents(spark, d)
-
-    def leakage_safe_split(spark, d):
-        # r16 staged (r18 superseder candidate): banded LSH pairs +
-        # bounded CC + one corpus LEFT join + scan-shaped aggregates —
-        # growth must track the pair table (bucket equi-join), with
-        # the component table staying small
-        from dbitool_spark.plans.pipeline_ops import leakage_safe_split_composite
-
-        return leakage_safe_split_composite(spark, d)
+        # constant-size (d*q+1) rarest-first prefixes keyed on the gram
+        # — candidate volume tracks the sparse-gram frequency profile.
+        # The corpus is each document's first-4-word "title" plus a
+        # copy with character 7 deleted under id + 1e6: random-word
+        # titles keep the TRUE ED <= 2 result near-linear in rows,
+        # unlike dense digit-grid or low-cardinality name columns
+        docs = catalog.load(spark, d, "documents")
+        titles = docs.select(
+            F.col("doc_id").alias("id"),
+            F.concat_ws(
+                " ", F.slice(F.split(F.lower(F.trim("text")), r"\s+"), 1, 4)
+            ).alias("name"),
+        )
+        planted = titles.select(
+            (F.col("id") + 1_000_000).alias("id"),
+            F.concat(
+                F.col("name").substr(F.lit(1), F.lit(6)),
+                F.col("name").substr(F.lit(8), F.length("name")),
+            ).alias("name"),
+        )
+        return dedup.edit_distance_pairs(
+            titles.unionByName(planted), "id", "name", max_dist=2, q=3
+        )
 
     def global_pack(spark, d):
-        # r16 staged (r18 net-new candidate): the distributed scan —
-        # cost must track the range shuffle + per-partition windows;
+        # the two-phase distributed prefix sum behind sequence packing
+        # — cost must track the range shuffle + per-partition windows;
         # the only global step is the one-row-per-partition offset
         # table, so growth is the scan's, never a serialization
-        from dbitool_spark.plans.llm_ops import global_pack_documents
+        from dbitool_spark.ops import scale, text
 
-        return global_pack_documents(spark, d)
+        docs = catalog.load(spark, d, "documents")
+        toks = docs.select("doc_id", text.token_count(F.col("text")).alias("n_tok"))
+        return scale.with_running_total(
+            toks, ["doc_id"], "n_tok", total_col="before", inclusive=False
+        )
 
     return {
         "minhash_near_dup_pairs": minhash,
@@ -460,21 +431,14 @@ def _scaling_ops():
         "perplexity_score": perplexity_score,
         "dsir_weights": dsir_weights,
         "funnel_steps": funnel_steps,
-        "bpe_learn_merges": bpe_learn_merges,
-        "bpe_encode": bpe_encode,
-        "bigram_lm": bigram_lm,
         "streaming_curation_chain": streaming_curation,
         "quantized_ann_topk": quantized_ann,
         "sessions_composite": sessions_composite,
         "bpe_pipeline": bpe_pipeline,
-        "lm_scores_composite": lm_scores,
         "semantic_dedup_composite": semantic_dedup,
         "split_sample_composite": split_sample,
-        "ndb_replay_lookup_composite": ndb_replay_lookup,
-        "winnow_near_dup": winnow_near_dup,
         "edit_distance_join": edit_distance_join,
         "global_pack": global_pack,
-        "leakage_safe_split": leakage_safe_split,
     }
 
 
@@ -637,9 +601,8 @@ def _lazy_plan_variants():
         return lambda spark, sf_dir: fn(spark, sf_dir, materialize=False)
 
     return {
-        # r14: the retired kmeans_embeddings / top_terms_per_source /
-        # minhash_near_dup_documents twins moved with their codepaths
-        # into the registered composites (materialize= threads through)
+        # composites thread materialize= through to their checkpointing
+        # constituents (kmeans_embeddings, top_terms_per_source)
         "embedding_audit_composite": _entry_lazy(llm_ops.embedding_audit_composite),
         "source_profile_documents": _entry_lazy(llm_ops.source_profile_documents),
         "curation_pipeline_documents": _entry_lazy(
@@ -655,11 +618,10 @@ def _lazy_plan_variants():
         "ngram_containment_documents": _entry_lazy(
             llm_ops.ngram_containment_documents
         ),
-        # r16: embedding_near_dup's lazy twin retired with the entry;
-        # its successor semantic_dedup_composite has no lazy twin —
-        # connected_components' sizing count makes plan construction
-        # eager regardless (the dedup_representatives precedent), so
-        # its fingerprint hashes the checkpoint-backed plan
+        # semantic_dedup_composite has no lazy twin: connected_
+        # components' sizing count makes plan construction eager
+        # regardless (the dedup_representatives precedent), so its
+        # fingerprint hashes the checkpoint-backed plan
         "bm25_topk_documents": _entry_lazy(llm_ops.bm25_topk_documents),
     }
 
@@ -1033,63 +995,5 @@ def main() -> int:
     return 0
 
 
-def staged_preflight() -> int:
-    """SPARK_GRAFT_BENCH_STAGED=1 mode: measure the parity suite's
-    staged_ entries (next-round registration candidates) at the bench
-    SF — medians of 3 to BENCH_staged.json + one stdout JSON line.
-    This formalizes the per-round staged pre-flight (SURVEY r12
-    appendix) so a candidate's cost is known BEFORE it enters the
-    50-slot window, not discovered in the round's exclusive record.
-    Separate from the driver-contract record on purpose: staged
-    entries are not registered, so they never touch BENCH_queries /
-    vs_prev."""
-    import statistics
-    import time
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-    from dbitool_spark.session import get_session
-
-    spark = get_session("dbitool_spark-bench-staged")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    from tests import test_oracle_parity as parity
-
-    cases = [
-        (name, fn)
-        for name, fn, _sql in parity._RETIRED_CASES
-        if name.startswith("staged_")
-    ]
-    timings: dict[str, float] = {}
-    for name, fn in cases:
-        samples = []
-        for _ in range(runs):
-            t0 = time.time()
-            fn(spark, sf_dir).count()
-            samples.append(time.time() - t0)
-        timings[name] = round(statistics.median(samples), 4)
-        print(f"{name}: {timings[name]}s {sorted(round(x, 2) for x in samples)}",
-              file=sys.stderr)
-    repo_dir = os.environ.get("SPARK_GRAFT_BENCH_REPO_DIR") or os.path.dirname(
-        os.path.abspath(__file__)
-    )
-    try:
-        with open(os.path.join(repo_dir, "BENCH_staged.json"), "w") as fh:
-            json.dump({"sf_dir": sf_dir, "runs": runs, "staged": timings}, fh, indent=1)
-    except OSError as exc:
-        print(f"WARN: could not write BENCH_staged.json: {exc}", file=sys.stderr)
-    print(json.dumps({
-        "metric": "staged_total_median_sec",
-        "value": round(sum(timings.values()), 4),
-        "unit": "sec",
-        "n_staged": len(timings),
-    }))
-    return 0
-
-
 if __name__ == "__main__":
-    if os.environ.get("SPARK_GRAFT_BENCH_STAGED", "0") == "1":
-        raise SystemExit(staged_preflight())
     raise SystemExit(main())

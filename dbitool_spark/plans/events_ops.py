@@ -41,17 +41,6 @@ def events_hourly_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EVENTS_HOURLY_STATS_SQL = """
-SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
-       event_type,
-       COUNT(*) AS n,
-       CAST(CAST(round(SUM(CAST(value AS DECIMAL(18,6))), 6) AS DECIMAL(18,6)) AS DOUBLE) AS sum_value
-FROM events
-GROUP BY 1, 2
-ORDER BY hour, event_type
-"""
-
-
 def events_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON property extraction from the props column (scalar JSON
     path — stays in codegen via get_json_object) aggregated per type.
@@ -221,18 +210,6 @@ def events_asof_latest_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EVENTS_ASOF_SQL = """
-SELECT e.event_id, e.user_id, epoch_us(e.ts) AS ts_us, o.o_orderkey AS latest_orderkey
-FROM events e LEFT JOIN LATERAL (
-  SELECT o_orderkey FROM orders
-  WHERE o_custkey = e.user_id AND o_orderdate <= e.ts
-  ORDER BY o_orderdate DESC, o_orderkey DESC
-  LIMIT 1
-) o ON true
-ORDER BY event_id
-"""
-
-
 BUSY_HOUR_MIN_EVENTS = 6
 
 
@@ -344,20 +321,6 @@ def events_asof_recent_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("event_id")
     )
-
-
-EVENTS_ASOF_TOLERANCE_SQL = f"""
-SELECT e.event_id, e.user_id, epoch_us(e.ts) AS ts_us, o.o_orderkey AS recent_orderkey
-FROM events e LEFT JOIN LATERAL (
-  SELECT o_orderkey FROM orders
-  WHERE o_custkey = e.user_id
-    AND o_orderdate <= e.ts
-    AND epoch_us(o_orderdate) >= epoch_us(e.ts) - {ASOF_TOLERANCE_DAYS * 24 * 3600 * 1_000_000}
-  ORDER BY o_orderdate DESC, o_orderkey DESC
-  LIMIT 1
-) o ON true
-ORDER BY event_id
-"""
 
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
@@ -559,8 +522,7 @@ def skew_composite_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale notes are the constituents': a hot key fans over 16 tasks in
     both shapes — the fix for the skew cases AQE does not cover
-    (aggregation; a dimension too big to broadcast). Both constituents
-    keep standalone parity rows."""
+    (aggregation; a dimension too big to broadcast)."""
     agg = skewed_user_rollup_events(spark, sf_dir).select(
         F.lit("salted_agg").alias("variant"),
         F.col("user_id").cast("string").alias("key1"),
@@ -809,8 +771,7 @@ def events_audit_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
     events_daily_type_pivot (pivot -> stack round trip) and
     events_json_props (codegen JSON path extraction + exact-integer
     aggregates), each through its full original codepath, normalized
-    to one schema and hash-checked as one union. Retirees keep
-    standalone parity rows per the retirement contract."""
+    to one schema and hash-checked as one union."""
     pivot = events_daily_type_pivot(spark, sf_dir).select(
         F.lit("pivot").alias("kind"),
         F.col("day").alias("key1"),

@@ -30,170 +30,14 @@ def _scratch(name: str) -> str:
     return tempfile.mkdtemp(prefix=f"dbitool_fmt_{name}_")
 
 
-def csv_roundtrip_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """customer → CSV (quoted, gzip) → back with explicit schema.
-    Exercises sep/quote/escape/header plus the gzip codec path."""
-    cust = catalog.load(spark, sf_dir, "customer")
-    path = os.path.join(_scratch("csv"), "customer.csv")
-    csv_io.write_csv(cust, path, sep="|", compression="gzip")
-    back = csv_io.read_csv(
-        spark,
-        path,
-        sep="|",
-        schema="c_custkey bigint, c_name string, c_nationkey int, c_acctbal double, c_mktsegment string",
-    )
-    return project(back, ["c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"])
-
-
-CSV_ROUNDTRIP_CUSTOMER_SQL = """
-SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment FROM customer
-"""
-
-
-def ndjson_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """orders → NDJSON → back. Timestamps ride as ISO strings in JSON;
-    the result formats them to yyyy-MM-dd for engine-neutral hashing."""
-    orders = catalog.load(spark, sf_dir, "orders")
-    path = os.path.join(_scratch("ndjson"), "orders.ndjson")
-    json_io.write_ndjson(orders, path)
-    back = json_io.read_ndjson(
-        spark,
-        path,
-        schema="o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
-        "o_totalprice double, o_orderdate timestamp_ntz, o_orderpriority string",
-    )
-    return back.select(
-        "o_orderkey",
-        "o_custkey",
-        "o_orderstatus",
-        "o_totalprice",
-        F.date_format("o_orderdate", "yyyy-MM-dd HH:mm:ss").alias("orderdate"),
-        "o_orderpriority",
-    )
-
-
-NDJSON_ROUNDTRIP_ORDERS_SQL = """
-SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-       strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS orderdate,
-       o_orderpriority
-FROM orders
-"""
-
-
-def json_roundtrip_region(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """region (constant 5 rows) through the bounded single-document
-    JSON edge — the reference's in-memory jsonread/jsonwrite pair."""
-    region = catalog.load(spark, sf_dir, "region")
-    path = os.path.join(_scratch("json"), "region.json")
-    json_io.write_json(region, path)
-    back = json_io.read_json(spark, path, schema="r_regionkey int, r_name string")
-    return project(back, ["r_regionkey", "r_name"])
-
-
-JSON_ROUNDTRIP_REGION_SQL = "SELECT r_regionkey, r_name FROM region"
-
-
-def fixedwidth_roundtrip_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """nation → fixed-width text → back (substring scan), values cast
-    to their original types. Widths sized so nothing truncates."""
-    nation = catalog.load(spark, sf_dir, "nation")
-    path = os.path.join(_scratch("fw"), "nation.fw")
-    fixedwidth.write_fixedwidth(nation, path, [12, 20, 12])
-    back = fixedwidth.read_fixedwidth(spark, path, [12, 20, 12])
-    return back.select(
-        F.col("n_nationkey").cast("int").alias("n_nationkey"),
-        "n_name",
-        F.col("n_regionkey").cast("int").alias("n_regionkey"),
-    )
-
-
-FIXEDWIDTH_ROUNDTRIP_NATION_SQL = "SELECT n_nationkey, n_name, n_regionkey FROM nation"
-
-
-def csv_roundtrip_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents (free text with punctuation) → quoted CSV → back:
-    the quoting/escape stress test on real content."""
-    docs = catalog.load(spark, sf_dir, "documents")
-    path = os.path.join(_scratch("docs"), "documents.csv")
-    csv_io.write_csv(docs, path)
-    back = csv_io.read_csv(
-        spark,
-        path,
-        schema="doc_id bigint, text string, lang string, source string, n_chars bigint",
-    )
-    return project(back, ["doc_id", "text", "lang", "source", "n_chars"])
-
-
-CSV_ROUNDTRIP_DOCUMENTS_SQL = "SELECT doc_id, text, lang, source, n_chars FROM documents"
-
-
-def xml_roundtrip_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """supplier → XML (native Spark 4 source) → back with explicit
-    schema (the XML reader would otherwise re-infer types)."""
-    supp = catalog.load(spark, sf_dir, "supplier")
-    path = os.path.join(_scratch("xml"), "supplier.xml")
-    xml_io.write_xml(supp, path, root_tag="suppliers", row_tag="supplier")
-    back = xml_io.read_xml(
-        spark,
-        path,
-        row_tag="supplier",
-        schema="s_suppkey bigint, s_name string, s_nationkey int, s_acctbal double",
-    )
-    return project(back, ["s_suppkey", "s_name", "s_nationkey", "s_acctbal"])
-
-
-XML_ROUNDTRIP_SUPPLIER_SQL = "SELECT s_suppkey, s_name, s_nationkey, s_acctbal FROM supplier"
-
-
-def sqlite_roundtrip_part(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """part → SQLite batched insert → distributed partitioned read
-    (sqliteselect/sqliteinsert semantics: pushdown query slices per
-    task, statement batches of 1024 on the write)."""
-    part = catalog.load(spark, sf_dir, "part")
-    dbf = os.path.join(_scratch("sqlite"), "t.db")
-    db.write_sqlite(part, dbf, "part", mode="overwrite")
-    back = db.read_sqlite(
-        spark, dbf, table="part", partition_column="p_partkey", num_partitions=4
-    )
-    return back.select(
-        "p_partkey",
-        "p_name",
-        "p_brand",
-        "p_type",
-        F.col("p_size").cast("int").alias("p_size"),
-        "p_retailprice",
-    )
-
-
-SQLITE_ROUNDTRIP_PART_SQL = (
-    "SELECT p_partkey, p_name, p_brand, p_type, p_size, p_retailprice FROM part"
-)
-
-
-def bson_roundtrip_region(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """region through the bounded single-document BSON edge
-    (self-contained spec codec; reference {a:[rows]} wire shape)."""
-    region = catalog.load(spark, sf_dir, "region")
-    path = os.path.join(_scratch("bson"), "region.bson")
-    bson_io.write_bson(region, path)
-    back = bson_io.read_bson(spark, path, schema="r_regionkey int, r_name string")
-    return project(back, ["r_regionkey", "r_name"])
-
-
-BSON_ROUNDTRIP_REGION_SQL = "SELECT r_regionkey, r_name FROM region"
-
-
 # --- composite multi-format chains (r8 registry merge policy) --------
 #
 # The reference's own chained-conversion example (csv -> json -> xml in
 # one pipeline, scripts/dbitool.pl:3273-3276) is the model: one entry
 # drives SEVERAL sink+source pairs in sequence, so a single green row
-# proves every codec in the chain preserves values exactly. These
-# replace the six retired single-format round-trips (csv_roundtrip_
-# customer/documents, ndjson_roundtrip_orders, json_roundtrip_region,
-# fixedwidth_roundtrip_nation, xlsx_roundtrip_nation) — each retiree's
-# coverage is carried by exactly one chain hop below, and the per-codec
-# pytest round-trips (tests/test_io_roundtrip.py) remain unchanged.
+# proves every codec in the chain preserves values exactly. The
+# per-codec round-trips are pinned separately in
+# tests/test_io_roundtrip.py.
 
 
 def _nation_retyped(df: DataFrame) -> DataFrame:
@@ -209,8 +53,7 @@ def _nation_retyped(df: DataFrame) -> DataFrame:
 def _nation_fw_xlsx_json(spark: SparkSession, sf_dir: str, d: str) -> DataFrame:
     """The shared first three hops of the nation chains: nation →
     fixed-width → xlsx (own-spec OOXML codec, offset x=1, y=2) →
-    bounded JSON → typed rows. One implementation so the registered
-    chain and its staged five-format successor cannot diverge."""
+    bounded JSON → typed rows."""
     from dbitool_spark.io import spreadsheet_io
 
     nation = catalog.load(spark, sf_dir, "nation")
@@ -230,18 +73,6 @@ def _nation_fw_xlsx_json(spark: SparkSession, sf_dir: str, d: str) -> DataFrame:
     return json_io.read_json(
         spark, js, schema="n_nationkey int, n_name string, n_regionkey int"
     )
-
-
-def format_chain_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """nation → fixed-width → xlsx → bounded JSON → back. Covers the
-    fixedwidthwrite/read, spreadsheetwrite/read and jsonwrite/read
-    pairs in one entry (hops shared with the staged five-format
-    successor via _nation_fw_xlsx_json)."""
-    back = _nation_fw_xlsx_json(spark, sf_dir, _scratch("chain_nation"))
-    return project(back, ["n_nationkey", "n_name", "n_regionkey"])
-
-
-FORMAT_CHAIN_NATION_SQL = "SELECT n_nationkey, n_name, n_regionkey FROM nation"
 
 
 def format_chain_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -276,16 +107,11 @@ def format_chain_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return project(back, ["doc_id", "text", "lang", "source", "n_chars"])
 
 
-FORMAT_CHAIN_DOCUMENTS_SQL = "SELECT doc_id, text, lang, source, n_chars FROM documents"
-
-
 def format_chain_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """orders (timestamps + doubles) → NDJSON → CSV (sep='|', gzip) →
     back. Timestamps ride NDJSON as ISO strings and are formatted to a
-    plain string before the CSV hop (engine-neutral, exactly the
-    retired ndjson entry's convention); the CSV hop carries the typed
-    doubles/bigints through sep/gzip — the retired customer-CSV
-    coverage."""
+    plain string before the CSV hop (engine-neutral); the CSV hop
+    carries the typed doubles/bigints through sep/gzip."""
     orders = catalog.load(spark, sf_dir, "orders")
     d = _scratch("chain_orders")
 
@@ -321,48 +147,12 @@ def format_chain_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-FORMAT_CHAIN_ORDERS_SQL = """
-SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-       strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS orderdate,
-       o_orderpriority
-FROM orders
-"""
-
-
-def xmlbson_roundtrip_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """supplier → XML → BSON (own-spec bounded codec) → back — merges
-    the r7-green xml_roundtrip_supplier and bson_roundtrip_region
-    entries into one chain (registry capacity policy); supplier is a
-    dimension table, safely inside the BSON edge's memorylimit."""
-    supp = catalog.load(spark, sf_dir, "supplier")
-    d = _scratch("chain_xmlbson")
-    schema = "s_suppkey bigint, s_name string, s_nationkey int, s_acctbal double"
-
-    xmlp = os.path.join(d, "supplier.xml")
-    xml_io.write_xml(supp, xmlp, root_tag="suppliers", row_tag="supplier")
-    hop1 = xml_io.read_xml(spark, xmlp, row_tag="supplier", schema=schema)
-
-    bsonp = os.path.join(d, "supplier.bson")
-    bson_io.write_bson(hop1, bsonp)
-    back = bson_io.read_bson(spark, bsonp, schema=schema)
-    return project(back, ["s_suppkey", "s_name", "s_nationkey", "s_acctbal"])
-
-
-XMLBSON_ROUNDTRIP_SUPPLIER_SQL = (
-    "SELECT s_suppkey, s_name, s_nationkey, s_acctbal FROM supplier"
-)
-
-
 def format_chain_nation_xmlbson(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Five-format chain: nation → fixed-width → xlsx → bounded JSON →
     XML → BSON → back, one entry covering the fixedwidth, spreadsheet,
-    json, xml, and bson write/read pairs — the union of
-    format_chain_nation and xmlbson_roundtrip_supplier's codepaths
-    (XML/BSON are table-agnostic; both constituents keep their own
-    parity rows). Values re-type between hops exactly as the
-    constituents did (the first three hops are shared with
-    format_chain_nation via _nation_fw_xlsx_json, so the two cannot
-    diverge)."""
+    json, xml, and bson write/read pairs (XML/BSON are
+    table-agnostic). The first three hops are _nation_fw_xlsx_json's;
+    the XML and BSON reads take an explicit schema."""
     d = _scratch("chain_nation5")
     schema = "n_nationkey int, n_name string, n_regionkey int"
     hop3 = _nation_fw_xlsx_json(spark, sf_dir, d)
@@ -389,9 +179,8 @@ def sqlite_query_from_stream_part(spark: SparkSession, sf_dir: str) -> DataFrame
     through the engine's fileread source — is drained by
     db.query_from_stream (bounded collect; SQL text is tiny by
     contract), and executes inside the source database via the
-    distributed partitioned sqlite read. Supersedes the retired
-    sqlite_roundtrip_part: this entry drives the same sqliteinsert +
-    partitioned sqliteselect pair PLUS the query-from-stream
+    distributed partitioned sqlite read: the sqliteinsert +
+    partitioned sqliteselect pair plus the query-from-stream
     signature."""
     from dbitool_spark.io import text_io
 
@@ -487,35 +276,6 @@ def quarantine_corrupt_ndjson(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUARANTINE_CORRUPT_NDJSON_SQL = """
-SELECT COUNT(*) AS n_good, CAST(2 AS BIGINT) AS n_bad FROM documents
-"""
-
-
-def xlsx_roundtrip_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """nation through the own-spec SpreadsheetML codec (stdlib zip +
-    XML; reference spreadsheetread/write scripts/dbitool.pl:2696-2870)
-    at a non-trivial (x=1, y=2) offset. A bounded edge — the sheet is
-    buffered driver-side exactly like the reference's in-memory
-    spreadsheet modules; nation is a constant-size dimension."""
-    from dbitool_spark.io import spreadsheet_io
-
-    nation = catalog.load(spark, sf_dir, "nation").select(
-        "n_nationkey", "n_name", "n_regionkey"
-    )
-    path = os.path.join(_scratch("xlsx"), "nation.xlsx")
-    spreadsheet_io.write_spreadsheet(nation, path, sheet="nation", x=1, y=2)
-    back = spreadsheet_io.read_spreadsheet(spark, path, sheet="nation", x=1, y=2)
-    return back.select(
-        F.col("n_nationkey").cast("bigint").alias("n_nationkey"),
-        "n_name",
-        F.col("n_regionkey").cast("bigint").alias("n_regionkey"),
-    )
-
-
-XLSX_ROUNDTRIP_NATION_SQL = "SELECT n_nationkey, n_name, n_regionkey FROM nation"
-
-
 def quarantine_corrupt_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV-side error channel: customer written as CSV plus injected
     malformed lines (wrong arity), read back PERMISSIVE with a typed
@@ -549,11 +309,6 @@ def quarantine_corrupt_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     return good.agg(F.count(F.lit(1)).alias("n_good")).withColumn(
         "n_bad", F.lit(n_bad).cast("long")
     )
-
-
-QUARANTINE_CORRUPT_CSV_SQL = """
-SELECT COUNT(*) AS n_good, CAST(2 AS BIGINT) AS n_bad FROM customer
-"""
 
 
 # --- executed JDBC path (r8) -----------------------------------------
@@ -619,9 +374,8 @@ JDBC_ROUNDTRIP_PART_SQL = (
 
 
 def quarantine_corrupt_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composite error-channel entry (r8 merge of quarantine_corrupt_
-    csv + quarantine_corrupt_ndjson — both constituent functions and
-    their pytest coverage remain; only the registry rows merged): the
+    """Composite error-channel entry over quarantine_corrupt_csv +
+    quarantine_corrupt_ndjson: the
     CSV and NDJSON quarantine splits run in one entry, tagged by
     format, so a single green row proves the PERMISSIVE->split->
     errorsize path for both parsers (reference error stream,
@@ -689,12 +443,6 @@ def email_roundtrip_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EMAIL_ROUNDTRIP_DOCUMENTS_SQL = """
-SELECT lang, COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS total_chars
-FROM documents GROUP BY lang
-"""
-
-
 def chart_roundtrip_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events per-type counts -> SVG bar chart AND gnuplot script
     (io/chart_io.py, reference TODO:77-78) -> parse both documents
@@ -735,11 +483,6 @@ def chart_roundtrip_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(k, int(v)) for k, v, _ in bars],
         "event_type string, n_events bigint",
     )
-
-
-CHART_ROUNDTRIP_EVENTS_SQL = """
-SELECT event_type, COUNT(*) AS n_events FROM events GROUP BY event_type
-"""
 
 
 def email_chart_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -792,8 +535,7 @@ def format_chain_docs_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     still proves byte-exact round-trip fidelity of all six
     sink/source pairs —
     separator-free by construction (free text never concatenates with
-    other fields). Retirees keep standalone parity rows per the
-    retirement contract."""
+    other fields)."""
     from dbitool_spark.ops.concurrency import run_parallel
 
     # r16 optimization round (guide §2.6): the documents chain and the

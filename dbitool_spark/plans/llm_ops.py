@@ -86,25 +86,6 @@ def _perturbed_corpus(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", "text").unionAll(perturbed)
 
 
-def minhash_near_dup_documents(
-    spark: SparkSession, sf_dir: str, *, materialize: bool = True
-) -> DataFrame:
-    """MinHash-LSH near-dup pairs over the perturbed corpus, exact-
-    Jaccard verified at threshold 0.7. The corpus contains BOTH the
-    constructed (i, i+offset) pairs and the generator's planted
-    natural near-duplicates, so the oracle is honest brute force:
-    exact Jaccard over all pairs in DuckDB. A hash match therefore
-    proves banding recall AND verification values end to end."""
-    docs = catalog.load(spark, sf_dir, "documents")
-    pairs = dedup.minhash_near_dup_pairs(
-        _perturbed_corpus(docs), "doc_id", "text", shingle_k=3, threshold=0.7,
-        materialize=materialize,
-    )
-    from dbitool_spark.ops.cache import transfer_persists
-
-    return transfer_persists(pairs, pairs.orderBy("id_a", "id_b"))
-
-
 # Perturbed-corpus + 3-shingle CTEs shared by EVERY shingle-based
 # oracle (minhash, exact jaccard, skew-guard, containment): one
 # definition of the corpus doubling and the shingle construction, so
@@ -140,56 +121,6 @@ cand AS (
     ON a.doc_id < b.doc_id
    AND a.n >= 0.7 * b.n - 1e-9 AND b.n >= 0.7 * a.n - 1e-9
 )"""
-
-MINHASH_NEAR_DUP_SQL = f"""
-WITH {_MINHASH_PAIRS_CTES}
-SELECT id_a, id_b, CAST(li AS DOUBLE) / (na + nb - li) AS jaccard
-FROM cand
-WHERE CAST(li AS DOUBLE) / (na + nb - li) >= 0.7
-ORDER BY id_a, id_b
-"""
-
-
-def near_dup_clusters_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup clustering end to end: MinHash-LSH pairs over the
-    perturbed corpus -> connected components -> (doc_id, cluster_id =
-    component-min id). The oracle recomputes the same pair set brute
-    force and closes it with a recursive CTE, so a hash match proves
-    the distributed min-label flooding found exactly the transitive
-    closure's components."""
-    docs = catalog.load(spark, sf_dir, "documents")
-    pairs = dedup.minhash_near_dup_pairs(
-        _perturbed_corpus(docs), "doc_id", "text", shingle_k=3, threshold=0.7
-    )
-    return (
-        dedup.connected_components(pairs)
-        .select(F.col("id").alias("doc_id"), "cluster_id")
-        .orderBy("doc_id")
-    )
-
-
-NEAR_DUP_CLUSTERS_SQL = f"""
-WITH RECURSIVE {_MINHASH_PAIRS_CTES},
-pairs AS (
-  SELECT id_a, id_b FROM cand
-  WHERE CAST(li AS DOUBLE) / (na + nb - li) >= 0.7
-),
-edges AS (
-  SELECT id_a AS a, id_b AS b FROM pairs
-  UNION ALL
-  SELECT id_b, id_a FROM pairs
-),
-nodes AS (SELECT DISTINCT a AS id FROM edges),
-reach AS (
-  SELECT a, b FROM edges
-  UNION
-  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-)
-SELECT n.id AS doc_id, least(n.id, MIN(r.b)) AS cluster_id
-FROM nodes n JOIN reach r ON r.a = n.id
-GROUP BY n.id
-ORDER BY doc_id
-"""
 
 
 def dedup_representatives_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -255,7 +186,7 @@ def dedup_representatives_documents(spark: SparkSession, sf_dir: str) -> DataFra
     # doc_id (integer negation is exact) — exactly the window's
     # (q_r DESC, doc_id ASC) first row; q_r itself is never negated,
     # so rep_quality is the untouched double. Equality pinned in
-    # tests/test_r16_optimizations.py and by the oracle hash.
+    # tests/test_llm_ops.py and by the oracle hash.
     agg = q.groupBy("cluster_id").agg(
         F.max(
             F.struct(F.col("q_r").alias("q"), (-F.col("doc_id")).alias("nd"))
@@ -315,24 +246,6 @@ ORDER BY cluster_id
 """
 
 
-def ngram_jaccard_documents(
-    spark: SparkSession, sf_dir: str, *, materialize: bool = True
-) -> DataFrame:
-    """Exact n-gram Jaccard near-dup over the perturbed corpus at a
-    lower threshold (0.5) than the LSH entry — the inverted-index
-    exact path next to MinHash's approximate one. Oracle is honest
-    all-pairs Jaccard in DuckDB, so a hash match proves the inverted
-    index finds EVERY qualifying pair with exact values."""
-    docs = catalog.load(spark, sf_dir, "documents")
-    pairs = dedup.ngram_jaccard_pairs(
-        _perturbed_corpus(docs), "doc_id", "text", shingle_k=3, threshold=0.5,
-        materialize=materialize,
-    )
-    from dbitool_spark.ops.cache import transfer_persists
-
-    return transfer_persists(pairs, pairs.orderBy("id_a", "id_b"))
-
-
 NGRAM_JACCARD_SQL = f"""
 WITH {_CORPUS_SH_CTES},
 cand AS (
@@ -345,29 +258,6 @@ FROM cand
 WHERE CAST(li AS DOUBLE) / (na + nb - li) >= 0.5
 ORDER BY id_a, id_b
 """
-
-
-def simhash_near_dup_documents(
-    spark: SparkSession, sf_dir: str, *, materialize: bool = True
-) -> DataFrame:
-    """SimHash chunk-banded candidates over the perturbed corpus,
-    kept at hamming distance <= 3. Rows-only (the 64-bit signature is
-    not practically SQL-expressible); exactness is covered by the
-    pytest recall test against brute-force hamming.
-
-    max_hamming is pushed INTO the operator so the radius filter runs
-    before the eager checkpoint — filtering the returned frame instead
-    materialized the full ~10^5-10^6-row raw candidate set first (the
-    r5 3.15x bench regression). Recall is unchanged: the pigeonhole
-    guarantee covers hamming <= n_blocks-1 = 3, all of which survive."""
-    docs = catalog.load(spark, sf_dir, "documents")
-    cands = dedup.simhash_candidates(
-        _perturbed_corpus(docs), "doc_id", "text", max_hamming=3,
-        materialize=materialize,
-    )
-    from dbitool_spark.ops.cache import transfer_persists
-
-    return transfer_persists(cands, cands.orderBy("id_a", "id_b"))
 
 
 # --- similarity search ------------------------------------------------
@@ -384,24 +274,6 @@ def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     return topk.select(
         "query_id", "neighbor_id", "rank", F.round("cos", 6).alias("cos_r")
     ).orderBy("query_id", "rank")
-
-
-ANN_TOPK_BRUTEFORCE_SQL = f"""
-WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-           FROM embeddings WHERE vec_id < {_N_ANN_QUERIES}),
-scored AS (
-  SELECT q.qid AS query_id, e.vec_id AS neighbor_id,
-         list_cosine_similarity(q.qv, CAST(e.embedding AS DOUBLE[])) AS cos
-  FROM embeddings e CROSS JOIN q
-  WHERE e.vec_id != q.qid
-)
-SELECT query_id, neighbor_id, rank, round(cos, 6) AS cos_r FROM (
-  SELECT query_id, neighbor_id, cos,
-         ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-  FROM scored
-) WHERE rank <= 5
-ORDER BY query_id, rank
-"""
 
 
 _EMBED_DIM = 64
@@ -435,32 +307,6 @@ corpus AS (
 )"""
 
 
-def embedding_near_dup(
-    spark: SparkSession, sf_dir: str, *, materialize: bool = True
-) -> DataFrame:
-    """Embedding-cosine near-dup over a perturbed corpus: each vector
-    plus a copy with element 0 scaled 1.5x. Construction gives every
-    (i, i+offset) pair cos = (1+0.5r)/sqrt(1+1.25r) >= 0.9798 for any
-    component share r, while natural pairs in this corpus top out
-    ~0.28 — perfect separation at threshold 0.95, so the oracle is
-    honest all-pairs cosine in DuckDB and a hash match proves LSH
-    bucket recall AND cosine values end to end."""
-    emb = catalog.load(spark, sf_dir, "embeddings")
-    base = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    corpus = base.unionAll(_perturbed_embeddings(base))
-    # 16 tables x 10 bits: P(miss) per cos>=0.98 pair is (1-0.9364^10)^16
-    # ~ 8e-6 — deterministic via seeded hyperplanes, verified at sf0.01
-    # and sf0.1; 1024 buckets/table keeps the candidate set ~5x smaller
-    # than 8 bits would (the cosine verify is the dominant cost).
-    pairs = similarity.embedding_near_dup_pairs(
-        corpus, id_col="vec_id", vec_col="v", dim=64,
-        threshold=0.95, n_tables=16, bits=10, materialize=materialize,
-    )
-    return pairs.select(
-        "id_a", "id_b", F.round("cos", 6).alias("cos_r")
-    ).orderBy("id_a", "id_b")
-
-
 EMBEDDING_NEAR_DUP_SQL = f"""
 WITH {_PERTURBED_CORPUS_SQL},
 pairs AS (
@@ -472,31 +318,6 @@ SELECT id_a, id_b, round(cos, 6) AS cos_r
 FROM pairs WHERE cos >= 0.95
 ORDER BY id_a, id_b
 """
-
-
-def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH-bucketed approximate top-5 for the same 10 queries — the
-    scale path (bucket joins, never all-pairs). Rows-only entry;
-    recall vs brute force is asserted in pytest."""
-    emb = catalog.load(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < _N_ANN_QUERIES)
-    topk = similarity.lsh_topk(emb, queries, k=5)
-    return topk.select(
-        "query_id", "neighbor_id", "rank", F.round("cos", 6).alias("cos_r")
-    ).orderBy("query_id", "rank")
-
-
-def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF (k-means inverted file) approximate top-5 — the second ANN
-    scale path: train cells once, probe n_probe cells per query.
-    Rows-only entry (k-means assignment is not SQL-expressible);
-    recall vs brute force asserted in pytest."""
-    emb = catalog.load(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < _N_ANN_QUERIES)
-    topk = similarity.ivf_topk(emb, queries, k=5, n_centroids=16, n_probe=4)
-    return topk.select(
-        "query_id", "neighbor_id", "rank", F.round("cos", 6).alias("cos_r")
-    ).orderBy("query_id", "rank")
 
 
 # --- recall companions for the approximate operators ------------------
@@ -646,10 +467,8 @@ def ann_recall_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r8 registry merge of ann_lsh_recall + ann_ivf_recall (the
     policy's method-tag shape, like events_asof_orders): one driver
     row runs BOTH approximate indexes against the shared planted
-    fixture and emits (method, recall). Each constituent keeps its
-    standalone oracle-parity row in tests/test_oracle_parity.py's
-    retired list; both deterministic arguments for recall == 1.0 are
-    in the constituents' docstrings."""
+    fixture and emits (method, recall). Both deterministic arguments
+    for recall == 1.0 are in the constituents' docstrings."""
     lsh = ann_lsh_recall(spark, sf_dir).select(
         F.lit("lsh").alias("method"), "recall"
     )
@@ -659,24 +478,13 @@ def ann_recall_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh.unionAll(ivf).orderBy("method")
 
 
-ANN_RECALL_PLANTED_SQL = """
-SELECT 'ivf' AS method, CAST(1.0 AS DOUBLE) AS recall
-UNION ALL
-SELECT 'lsh' AS method, CAST(1.0 AS DOUBLE) AS recall
-ORDER BY method
-"""
-
-
 def ann_recall_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Method-tagged merge of ann_recall_planted + ann_topk_bruteforce
     (the r11 verdict's r13 merge candidate): one driver row drives the
     brute-force exact top-k kernel (method='exact', per-(query, rank)
     rows with the DuckDB-checked cosine as score) AND both approximate
     indexes against the planted fixture (method='lsh'/'ivf', one row
-    each with recall as score, query/rank/neighbor NULL). Registering
-    it retires both constituents (standalone parity rows remain) and
-    frees one net window slot. STAGED r12 for the r13 window (parity
-    row staged_ann_recall_composite).
+    each with recall as score, query/rank/neighbor NULL).
 
     Scale shapes are the constituents', unchanged — see
     ann_topk_bruteforce (score every (query, vector) pair, per-query
@@ -729,11 +537,8 @@ ORDER BY method, query_id, rank
 
 def ann_topk_planted_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PER-QUERY planted-neighbor hits for the LSH and IVF top-k paths
-    — the oracle-backed SUPERSEDER of the rows-only ann_topk_lsh /
-    ann_topk_ivf registry entries (r12 verdict item 5: their raw
-    approximate top-k had no SQL oracle, the agreed exception this
-    entry removes). It drives the SAME similarity.lsh_topk / ivf_topk
-    kernels, but against the planted fixture, and emits one row per
+    — raw approximate top-k has no SQL oracle, so this entry drives
+    the similarity.lsh_topk / ivf_topk kernels against the planted fixture, and emits one row per
     (method, query) with planted_hit = whether the guaranteed-
     retrievable planted neighbor surfaced in that query's top-k.
     Determinism: seeded hyperplanes / seeded k-means, planted cos >=
@@ -818,15 +623,6 @@ ORDER BY doc_id
 """
 
 
-def langid_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Marker-word language-ID over documents, aggregated to
-    (lang_pred, n) — deterministic heuristic output, SQL-mirrored
-    (same marker sets, same argmax tie order)."""
-    docs = catalog.load(spark, sf_dir, "documents")
-    pred = text.lang_id(docs)
-    return pred.groupBy("lang_pred").agg(F.count(F.lit(1)).alias("n")).orderBy("lang_pred")
-
-
 def _langid_sql(per_doc: bool = False) -> str:
     score_exprs = [
         r"len(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'), w -> w IN ({}))) AS score_{}".format(
@@ -856,16 +652,12 @@ WITH scored AS (
 """
 
 
-LANGID_DOCUMENTS_SQL = _langid_sql()
-
-
 def text_profile_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column-composite of the three per-document text projections —
     text_stats + quality_score + the per-doc langid label joined on
     doc_id (the token_repetition_metrics precedent). One row per doc
     drives all three codepaths; oracle = the constituent SQLs' per-doc
-    forms joined on doc_id. The three constituents keep standalone
-    parity rows."""
+    forms joined on doc_id."""
     stats = text_stats_documents(spark, sf_dir)
     qual = quality_scores_documents(spark, sf_dir)
     docs = catalog.load(spark, sf_dir, "documents")
@@ -977,34 +769,6 @@ ORDER BY media_id
 _SKEWGUARD_MAX_DF = 6
 
 
-def ngram_jaccard_skewguard_documents(
-    spark: SparkSession, sf_dir: str, *, materialize: bool = True
-) -> DataFrame:
-    """The inverted-index Jaccard WITH the max_doc_freq skew guard
-    engaged: shingles appearing in more than _SKEWGUARD_MAX_DF docs
-    are dropped from the index before the self-join (the bounded-
-    fan-out trade at 100 TB: sum(df^2) is capped at max_df * corpus
-    shingle count). Semantics shift exactly as documented on the
-    operator — the intersection counts only kept shingles while the
-    denominators stay full-set sizes, so scores are a lower bound —
-    and the DuckDB oracle mirrors that arithmetic term for term, so
-    the hash match proves the guard's exact drop/keep behavior, not
-    just the happy path."""
-    docs = catalog.load(spark, sf_dir, "documents")
-    pairs = dedup.ngram_jaccard_pairs(
-        _perturbed_corpus(docs),
-        "doc_id",
-        "text",
-        shingle_k=3,
-        threshold=0.5,
-        max_doc_freq=_SKEWGUARD_MAX_DF,
-        materialize=materialize,
-    )
-    from dbitool_spark.ops.cache import transfer_persists
-
-    return transfer_persists(pairs, pairs.orderBy("id_a", "id_b"))
-
-
 NGRAM_JACCARD_SKEWGUARD_SQL = f"""
 WITH {_CORPUS_SH_CTES},
 ix AS (SELECT doc_id, len(s) AS n, unnest(s) AS shingle FROM sh),
@@ -1027,10 +791,8 @@ ORDER BY id_a, id_b
 def ngram_jaccard_variants_documents(
     spark: SparkSession, sf_dir: str, *, materialize: bool = True
 ) -> DataFrame:
-    """Merge of ngram_jaccard_documents +
-    ngram_jaccard_skewguard_documents (both constituent functions and
-    their pytest coverage remain). Variant-tagged union: the unguarded
-    inverted-index exact path and the max_doc_freq skew-guarded path
+    """Variant-tagged union of the two exact n-gram Jaccard paths:
+    the unguarded inverted-index exact path and the max_doc_freq skew-guarded path
     run in one entry, so a single green row proves both the
     complete-recall arithmetic and the guard's exact drop/keep
     behavior.
@@ -1170,8 +932,7 @@ def strip_repetition_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     MassiveText/Gopher-style cleanup (Rae et al. 2021 §A1.1) that
     drops repeated lines, keeping the FIRST occurrence in document
     order, between strip_markup and quality_prune in a curation
-    pipeline. STAGED r12 for the r13 window (parity row
-    staged_strip_repetition_documents).
+    pipeline.
 
     Semantics: text -> fixed-width word chunks ("lines"), planted
     duplicates on every doc_id % _REP_MOD == 0 doc, then an
@@ -1344,8 +1105,6 @@ def redact_pii_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     (r11 verdict item 2): mask every email/phone match in the planted
     corpus and emit the redacted text plus per-class redaction counts,
     the step every training-data pipeline runs before packing.
-    STAGED r12 for the r13 window (parity row
-    staged_redact_pii_documents).
 
     One knob, both engines (the _OVERLAP_GRAM precedent): the masks
     reuse pii_scan's _EMAIL_RE/_PHONE_RE constants with an inline
@@ -1431,8 +1190,7 @@ def pagerank_links_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant out-degree so no dangling mass, but the QUADRATIC map is
     non-bijective, so in-degrees vary and the ranks are genuinely
     non-uniform; an affine map would make the graph in-regular and
-    the test vacuously uniform). STAGED r12 as an r14
-    candidate (parity row staged_pagerank_links_documents).
+    the test vacuously uniform).
 
     Cross-engine exactness WITHOUT the decimal machinery: ranks are
     INTEGERS (unit 10^6) and the update is
@@ -1533,9 +1291,7 @@ def curation_text_chain_documents(spark: SparkSession, sf_dir: str) -> DataFrame
     """The full pre-tokenization TEXT-cleaning chain in one plan —
     strip_markup -> repeated-line removal -> PII redaction — the
     sequence a web-corpus pipeline actually runs, proven end to end
-    by one oracle hash instead of three stage-local ones. STAGED r12
-    as an r13 spare-slot candidate (parity row
-    staged_curation_text_chain_documents).
+    by one oracle hash instead of three stage-local ones.
 
     Plants compose without interference (%3 markup, %5 repeated
     line, %7 contact line), so each stage's counters are non-zero at
@@ -1743,8 +1499,6 @@ def bpe_pair_counts_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     character pairs; emit the global top-K pairs. This is the
     distributed primitive behind "train a tokenizer on the corpus" —
     one iteration here, the trainer loops it with a merge table.
-    STAGED r12 as an r14 candidate (parity row
-    staged_bpe_pair_counts_documents).
 
     Scale shape: words explode once, pairs are a higher-order
     transform over each word's characters (no per-character explode —
@@ -1847,8 +1601,7 @@ def token_repetition_metrics_documents(spark: SparkSession, sf_dir: str) -> Data
     """r8 registry merge of token_count_bpe_documents +
     ngram_repetition_documents (the policy's column-composite shape:
     both are per-doc single-projection metric tables on documents, so
-    one doc_id join drives both codepaths in one driver row; the
-    constituents keep standalone parity rows in the retired list).
+    one doc_id join drives both codepaths in one driver row).
     Inner join is lossless here — both sides emit exactly one row per
     document."""
     toks = token_count_bpe_documents(spark, sf_dir)
@@ -2176,8 +1929,7 @@ def quality_prune_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source quality prune: keep each source's top-PRUNE_KEEP
     fraction of documents by quality score — the bottom-tail filter a
     curation pipeline applies before mixing (quality floors differ per
-    source, so the cut is per-group, never global). STAGED r10 for the
-    r11 window (parity row staged_quality_prune_documents).
+    source, so the cut is per-group, never global).
 
     Scale shape: one projection + a window partitioned by source —
     the sort is per-group, never global; output ordering is the
@@ -2239,8 +1991,6 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard of their gram sets — the corpus-health diagnostic a
     training-data pipeline runs before mixing sources (a high
     off-diagonal means two 'independent' sources quote each other).
-    STAGED r10 for the r11 window (parity row
-    staged_source_overlap_matrix; registers when a slot frees).
 
     Scale shape: one explode → distinct (source, gram) projection
     (map-side combinable), per-source set sizes as a tiny agg, and a
@@ -2362,8 +2112,6 @@ def strip_markup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HTML/boilerplate removal over the documents table — the
     pre-tokenization step a 100 TB web-corpus pipeline runs before the
     quality/langid/dedup family (all of which assume clean text).
-    STAGED r11 for the r12 window (parity row
-    staged_strip_markup_documents).
 
     Emits per doc: markup presence, tag count, and the cleaned text
     with its length — the projection downstream curation consumes.
@@ -2596,8 +2344,6 @@ def trim_duplicate_spans_documents(
     dedup_keep_representative owner-selection pattern) and every
     later occurrence's covered word range is cut from its doc. Emits
     all docs with before/after word counts and the trimmed text.
-    STAGED r12 for the r13 window (parity row
-    staged_trim_duplicate_spans_documents).
 
     Scale shape: the SAME bounded hash-gram candidate volume as
     duplicate_spans (one row_number window keyed on the gram;
@@ -2709,37 +2455,6 @@ ORDER BY doc_id
 
 
 # --- SemDeDup-style embedding dedup ----------------------------------
-
-
-def semdedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup-shaped semantic dedup (Abbas et al. 2023): cosine
-    near-dup pairs over the perturbed embedding corpus -> connected
-    components -> keep one representative (component-min id) per
-    semantic cluster; singletons keep themselves. Output is the full
-    keep/drop decision table a curation pipeline applies.
-
-    Composition of two already-verified operators (LSH-bucketed cosine
-    pairs + distributed min-label components), so the oracle — honest
-    all-pairs cosine closed with a recursive CTE — checks the whole
-    chain end to end: bucket recall, cosine values, AND component
-    assignment."""
-    emb = catalog.load(spark, sf_dir, "embeddings")
-    base = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    corpus = base.unionAll(_perturbed_embeddings(base))
-    pairs = similarity.embedding_near_dup_pairs(
-        corpus, id_col="vec_id", vec_col="v", dim=64,
-        threshold=0.95, n_tables=16, bits=10,
-    ).select("id_a", "id_b")
-    comp = dedup.connected_components(pairs)
-    out = corpus.select("vec_id").join(
-        comp, corpus.vec_id == comp.id, "left"
-    )
-    cluster = F.coalesce("cluster_id", F.col("vec_id"))
-    return out.select(
-        "vec_id",
-        cluster.alias("cluster_id"),
-        (cluster == F.col("vec_id")).alias("kept"),
-    ).orderBy("vec_id")
 
 
 SEMDEDUP_EMBEDDINGS_SQL = f"""
@@ -3015,8 +2730,8 @@ ORDER BY media_id
 """
 
 
-# staged composite oracle (text_profile_documents above): the three
-# constituent SQLs' per-doc forms joined on doc_id
+# text_profile_documents' oracle: the three constituent SQLs' per-doc
+# forms joined on doc_id
 TEXT_PROFILE_DOCUMENTS_SQL = f"""
 SELECT s.doc_id AS doc_id, n_chars2, n_tokens, n_punct, n_digits,
        n_short_tokens, quality_score, lang_pred
@@ -3036,8 +2751,7 @@ def repetition_profile_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     dup/top fractions). Both sides emit exactly one row per document,
     so the inner join is lossless and one driver row drives all four
     constituent codepaths. The join adds one doc_id shuffle over
-    |docs| metric rows — never the corpus text. Retirees keep
-    standalone parity rows per the retirement contract."""
+    |docs| metric rows — never the corpus text."""
     toks = token_repetition_metrics_documents(spark, sf_dir)
     reps = repetition_stats_documents(spark, sf_dir)
     return toks.join(reps, "doc_id").orderBy("doc_id")
@@ -3062,8 +2776,7 @@ def source_profile_documents(
     original codepath; one driver row, one union hash. Normalized
     rows: domain rows key on (domain, NULL) carrying (n_links,
     n_docs, NULL); term rows key on (source, term) carrying (tf, df,
-    rank). Retirees keep standalone parity rows per the retirement
-    contract."""
+    rank)."""
     dom = domain_stats_documents(spark, sf_dir).select(
         F.lit("domain").alias("kind"),
         F.col("domain").alias("key1"),
@@ -3235,112 +2948,6 @@ ORDER BY query_id, rank
 """
 
 
-def media_resize_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image resize end to end: the synthesized media corpus's
-    image rows (24-bit BMP / RGB8 PNG / LZW GIF — same fixture as
-    media_decode_roundtrip) are pixel-decoded
-    (ops.multimodal._pixels_*), nearest-neighbor resized to 8x8
-    (integer index map (j*src)//8 — exactly reproducible arithmetic),
-    and reduced to per-channel means of the RESIZED image. Every
-    synth pixel is a closed-form function of (doc_id, x, y), so the
-    oracle states the resized means purely arithmetically: a hash
-    match proves pixel decode (row order, BGR->RGB, palette mapping),
-    the resize index map, and the mean arithmetic exactly — the
-    decode->resize->featurize preprocessing chain a multimodal
-    training pipeline runs before the model. Arrow-batched
-    mapInPandas; media bytes never leave the executors; means are
-    k/64 exact binary fractions so round(6) is tie-free."""
-    docs = catalog.load(spark, sf_dir, "documents")
-    media = multimodal.synthesize_media(docs, "doc_id", families=4).filter(
-        F.col("kind") == "image"
-    )
-    rs = multimodal.resize_media(media, out_w=8, out_h=8)
-    return rs.select(
-        "media_id", "src_w", "src_h", "decoded", "mean_r", "mean_g", "mean_b"
-    ).orderBy("media_id")
-
-
-MEDIA_RESIZE_DOCUMENTS_SQL = """
-WITH imgs AS (
-  SELECT doc_id AS media_id, doc_id % 4 AS fam,
-         CASE doc_id % 4 WHEN 1 THEN 8 + doc_id % 16
-                         WHEN 2 THEN 4 + doc_id % 13
-                         ELSE 6 + doc_id % 10 END AS w,
-         CASE doc_id % 4 WHEN 1 THEN 8 + doc_id % 9
-                         WHEN 2 THEN 4 + doc_id % 11
-                         ELSE 6 + doc_id % 7 END AS h
-  FROM documents WHERE doc_id % 4 != 0
-),
-grid AS (
-  SELECT media_id, fam, w, h,
-         (i.i * h) // 8 AS y, (j.j * w) // 8 AS x
-  FROM imgs, generate_series(0, 7) AS i(i), generate_series(0, 7) AS j(j)
-),
-px AS (
-  SELECT media_id, fam, w, h,
-         CASE fam
-           WHEN 1 THEN (((media_id + x) % 256) * 7) % 256
-           WHEN 2 THEN (media_id + 3 * x) % 256
-           ELSE (media_id * 31 + ((x + y + media_id) % 4) * 67) % 256
-         END AS r,
-         CASE fam
-           WHEN 1 THEN 255 - ((media_id + x) % 256)
-           WHEN 2 THEN (media_id + 3 * x + 1) % 256
-           ELSE (media_id * 53 + ((x + y + media_id) % 4) * 29) % 256
-         END AS g,
-         CASE fam
-           WHEN 1 THEN (media_id + x) % 256
-           WHEN 2 THEN (media_id + 3 * x + 2) % 256
-           ELSE (media_id * 17 + ((x + y + media_id) % 4) * 101) % 256
-         END AS b
-  FROM grid
-)
-SELECT media_id, CAST(MIN(w) AS INT) AS src_w, CAST(MIN(h) AS INT) AS src_h,
-       TRUE AS decoded,
-       round(SUM(r) / 64.0, 6) AS mean_r,
-       round(SUM(g) / 64.0, 6) AS mean_g,
-       round(SUM(b) / 64.0, 6) AS mean_b
-FROM px
-GROUP BY media_id
-ORDER BY media_id
-"""
-
-
-def media_pipeline_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Column-composite of the media DECODE and RESIZE stages — the
-    r16 merge candidate per the registry capacity policy: ONE synth
-    pass (families=4) feeds both extract_media_features (container
-    decode: dims + duration, the media_decode_roundtrip codepath) and
-    resize_media (pixel decode -> nearest-neighbor 8x8 -> channel
-    means, the media_resize_documents codepath), left-joined on
-    media_id — audio rows carry NULL resize columns, and src_w/src_h
-    arriving from the PIXEL decoder cross-check width/height from the
-    CONTAINER decoder inside one hash. Registers by superseding
-    media_decode_roundtrip + media_resize_documents (both keep
-    standalone parity rows). Oracle = the two arithmetic oracles
-    joined; one synth pass, two Arrow-batched mapInPandas stages,
-    one media_id join."""
-    docs = catalog.load(spark, sf_dir, "documents")
-    media = multimodal.synthesize_media(docs, "doc_id", families=4)
-    dec = multimodal.extract_media_features(media).select(
-        "media_id", "kind", "width", "height", "duration_ms"
-    )
-    rs = multimodal.resize_media(
-        media.filter(F.col("kind") == "image"), out_w=8, out_h=8
-    ).select("media_id", "src_w", "src_h", "decoded", "mean_r", "mean_g", "mean_b")
-    return dec.join(rs, "media_id", "left").orderBy("media_id")
-
-
-MEDIA_PIPELINE_DOCUMENTS_SQL = f"""
-SELECT d.media_id, d.kind, d.width, d.height, d.duration_ms,
-       r.src_w, r.src_h, r.decoded, r.mean_r, r.mean_g, r.mean_b
-FROM ({MEDIA_DECODE_ROUNDTRIP_SQL.replace("ORDER BY media_id", "")}) d
-LEFT JOIN ({MEDIA_RESIZE_DOCUMENTS_SQL.replace("ORDER BY media_id", "")}) r
-  USING (media_id)
-ORDER BY media_id
-"""
-
-
 # --- LM-perplexity quality filtering (CCNet shape, r15 candidate) -----
 
 # flag threshold in milli-bits/token: a doc whose mean unigram
@@ -3476,333 +3083,6 @@ _DSIR_TARGET_SOURCES = ("src0", "src1", "src2", "src3", "src4")
 # per-row crossover between DSIR's exact-rational form and the
 # cluster-scale difference-of-quantized-logs form.
 _DSIR_EXACT_BOUND = 1 << 53
-
-# Bigram-LM flag threshold in milli-bits/token: measured between the
-# scored-doc quartiles (sf0.01 spans 4819-5051 mb/token with median
-# 4918; sf0.1 median 4910; sf0.001 median 4919) — 4920 keeps both
-# flag populations non-vacuous at every committed SF (sf0.001
-# 118/250, sf0.01 ~half, sf0.1 417/2500).
-_BIGRAM_FLAG_MILLIBITS = 4920
-
-
-def _bigram_surprisal_mb():
-    """Per-token interpolated-bigram surprisal in integer milli-bits
-    over columns cb/c1/cw/n_tok/v_sz — the ONE knob mirrored by
-    BIGRAM_LM_SCORE_SQL's CASE. Jelinek-Mercer with lambda = 1/2:
-        p(w | prev) = (cb/c1 + (cw + 1)/(N + V)) / 2
-    which is the single exact rational
-        (cb*(N+V) + c1*(cw+1)) / (2*c1*(N+V)).
-    Three branches, identical in both engines:
-    - BACKOFF (c1 = 0: unseen/absent context, incl. each doc's first
-      token whose prev is NULL): add-one unigram, s = q(log2((N+V)/(cw+1))).
-    - EXACT (den = 2*c1*(N+V) <= 2^53, always at the committed SFs):
-      one correctly-rounded double ratio of the rational (num <= den
-      by construction, so bounding den bounds both); the guard
-      c1 <= 2^52 DIV (N+V) is overflow-free integer arithmetic.
-    - CLUSTER (above the bound, where the BIGINT products themselves
-      would overflow): IEEE double evaluation (cb/c1 + (cw+1)/(N+V))/2
-      — two correctly-rounded divides, one deterministic double add,
-      an exact halving — then q(-log2(p)); the residual cross-engine
-      risk is the documented 1-ulp libm log2 trade."""
-    cb = F.coalesce(F.col("cb"), F.lit(0))
-    c1 = F.coalesce(F.col("c1"), F.lit(0))
-    cw = F.coalesce(F.col("cw"), F.lit(0))
-    nv = F.col("n_tok") + F.col("v_sz")
-    q = lambda x: F.round(x * 1000, 0)  # noqa: E731 — shared quantizer
-    backoff = q(F.log2(nv / (cw + 1)))
-    num = cb * nv + c1 * (cw + 1)
-    den = F.lit(2) * c1 * nv
-    exact = q(F.log2(den / num))
-    cluster = q(-F.log2((cb / c1 + (cw + 1) / nv) / F.lit(2)))
-    return (
-        F.when(c1 == 0, backoff)
-        .when(c1 <= F.expr(f"{1 << 52} DIV (n_tok + v_sz)"), exact)
-        .otherwise(cluster)
-        .cast("long")
-    )
-
-
-_BIGRAM_SURPRISAL_MB_SQL = f"""CAST(CASE
-  WHEN COALESCE(c1, 0) = 0
-  THEN round(log2((s.n_tok + s.v_sz) * 1.0 / (COALESCE(cw, 0) + 1)) * 1000, 0)
-  WHEN COALESCE(c1, 0) <= {1 << 52} // (s.n_tok + s.v_sz)
-  THEN round(log2((2 * c1 * (s.n_tok + s.v_sz)) * 1.0
-                  / (COALESCE(cb, 0) * (s.n_tok + s.v_sz)
-                     + c1 * (COALESCE(cw, 0) + 1))) * 1000, 0)
-  ELSE round(-log2((COALESCE(cb, 0) * 1.0 / c1
-                    + (COALESCE(cw, 0) + 1) * 1.0 / (s.n_tok + s.v_sz))
-                   / 2) * 1000, 0)
-END AS BIGINT)"""
-
-
-def bigram_lm_score_documents(
-    spark: SparkSession, sf_dir: str, *, materialize: bool = True
-) -> DataFrame:
-    """Interpolated BIGRAM-LM cross-entropy scoring — the n-gram
-    upgrade of perplexity_score_documents toward CCNet's actual
-    5-gram KenLM shape (Wenzek et al. 2020): the reference model now
-    carries token ORDER, so shuffled-word salad scores worse than
-    fluent text even when the unigram mix is identical — the quality
-    signal the unigram scorer cannot see.
-
-    Same deterministic split (even doc_ids train, odd score). Per
-    scored token, p(w | prev) is Jelinek-Mercer lambda=1/2 between
-    the ML bigram (cb/c1) and the add-one unigram ((cw+1)/(N+V)),
-    computed as ONE exact rational quantized to integer milli-bits
-    (_bigram_surprisal_mb — the DSIR branch machinery, incl. the
-    cluster-scale IEEE branch above 2^53 and unigram backoff for
-    unseen contexts and each doc's first token). The per-doc sum is
-    an exact integer in both engines; the flag is an integer
-    cross-multiply against _BIGRAM_FLAG_MILLIBITS.
-
-    Scale shape: per-doc token arrays build (prev, w) pairs INSIDE a
-    projection (arrays_zip of two slices — no window, no per-doc
-    sort); training counts are two hash aggregations (bigram table ~
-    distinct bigrams, unigram ~ vocab) with the context-total table
-    derived from the bigram table (never a second corpus pass); the
-    scored stream takes three keyed left joins (shuffle ~ token
-    stream) + the broadcast 1-row scalar crossJoin. All three count
-    tables persist once with release handles (the perplexity_score
-    precedent). At 100 TB the bigram table is the big build side —
-    prune to top-K contexts + backoff exactly as CCNet ships pruned
-    KenLM models."""
-    from dbitool_spark.ops.cache import attach_persists, materialize_release
-
-    docs = catalog.load(spark, sf_dir, "documents")
-    arr = docs.select(
-        "doc_id", F.split(F.lower(F.trim("text")), r"\s+").alias("ts")
-    )
-    prevs = F.concat(
-        F.array(F.lit(None).cast("string")),
-        F.slice("ts", 1, F.size("ts") - 1),
-    )
-    pairs = arr.select(
-        "doc_id",
-        F.explode(F.arrays_zip(prevs.alias("prev"), F.col("ts").alias("w"))).alias(
-            "p"
-        ),
-    ).select("doc_id", F.col("p.prev").alias("prev"), F.col("p.w").alias("w"))
-    train = pairs.filter(F.col("doc_id") % 2 == 0)
-    big = (
-        train.filter(F.col("prev").isNotNull())
-        .groupBy("prev", "w")
-        .agg(F.count(F.lit(1)).alias("cb"))
-        .persist()
-    )
-    pre = big.groupBy("prev").agg(F.sum("cb").alias("c1")).persist()
-    uni = train.groupBy("w").agg(F.count(F.lit(1)).alias("cw")).persist()
-    scal = uni.agg(F.sum("cw").alias("n_tok"), F.count(F.lit(1)).alias("v_sz"))
-    scored = (
-        pairs.filter(F.col("doc_id") % 2 == 1)
-        .join(big, ["prev", "w"], "left")
-        .join(pre, "prev", "left")
-        .join(uni, "w", "left")
-        .crossJoin(F.broadcast(scal))
-        .select("doc_id", _bigram_surprisal_mb().alias("s_mb"))
-    )
-    result = (
-        scored.groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("tok_n"), F.sum("s_mb").alias("ce_mb"))
-        .select(
-            "doc_id",
-            "tok_n",
-            "ce_mb",
-            (F.col("ce_mb") > F.col("tok_n") * _BIGRAM_FLAG_MILLIBITS).alias(
-                "flagged"
-            ),
-        )
-        .orderBy("doc_id")
-    )
-    if not materialize:
-        return attach_persists(result, big, pre, uni)
-    return materialize_release(result, big, pre, uni)
-
-
-BIGRAM_LM_SCORE_SQL = rf"""
-WITH arrs AS (
-  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS ts
-  FROM documents
-),
-pairs AS (
-  SELECT doc_id,
-         CASE WHEN j = 1 THEN NULL ELSE ts[j - 1] END AS prev,
-         ts[j] AS w
-  FROM arrs, LATERAL unnest(generate_series(1, len(ts))) AS t(j)
-),
-big AS (
-  SELECT prev, w, COUNT(*) AS cb FROM pairs
-  WHERE doc_id % 2 = 0 AND prev IS NOT NULL GROUP BY prev, w
-),
-pre AS (SELECT prev, SUM(cb) AS c1 FROM big GROUP BY prev),
-uni AS (SELECT w, COUNT(*) AS cw FROM pairs WHERE doc_id % 2 = 0 GROUP BY w),
-scal AS (SELECT SUM(cw) AS n_tok, COUNT(*) AS v_sz FROM uni),
-scored AS (
-  SELECT p.doc_id, {_BIGRAM_SURPRISAL_MB_SQL} AS s_mb
-  FROM pairs p
-  LEFT JOIN big b ON p.prev = b.prev AND p.w = b.w
-  LEFT JOIN pre r ON p.prev = r.prev
-  LEFT JOIN uni u ON p.w = u.w
-  CROSS JOIN scal s
-  WHERE p.doc_id % 2 = 1
-)
-SELECT doc_id, COUNT(*) AS tok_n, CAST(SUM(s_mb) AS BIGINT) AS ce_mb,
-       SUM(s_mb) > COUNT(*) * {_BIGRAM_FLAG_MILLIBITS} AS flagged
-FROM scored GROUP BY doc_id ORDER BY doc_id
-"""
-
-
-def lm_scores_composite(
-    spark: SparkSession, sf_dir: str, *, materialize: bool = True
-) -> DataFrame:
-    """Kind-tagged merge of perplexity_score_documents (unigram LM)
-    + bigram_lm_score_documents — the registry's r17 'lm_scores'
-    composite (staged r15): both model-statistics quality signals in
-    ONE row set, computed from ONE corpus pass. The (prev, w) pair
-    stream subsumes the token stream (every token appears once, with
-    its context), so the composite shares the explode, the training
-    count tables, the scalar aggregate, and the three scored-stream
-    joins, then emits BOTH surprisals from the same joined projection
-    — strictly cheaper than running the constituents back to back
-    (their only non-shared work is the unigram-vs-bigram arithmetic).
-    Rows match the constituents bit-for-bit per kind (pytest pins the
-    differential), so registering it supersedes both slot-neutrally.
-
-    Scale shape: unchanged from the constituents' worst case — one
-    explode, three hash aggregations (bigram/context/unigram), three
-    keyed left joins on the scored stream, one per-doc agg; count
-    tables persist once with release handles."""
-    from dbitool_spark.ops.cache import attach_persists, materialize_release
-
-    docs = catalog.load(spark, sf_dir, "documents")
-    arr = docs.select(
-        "doc_id", F.split(F.lower(F.trim("text")), r"\s+").alias("ts")
-    )
-    prevs = F.concat(
-        F.array(F.lit(None).cast("string")),
-        F.slice("ts", 1, F.size("ts") - 1),
-    )
-    pairs = arr.select(
-        "doc_id",
-        F.explode(F.arrays_zip(prevs.alias("prev"), F.col("ts").alias("w"))).alias(
-            "p"
-        ),
-    ).select("doc_id", F.col("p.prev").alias("prev"), F.col("p.w").alias("w"))
-    train = pairs.filter(F.col("doc_id") % 2 == 0)
-    big = (
-        train.filter(F.col("prev").isNotNull())
-        .groupBy("prev", "w")
-        .agg(F.count(F.lit(1)).alias("cb"))
-        .persist()
-    )
-    pre = big.groupBy("prev").agg(F.sum("cb").alias("c1")).persist()
-    uni = train.groupBy("w").agg(F.count(F.lit(1)).alias("cw")).persist()
-    scal = uni.agg(F.sum("cw").alias("n_tok"), F.count(F.lit(1)).alias("v_sz"))
-    # the unigram scorer's surprisal over the SAME joined columns
-    # (uni.cw here is perplexity_score's counts.c — identical
-    # aggregates over the identical train tokens)
-    uni_mb = (
-        F.round(
-            F.log2(
-                (F.col("n_tok") + F.col("v_sz"))
-                / (F.coalesce(F.col("cw"), F.lit(0)) + 1)
-            )
-            * 1000,
-            0,
-        )
-        .cast("long")
-    )
-    scored = (
-        pairs.filter(F.col("doc_id") % 2 == 1)
-        .join(big, ["prev", "w"], "left")
-        .join(pre, "prev", "left")
-        .join(uni, "w", "left")
-        .crossJoin(F.broadcast(scal))
-        .select(
-            "doc_id",
-            uni_mb.alias("s_uni_mb"),
-            _bigram_surprisal_mb().alias("s_big_mb"),
-        )
-    )
-    per_doc = scored.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("tok_n"),
-        F.sum("s_uni_mb").alias("ce_uni_mb"),
-        F.sum("s_big_mb").alias("ce_big_mb"),
-    )
-    result = (
-        per_doc.select(
-            F.lit("unigram").alias("kind"),
-            "doc_id",
-            "tok_n",
-            F.col("ce_uni_mb").alias("ce_mb"),
-            (
-                F.col("ce_uni_mb") > F.col("tok_n") * _PPL_FLAG_MILLIBITS
-            ).alias("flagged"),
-        )
-        .unionByName(
-            per_doc.select(
-                F.lit("bigram").alias("kind"),
-                "doc_id",
-                "tok_n",
-                F.col("ce_big_mb").alias("ce_mb"),
-                (
-                    F.col("ce_big_mb")
-                    > F.col("tok_n") * _BIGRAM_FLAG_MILLIBITS
-                ).alias("flagged"),
-            )
-        )
-        .orderBy("kind", "doc_id")
-    )
-    if not materialize:
-        return attach_persists(result, big, pre, uni)
-    return materialize_release(result, big, pre, uni)
-
-
-LM_SCORES_COMPOSITE_SQL = rf"""
-WITH arrs AS (
-  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS ts
-  FROM documents
-),
-pairs AS (
-  SELECT doc_id,
-         CASE WHEN j = 1 THEN NULL ELSE ts[j - 1] END AS prev,
-         ts[j] AS w
-  FROM arrs, LATERAL unnest(generate_series(1, len(ts))) AS t(j)
-),
-big AS (
-  SELECT prev, w, COUNT(*) AS cb FROM pairs
-  WHERE doc_id % 2 = 0 AND prev IS NOT NULL GROUP BY prev, w
-),
-pre AS (SELECT prev, SUM(cb) AS c1 FROM big GROUP BY prev),
-uni AS (SELECT w, COUNT(*) AS cw FROM pairs WHERE doc_id % 2 = 0 GROUP BY w),
-scal AS (SELECT SUM(cw) AS n_tok, COUNT(*) AS v_sz FROM uni),
-scored AS (
-  SELECT p.doc_id,
-         CAST(round(log2((s.n_tok + s.v_sz) * 1.0
-                         / (COALESCE(u.cw, 0) + 1)) * 1000, 0) AS BIGINT)
-           AS s_uni_mb,
-         {_BIGRAM_SURPRISAL_MB_SQL} AS s_big_mb
-  FROM pairs p
-  LEFT JOIN big b ON p.prev = b.prev AND p.w = b.w
-  LEFT JOIN pre r ON p.prev = r.prev
-  LEFT JOIN uni u ON p.w = u.w
-  CROSS JOIN scal s
-  WHERE p.doc_id % 2 = 1
-),
-per_doc AS (
-  SELECT doc_id, COUNT(*) AS tok_n,
-         CAST(SUM(s_uni_mb) AS BIGINT) AS ce_uni_mb,
-         CAST(SUM(s_big_mb) AS BIGINT) AS ce_big_mb
-  FROM scored GROUP BY doc_id
-)
-SELECT 'unigram' AS kind, doc_id, tok_n, ce_uni_mb AS ce_mb,
-       ce_uni_mb > tok_n * {_PPL_FLAG_MILLIBITS} AS flagged
-FROM per_doc
-UNION ALL
-SELECT 'bigram' AS kind, doc_id, tok_n, ce_big_mb AS ce_mb,
-       ce_big_mb > tok_n * {_BIGRAM_FLAG_MILLIBITS} AS flagged
-FROM per_doc
-ORDER BY kind, doc_id
-"""
 
 
 def _dsir_weight_mb():
@@ -3960,7 +3240,7 @@ def embedding_audit_composite(
     spark: SparkSession, sf_dir: str, *, materialize: bool = True
 ) -> DataFrame:
     """Kind-tagged merge of kmeans_embeddings +
-    semantic_outliers_documents (both keep standalone parity rows):
+    semantic_outliers_documents:
     one driver row drives the distributed Lloyd's kernel
     (kind='kmeans': per-cluster size + rounded inertia, key =
     cluster id) AND the per-source centroid/cosine outlier gate
@@ -4003,16 +3283,15 @@ ORDER BY kind, key
 
 
 def semantic_dedup_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kind-tagged merge of embedding_near_dup + semdedup_embeddings
-    (both keep standalone parity rows), and a real plan IMPROVEMENT
-    over running both: the LSH-bucketed cosine pair table is computed
+    """Kind-tagged embedding near-dup pairs + SemDeDup keep/drop
+    table: the LSH-bucketed cosine pair table is computed
     ONCE (localCheckpointed) and feeds both the pair listing
     (kind='pairs': id_a, id_b, rounded cosine) and the SemDeDup
     keep/drop decision table (kind='dedup': vec_id as id_a, cluster id
-    as id_b, kept flag) — run separately, the two constituents each
-    pay that candidate-generation cost. Scale shapes otherwise
-    unchanged (bucketed candidates, min-label components — see the
-    constituents)."""
+    as id_b, kept flag), so the candidate generation is paid once.
+    Scale shape: bucketed candidates
+    (similarity.embedding_near_dup_pairs) and min-label components
+    (dedup.connected_components), never all-pairs."""
     emb = catalog.load(spark, sf_dir, "embeddings")
     base = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     corpus = base.unionAll(_perturbed_embeddings(base))
@@ -4056,86 +3335,6 @@ ORDER BY kind, id_a, id_b
 """
 
 
-def quality_ensemble_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The CAPSTONE keep/drop decision a curation pipeline actually
-    applies: every independent quality signal family joined into one
-    per-document verdict — rule-based per-source prune (the
-    quality_prune percent-rank cut), Gopher repetition gate,
-    linear-classifier label, and unigram-LM perplexity tail flag
-    (defined on the held-out half only; NULL elsewhere) — with a
-    QUORUM decision: kept = at least 3 of the 4 signals pass (a NULL
-    perplexity counts as a pass; a strict AND is degenerate on this
-    corpus — the repetition and classifier gates each pass only
-    ~12-14% of the synthetic docs, measured, so the conjunction keeps
-    ~0.2%). It drives quality_prune_documents' percent-rank window
-    plus three more signal codepaths in one row, so it can supersede
-    that entry.
-
-    Scale shape: each signal keeps its own documented shape (one
-    window, three scan-shaped token aggregations); the ensemble adds
-    four doc_id equi-joins — co-partitionable on the id at 100 TB,
-    no new shuffle class."""
-    docs = catalog.load(spark, sf_dir, "documents").select("doc_id", "source")
-    rule = quality_prune_documents(spark, sf_dir).select(
-        "doc_id", F.lit(True).alias("__rule")
-    )
-    rep = repetition_stats_documents(spark, sf_dir).select(
-        "doc_id", (~F.col("low_quality")).alias("rep_pass")
-    )
-    clf = classifier_score_documents(spark, sf_dir).select(
-        "doc_id", F.col("label").alias("clf_pass")
-    )
-    ppl = perplexity_score_documents(spark, sf_dir).select(
-        "doc_id", (~F.col("flagged")).alias("ppl_pass")
-    )
-    rule_pass = F.coalesce("__rule", F.lit(False))
-    return (
-        docs.join(rule, "doc_id", "left")
-        .join(rep, "doc_id")
-        .join(clf, "doc_id")
-        .join(ppl, "doc_id", "left")
-        .select(
-            "doc_id",
-            "source",
-            rule_pass.alias("rule_pass"),
-            "rep_pass",
-            "clf_pass",
-            "ppl_pass",
-            (
-                rule_pass.cast("int")
-                + F.col("rep_pass").cast("int")
-                + F.col("clf_pass").cast("int")
-                + F.coalesce("ppl_pass", F.lit(True)).cast("int")
-            ).alias("votes"),
-        )
-        .withColumn("kept", F.col("votes") >= 3)
-        .orderBy("doc_id")
-    )
-
-
-QUALITY_ENSEMBLE_SQL = f"""
-SELECT d.doc_id, d.source,
-       (r.doc_id IS NOT NULL) AS rule_pass,
-       rep.rep_pass, clf.clf_pass, ppl.ppl_pass,
-       (CAST(r.doc_id IS NOT NULL AS INT) + CAST(rep.rep_pass AS INT)
-        + CAST(clf.clf_pass AS INT)
-        + CAST(COALESCE(ppl.ppl_pass, TRUE) AS INT)) AS votes,
-       (CAST(r.doc_id IS NOT NULL AS INT) + CAST(rep.rep_pass AS INT)
-        + CAST(clf.clf_pass AS INT)
-        + CAST(COALESCE(ppl.ppl_pass, TRUE) AS INT)) >= 3 AS kept
-FROM documents d
-LEFT JOIN (SELECT doc_id FROM ({QUALITY_PRUNE_DOCUMENTS_SQL}) pr) r
-  USING (doc_id)
-JOIN (SELECT doc_id, NOT low_quality AS rep_pass
-      FROM ({REPETITION_STATS_SQL}) rs) rep USING (doc_id)
-JOIN (SELECT doc_id, label AS clf_pass
-      FROM ({CLASSIFIER_SCORE_SQL}) cs) clf USING (doc_id)
-LEFT JOIN (SELECT doc_id, NOT flagged AS ppl_pass
-           FROM ({PERPLEXITY_SCORE_SQL}) ps) ppl USING (doc_id)
-ORDER BY doc_id
-"""
-
-
 # --- BPE merge LEARNING (the tokenizer-training loop, r15+/r16) -------
 
 _BPE_LEARN_ITERS = 3
@@ -4162,79 +3361,6 @@ def _bpe_apply_merge(r, a, b):
     pat = F.concat(F.lit("|"), a, F.lit("|"), b, F.lit("|"))
     rep = F.concat(F.lit("|"), a, b, F.lit("|"))
     return F.replace(F.replace(r, pat, rep), pat, rep)
-
-
-def bpe_learn_merges_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full BPE merge-LEARNING loop (Sennrich et al. 2016) — the
-    iterative half that bpe_pair_counts_documents (one iteration's
-    statistics) feeds: K rounds of count-all-adjacent-pairs ->
-    pick-the-most-frequent -> merge-it-everywhere, run over the
-    word-frequency table (classic BPE trains on distinct words
-    weighted by count, so the iterative state is vocabulary-sized,
-    NOT corpus-sized). Emits the learned merge list
-    (it, pair_a, pair_b, cnt) — deterministic by the exact integer
-    counts and the (cnt DESC, pair ASC) tie-break.
-
-    Scale shape: one token explode + one groupBy(word) builds the
-    frequency table (shuffle ~ token stream, once); each iteration
-    is a pair explode + aggregation over DISTINCT WORDS (vocab-sized,
-    orders of magnitude smaller than the corpus) + a 1-row best-pair
-    agg broadcast back via crossJoin + a pure projection applying the
-    merge. K is a constant; nothing iterates over the corpus."""
-    docs = catalog.load(spark, sf_dir, "documents")
-    words = (
-        docs.select(
-            F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("word")
-        )
-        # empty tokens (whitespace-only/empty text) have no symbols:
-        # without this guard F.slice(syms, 1, size-1) would get -1 at
-        # runtime on the Spark side while DuckDB's generate_series
-        # silently yields nothing — an engine-divergent crash
-        .filter(F.length("word") > 0)
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    w = words.select(
-        F.concat(
-            F.lit("|"), F.regexp_replace("word", "(.)", "$1|")
-        ).alias("r"),
-        "n",
-    )
-    bests = []
-    for i in range(_BPE_LEARN_ITERS):
-        syms = F.filter(F.split("r", r"\|"), lambda x: F.length(x) > 0)
-        pairs = (
-            w.select(
-                F.explode(
-                    F.arrays_zip(
-                        F.slice(syms, 1, F.size(syms) - 1).alias("a"),
-                        F.slice(syms, 2, F.size(syms) - 1).alias("b"),
-                    )
-                ).alias("p"),
-                "n",
-            )
-            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .agg(F.sum("n").alias("cnt"))
-        )
-        best = pairs.orderBy(
-            F.desc("cnt"), F.asc("a"), F.asc("b")
-        ).limit(1)
-        bests.append(
-            best.select(
-                F.lit(i).alias("it"),
-                F.col("a").alias("pair_a"),
-                F.col("b").alias("pair_b"),
-                F.col("cnt").cast("long").alias("cnt"),
-            )
-        )
-        w = w.crossJoin(F.broadcast(best)).select(
-            _bpe_apply_merge(F.col("r"), F.col("a"), F.col("b")).alias("r"),
-            "n",
-        )
-    out = bests[0]
-    for b in bests[1:]:
-        out = out.unionByName(b)
-    return out.orderBy("it")
 
 
 def _bpe_learn_iteration_sql(i: int) -> str:
@@ -4278,93 +3404,17 @@ ORDER BY it
 )
 
 
-def bpe_encode_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The APPLY half of tokenizer training (Sennrich et al. 2016) —
-    completes the train -> encode story that bpe_pair_counts (one
-    iteration's statistics) and bpe_learn_merges (the learning loop)
-    open: re-derive the K learned merges, apply them to every corpus
-    token, and emit the per-document tokenization audit (word count,
-    symbol count before/after — the exact-integer compression the
-    learned vocabulary buys on its own training corpus). Staged as an
-    r15/r16 candidate; a later kind-tagged composite can merge the
-    three BPE entries into one driver row.
-
-    Scale shape: merges apply on the DISTINCT-WORD table (vocab-sized
-    — classic BPE's weighted-types trick, never the token stream), so
-    the loop's per-iteration cost matches bpe_learn_merges exactly;
-    the corpus is touched twice — once to build the frequency table,
-    once for the final token-stream join against the (vocab-sized)
-    encoded lengths, shuffling only (doc_id, word) pairs. No driver
-    collect: each learned merge rides a broadcast 1-row crossJoin
-    (the kmeans/pagerank iterative family); the oracle unrolls the
-    loop as chained CTEs carrying `word` alongside the pipe form.
-
-    Reference shape: scripts/dbitool.pl's column transforms compute
-    per-record derived metrics (dbitool.pl:2100-2160); this is that
-    surface applied to the tokenizer-training audit."""
-    docs = catalog.load(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("word"),
-    ).filter(F.length("word") > 0)
-    wn = toks.groupBy("word").agg(F.count(F.lit(1)).alias("n")).select(
-        "word",
-        F.concat(F.lit("|"), F.regexp_replace("word", "(.)", "$1|")).alias("r"),
-        "n",
-    )
-    for _ in range(_BPE_LEARN_ITERS):
-        syms = F.filter(F.split("r", r"\|"), lambda x: F.length(x) > 0)
-        pairs = (
-            wn.select(
-                F.explode(
-                    F.arrays_zip(
-                        F.slice(syms, 1, F.size(syms) - 1).alias("a"),
-                        F.slice(syms, 2, F.size(syms) - 1).alias("b"),
-                    )
-                ).alias("p"),
-                "n",
-            )
-            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .agg(F.sum("n").alias("cnt"))
-        )
-        best = pairs.orderBy(F.desc("cnt"), F.asc("a"), F.asc("b")).limit(1)
-        wn = wn.crossJoin(F.broadcast(best)).select(
-            "word",
-            _bpe_apply_merge(F.col("r"), F.col("a"), F.col("b")).alias("r"),
-            "n",
-        )
-    syms = F.filter(F.split("r", r"\|"), lambda x: F.length(x) > 0)
-    enc = wn.select(
-        "word",
-        F.length("word").alias("n_chars_w"),
-        F.size(syms).alias("n_syms_w"),
-    )
-    return (
-        toks.join(enc, "word")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_words"),
-            F.sum("n_chars_w").cast("long").alias("n_chars"),
-            F.sum("n_syms_w").cast("long").alias("n_syms_bpe"),
-        )
-        .orderBy("doc_id")
-    )
-
-
 def bpe_pipeline_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kind-tagged composite of the full tokenizer story — the merge
-    candidate that supersedes bpe_pair_counts_documents (registered
-    r14) and registers bpe_learn_merges + bpe_encode in the same slot
-    when the constituents come due (registry capacity policy, the
-    email_chart/embedding_audit shape): one driver row drives the
-    pair-statistics aggregation (kind='pair'), the K-round
-    merge-learning loop (kind='merge'), and the corpus encode audit
-    (kind='encode'). r17: the merge and encode legs derive from ONE
-    shared learn chain (value-identical by construction — see the
-    inline note below; the constituents' standalone codepaths and
-    parity rows are untouched, so the original shapes stay covered).
-    Scale shapes are the constituents', unchanged — see their
-    docstrings."""
+    """Kind-tagged composite of the full tokenizer story: one driver
+    row drives the pair-statistics aggregation (kind='pair',
+    bpe_pair_counts_documents), the K-round merge-learning loop
+    (kind='merge': per iteration, the best adjacent-symbol pair and
+    its count) and the corpus encode audit (kind='encode': per doc,
+    words, characters and BPE symbols after the learned merges). The
+    merge and encode legs derive from ONE shared learn chain (see the
+    inline note below). Scale shape: every loop iteration works over
+    the word-frequency table (vocabulary-sized), and the only
+    corpus-sized step is one token-stream join on `word`."""
     pair = bpe_pair_counts_documents(spark, sf_dir).select(
         F.lit("pair").alias("kind"),
         F.col("pair").alias("key1"),
@@ -4373,22 +3423,15 @@ def bpe_pipeline_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("long").alias("n2"),
         F.lit(None).cast("long").alias("n3"),
     )
-    # r17 optimization round (r16 verdict item 8; guide §1.2/§2.4 —
-    # don't compute things twice): the merge and encode legs previously
-    # re-derived the SAME K-iteration learn chain as two separate lazy
-    # subtrees (bpe_learn_merges_documents's chain does not carry
-    # `word`, bpe_encode_documents's does, so Catalyst could not reuse
-    # one's exchanges for the other). Build ONE chain carrying `word`
-    # and derive both legs from it: the merge rows are the chain's own
-    # per-iteration best-pair frames, the encode leg its final state.
-    # Values are identical by construction — carrying `word` through
-    # the groupBy(word) frequency table changes no pair count (the
-    # pair aggregation projects only (r, n)), and the best-pair
-    # selection orders by the same exact integer counts and
-    # (cnt DESC, a, b) tie-break the constituents use; pinned by the
-    # r17 equivalence test and the unchanged oracle hash. The
-    # standalone constituents (and their retired_ parity rows) keep
-    # their original codepaths untouched.
+    # ONE learn chain carrying `word` feeds both legs: the merge rows
+    # are the chain's own per-iteration best-pair frames, the encode
+    # leg its final state. Two separate chains (one without `word`,
+    # one with) would not share exchanges, so Catalyst would run the
+    # K-iteration loop twice. Carrying `word` through the groupBy(word)
+    # frequency table changes no pair count (the pair aggregation
+    # projects only (r, n)), and the best pair is picked by exact
+    # integer count with a (cnt DESC, a, b) tie-break, matching
+    # BPE_LEARN_MERGES_SQL and BPE_ENCODE_DOCUMENTS_SQL.
     docs = catalog.load(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
@@ -4538,348 +3581,4 @@ SELECT 'encode' AS kind, CAST(doc_id AS VARCHAR) AS key1,
        n_chars AS n2, n_syms_bpe AS n3
 FROM ({BPE_ENCODE_DOCUMENTS_SQL}) e
 ORDER BY kind, key1, key2
-"""
-
-
-# --- winnowing fingerprints (r16 staged, r17 net-new candidate) ------
-
-#: Winnowing parameters: word 4-grams, window 5 — any shared run of
-#: window + k - 1 = 8 words yields at least one shared fingerprint
-#: (the local-selection guarantee, Schleimer et al. 2003 §4).
-_WINNOW_K = 4
-_WINNOW_W = 5
-#: MOSS-style common-fingerprint filter: a fingerprint seen in more
-#: than this many documents is boilerplate, carries no near-dup
-#: signal, and would make the inverted-index self-join quadratic in
-#: its posting length — drop it from pair generation (the paper's
-#: "ignore matches in too many documents" step). Bounds every join
-#: bucket at DF_CAP rows by construction, so pair volume grows
-#: linearly with the corpus at any scale.
-_WINNOW_DF_CAP = 16
-#: Minimum shared (rare) fingerprints for a reported pair: one shared
-#: 8-word run can be coincidence; three distinct selected regions is
-#: the plagiarism-detector convention.
-_WINNOW_MIN_SHARED = 3
-
-
-def winnow_near_dup_documents(
-    spark: SparkSession, sf_dir: str, *, materialize: bool = True
-) -> DataFrame:
-    """Winnowing document fingerprints (Schleimer, Wilkerson, Aiken,
-    SIGMOD 2003 — the MOSS algorithm) over the perturbed corpus,
-    kind-tagged:
-
-    - kind='profile': per-document selected-fingerprint count — the
-      density audit (expected ~2/(w+1) of the gram positions, but
-      DISTINCT fingerprints per doc, which both engines compute
-      identically).
-    - kind='pairs': (id_a, id_b, shared-rare-fingerprint count) for
-      pairs sharing >= _WINNOW_MIN_SHARED fingerprints after the
-      MOSS common-fingerprint filter (document frequency <=
-      _WINNOW_DF_CAP).
-
-    Scale story: fingerprint selection is a pure per-row projection
-    (ops/dedup.winnow_fingerprints — zero shuffle, whole-stage
-    codegen); candidate generation is an inverted-index equi-join on
-    the fingerprint whose posting lists are capped at DF_CAP rows by
-    the filter, so no bucket ever goes quadratic — the exact banded-
-    LSH geometry, with winnowing's guarantee replacing probabilistic
-    recall: ANY pair sharing an 8-word run that selects a rare
-    fingerprint is found deterministically. The perturbed corpus
-    plants (i, i+offset) pairs sharing nearly all fingerprints.
-
-    Cross-engine exactness: selection is by the gram's lexicographic
-    order (both engines compare UTF-8 bytes), not a hash — see the
-    kernel docstring; the oracle replays the identical sliding-least
-    construction in DuckDB list algebra."""
-    from dbitool_spark.ops.cache import attach_persists, materialize_release
-
-    docs = catalog.load(spark, sf_dir, "documents")
-    # The winnow kernel is a CPU-heavy projection (k+w-2 zip_with
-    # folds per row), so its parallelism must come from PARTITION
-    # COUNT, not bytes: a small parquet file yields 1-2 input splits
-    # and serializes the fold on 2 cores (measured 9.9s -> ~1s at
-    # sf0.1 on local[32]). Hash-rebalance on doc_id to the session's
-    # parallelism — at 100 TB maxPartitionBytes provides the splits
-    # and this exchange is dwarfed by the fp-keyed shuffles below.
-    corpus = _perturbed_corpus(docs).repartition(
-        spark.sparkContext.defaultParallelism, F.col("doc_id")
-    )
-    # persisted: the fingerprint projection feeds the profile leg AND
-    # the exploded inverted index; without it the winnow expression
-    # tree (k+w-2 zip_with folds) is evaluated twice
-    fp = corpus.select(
-        "doc_id",
-        dedup.winnow_fingerprints(
-            F.col("text"), k=_WINNOW_K, window=_WINNOW_W
-        ).alias("fps"),
-    ).persist()
-    ex = fp.select("doc_id", F.explode("fps").alias("fp"))
-    # document frequency per fingerprint; the <= DF_CAP filter keeps
-    # posting lists bounded. AQE broadcasts the count table when its
-    # size estimate allows and falls back to shuffle at scale — no
-    # forced hint (the scorer count-table precedent).
-    # persisted: the self-join below aliases this plan twice, and
-    # Catalyst does not reuse exchanges across self-join aliases —
-    # without it the explode + DF-count join executes once per side
-    # (the jaccard `pref` precedent)
-    rare = ex.join(
-        ex.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= _WINNOW_DF_CAP)
-        .select("fp"),
-        "fp",
-    ).persist()
-    pairs = (
-        rare.alias("a")
-        .join(rare.alias("b"), "fp")
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(
-            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-        )
-        .agg(F.count(F.lit(1)).alias("shared"))
-        .filter(F.col("shared") >= _WINNOW_MIN_SHARED)
-    )
-    out = (
-        fp.select(
-            F.lit("profile").alias("kind"),
-            F.col("doc_id").alias("id_a"),
-            F.lit(None).cast("long").alias("id_b"),
-            F.size("fps").cast("long").alias("val"),
-        )
-        .unionByName(
-            pairs.select(
-                F.lit("pairs").alias("kind"),
-                "id_a",
-                "id_b",
-                F.col("shared").cast("long").alias("val"),
-            )
-        )
-        .orderBy("kind", "id_a", "id_b")
-    )
-    if not materialize:
-        return attach_persists(out, fp, rare)
-    return materialize_release(out, fp, rare)
-
-
-WINNOW_NEAR_DUP_SQL = rf"""
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + {_PERTURB_OFFSET} AS doc_id,
-         array_to_string(ws[1:len(ws) - 1], ' ') AS text
-  FROM (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS ws FROM documents)
-),
-g AS (
-  SELECT doc_id,
-         CASE WHEN len(w) >= {_WINNOW_K}
-              THEN list_transform(generate_series(1, len(w) - {_WINNOW_K - 1}),
-                   i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' || w[i+3])
-              ELSE CAST([] AS VARCHAR[]) END AS grams
-  FROM (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS w FROM corpus)
-),
-fp AS (
-  SELECT doc_id,
-         CASE WHEN ng >= {_WINNOW_W}
-              THEN list_distinct(list_transform(
-                     generate_series(1, ng - {_WINNOW_W - 1}),
-                     i -> least(grams[i], grams[i+1], grams[i+2],
-                                grams[i+3], grams[i+4])))
-              WHEN ng >= 1 THEN [list_min(grams)]
-              ELSE CAST([] AS VARCHAR[]) END AS fps
-  FROM (SELECT doc_id, grams, len(grams) AS ng FROM g)
-),
-ex AS (SELECT doc_id, unnest(fps) AS f FROM fp),
-rare AS (SELECT f FROM ex GROUP BY f HAVING COUNT(*) <= {_WINNOW_DF_CAP}),
-idx AS (SELECT e.doc_id, e.f FROM ex e SEMI JOIN rare r ON e.f = r.f),
-pairs AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS shared
-  FROM idx a JOIN idx b ON a.f = b.f AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-  HAVING COUNT(*) >= {_WINNOW_MIN_SHARED}
-)
-SELECT 'profile' AS kind, doc_id AS id_a, CAST(NULL AS BIGINT) AS id_b,
-       CAST(len(fps) AS BIGINT) AS val
-FROM fp
-UNION ALL
-SELECT 'pairs' AS kind, id_a, id_b, CAST(shared AS BIGINT) AS val
-FROM pairs
-ORDER BY kind, id_a, id_b
-"""
-
-
-# --- edit-distance join (r16 staged, r17 net-new candidate) ----------
-
-_ED_Q = 3
-_ED_D = 2
-#: Planted copies delete this 1-indexed character from the title —
-#: every (doc_id, doc_id + offset) pair is at edit distance exactly 1.
-_ED_DEL_POS = 7
-_ED_OFFSET = 1_000_000
-#: The join corpus is each document's first-_ED_TITLE_WORDS-word
-#: "title": distinct-ish short strings whose ED <= 2 neighborhoods
-#: stay SPARSE as the corpus grows (random-word titles), unlike
-#: sequential-ID name columns (customer/supplier names are dense
-#: digit grids: every key has O(digit-combinatorics) neighbors, so
-#: the TRUE result set itself grows superlinearly) or low-cardinality
-#: name columns (part.p_name has 64 distinct values: quadratic ED-0
-#: duplicate groups). Measured at sf0.01: 475/500 distinct titles,
-#: 27 natural pairs + the 500 planted.
-_ED_TITLE_WORDS = 4
-
-
-def edit_distance_join_documents(
-    spark: SparkSession, sf_dir: str, *, materialize: bool = True
-) -> DataFrame:
-    """Approximate-string self-join on document titles (first
-    _ED_TITLE_WORDS words) under edit distance <= _ED_D via q-gram
-    prefix filtering (Gravano et al. 2001 count/length filters +
-    Ed-Join rarest-first prefixes — ops/dedup.edit_distance_pairs),
-    over the titles plus a planted copy of each with its
-    _ED_DEL_POSth character deleted (distance exactly 1 by
-    construction).
-
-    The oracle is honest brute force: every length-filtered pair
-    levenshtein-verified in DuckDB. A hash match therefore proves the
-    prefix filter generated EVERY qualifying candidate (recall 1.0 on
-    the len >= (d+1)*q domain) and that both engines' unit-cost edit
-    distances agree value-for-value, planted AND natural pairs
-    included."""
-    docs = catalog.load(spark, sf_dir, "documents")
-    titles = docs.select(
-        F.col("doc_id").alias("id"),
-        F.concat_ws(
-            " ",
-            F.slice(
-                F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-                1,
-                _ED_TITLE_WORDS,
-            ),
-        ).alias("name"),
-    )
-    planted = titles.select(
-        (F.col("id") + _ED_OFFSET).alias("id"),
-        F.concat(
-            F.col("name").substr(F.lit(1), F.lit(_ED_DEL_POS - 1)),
-            F.col("name").substr(F.lit(_ED_DEL_POS + 1), F.length("name")),
-        ).alias("name"),
-    )
-    pairs = dedup.edit_distance_pairs(
-        titles.unionByName(planted),
-        "id",
-        "name",
-        max_dist=_ED_D,
-        q=_ED_Q,
-        materialize=materialize,
-    )
-    from dbitool_spark.ops.cache import transfer_persists
-
-    return transfer_persists(pairs, pairs.orderBy("id_a", "id_b"))
-
-
-EDIT_DISTANCE_JOIN_DOCUMENTS_SQL = rf"""
-WITH titles AS (
-  SELECT doc_id AS id,
-         array_to_string(
-           regexp_split_to_array(lower(trim(text)), '\s+')[1:{_ED_TITLE_WORDS}],
-           ' ') AS name
-  FROM documents
-),
-strs AS (
-  SELECT id, name FROM titles
-  UNION ALL
-  SELECT id + {_ED_OFFSET} AS id,
-         substr(name, 1, {_ED_DEL_POS - 1}) || substr(name, {_ED_DEL_POS + 1}) AS name
-  FROM titles
-),
-s AS (SELECT id, name FROM strs WHERE length(name) >= {(_ED_D + 1) * _ED_Q})
-SELECT a.id AS id_a, b.id AS id_b,
-       CAST(levenshtein(a.name, b.name) AS BIGINT) AS dist
-FROM s a, s b
-WHERE a.id < b.id
-  AND abs(length(a.name) - length(b.name)) <= {_ED_D}
-  AND levenshtein(a.name, b.name) <= {_ED_D}
-ORDER BY id_a, id_b
-"""
-
-
-# --- global sequence packing (r16 staged, r18 net-new candidate) -----
-
-#: Training-sequence capacity in whitespace tokens. Small enough that
-#: sf0.01's ~50k-token corpus fills dozens of bins (non-degenerate at
-#: every SF), large enough that some documents straddle a boundary
-#: (spans = 2 rows exist — the straddle arithmetic is exercised).
-_PACK_CAPACITY = 1024
-
-
-def global_pack_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Contiguous sequence packing: assign every document a slot in a
-    stream of fixed-capacity training sequences (context windows) by
-    its EXCLUSIVE global running token total — bin_id = before //
-    capacity, bin_offset = before % capacity, spans = how many bins
-    the document touches. The packing a 100 TB pre-training pipeline
-    runs right before tokenized-example serialization (documents
-    concatenated in a deterministic order, split every `capacity`
-    tokens).
-
-    Complements the registered pack_sequences_documents, which packs
-    PER HASH BUCKET (independent streams, global order traded away
-    for embarrassing parallelism): this op keeps the reference
-    single-stream semantics — ONE deterministic globally-numbered bin
-    sequence — and still never serializes. The scale story IS the
-    operator: the naive formulation is
-    sum(n_tok) OVER (ORDER BY doc_id) — a single-partition window
-    that serializes the entire corpus through one task (Spark warns
-    'No Partition Defined for Window'). This entry instead drives
-    ops/scale.with_running_total: range-partition on doc_id,
-    per-partition window sums, and a one-row-per-partition offset
-    table — the distributed scan. The oracle states the naive global
-    window in DuckDB, so the hash match proves the two-phase
-    decomposition computes EXACTLY the single-window semantics."""
-    docs = catalog.load(spark, sf_dir, "documents")
-    from dbitool_spark.ops import scale as scale_ops
-
-    toks = docs.select(
-        "doc_id", text.token_count(F.col("text")).alias("n_tok")
-    )
-    packed = scale_ops.with_running_total(
-        toks, ["doc_id"], "n_tok", total_col="before", inclusive=False
-    )
-    cap = _PACK_CAPACITY
-    # `div`, not `/`: Spark's / is DOUBLE division, which silently
-    # loses exactness once the running total passes 2^53 — real at
-    # the 100 TB token-count scale this op exists for; div stays in
-    # long arithmetic end to end (DuckDB's // likewise)
-    return (
-        packed.selectExpr(
-            "doc_id",
-            "CAST(n_tok AS BIGINT) AS n_tok",
-            f"before div {cap} AS bin_id",
-            f"before % {cap} AS bin_offset",
-            f"(before % {cap} + n_tok - 1) div {cap} + 1 AS spans",
-        )
-        .orderBy("doc_id")
-    )
-
-
-GLOBAL_PACK_DOCUMENTS_SQL = rf"""
-WITH t AS (
-  SELECT doc_id,
-         len(regexp_split_to_array(trim(text), '\s+')) AS n_tok
-  FROM documents
-),
-c AS (
-  SELECT doc_id, n_tok,
-         COALESCE(SUM(n_tok) OVER (
-           ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-         ), 0) AS before
-  FROM t
-)
-SELECT doc_id,
-       CAST(n_tok AS BIGINT) AS n_tok,
-       CAST(before // {_PACK_CAPACITY} AS BIGINT) AS bin_id,
-       CAST(before % {_PACK_CAPACITY} AS BIGINT) AS bin_offset,
-       CAST((before % {_PACK_CAPACITY} + n_tok - 1) // {_PACK_CAPACITY} + 1 AS BIGINT) AS spans
-FROM c
-ORDER BY doc_id
 """

@@ -198,9 +198,7 @@ def bloom_decontaminate_documents(spark: SparkSession, sf_dir: str) -> DataFrame
     for when the benchmark gram set is too big to broadcast raw (10^9
     grams ~ 50 GB raw vs ~1.2 GB packed at 10 bits/key): the corpus
     is NEVER shuffled, each gram checks k bit positions against the
-    16 KB packed array riding a 1-row broadcast. STAGED r11
-    (parity row staged_bloom_decontaminate_documents; registers when
-    a window slot frees — r12 is planned at 49/50).
+    16 KB packed array riding a 1-row broadcast.
 
     The entry proves the filter's load-bearing theorem end to end: a
     Bloom filter has ZERO false negatives, so the flagged set must
@@ -222,11 +220,11 @@ def bloom_decontaminate_documents(spark: SparkSession, sf_dir: str) -> DataFrame
     bench = bench_gram_set(docs)
     bloom = scale.bloom_build(bench, "gram", m_bits=_BLOOM_M_BITS, k=_BLOOM_K)
     bloom_df = spark.createDataFrame([(bloom,)], "bloom array<bigint>")
-    # r16 optimization round: two rewrites of the double gram pass were
-    # MEASURED AND REJECTED (guide §1 — the empirical loop wins over
-    # the first-principles sketch here). (a) Fusing both memberships
-    # into one pass (grams LEFT JOIN bench + bloom probe, one
-    # per-doc_id aggregate — 3 exchanges -> 2) ran 1.16x the original:
+    # Two rewrites of the double gram pass were measured and rejected
+    # (5-run interleaved medians at sf0.1). (a) Fusing both
+    # memberships into one pass (grams LEFT JOIN bench + bloom probe,
+    # one per-doc_id aggregate — 3 exchanges -> 2) ran 1.16x the
+    # original:
     # the two distincts below reduce AFTER early filters, so they
     # shuffle only the few positive doc_ids, while the fused aggregate
     # carries every gram row through the join stage un-reduced.
@@ -234,9 +232,8 @@ def bloom_decontaminate_documents(spark: SparkSession, sf_dir: str) -> DataFrame
     # legs ran 1.31x: the ~8-word gram strings make the cache
     # write+read cost more than the second zip_with rebuild. The
     # original shape — rebuild the stream per leg, reduce early — is
-    # the measured optimum at this row size (5-run interleaved
-    # medians: original 2.12s, fused 2.80s, persisted 2.78s at sf0.1;
-    # plans/r16/ab_measure.py).
+    # the measured optimum at this row size: original 2.12s, fused
+    # 2.80s, persisted 2.78s.
     grams = scale.rebalance_to_parallelism(docs, "doc_id").select(
         "doc_id", F.explode(shingles(F.col("text"), DECONTAM_NGRAM)).alias("gram")
     )
@@ -694,7 +691,7 @@ ORDER BY pos
 
 def split_sample_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kind-tagged merge of deterministic_split_documents +
-    sample_stratified_documents (both keep standalone parity rows):
+    sample_stratified_documents:
     the two realizations of the multiplicative id-hash partitioning
     family in one row — the 80/10/10 split stats (kind='split', key =
     split name, sum_metric = total chars) and the per-language
@@ -725,138 +722,3 @@ SELECT 'sample' AS kind, lang AS key, n_sampled AS n, id_checksum AS sum_metric
 FROM ({SAMPLE_STRATIFIED_SQL.strip().removesuffix("ORDER BY lang")}) sa
 ORDER BY kind, key
 """
-
-
-# --- leakage-safe split (r16 staged, r18 superseder candidate) -------
-
-
-def leakage_safe_split_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The r18 superseder candidate for split_sample_composite: both
-    constituent legs verbatim (kind='split' — the 80/10/10 id-hash
-    split stats; kind='sample' — per-language stratified membership)
-    PLUS the leg a real pre-training pipeline needs between them,
-    kind='safe': a NEAR-DUP-AWARE split. A plain id-hash split leaks
-    evaluation data — near-duplicate documents land in different
-    splits and the model is scored on paraphrases of its training
-    set (the contamination the decontaminate ops exist to catch).
-    The safe leg assigns every near-dup CLUSTER atomically: MinHash-
-    LSH pairs over the perturbed corpus -> connected components
-    (cluster_id = min doc_id; unpaired docs are their own singleton)
-    -> the SAME multiplicative hash applied to the cluster_id instead
-    of the doc_id. Per-split output: doc count, CLUSTER count, and
-    the exact doc_id checksum, so the oracle verifies the membership
-    set — a leaked cluster would move some member's doc_id into a
-    different split's checksum and hash-mismatch.
-
-    Cross-engine proof: DuckDB recomputes the clusters independently
-    via the recursive-CTE transitive closure (the near_dup_clusters
-    construction), so a hash match proves the distributed CC and the
-    atomic assignment end to end. Scale shape: banded LSH candidates
-    (bucket equi-join, never all-pairs), bounded CC, one LEFT join of
-    the corpus against the (small) component table, one scan-shaped
-    aggregate per leg."""
-    from dbitool_spark.ops import dedup as dedup_ops
-    from dbitool_spark.plans.llm_ops import _perturbed_corpus
-
-    docs = catalog.load(spark, sf_dir, "documents")
-    split = deterministic_split_documents(spark, sf_dir).select(
-        F.lit("split").alias("kind"),
-        F.col("split").alias("key"),
-        F.col("n_docs").alias("n"),
-        F.lit(None).cast("long").alias("n2"),
-        F.col("total_chars").alias("sum_metric"),
-    )
-    sample = sample_stratified_documents(spark, sf_dir).select(
-        F.lit("sample").alias("kind"),
-        F.col("lang").alias("key"),
-        F.col("n_sampled").alias("n"),
-        F.lit(None).cast("long").alias("n2"),
-        F.col("id_checksum").alias("sum_metric"),
-    )
-    corpus = _perturbed_corpus(docs)
-    pairs = dedup_ops.minhash_near_dup_pairs(
-        corpus, "doc_id", "text", shingle_k=3, threshold=0.7
-    )
-    cc = dedup_ops.connected_components(pairs)
-    labeled = (
-        corpus.select("doc_id")
-        .join(cc.withColumnRenamed("id", "doc_id"), "doc_id", "left")
-        .withColumn("cluster_id", F.coalesce("cluster_id", F.col("doc_id")))
-    )
-    bucket = _split_bucket("cluster_id")
-    safe = (
-        labeled.select(
-            F.when(bucket < 80, F.lit("train"))
-            .when(bucket < 90, F.lit("val"))
-            .otherwise(F.lit("test"))
-            .alias("key"),
-            "doc_id",
-            "cluster_id",
-        )
-        .groupBy("key")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.countDistinct("cluster_id").alias("n2"),
-            F.sum("doc_id").alias("sum_metric"),
-        )
-        .select(F.lit("safe").alias("kind"), "key", "n", "n2", "sum_metric")
-    )
-    return split.unionByName(sample).unionByName(safe).orderBy("kind", "key")
-
-
-def _leakage_safe_split_sql() -> str:
-    from dbitool_spark.plans.llm_ops import _MINHASH_PAIRS_CTES
-
-    return f"""
-WITH RECURSIVE {_MINHASH_PAIRS_CTES},
-pairs AS (
-  SELECT id_a, id_b FROM cand
-  WHERE CAST(li AS DOUBLE) / (na + nb - li) >= 0.7
-),
-edges AS (
-  SELECT id_a AS a, id_b AS b FROM pairs
-  UNION ALL
-  SELECT id_b, id_a FROM pairs
-),
-nodes AS (SELECT DISTINCT a AS id FROM edges),
-reach AS (
-  SELECT a, b FROM edges
-  UNION
-  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-),
-clusters AS (
-  SELECT n.id AS doc_id, least(n.id, MIN(r.b)) AS cluster_id
-  FROM nodes n JOIN reach r ON r.a = n.id
-  GROUP BY n.id
-),
-labeled AS (
-  SELECT c.doc_id, COALESCE(cl.cluster_id, c.doc_id) AS cluster_id
-  FROM (SELECT doc_id FROM corpus) c
-  LEFT JOIN clusters cl ON cl.doc_id = c.doc_id
-),
-safe AS (
-  SELECT CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS key,
-         COUNT(*) AS n,
-         COUNT(DISTINCT cluster_id) AS n2,
-         CAST(SUM(doc_id) AS BIGINT) AS sum_metric
-  FROM (
-    SELECT doc_id, cluster_id,
-           (((cluster_id % {SPLIT_PRIME}) * {SPLIT_MULT}) % {SPLIT_PRIME}) % 100 AS b
-    FROM labeled
-  )
-  GROUP BY 1
-)
-SELECT 'safe' AS kind, key, n, n2, sum_metric FROM safe
-UNION ALL
-SELECT 'split' AS kind, split AS key, n_docs AS n, CAST(NULL AS BIGINT) AS n2,
-       total_chars AS sum_metric
-FROM ({DETERMINISTIC_SPLIT_SQL.strip().removesuffix("ORDER BY split")}) sp
-UNION ALL
-SELECT 'sample' AS kind, lang AS key, n_sampled AS n, CAST(NULL AS BIGINT) AS n2,
-       id_checksum AS sum_metric
-FROM ({SAMPLE_STRATIFIED_SQL.strip().removesuffix("ORDER BY lang")}) sa
-ORDER BY kind, key
-"""
-
-
-LEAKAGE_SAFE_SPLIT_SQL = _leakage_safe_split_sql()

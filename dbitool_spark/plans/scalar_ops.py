@@ -259,9 +259,6 @@ def hll_accuracy_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-HLL_ACCURACY_SQL = "SELECT CAST(1 AS BIGINT) AS all_within_bound"
-
-
 def quantile_sketch_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate-quantile accuracy gate: percentile_approx of
     l_extendedprice at accuracy=1000 carries a rank-error guarantee of
@@ -297,15 +294,11 @@ def quantile_sketch_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     return checked.select(ok.cast("bigint").alias("within_rank_error"))
 
 
-QUANTILE_SKETCH_SQL = "SELECT CAST(1 AS BIGINT) AS within_rank_error"
-
-
 def sketch_accuracy_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r8 registry merge of hll_accuracy_events +
     quantile_sketch_lineitem (the policy's gate-composite shape: both
     emit a single 1-row boolean gate, so one crossJoin of two 1-row
-    frames drives both sketch codepaths in one driver row; the
-    constituents keep standalone parity rows in the retired list).
+    frames drives both sketch codepaths in one driver row).
     Also the bench-hygiene fix for the two noisiest sub-half-second
     entries: one row instead of two halves the flap surface."""
     return hll_accuracy_events(spark, sf_dir).crossJoin(

@@ -131,34 +131,6 @@ def _scratch_dir(query: str, sf_dir: str) -> str:
     return path
 
 
-def ndb_upsert_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events split into two upsert batches by event_id parity (odd
-    second), keyed by user_id, ordered within batch by (ts_us,
-    event_id). Replay must yield, per user: the max-(ts,event_id) odd
-    event if any odd event exists, else the max even event."""
-    ev = catalog.load(spark, sf_dir, "events").select(
-        "user_id", "event_id", "event_type", F.unix_micros(F.col("ts_ts")).alias("ts_us")
-    )
-    path = os.path.join(_scratch_dir("ndb_upsert_replay", sf_dir), "events_kv")
-    table = NdbTable(spark, path, key="user_id", n_buckets=8)
-    table.upsert(ev.filter(F.col("event_id") % 2 == 0), order_by=["ts_us", "event_id"])
-    table.upsert(ev.filter(F.col("event_id") % 2 == 1), order_by=["ts_us", "event_id"])
-    return table.replay().select("user_id", "event_id", "event_type", "ts_us").orderBy("user_id")
-
-
-NDB_UPSERT_REPLAY_SQL = """
-SELECT user_id, event_id, event_type, ts_us FROM (
-  SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us,
-         ROW_NUMBER() OVER (
-           PARTITION BY user_id
-           ORDER BY (event_id % 2) DESC, epoch_us(ts) DESC, event_id DESC
-         ) AS rn
-  FROM events
-) WHERE rn = 1
-ORDER BY user_id
-"""
-
-
 # Narrow key range the second batch touches (contiguous on purpose —
 # intra-bucket file pruning is a key-LOCALITY optimization); the
 # oracle embeds the same constants.
@@ -182,8 +154,7 @@ def ndb_range_pruned_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     touched bucket only the range files intersecting [lo, hi) are
     read — the rest hardlink forward (read-fraction pinned in
     pytest via _LAST_RANGE_PRUNE_STATS; this driver row proves the
-    pruned path's END RESULT against the oracle). STAGED r12 as an
-    r13/r14 candidate (parity row staged_ndb_range_pruned_replay).
+    pruned path's END RESULT against the oracle).
 
     Repeated calls in one process are deterministic: each call
     replays upsert(full) then upsert(markers) onto the surviving
@@ -242,128 +213,6 @@ FROM (
   FROM events
 ) WHERE rn = 1
 ORDER BY user_id
-"""
-
-# Probe size for the pruned-lookup leg: 4 distinct keys touch at most
-# 4 of the table's 8 hash buckets, so bucket pruning is ENGAGED by
-# construction (>= 4 buckets skipped) and the probe's [min, max] key
-# range rides into the parquet scan as a pushed BETWEEN.
-_NDB_LOOKUP_PROBE_K = 4
-
-
-def ndb_replay_lookup_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kind-tagged composite: the range-pruned ndb WRITE path
-    (ndb_range_pruned_replay's exact semantics, kind='replay') PLUS
-    the bucket+range-PRUNED NdbTable.lookup() READ path (kind=
-    'lookup') — the reference's intended lookup use (scripts/
-    dbitool.pl TODO:61-65) made driver-visible per the r15 verdict
-    item 5. The r17 superseder of ndb_range_pruned_replay (which
-    keeps a retired_ parity row).
-
-    The lookup leg probes the table with the _NDB_LOOKUP_PROBE_K
-    smallest distinct user_ids (a distributed sort-limit — bounded by
-    construction): at most K of the 8 buckets can be touched, so the
-    probe-side bucket aggregation provably prunes >= 8-K bucket
-    partitions, and the probe's tight [min, max] range pushes a key
-    BETWEEN down to the parquet scan of the files_per_bucket=4
-    key-range-sorted files (PushedFilters — the plan the judge
-    audits). The function ASSERTS pruning engaged via
-    last_lookup_stats, so a regression to the full-table read fails
-    the driver row rather than silently reading everything. At 100 TB
-    this is the point-lookup story: enrich K keys by reading K/n
-    buckets and the matching row groups only.
-
-    The oracle states both legs independently (the lookup leg as a
-    semi-join of the last-write-wins resolution against the same
-    LIMIT-K probe), so the hash cross-checks the pruned physical read
-    against the logical answer."""
-    ev = catalog.load(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        "event_type",
-        F.unix_micros(F.col("ts_ts")).alias("ts_us"),
-    )
-    path = os.path.join(
-        _scratch_dir("ndb_replay_lookup", sf_dir), "events_kv_lkp"
-    )
-    table = NdbTable(
-        spark, path, key="user_id", n_buckets=8, files_per_bucket=4
-    )
-    table.upsert(ev, order_by=["ts_us", "event_id"])
-    markers = (
-        ev.filter(
-            (F.col("user_id") >= _NDB_RANGE_LO)
-            & (F.col("user_id") < _NDB_RANGE_HI)
-        )
-        .select("user_id")
-        .distinct()
-        .select(
-            "user_id",
-            F.lit(-1).cast("long").alias("event_id"),
-            F.lit("touched").alias("event_type"),
-            F.lit(0).cast("long").alias("ts_us"),
-        )
-    )
-    table.upsert(markers, order_by=["ts_us", "event_id"])
-    replay_rows = table.replay().select(
-        F.lit("replay").alias("kind"),
-        "user_id",
-        "event_id",
-        "event_type",
-        "ts_us",
-    )
-    probe = (
-        ev.select("user_id")
-        .distinct()
-        .orderBy("user_id")
-        .limit(_NDB_LOOKUP_PROBE_K)
-    )
-    enriched = table.lookup(probe, how="left", prune=True)
-    stats = table.last_lookup_stats
-    # self-enforcing claim: the pruned path must actually have engaged
-    # (K keys can touch at most K buckets; the probe range must have
-    # ridden along for the parquet-scan BETWEEN pushdown)
-    assert stats.get("buckets_pruned", 0) >= table.n_buckets - _NDB_LOOKUP_PROBE_K, stats
-    assert stats.get("key_range") is not None, stats
-    lookup_rows = enriched.select(
-        F.lit("lookup").alias("kind"),
-        "user_id",
-        "event_id",
-        "event_type",
-        "ts_us",
-    )
-    return replay_rows.unionByName(lookup_rows).orderBy(
-        "kind", "user_id"
-    )
-
-
-NDB_REPLAY_LOOKUP_SQL = f"""
-WITH resolved AS (
-  SELECT user_id,
-         CASE WHEN user_id >= {_NDB_RANGE_LO} AND user_id < {_NDB_RANGE_HI}
-              THEN CAST(-1 AS BIGINT) ELSE event_id END AS event_id,
-         CASE WHEN user_id >= {_NDB_RANGE_LO} AND user_id < {_NDB_RANGE_HI}
-              THEN 'touched' ELSE event_type END AS event_type,
-         CASE WHEN user_id >= {_NDB_RANGE_LO} AND user_id < {_NDB_RANGE_HI}
-              THEN CAST(0 AS BIGINT) ELSE ts_us END AS ts_us
-  FROM (
-    SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us,
-           ROW_NUMBER() OVER (
-             PARTITION BY user_id
-             ORDER BY epoch_us(ts) DESC, event_id DESC
-           ) AS rn
-    FROM events
-  ) WHERE rn = 1
-),
-probe AS (
-  SELECT DISTINCT user_id FROM events ORDER BY user_id
-  LIMIT {_NDB_LOOKUP_PROBE_K}
-)
-SELECT 'replay' AS kind, user_id, event_id, event_type, ts_us FROM resolved
-UNION ALL
-SELECT 'lookup' AS kind, r.user_id, r.event_id, r.event_type, r.ts_us
-FROM resolved r SEMI JOIN probe p ON r.user_id = p.user_id
-ORDER BY kind, user_id
 """
 
 
@@ -448,7 +297,6 @@ def _drain_streaming_entry(
     return child.table(name)
 
 
-
 def streaming_hourly_stats_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured Streaming made driver-visible: events re-published
     as NDJSON files, consumed by a file-watch stream with bounded
@@ -496,16 +344,6 @@ def streaming_hourly_stats_events(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         .orderBy("hour", "event_type")
     )
-
-
-STREAMING_HOURLY_STATS_SQL = """
-SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
-       event_type,
-       COUNT(*) AS n
-FROM events
-GROUP BY 1, 2
-ORDER BY hour, event_type
-"""
 
 
 def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -597,19 +435,6 @@ def streaming_hourly_append_events(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-STREAMING_HOURLY_APPEND_SQL = """
-WITH mx AS (SELECT max(ts) AS m FROM events),
-agg AS (
-  SELECT date_trunc('hour', ts) AS h, event_type, COUNT(*) AS n
-  FROM events GROUP BY 1, 2
-)
-SELECT strftime(agg.h, '%Y-%m-%d %H:%M:%S') AS hour, agg.event_type, agg.n
-FROM agg, mx
-WHERE agg.h + INTERVAL 1 HOUR <= mx.m - INTERVAL 1 HOUR
-ORDER BY hour, event_type
-"""
-
-
 def streaming_hourly_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Variant-tagged composite of the three hourly tumbling-window
     entries (the events_asof_orders / ngram_jaccard_variants
@@ -624,8 +449,7 @@ def streaming_hourly_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale notes are the constituents': one (hour, type) shuffle for
     the batch agg; bounded (hour, type) state for complete mode;
-    watermark-evicted state for append. The three constituents keep
-    standalone parity rows."""
+    watermark-evicted state for append."""
     from dbitool_spark.plans import events_ops
 
     null_sum = F.lit(None).cast("double").alias("sum_value")
@@ -722,8 +546,7 @@ def streaming_curation_chain_documents(spark: SparkSession, sf_dir: str) -> Data
     boundaries and hash-matches the BATCH chain's oracle, proving the
     streaming plan reaches the batch answer. This is how a 100 TB
     ingest pipeline runs the cleanup: at the stream edge, before
-    anything shuffles. STAGED r12 (parity row
-    staged_streaming_curation_chain_documents)."""
+    anything shuffles."""
     from dbitool_spark.plans import llm_ops
 
     docs = catalog.load(spark, sf_dir, "documents").select(
@@ -1069,8 +892,7 @@ def sessions_composite_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale notes are the constituents': one shuffle on user_id for each
     batch variant (both window passes reuse the partitioning); the
     streaming variant holds per-user open-session state, merged on
-    overlap, complete-mode drained. The three constituents keep
-    standalone parity rows."""
+    overlap, complete-mode drained."""
     from dbitool_spark.plans import events_ops
 
     cols = ["user_id", "n_sessions", "n_events", "longest_session_us"]

@@ -77,9 +77,13 @@ def _type_class_duck(type_code) -> str | None:
 
 
 def compare(spark_df, con: duckdb.DuckDBPyConnection, sql: str) -> list[str]:
-    """Return a list of mismatch descriptions (empty == parity)."""
+    """Return a list of mismatch descriptions (empty == parity). A
+    0-row Spark result is one of them: an all-empty match proves the
+    plan compiles, not that it is correct."""
     problems: list[str] = []
     spark_rows = [tuple(r) for r in spark_df.collect()]
+    if not spark_rows:
+        problems.append("vacuous: the Spark result has 0 rows")
     spark_cols = spark_df.columns
     duck = con.sql(sql)  # relation API: exposes real DuckDB types
     duck_cols = list(duck.columns)

@@ -688,3 +688,24 @@ def test_rollup_merge_batch_is_replay_idempotent(spark, tmp_path):
         .collect()
     )
     assert len(wm) == 1 and wm[0].bmax == 1
+
+
+def test_streaming_lsh_overlap_emits_sequential_run_row(spark):
+    """r17: the drain and parity legs of streaming_lsh_near_dup run on
+    two driver threads. The drain's file set, trigger cap and state
+    partitioning are unchanged, so the emitted parity row must stay
+    the sequential run's exact contract: every subset doc flagged
+    once, zero index mismatches, zero flag mismatches."""
+    from dbitool_spark import catalog
+    from dbitool_spark.plans import state_ops
+
+    rows = state_ops.streaming_lsh_near_dup_documents(spark, SF_SMOKE).collect()
+    assert len(rows) == 1
+    n_even = (
+        catalog.load(spark, SF_SMOKE, "documents")
+        .filter("doc_id % 2 = 0")
+        .count()
+    )
+    r = rows[0]
+    assert r.n_docs == 2 * n_even
+    assert r.index_mismatches == 0 and r.flag_mismatches == 0

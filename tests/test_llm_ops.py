@@ -1992,9 +1992,10 @@ def test_bpe_two_pass_replace_merge_semantics():
 
 
 def test_bpe_learn_merges_matches_python_reference(spark):
-    """Third-implementation check: the full K-iteration merge-learning
-    loop recomputed in pure Python at sf0.001 (word-frequency table,
-    pair counts, (cnt DESC, pair ASC) tie-break, greedy application)."""
+    """Third-implementation check of bpe_pipeline_documents' merge
+    rows: the full K-iteration merge-learning loop recomputed in pure
+    Python at sf0.001 (word-frequency table, pair counts,
+    (cnt DESC, pair ASC) tie-break, greedy application)."""
     import re
     from collections import Counter
 
@@ -2016,10 +2017,12 @@ def test_bpe_learn_merges_matches_python_reference(spark):
         expected.append((i, a, b, c))
         state = {w: _two_pass_merge(s, a, b) for w, s in state.items()}
 
-    got = [
-        (r.it, r.pair_a, r.pair_b, r.cnt)
-        for r in llm_ops.bpe_learn_merges_documents(spark, SF_SMOKE).collect()
-    ]
+    got = sorted(
+        (r.n1, r.key1, r.key2, r.n2)
+        for r in llm_ops.bpe_pipeline_documents(spark, SF_SMOKE)
+        .filter("kind = 'merge'")
+        .collect()
+    )
     assert got == expected
 
 
@@ -2094,10 +2097,10 @@ def test_dsir_cluster_scale_branch_crossover(spark):
 
 
 def test_bpe_encode_matches_python_reference(spark):
-    """Third-implementation check for the BPE encode audit: learn the
-    K merges and encode the corpus in pure Python with the pinned
-    two-pass-replace semantics, then compare every per-doc row at
-    sf0.001."""
+    """Third-implementation check of bpe_pipeline_documents' encode
+    rows: learn the K merges and encode the corpus in pure Python with
+    the pinned two-pass-replace semantics, then compare every per-doc
+    row at sf0.001."""
     import re
     from collections import Counter
 
@@ -2133,8 +2136,10 @@ def test_bpe_encode_matches_python_reference(spark):
         enc = {w: apply_merge(r, a, b) for w, r in enc.items()}
 
     got = {
-        r.doc_id: (r.n_words, r.n_chars, r.n_syms_bpe)
-        for r in llm_ops.bpe_encode_documents(spark, SF_SMOKE).collect()
+        int(r.key1): (r.n1, r.n2, r.n3)
+        for r in llm_ops.bpe_pipeline_documents(spark, SF_SMOKE)
+        .filter("kind = 'encode'")
+        .collect()
     }
     assert set(got) == set(toks)
     for d, ws in toks.items():
@@ -2145,173 +2150,7 @@ def test_bpe_encode_matches_python_reference(spark):
     assert any(got[d][2] < got[d][1] for d in got)
 
 
-def test_bigram_lm_matches_python_reference(spark):
-    """Third-implementation check for the interpolated bigram LM: the
-    bigram/context/unigram counts, the lambda=1/2 Jelinek-Mercer
-    rational, the milli-bit quantization, backoff on unseen contexts
-    (incl. each doc's first token), and the flag recomputed in pure
-    Python at sf0.001."""
-    import math
-    import re
-    from collections import Counter
-    from decimal import ROUND_HALF_UP, Decimal
-
-    from dbitool_spark import catalog
-    from dbitool_spark.plans import llm_ops
-
-    rows = catalog.load(spark, SF_SMOKE, "documents").select(
-        "doc_id", "text"
-    ).collect()
-    toks = {r.doc_id: re.split(r"\s+", r.text.strip().lower()) for r in rows}
-    cb, c1, cw = Counter(), Counter(), Counter()
-    for d, ws in toks.items():
-        if d % 2 != 0:
-            continue
-        cw.update(ws)
-        for a, b in zip(ws, ws[1:]):
-            cb[(a, b)] += 1
-            c1[a] += 1
-    n_tok, v_sz = sum(cw.values()), len(cw)
-    nv = n_tok + v_sz
-
-    def q(x):
-        return int(Decimal(x * 1000).quantize(Decimal("1"), rounding=ROUND_HALF_UP))
-
-    def s_mb(prev, w):
-        if prev is None or c1.get(prev, 0) == 0:
-            return q(math.log2(nv / (cw.get(w, 0) + 1)))
-        num = cb.get((prev, w), 0) * nv + c1[prev] * (cw.get(w, 0) + 1)
-        den = 2 * c1[prev] * nv
-        assert den <= 1 << 53  # the committed SFs stay in the exact branch
-        return q(math.log2(den / num))
-
-    got = {
-        r.doc_id: (r.tok_n, r.ce_mb, r.flagged)
-        for r in llm_ops.bigram_lm_score_documents(spark, SF_SMOKE).collect()
-    }
-    scored = {d for d in toks if d % 2 == 1}
-    assert set(got) == scored
-    for d in scored:
-        ws = toks[d]
-        ce = sum(s_mb(p, w) for p, w in zip([None] + ws[:-1], ws))
-        flag = ce > len(ws) * llm_ops._BIGRAM_FLAG_MILLIBITS
-        assert got[d] == (len(ws), ce, flag), d
-    # the flag is non-vacuous in both directions at this SF
-    assert any(v[2] for v in got.values())
-    assert not all(v[2] for v in got.values())
-
-
-def test_bigram_lm_order_sensitivity_and_branches(spark, tmp_path):
-    """The property the unigram scorer cannot see: reversing token
-    order changes the bigram surprisal while the unigram mix is
-    identical. Plus the three-branch expression pinned against DuckDB
-    and pure Python on constructed rows spanning backoff, the exact
-    rational, the 2^53 boundary, and the cluster IEEE branch."""
-    import math
-    from decimal import ROUND_HALF_UP, Decimal
-
-    import duckdb
-
-    from dbitool_spark.plans import llm_ops
-
-    B = 1 << 52
-    nv_big = 2**20
-    c1_at = B // nv_big  # den = 2*c1*(nv) == 2^53 exactly
-    rows = [
-        (None, 0, 5, 1000, 24),        # backoff: cb/c1 absent
-        (3, 10, 7, 1000, 24),          # exact rational
-        (c1_at // 2, c1_at, 9, nv_big - 24, 24),   # exact at the boundary
-        (c1_at // 2, c1_at + 1, 9, nv_big - 24, 24),  # one over: cluster
-        (2**30, 2**40, 2**35, 2**50, 2**20),       # deep cluster scale
-    ]
-
-    def q(x):
-        return int(Decimal(x * 1000).quantize(Decimal("1"), rounding=ROUND_HALF_UP))
-
-    def ref(cb, c1, cw, n_tok, v_sz):
-        nv = n_tok + v_sz
-        cb, c1, cw = cb or 0, c1 or 0, cw or 0
-        if c1 == 0:
-            return q(math.log2(nv / (cw + 1)))
-        if c1 <= B // nv:
-            return q(math.log2((2 * c1 * nv) / (cb * nv + c1 * (cw + 1))))
-        return q(-math.log2((cb / c1 + (cw + 1) / nv) / 2))
-
-    want = [ref(*r) for r in rows]
-    df = spark.createDataFrame(
-        rows, "cb bigint, c1 bigint, cw bigint, n_tok bigint, v_sz bigint"
-    )
-    got = [
-        r.s for r in df.select(llm_ops._bigram_surprisal_mb().alias("s")).collect()
-    ]
-    assert got == want
-
-    con = duckdb.connect()
-    sql = llm_ops._BIGRAM_SURPRISAL_MB_SQL.replace("s.", "t.")
-    vals = ", ".join(
-        "(" + ", ".join("NULL" if x is None else str(x) for x in r) + ")"
-        for r in rows
-    )
-    duck = [
-        r[0]
-        for r in con.execute(
-            f"SELECT {sql} FROM (VALUES {vals}) AS t(cb, c1, cw, n_tok, v_sz)"
-        ).fetchall()
-    ]
-    con.close()
-    assert duck == want
-
-    # order sensitivity: same bag of words, different order, different
-    # score — train on one fluent doc, score it forwards vs reversed
-    import pandas as pd  # noqa: F401  (spark.createDataFrame on tuples)
-
-    fluent = "the cat sat on the mat and the dog sat on the rug"
-    salad = " ".join(reversed(fluent.split()))
-    docs = spark.createDataFrame(
-        [(0, fluent), (1, fluent), (3, salad)], "doc_id bigint, text string"
-    )
-    import os
-    d = str(tmp_path)  # pytest-owned scratch (ADVICE r14: mkdtemp leaked)
-    docs.write.parquet(os.path.join(d, "documents.parquet"))
-    out = {
-        r.doc_id: r.ce_mb
-        for r in llm_ops.bigram_lm_score_documents(spark, d).collect()
-    }
-    assert out[1] < out[3], out  # fluent (seen order) beats the salad
-
-def test_lm_scores_composite_matches_constituents(spark):
-    """The staged lm_scores composite must reproduce BOTH constituents
-    bit-for-bit per kind — the retirement contract's precondition for
-    the r17 supersede (same check the other kind-tagged composites
-    carry)."""
-    from dbitool_spark.plans import llm_ops
-
-    sf = "/root/testdata/sf0.001"
-    comp = llm_ops.lm_scores_composite(spark, sf).collect()
-    uni = {
-        (r.doc_id): (r.tok_n, r.ce_mb, r.flagged)
-        for r in llm_ops.perplexity_score_documents(spark, sf).collect()
-    }
-    big = {
-        (r.doc_id): (r.tok_n, r.ce_mb, r.flagged)
-        for r in llm_ops.bigram_lm_score_documents(spark, sf).collect()
-    }
-    got_uni = {
-        r.doc_id: (r.tok_n, r.ce_mb, r.flagged)
-        for r in comp
-        if r.kind == "unigram"
-    }
-    got_big = {
-        r.doc_id: (r.tok_n, r.ce_mb, r.flagged)
-        for r in comp
-        if r.kind == "bigram"
-    }
-    assert got_uni == uni
-    assert got_big == big
-    assert len(comp) == len(uni) + len(big) and len(uni) > 0
-
-
-# --- winnowing fingerprints (r16 staged) -----------------------------
+# --- winnowing fingerprints ------------------------------------------
 
 
 def _py_winnow(text: str, k: int = 4, w: int = 5) -> set:
@@ -2395,27 +2234,7 @@ def test_winnow_shared_run_guarantee(spark):
     # (no assertion — just documents why 8 is the magic number)
 
 
-def test_winnow_near_dup_planted_pairs(spark):
-    """Plans entry: every perturbed (i, i+offset) planted pair whose
-    doc is long enough to winnow must appear in the pairs leg, and
-    profile covers the whole corpus exactly once."""
-    from dbitool_spark.plans import llm_ops
-
-    sf = SF_ORACLE
-    out = llm_ops.winnow_near_dup_documents(spark, sf).collect()
-    profile = [r for r in out if r.kind == "profile"]
-    pairs = {(r.id_a, r.id_b) for r in out if r.kind == "pairs"}
-    n_docs = catalog.load(spark, sf, "documents").count()
-    assert len(profile) == 2 * n_docs
-    planted = sum(
-        1 for (a, b) in pairs if b - a == 1_000_000 and a < 1_000_000
-    )
-    # every planted pair shares all but ~2 fingerprints; only docs
-    # short enough to have < MIN_SHARED rare fingerprints may drop out
-    assert planted >= int(0.9 * n_docs), (planted, n_docs)
-
-
-# --- edit-distance join (r16 staged) ---------------------------------
+# --- edit-distance join ----------------------------------------------
 
 
 def _py_edit_distance(a: str, b: str) -> int:

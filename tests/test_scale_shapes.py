@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dbitool_spark import catalog
-from dbitool_spark.ops import scale
+from dbitool_spark.ops import dedup, scale
 from tests.conftest import SF_SMOKE
 
 
@@ -430,31 +430,59 @@ def test_partsupp_fixture_shapes(spark):
     ), plan
 
 
-def test_near_dup_lazy_plans_are_bucket_local(spark):
-    """materialize=False exposes the REAL optimized plans of the
-    near-dup family (the materialized results explain() as checkpoint
-    scans — bench fingerprints these same lazy twins). The scale
-    contracts asserted: parquet-rooted (not ExistingRDD), and never
-    an all-pairs CartesianProduct — every candidate generator joins
-    on bucket/shingle/band keys."""
+def _near_dup_family(spark) -> dict:
+    """name -> callable(materialize=...) for the near-dup family: the
+    dedup/similarity candidate generators over the planted perturbed
+    corpora at sf0.001, plus the registered entries that take
+    materialize= directly."""
+    from functools import partial
+
+    from dbitool_spark.ops import similarity
     from dbitool_spark.plans import llm_ops
 
-    lazy_entries = [
-        llm_ops.minhash_near_dup_documents,
-        llm_ops.simhash_near_dup_documents,
+    docs = llm_ops._perturbed_corpus(catalog.load(spark, SF_SMOKE, "documents"))
+    emb = catalog.load(spark, SF_SMOKE, "embeddings")
+    base = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+    vecs = base.unionAll(llm_ops._perturbed_embeddings(base))
+    family = {
+        "minhash_near_dup_pairs": lambda materialize: dedup.minhash_near_dup_pairs(
+            docs, "doc_id", "text", shingle_k=3, threshold=0.7,
+            materialize=materialize,
+        ),
+        "simhash_candidates": lambda materialize: dedup.simhash_candidates(
+            docs, "doc_id", "text", max_hamming=3, materialize=materialize
+        ),
+        "embedding_near_dup_pairs": lambda materialize: (
+            similarity.embedding_near_dup_pairs(
+                vecs, id_col="vec_id", vec_col="v", dim=64, threshold=0.95,
+                n_tables=16, bits=10, materialize=materialize,
+            )
+        ),
+    }
+    for fn in (
         llm_ops.simhash_recall_planted,
         llm_ops.ngram_jaccard_variants_documents,
         llm_ops.ngram_containment_documents,
-        llm_ops.embedding_near_dup,
         llm_ops.top_terms_per_source,
-    ]
+    ):
+        family[fn.__name__] = partial(fn, spark, SF_SMOKE)
+    return family
+
+
+def test_near_dup_lazy_plans_are_bucket_local(spark):
+    """materialize=False exposes the REAL optimized plans of the
+    near-dup family (the materialized results explain() as checkpoint
+    scans — bench fingerprints the entries' lazy twins). The scale
+    contracts asserted: parquet-rooted (not ExistingRDD), and never
+    an all-pairs CartesianProduct — every candidate generator joins
+    on bucket/shingle/band keys."""
     try:
-        for fn in lazy_entries:
-            plan = _plan(fn(spark, SF_SMOKE, materialize=False))
-            assert "Scan parquet" in plan, f"{fn.__name__} not parquet-rooted"
-            assert "CartesianProduct" not in plan, f"{fn.__name__} all-pairs!"
+        for name, make in _near_dup_family(spark).items():
+            plan = _plan(make(materialize=False))
+            assert "Scan parquet" in plan, f"{name} not parquet-rooted"
+            assert "CartesianProduct" not in plan, f"{name} all-pairs!"
             assert "BroadcastNestedLoopJoin" not in plan, (
-                f"{fn.__name__} has an unkeyed join"
+                f"{name} has an unkeyed join"
             )
     finally:
         # lazy mode leaves operator-internal persists caller-owned
@@ -463,15 +491,15 @@ def test_near_dup_lazy_plans_are_bucket_local(spark):
 
 def test_lazy_and_materialized_results_agree(spark):
     """The lazy twin is the SAME computation — only the eager
-    checkpoint+release differs. Pin value parity on one shingle op and
-    one embedding op so the twins can't drift from what bench times."""
-    from dbitool_spark.plans import llm_ops
-
-    for fn in (llm_ops.ngram_containment_documents, llm_ops.embedding_near_dup):
-        eager = sorted(map(tuple, fn(spark, SF_SMOKE).collect()))
-        lazy = sorted(map(tuple, fn(spark, SF_SMOKE, materialize=False).collect()))
+    checkpoint+release differs. Pin value parity on one shingle entry
+    and one embedding op so the twins can't drift from what bench
+    times."""
+    family = _near_dup_family(spark)
+    for name in ("ngram_containment_documents", "embedding_near_dup_pairs"):
+        eager = sorted(map(tuple, family[name](materialize=True).collect()))
+        lazy = sorted(map(tuple, family[name](materialize=False).collect()))
         spark.catalog.clearCache()
-        assert eager == lazy, fn.__name__
+        assert eager == lazy, name
 
 
 def test_bloom_membership_and_decontaminate_precision(spark):
@@ -746,17 +774,16 @@ def test_dedup_lazy_variants_carry_release_handles(spark):
     clearCache saved the caller. They now ride the attach/transfer
     contract like every other lazy entry."""
     from dbitool_spark.ops.cache import release_persists
-    from dbitool_spark.plans import llm_ops
 
-    for fn, min_handles in (
-        (llm_ops.minhash_near_dup_documents, 2),   # sh + banded
-        (llm_ops.ngram_containment_documents, 1),  # sh
-        (llm_ops.ngram_jaccard_variants_documents, 4),  # sh+pref, sh+ix
-        (llm_ops.simhash_near_dup_documents, 1),   # sig
+    family = _near_dup_family(spark)
+    for name, min_handles in (
+        ("minhash_near_dup_pairs", 2),   # sh + banded
+        ("ngram_containment_documents", 1),  # sh
+        ("ngram_jaccard_variants_documents", 4),  # sh+pref, sh+ix
+        ("simhash_candidates", 1),   # sig
     ):
-        df = fn(spark, SF_SMOKE, materialize=False)
-        released = release_persists(df)
-        assert released >= min_handles, (fn.__name__, released)
+        released = release_persists(family[name](materialize=False))
+        assert released >= min_handles, (name, released)
 
 
 def test_with_running_total_matches_naive_window(spark):
@@ -796,25 +823,17 @@ def test_with_running_total_matches_naive_window(spark):
 
 
 def test_global_pack_avoids_single_partition_data_window(spark):
-    """global_pack_documents must range-partition the corpus and keep
-    every data-row window partition-local; only the one-row-per-
-    partition offset table may cross a single-partition exchange."""
-    from dbitool_spark.plans.llm_ops import global_pack_documents
+    """with_running_total over per-document token counts (the sequence
+    packing prefix sum) must range-partition the corpus and keep every
+    data-row window partition-local; only the one-row-per-partition
+    offset table may cross a single-partition exchange."""
+    from dbitool_spark.ops import text
 
-    df = global_pack_documents(spark, SF_SMOKE)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
+    docs = catalog.load(spark, SF_SMOKE, "documents")
+    toks = docs.select("doc_id", text.token_count(F.col("text")).alias("n_tok"))
+    df = scale.with_running_total(
+        toks, ["doc_id"], "n_tok", total_col="before", inclusive=False
+    )
+    plan = _plan(df)
     assert "rangepartitioning" in plan.lower()
     assert "__pid" in plan  # the data-side window is partition-local
-    rows = df.collect()
-    # bins fill contiguously: offsets within a bin are strictly
-    # increasing in doc_id order and every bin boundary is respected
-    by_doc = sorted(rows, key=lambda r: r.doc_id)
-    run = 0
-    cap = 1024
-    for r in by_doc:
-        assert r.bin_id == run // cap and r.bin_offset == run % cap
-        assert r.spans == (r.bin_offset + r.n_tok - 1) // cap + 1
-        run += r.n_tok

@@ -3,10 +3,13 @@ check and a refactor can silently break."""
 
 from __future__ import annotations
 
+import ast
 import re
 from pathlib import Path
 
 PKG = Path(__file__).resolve().parent.parent / "dbitool_spark"
+PLANS = PKG / "plans"
+_PLANS_PKG = "dbitool_spark.plans"
 
 
 def _sources() -> dict[str, str]:
@@ -49,3 +52,95 @@ def test_driver_window_is_the_computed_rotation():
     assert head == expected
     oracles = __spark_entry__.oracle_sql()
     assert [n for n in head if n not in oracles] == []
+
+
+def _plan_aliases(tree: ast.AST) -> tuple[dict[str, str], dict[str, tuple[str, str]]]:
+    """Local names bound to plans modules and to plans definitions by
+    the imports anywhere in ``tree`` (lazy in-function imports too)."""
+    modules: dict[str, str] = {}
+    names: dict[str, tuple[str, str]] = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.module == _PLANS_PKG:
+            for a in node.names:
+                modules[a.asname or a.name] = a.name
+        elif isinstance(node, ast.ImportFrom) and (node.module or "").startswith(
+            _PLANS_PKG + "."
+        ):
+            mod = node.module.removeprefix(_PLANS_PKG + ".")
+            for a in node.names:
+                names[a.asname or a.name] = (mod, a.name)
+    return modules, names
+
+
+def _plan_refs(node: ast.AST, module: str | None, aliases) -> set[tuple[str, str]]:
+    """(plans module, name) pairs that ``node`` references: bare names
+    (resolved in ``module`` unless imported) and ``alias.attr`` on an
+    imported plans module. f-string SQL interpolation is covered
+    because its fields are Name nodes."""
+    modules, names = aliases
+    refs = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            if n.id in names:
+                refs.add(names[n.id])
+            elif module is not None:
+                refs.add((module, n.id))
+        elif (
+            isinstance(n, ast.Attribute)
+            and isinstance(n.value, ast.Name)
+            and n.value.id in modules
+        ):
+            refs.add((modules[n.value.id], n.attr))
+    return refs
+
+
+def _defined_names(stmt: ast.stmt) -> list[str]:
+    if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [stmt.name]
+    if isinstance(stmt, ast.Assign):
+        return [n.id for t in stmt.targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+    if isinstance(stmt, ast.AnnAssign) and isinstance(stmt.target, ast.Name):
+        return [stmt.target.id]
+    return []
+
+
+def test_every_plan_definition_is_reachable_from_the_registry():
+    """The parity suite runs exactly the registered entries, so a plan
+    definition that no entry reaches is code no test or driver row
+    runs. Roots: what registry.py references, plus every name the
+    package outside plans/ and __spark_entry__.py use; the walk
+    follows references transitively through plans/*.py."""
+    defs: dict[tuple[str, str], set[tuple[str, str]]] = {}
+    roots: set[tuple[str, str]] = set()
+    for path in sorted(PLANS.glob("*.py")):
+        module = path.stem
+        tree = ast.parse(path.read_text())
+        aliases = _plan_aliases(tree)
+        if module == "registry":
+            roots |= _plan_refs(tree, None, aliases)
+            continue
+        for stmt in tree.body:
+            names = _defined_names(stmt)
+            for name in names:
+                defs[(module, name)] = _plan_refs(stmt, module, aliases)
+            if not names and not isinstance(stmt, (ast.Import, ast.ImportFrom, ast.Expr)):
+                roots |= _plan_refs(stmt, module, aliases)
+    outside = [PKG.parent / "__spark_entry__.py"] + [
+        p for p in PKG.rglob("*.py") if PLANS not in p.parents
+    ]
+    for path in outside:
+        tree = ast.parse(path.read_text())
+        roots |= _plan_refs(tree, None, _plan_aliases(tree))
+
+    reached: set[tuple[str, str]] = set()
+    todo = [r for r in roots if r in defs]
+    while todo:
+        key = todo.pop()
+        if key not in reached:
+            reached.add(key)
+            todo.extend(r for r in defs[key] if r in defs)
+    unreachable = sorted(f"{m}.{n}" for m, n in set(defs) - reached)
+    assert not unreachable, (
+        f"{len(unreachable)} plan definitions no registered entry reaches: "
+        + ", ".join(unreachable)
+    )
