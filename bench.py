@@ -2,58 +2,50 @@
 """Per-query benchmark harness (driver contract, BASELINE.md).
 
 Runs every registered query at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], takes the median of
-N timed runs after a warm-up, and prints exactly ONE compact JSON line
-holding ONLY the headline scalar:
+/root/testdata/sf0.1) and prints exactly ONE compact JSON line holding
+ONLY the headline scalar:
 
     {"metric": "total_median_query_sec", "value": <sum of medians>,
-     "unit": "sec", "n_queries": 67, "sf": 0.1}
+     "unit": "sec", "n_queries": 98, "sf": 0.1, ...}
 
-Everything per-query goes to sidecar files, NOT stdout:
-- BENCH_queries.json — the full {query: median_sec} map plus machine
-  load (os.getloadavg at start/end) so a loaded-sandbox round is
-  diagnosable from artifacts;
-- BENCH_vs_prev.json — per-query ratios vs the newest parseable
-  BENCH record at the same sf, regressions > 1.5x.
-- BENCH_last_run.json (r17) — the same per-query payload stamped on
-  EVERY run, loaded or idle, marked by its inner "exclusive" flag.
-  Non-authoritative by contract: the exclusive record above is still
-  only ever overwritten by an exclusive run; this sidecar exists so a
-  loaded host leaves the driver per-query data instead of nothing.
+Inlining the per-query map would outgrow the driver's stdout tail
+window and truncate the JSON; everything per-query goes to sidecars:
+- BENCH_queries.json: per-query medians, plan fingerprints, the
+  warm-up's work counters and machine load. Written only by an
+  exclusive run (idle box, no foreign JVM), so it is the perf record.
+- BENCH_last_run.json: the same payload, written by every run, with
+  its inner "exclusive" flag telling whether it is record-grade.
+- BENCH_vs_prev.json: per-query ratios against the previous record at
+  the same sf, and the regressions among them (exclusive runs only).
+- BENCH_scaling.json: the scaling gate (exclusive runs only).
 
-Rationale: r01/r04/r05 all produced "parsed": null because inlining
-~50-65 per-query timings (~2.5 KB) outgrows the driver's stdout tail
-window and truncates the JSON mid-dict, hiding the headline metric.
-The stdout line is now ~100 bytes and cannot truncate.
+Each entry is measured by `_measure`: one traced warm-up (its jobs,
+stages, tasks, shuffle-write bytes and output rows are the entry's
+counters), then SPARK_GRAFT_BENCH_RUNS (default 5) timed runs whose
+median is the entry's time. A run is plan + execution to a count()
+action: count, not collect, so driver-side row transfer does not
+dominate; value correctness is the oracle suite's job.
 
-Timing counts the full job: plan + execution to a count() action
-(count, not collect, so driver-side row transfer doesn't dominate at
-bench scale — correctness of values is the oracle gate's job, and
-count() still executes the complete plan including sorts' upstream).
+Regression gate: a >1.5x ratio against the previous record is flagged
+only when the plan fingerprint changed or the slowdown exceeds 0.5 s;
+ratio-only blips land in noise_suppressed. Before stamping, an entry
+over 1.5x whose plan fingerprint is verified unchanged is measured
+again standalone and the better median is stamped (both under
+noise_remeasured); a spike whose fingerprint cannot be verified is
+recorded under noise_unverified and never re-measured away.
 
-Regression gate: the run diffs per-query medians against the previous
-run at the same scale factor; a >1.5x ratio is FLAGGED under
-vs_prev.regressions only when the plan fingerprint changed or the
-absolute delta exceeds 0.5s — ratio-only blips on sub-second entries
-land in vs_prev.noise_suppressed instead (r7 lesson: three flagged
-"regressions" were all load noise with unchanged plans). Warnings go
-to stderr; stdout stays the single JSON line. Medians are over 5 runs
-by default (SPARK_GRAFT_BENCH_RUNS).
-
-Noise re-measure (r11, closing the r10 verdict item): before the
-sidecars are stamped, any entry whose ratio vs the previous exclusive
-record exceeds 1.5x with an UNCHANGED plan fingerprint is re-measured
-standalone (fresh warm-up + the same sample count) and the better
-median is stamped; both measurements are recorded under
-noise_remeasured. The committed record therefore never carries a
-spike the harness has itself diagnosed as scheduler noise — while a
-genuine plan-change regression is never re-measured away.
+Scaling gate: every entry is also measured at the sibling data dir one
+scale-factor decade smaller (sf0.1 -> sf0.01) and compared with its
+timing-loop measurement. An entry is red when its median wall or its
+shuffle-write bytes grow more than SCALING_RED_RATIO for 10x the rows,
+or when it raises at the smaller SF (message under "errors"). Without
+that sibling dir the gate prints one stderr line and leaves
+BENCH_scaling.json as it is.
 """
 
 from __future__ import annotations
 
 import gc
-import glob
 import json
 import os
 import re
@@ -61,13 +53,18 @@ import statistics
 import sys
 import time
 
+from dbitool_spark import profile
+
 REGRESSION_RATIO = 1.5
-# a >1.5x ratio alone is not a finding on a loaded sandbox: sub-second
-# entries flap 2x under load with unchanged plans (r7: three flagged
-# regressions, all noise). A regression is FLAGGED only when the plan
-# fingerprint changed or the absolute delta exceeds this many seconds;
-# ratio-only blips are recorded under "noise_suppressed" instead.
+# sub-second entries flap 2x under load with unchanged plans, so a
+# ratio alone is not a finding: a regression is flagged only when the
+# plan fingerprint changed or the slowdown exceeds this many seconds
 ABS_DELTA_SEC = 0.5
+# Candidate generation must grow near-linearly (bucket equi-joins,
+# never all-pairs): 15x for 10x the rows allows log factors and Spark's
+# fixed job overhead moving between numerator and denominator, while
+# all-pairs growth (~100x) stays far above it.
+SCALING_RED_RATIO = 15.0
 
 
 def _fingerprint_changed(prev_sha: str | None, cur_sha: str | None) -> bool:
@@ -87,10 +84,10 @@ def _fingerprint_verified_unchanged(
     prev_sha: str | None, cur_sha: str | None
 ) -> bool:
     """True only when BOTH fingerprints are present and equal (and not
-    the vacuous 'checkpointed' marker). ADVICE r11: noise re-measure
-    must require this, not merely 'not changed' — an entry whose sha
-    failed to compute is UNVERIFIABLE and its spike may be a real
-    plan-change regression, so it must never be min()-ed away."""
+    the vacuous 'checkpointed' marker). The noise re-measure requires
+    this, not merely 'not changed': an entry whose sha failed to
+    compute is unverifiable and its spike may be a real plan-change
+    regression, so it must never be min()-ed away."""
     return bool(
         prev_sha
         and cur_sha
@@ -98,420 +95,87 @@ def _fingerprint_verified_unchanged(
         and "checkpointed" not in (prev_sha, cur_sha)
     )
 
-# Cross-SF scaling gate (BENCH_scaling.json): the near-dup candidate
-# generators' 100 TB story rests on their plan shapes being near-linear
-# (bucket equi-joins, never all-pairs). This gate MEASURES that: each
-# op is timed at sf0.01 and sf0.1 (10x the rows) with identical
-# parameters; a ratio above SCALING_RED_RATIO flags quadratic blowup.
-# 15x allows 10x rows plus log factors and Spark's fixed job overhead
-# moving between the numerator and denominator.
-SCALING_RED_RATIO = 15.0
-SCALING_SF_SMALL = "/root/testdata/sf0.01"
-SCALING_SF_BIG = "/root/testdata/sf0.1"
 
-
-def _scaling_ops():
-    """Op-level (not registry-level) thunks so both SFs run the exact
-    same parameters; count() drives the full candidate plan."""
-    from pyspark.sql import functions as F
-
-    from dbitool_spark import catalog
-    from dbitool_spark.ops import dedup
-
-    def minhash(spark, d):
-        docs = catalog.load(spark, d, "documents")
-        return dedup.minhash_near_dup_pairs(docs, "doc_id", "text")
-
-    def ngram(spark, d):
-        docs = catalog.load(spark, d, "documents")
-        return dedup.ngram_jaccard_pairs(docs, "doc_id", "text")
-
-    def simhash(spark, d):
-        docs = catalog.load(spark, d, "documents")
-        return dedup.simhash_candidates(docs, "doc_id", "text", max_hamming=3)
-
-    def containment(spark, d):
-        docs = catalog.load(spark, d, "documents")
-        return dedup.ngram_containment_pairs(docs, "doc_id", "text")
-
-    def kmeans_cluster_path(spark, d):
-        # the iters>2 production path (cluster-side centroid updates):
-        # growth must stay linear in corpus size — the per-iteration
-        # cost is one broadcast-NLJ assignment + one corpus*dim shuffle
-        from dbitool_spark.ops import similarity
-
-        emb = catalog.load(spark, d, "embeddings")
-        # materialize=True: the work happens inside this call (which
-        # the gate's timer wraps) and the persisted input is released
-        return similarity.kmeans_distributed(emb, "vec_id", "embedding", k=8, iters=5)
-
-    def salted_rollup(spark, d):
-        # the skew answer: two-stage agg must track input size, with
-        # the second stage bounded by keys*n_salts
-        from dbitool_spark.plans.events_ops import skewed_user_rollup_events
-
-        return skewed_user_rollup_events(spark, d)
-
-    def _ann_inputs(spark, d):
-        from dbitool_spark.plans.llm_ops import _N_ANN_QUERIES
-
-        emb = catalog.load(spark, d, "embeddings")
-        return emb, emb.filter(F.col("vec_id") < _N_ANN_QUERIES)
-
-    def lsh_topk(spark, d):
-        # ANN scale path #1: bucketed candidate probe — growth must
-        # track corpus size (bucket equi-join), never queries*corpus
-        # all-pairs
-        from dbitool_spark.ops import similarity
-
-        return similarity.lsh_topk(*_ann_inputs(spark, d), k=5)
-
-    def ivf_topk(spark, d):
-        # ANN scale path #2: the gemm-identity assignment kernel is
-        # O(N*C + N*dim) per Arrow batch; cell-pruned probe after
-        from dbitool_spark.ops import similarity
-
-        return similarity.ivf_topk(
-            *_ann_inputs(spark, d), k=5, n_centroids=16, n_probe=4
-        )
-
-    def bm25(spark, d):
-        # r11 (verdict task 5): corpus-wide work is one tokenize +
-        # dl/tf aggregates; growth must track the token stream, with
-        # the post-filter candidate set bounded by docs-containing-q
-        from dbitool_spark.plans.llm_ops import bm25_topk_documents
-
-        return bm25_topk_documents(spark, d)
-
-    def source_overlap(spark, d):
-        # r11 (verdict task 5): the gram self-join fans out per gram
-        # only to the sources carrying it (n_sources is a small
-        # constant), so growth must stay ~linear in corpus size
-        from dbitool_spark.plans.llm_ops import source_overlap_matrix
-
-        return source_overlap_matrix(spark, d)
-
-    def bloom_decontaminate(spark, d):
-        # r11 (staged entry, explicit scale claim): bloom build is one
-        # bit_or agg over the benchmark, membership rides a 1-row
-        # broadcast — growth must track the corpus scan, with the
-        # corpus never shuffled against the benchmark
-        from dbitool_spark.plans.pipeline_ops import (
-            bloom_decontaminate_documents,
-        )
-
-        return bloom_decontaminate_documents(spark, d)
-
-    def strip_markup(spark, d):
-        # r12 registration: one JVM regexp projection — growth must
-        # track the scan almost exactly (~1x plus fixed job overhead)
-        from dbitool_spark.plans.llm_ops import strip_markup_documents
-
-        return strip_markup_documents(spark, d)
-
-    def dedup_representatives(spark, d):
-        # r12 registration: banded pairs + star CC + per-cluster
-        # argmax — candidate volume is the banded join's, never
-        # all-pairs; the argmax is one window over cluster members
-        from dbitool_spark.plans.llm_ops import dedup_representatives_documents
-
-        return dedup_representatives_documents(spark, d)
-
-    def trim_spans(spark, d):
-        # r12 staged ACTION: gram window + covered-position fan-out
-        # (<= _SPAN_GRAM per cut) + one doc_id join — must track the
-        # gram stream, never quadratic
-        from dbitool_spark.plans.llm_ops import trim_duplicate_spans_documents
-
-        return trim_duplicate_spans_documents(spark, d)
-
-    def streaming_hourly(spark, d):
-        # r12 registration: three hourly drains in one tagged union —
-        # Structured Streaming fixed overhead dominates at these SFs,
-        # so the ratio should sit well under the red line; gated so a
-        # state-size blowup in any constituent would surface
-        from dbitool_spark.plans.state_ops import streaming_hourly_composite
-
-        return streaming_hourly_composite(spark, d)
-
-    def classifier_score(spark, d):
-        # r12 staged (r15 candidate): tokenize + 256-row vocab top-k +
-        # lookup join + per-doc agg — growth must track the token
-        # stream; the vocab build is a distributed top-k, never a
-        # corpus-wide window
-        from dbitool_spark.plans.llm_ops import classifier_score_documents
-
-        return classifier_score_documents(spark, d)
-
-    def streaming_rollup_ndb(spark, d):
-        # r12 staged (r15 candidate): per-batch partials + keyed merge
-        # into dimension-sized rollup state — growth must track the
-        # event stream, with per-batch merge cost bounded by distinct
-        # (hour, type) keys, never the accumulated history
-        from dbitool_spark.plans.state_ops import streaming_rollup_ndb_events
-
-        return streaming_rollup_ndb_events(spark, d)
-
-    def redact_pii(spark, d):
-        # r13 registration: a regexp_replace cascade is one pure-JVM
-        # projection — growth must track the scan (~1x + job overhead)
-        from dbitool_spark.plans.llm_ops import redact_pii_documents
-
-        return redact_pii_documents(spark, d)
-
-    def curation_chain(spark, d):
-        # r13 registration: strip -> dedup-lines -> redact composed
-        # into ONE projection — same ~1x scan-tracking expectation
-        from dbitool_spark.plans.llm_ops import curation_text_chain_documents
-
-        return curation_text_chain_documents(spark, d)
-
-    def ann_recall_composite_op(spark, d):
-        # r13 registration: the exact kernel is queries(10)*corpus —
-        # linear in corpus for fixed queries — and both approximate
-        # paths are bucketed probes; growth must track corpus size
-        from dbitool_spark.plans.llm_ops import ann_recall_composite
-
-        return ann_recall_composite(spark, d)
-
-    def ndb_range_pruned(spark, d):
-        # r13 registration: upserts through the files_per_bucket
-        # pruned path — per-upsert cost must track touched buckets *
-        # intersecting range files + batch, never the full state
-        from dbitool_spark.plans.state_ops import ndb_range_pruned_replay
-
-        return ndb_range_pruned_replay(spark, d)
-
-    def pagerank_links(spark, d):
-        # r12 verdict item 8 (gate BEFORE the r14 registration):
-        # per-iteration shuffle is |edges| rows and iterations are
-        # checkpointed — growth must stay ~linear in the edge count;
-        # super-linear would expose lineage/checkpoint leaks early
-        from dbitool_spark.plans.llm_ops import pagerank_links_documents
-
-        return pagerank_links_documents(spark, d)
-
-    def perplexity_score(spark, d):
-        # r13 staged (r15 candidate), gated from birth: one token
-        # explode + vocab groupBy + token-keyed count join + per-doc
-        # agg — growth must track the token stream, never doc x doc
-        from dbitool_spark.plans.llm_ops import perplexity_score_documents
-
-        return perplexity_score_documents(spark, d)
-
-    def dsir_weights(spark, d):
-        # r13 staged (r15+ candidate), gated from birth: ONE
-        # conditional-count pass builds both distributions; growth
-        # must track the token stream, never two corpus passes
-        from dbitool_spark.plans.llm_ops import dsir_weights_documents
-
-        return dsir_weights_documents(spark, d)
-
-    def funnel_steps(spark, d):
-        # r13 registration: one user-keyed shuffle + per-user
-        # sort_array + higher-order fold — growth must track the
-        # event stream, with state bounded per user
-        from dbitool_spark.plans.events_ops import funnel_steps_events
-
-        return funnel_steps_events(spark, d)
-
-    def streaming_curation(spark, d):
-        # r14 registration (gated r15): the curation chain as a
-        # stateless streaming projection — the drain's fixed overhead
-        # dominates at these SFs, so growth must sit far under the
-        # line; state-size creep in the scaffold would surface here
-        from dbitool_spark.plans.state_ops import (
-            streaming_curation_chain_documents,
-        )
-
-        return streaming_curation_chain_documents(spark, d)
-
-    def quantized_ann(spark, d):
-        # r15 registration: int8 quantize is one projection; the
-        # integer-dot top-k is queries(10) x corpus — linear in
-        # corpus for fixed queries, same contract as ann_recall
-        from dbitool_spark.plans.llm_ops import quantized_ann_topk_embeddings
-
-        return quantized_ann_topk_embeddings(spark, d)
-
-    def sessions_composite(spark, d):
-        # r14 registration (gated r15): three session realizations in
-        # one union — lag+cumsum and session_window are one user-keyed
-        # shuffle each, the streaming drain is fixed overhead; growth
-        # must track the event stream
-        from dbitool_spark.plans.state_ops import sessions_composite_events
-
-        return sessions_composite_events(spark, d)
-
-    def bpe_pipeline(spark, d):
-        # pair stats + the K-round learn loop + encode: the loop runs
-        # over the vocabulary-sized word-frequency table and encode is
-        # one token-stream join, so growth must track the token
-        # stream, never K x corpus
-        from dbitool_spark.plans.llm_ops import bpe_pipeline_documents
-
-        return bpe_pipeline_documents(spark, d)
-
-    def semantic_dedup(spark, d):
-        # r16 registration: ONE checkpointed LSH-bucketed pair table
-        # feeds both the pair listing and the SemDeDup keep/drop leg —
-        # candidate volume is the bucket equi-join's, never all-pairs
-        from dbitool_spark.plans.llm_ops import semantic_dedup_composite
-
-        return semantic_dedup_composite(spark, d)
-
-    def split_sample(spark, d):
-        # r16 registration: two scan-shaped id-hash aggregates in one
-        # union — growth must track the scan (~1x + job overhead)
-        from dbitool_spark.plans.pipeline_ops import split_sample_composite
-
-        return split_sample_composite(spark, d)
-
-    def edit_distance_join(spark, d):
-        # constant-size (d*q+1) rarest-first prefixes keyed on the gram
-        # — candidate volume tracks the sparse-gram frequency profile.
-        # The corpus is each document's first-4-word "title" plus a
-        # copy with character 7 deleted under id + 1e6: random-word
-        # titles keep the TRUE ED <= 2 result near-linear in rows,
-        # unlike dense digit-grid or low-cardinality name columns
-        docs = catalog.load(spark, d, "documents")
-        titles = docs.select(
-            F.col("doc_id").alias("id"),
-            F.concat_ws(
-                " ", F.slice(F.split(F.lower(F.trim("text")), r"\s+"), 1, 4)
-            ).alias("name"),
-        )
-        planted = titles.select(
-            (F.col("id") + 1_000_000).alias("id"),
-            F.concat(
-                F.col("name").substr(F.lit(1), F.lit(6)),
-                F.col("name").substr(F.lit(8), F.length("name")),
-            ).alias("name"),
-        )
-        return dedup.edit_distance_pairs(
-            titles.unionByName(planted), "id", "name", max_dist=2, q=3
-        )
-
-    def global_pack(spark, d):
-        # the two-phase distributed prefix sum behind sequence packing
-        # — cost must track the range shuffle + per-partition windows;
-        # the only global step is the one-row-per-partition offset
-        # table, so growth is the scan's, never a serialization
-        from dbitool_spark.ops import scale, text
-
-        docs = catalog.load(spark, d, "documents")
-        toks = docs.select("doc_id", text.token_count(F.col("text")).alias("n_tok"))
-        return scale.with_running_total(
-            toks, ["doc_id"], "n_tok", total_col="before", inclusive=False
-        )
-
-    return {
-        "minhash_near_dup_pairs": minhash,
-        "ngram_jaccard_pairs": ngram,
-        "simhash_candidates": simhash,
-        "ngram_containment_pairs": containment,
-        "kmeans_cluster_updates": kmeans_cluster_path,
-        "salted_user_rollup": salted_rollup,
-        "lsh_topk": lsh_topk,
-        "ivf_topk": ivf_topk,
-        "bm25_topk": bm25,
-        "source_overlap_matrix": source_overlap,
-        "bloom_decontaminate": bloom_decontaminate,
-        "strip_markup": strip_markup,
-        "dedup_representatives": dedup_representatives,
-        "trim_duplicate_spans": trim_spans,
-        "streaming_hourly_composite": streaming_hourly,
-        "classifier_score": classifier_score,
-        "streaming_rollup_ndb": streaming_rollup_ndb,
-        "redact_pii": redact_pii,
-        "curation_text_chain": curation_chain,
-        "ann_recall_composite": ann_recall_composite_op,
-        "ndb_range_pruned_replay": ndb_range_pruned,
-        "pagerank_links": pagerank_links,
-        "perplexity_score": perplexity_score,
-        "dsir_weights": dsir_weights,
-        "funnel_steps": funnel_steps,
-        "streaming_curation_chain": streaming_curation,
-        "quantized_ann_topk": quantized_ann,
-        "sessions_composite": sessions_composite,
-        "bpe_pipeline": bpe_pipeline,
-        "semantic_dedup_composite": semantic_dedup,
-        "split_sample_composite": split_sample,
-        "edit_distance_join": edit_distance_join,
-        "global_pack": global_pack,
-    }
-
-
-def _scaling_gate(spark, repo_dir: str, runs: int = 2) -> None:
-    """Time each near-dup generator at both SFs, write the sidecar,
-    warn red entries to stderr. Stdout stays the single JSON line."""
-    results: dict[str, dict] = {}
+def _measure(fn, spark, sf_dir: str, runs: int) -> tuple[float, dict]:
+    """Median seconds of `runs` timed fn(spark, sf_dir).count() calls,
+    and the counters of the traced warm-up before them (which also
+    warms the JIT, the parquet footer cache and AQE statistics): output
+    rows plus profile.COUNTERS. With runs=0 the warm-up itself is timed."""
+    with profile.counters(spark) as counters:
+        t0 = time.perf_counter()
+        counters["rows"] = fn(spark, sf_dir).count()
+        warm_up = time.perf_counter() - t0
+    samples = [] if runs else [warm_up]
+    for _ in range(runs):
+        t0 = time.perf_counter()
+        fn(spark, sf_dir).count()
+        samples.append(time.perf_counter() - t0)
+    # checkpoint-backed results (materialize_release) free their
+    # executor blocks via ContextCleaner only after the Python-side
+    # DataFrame is collected; do it promptly so later entries are not
+    # measured under earlier entries' storage
+    gc.collect()
+    return round(statistics.median(samples), 4), counters
+
+
+def _scaling_gate(
+    spark, fns: dict, small_dir: str, big_dir: str,
+    big: dict[str, tuple[float, dict]], runs: int,
+) -> dict:
+    """Measure every entry of `fns` at small_dir and compare it with its
+    measurement `big` at big_dir (ten times the rows). Returns the
+    BENCH_scaling.json payload; red entries are warned to stderr."""
+    small_sf, big_sf = (os.path.basename(d.rstrip("/")) for d in (small_dir, big_dir))
+    entries: dict[str, dict] = {}
     red: list[str] = []
-    for name, fn in _scaling_ops().items():
-        per_sf: dict[str, float] = {}
-        for sf_dir in (SCALING_SF_SMALL, SCALING_SF_BIG):
-            fn(spark, sf_dir).count()  # warm-up
-            samples = []
-            for _ in range(runs):
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).count()
-                samples.append(time.perf_counter() - t0)
-            per_sf[os.path.basename(sf_dir)] = round(statistics.median(samples), 4)
-            gc.collect()
-        ratio = round(per_sf["sf0.1"] / max(per_sf["sf0.01"], 1e-6), 3)
-        results[name] = {**per_sf, "ratio": ratio}
-        if ratio > SCALING_RED_RATIO:
+    errors: dict[str, str] = {}
+    for name, fn in fns.items():
+        try:
+            small = _measure(fn, spark, small_dir, runs)
+        except Exception as exc:  # one failing entry must not ungate the rest
+            red.append(name)
+            errors[name] = f"{type(exc).__name__}: {exc}"
+            print(f"SCALING RED {name}: raised at {small_sf}: {exc!r}", file=sys.stderr)
+            continue
+        point = {
+            sf: {"median_s": med, **counters}
+            for sf, (med, counters) in ((small_sf, small), (big_sf, big[name]))
+        }
+        wall = round(point[big_sf]["median_s"] / max(point[small_sf]["median_s"], 1e-6), 3)
+        shuffle = round(
+            point[big_sf]["shuffle_bytes"] / max(point[small_sf]["shuffle_bytes"], 1), 3
+        )
+        entries[name] = {**point, "wall_ratio": wall, "shuffle_ratio": shuffle}
+        if max(wall, shuffle) > SCALING_RED_RATIO:
             red.append(name)
             print(
-                f"SCALING RED {name}: {ratio}x for 10x rows "
-                f"(threshold {SCALING_RED_RATIO}x)",
+                f"SCALING RED {name}: wall {wall}x, shuffle bytes {shuffle}x "
+                f"for 10x rows (threshold {SCALING_RED_RATIO}x)",
                 file=sys.stderr,
             )
-    sidecar = {
-        "rows_ratio": 10.0,
+    return {
+        "sfs": [small_sf, big_sf],
         "red_threshold_ratio": SCALING_RED_RATIO,
         "runs_per_point": runs,
-        "ops": results,
+        "entries": entries,
         "red": red,
+        "errors": errors,
     }
-    try:
-        with open(os.path.join(repo_dir, "BENCH_scaling.json"), "w") as fh:
-            json.dump(sidecar, fh, indent=1)
-    except OSError as exc:
-        print(f"WARN: could not write BENCH_scaling.json: {exc}", file=sys.stderr)
 
 
 def _load_prev_bench(repo_dir: str, sf: float | None) -> tuple[str, dict] | None:
-    """Previous run's per-query timings at the same sf.
-
-    Preferred source: the BENCH_queries.json sidecar from the LAST run
-    (read before this run overwrites it — in the driver's cadence that
-    is the previous round's record). Fallback: the newest legacy
-    BENCH_r{N}.json that still inlined a "queries" map (r2/r3)."""
+    """The previous record's per-query timings at the same sf: the
+    BENCH_queries.json sidecar, read before this run overwrites it.
+    Without one there is nothing to compare against."""
     sidecar = os.path.join(repo_dir, "BENCH_queries.json")
     try:
         with open(sidecar) as fh:
             data = json.load(fh)
-        if isinstance(data.get("queries"), dict) and data.get("sf") == sf:
-            return "BENCH_queries.json(prev-run)", data
     except (OSError, json.JSONDecodeError):
-        pass
-    best, best_n = None, -1
-    for p in glob.glob(os.path.join(repo_dir, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", p)
-        if not m or int(m.group(1)) <= best_n:
-            continue
-        try:
-            with open(p) as fh:
-                data = json.load(fh)
-        except (OSError, json.JSONDecodeError):
-            continue
-        # the driver wraps the bench line under "parsed"; accept both
-        if isinstance(data.get("parsed"), dict):
-            data = data["parsed"]
-        if isinstance(data.get("queries"), dict) and data.get("sf") == sf:
-            best, best_n = (os.path.basename(p), data), int(m.group(1))
-    return best
+        return None
+    if isinstance(data.get("queries"), dict) and data.get("sf") == sf:
+        return "BENCH_queries.json(prev-run)", data
+    return None
 
 
 def _plan_sha(df) -> str:
@@ -552,39 +216,33 @@ def _normalize_plan_text(text: str) -> str:
     # streaming/ndb entries republish inputs under per-process scratch
     # dirs (/tmp/dbitool_scratch_<q>_<sf>/pid<PID>/tid<TID>/...); the
     # path lands in the scan node, so without this the fingerprint
-    # changes every process and vs_prev flags a phantom plan change
-    # (observed r8: ndb_upsert_replay). Anchored to the full scratch
-    # layout so an unrelated 'pid<N>' substring in a predicate literal
-    # or path can never be collapsed.
+    # changes every process and vs_prev flags a phantom plan change.
+    # Anchored to the full scratch layout so an unrelated 'pid<N>'
+    # substring in a predicate literal or path can never be collapsed.
     text = re.sub(r"(dbitool_scratch_[\w.]+/)pid\d+/tid\d+", r"\1pid/tid", text)
     # format-chain entries stage files under tempfile.mkdtemp dirs
     # (/tmp/dbitool_fmt_chain_nation_<8 random chars>/...); the random
-    # suffix lands in the scan's Location and flapped the sha EVERY run
-    # (observed r9: format_chain_nation/orders differed across all four
-    # recorded runs while the plan itself was identical). Anchored to
-    # the /tmp/dbitool_ prefix + component boundary so nothing else
-    # can be collapsed.
+    # suffix lands in the scan's Location and would move the sha every
+    # run while the plan itself is identical. Anchored to the
+    # /tmp/dbitool_ prefix + component boundary so nothing else can be
+    # collapsed.
     text = re.sub(
         r"(file:/tmp/dbitool_[\w.]*)_[0-9a-z_]{8}(?=[/\]])", r"\1_TMP", text
     )
     # higher-order-function lambda variables carry a SESSION-GLOBAL
     # counter in the NAME itself (lambda x_1# fresh vs lambda x_195#
     # after other queries compiled lambdas) — the #id strip above
-    # misses it, so every array/lambda entry's sha was a function of
-    # how many lambda-bearing plans ran earlier in the process, i.e.
-    # of REGISTRY ORDER (observed r10: the rotation re-shuffled the
-    # fingerprint pass and 16 documents/embeddings entries flagged
-    # phantom plan changes; standalone text was byte-identical except
-    # these counters). Anchored to the 'lambda ' keyword so a real
+    # misses it, so every array/lambda entry's sha would be a function
+    # of how many lambda-bearing plans ran earlier in the process, i.e.
+    # of registry order. Anchored to the 'lambda ' keyword so a real
     # column named like x_12 can never be collapsed.
     text = re.sub(r"\b(lambda [A-Za-z]\w*?)_\d+#", r"\1_#", text)
     # driver-built local DataFrames (createDataFrame of bounded rows —
     # kmeans' k·dim centroid table, semdedup's threshold row) scan as
     # 'Scan ExistingRDD' whose argument embeds the SESSION-GLOBAL RDD
     # id (MapPartitionsRDD[62] fresh vs [638] mid-bench) — another
-    # registry-order leak, observed r11 when the rotation moved
-    # kmeans/semdedup's fingerprint position and only their shas moved.
-    # Anchored to the RDD[...] form so data literals can't collapse.
+    # registry-order leak. Anchored to the RDD[...] form so data
+    # literals can't collapse.
     text = re.sub(r"\b(\w*RDD)\[\d+\]", r"\1[#]", text)
     return text
 
@@ -651,7 +309,7 @@ def _foreign_java_pids() -> list[int]:
     process's own ancestors (a java-based CI wrapper is not a
     competitor). A concurrent Spark JVM (another bench, a pytest run)
     inflates medians 15-30% and creates phantom regression flags
-    (three r8 re-runs: 75s idle vs 87-100s loaded, plans unchanged).
+    (measured: 75 s idle vs 87-100 s loaded, plans unchanged).
     Checked BEFORE this run starts its own JVM, so any non-ancestor
     hit is genuinely foreign — including a leaked JVM from a crashed
     prior run, which SHOULD block recording until it is killed (it
@@ -673,22 +331,25 @@ def _foreign_java_pids() -> list[int]:
     return pids
 
 
+def _write_sidecar(repo_dir: str, name: str, payload: dict) -> None:
+    try:
+        with open(os.path.join(repo_dir, name), "w") as fh:
+            json.dump(payload, fh, indent=1)
+    except OSError as exc:
+        print(f"WARN: could not write {name}: {exc}", file=sys.stderr)
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-    # Exclusivity guard (r8 verdict): the committed sidecars are the
-    # round-over-round perf record, and a loaded box corrupts that
-    # record silently. Sampled BEFORE our own JVM exists; a run that
-    # fails the guard still prints the stdout headline (driver
-    # contract) but REFUSES to overwrite the sidecars, so the repo's
-    # record stays exclusive-run-only.
+    # Exclusivity guard: the committed sidecars are the perf record,
+    # and a loaded box corrupts that record silently. Sampled BEFORE
+    # our own JVM exists; a run that fails the guard still prints the
+    # stdout headline but does not overwrite the record. The 1-min
+    # load alone passes a host still cooling off from recent heavy
+    # work, so the 15-min load is gated too.
     max_load = float(os.environ.get("SPARK_GRAFT_BENCH_MAX_LOAD", "2.0"))
-    # r12 verdict item 2: the 1-min average alone passed runs whose
-    # host was still cooling off from recent heavy work (the 82.65 ->
-    # 99.49s same-plan drift bracket); the 15-min average is the
-    # cheap cold-state witness, so the gate keys on BOTH.
     max_load_15 = float(
         os.environ.get("SPARK_GRAFT_BENCH_MAX_LOAD_15", str(max_load))
     )
@@ -710,6 +371,7 @@ def main() -> int:
             file=sys.stderr,
         )
 
+    from dbitool_spark.ops.cache import release_persists
     from dbitool_spark.plans import registry
     from dbitool_spark.session import get_session
 
@@ -728,109 +390,61 @@ def main() -> int:
     except OSError:
         load_start = None
 
-    # env override exists for the pytest harness (tests exercise the
-    # sidecar/re-measure machinery against a scratch dir, never the
-    # committed record)
+    # the pytest harness points this at a scratch dir so tests never
+    # touch the committed record
     repo_dir = os.environ.get("SPARK_GRAFT_BENCH_REPO_DIR") or os.path.dirname(
         os.path.abspath(__file__)
     )
     # read the PREVIOUS run's sidecar before this run overwrites it
     prev = _load_prev_bench(repo_dir, sf)
 
+    fns = registry.queries()
     lazy_variants = _lazy_plan_variants()
     timings: dict[str, float] = {}
+    counters: dict[str, dict] = {}
     plan_shas: dict[str, str] = {}
     # Fingerprint pass FIRST, from a clean cache, separate from the
     # timing loop: mid-run the optimized plan can pick up cache state
-    # left by whichever queries happened to run earlier (InMemoryRelation
-    # vs parquet scan), so a fingerprint taken there is a function of
-    # REGISTRY ORDER, not of the query — adding one entry re-shuffles
-    # the order and vs_prev flags phantom plan changes (observed r8:
-    # ann_recall_planted, sha stable across fresh processes but
-    # different mid-bench). Execution count is unchanged: this pass is
-    # the same one plan_fn call per query the old inline code made.
-    for name, fn in registry.queries().items():
+    # left by whichever queries ran earlier (InMemoryRelation vs
+    # parquet scan), so a fingerprint taken there would be a function
+    # of registry order, not of the query.
+    for name, fn in fns.items():
         try:
             spark.catalog.clearCache()
             lazy_df = lazy_variants.get(name, fn)(spark, sf_dir)
             plan_shas[name] = _plan_sha(lazy_df)
-            # lazy variants carry their internal persists as a release
-            # handle (ops/cache.attach_persists) — release them here so
-            # even without the clearCache above nothing would leak
-            from dbitool_spark.ops.cache import release_persists
-
             release_persists(lazy_df)
         except Exception:
             pass  # fingerprint is advisory; never fail the bench on it
-        # ~13 non-lazy entries execute eagerly here (materialize_release
-        # localCheckpoints); their executor blocks free via
-        # ContextCleaner only after the Python DataFrame is collected —
-        # without this the timing loop's first queries run under the
-        # accumulated storage of every checkpointed fingerprint result
+        # non-lazy checkpointing entries execute eagerly here; their
+        # executor blocks free only once the DataFrame is collected
         gc.collect()
     spark.catalog.clearCache()
-    for name, fn in registry.queries().items():
-        # warm-up run: JIT, parquet footer cache, AQE stats
-        fn(spark, sf_dir).count()
-        samples = []
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).count()
-            samples.append(time.perf_counter() - t0)
-        timings[name] = round(statistics.median(samples), 4)
-        # checkpoint-backed results (materialize_release) free their
-        # executor blocks via ContextCleaner only after the Python-side
-        # DataFrame is collected; do it promptly so later queries in
-        # the run aren't measured under earlier queries' storage.
-        gc.collect()
+    for name, fn in fns.items():
+        timings[name], counters[name] = _measure(fn, spark, sf_dir, runs)
 
-    # Noise re-measure (r10 verdict, committed policy): an entry whose
-    # ratio vs the previous exclusive record exceeds REGRESSION_RATIO
-    # with an UNCHANGED plan fingerprint is, on this box, almost
-    # always scheduler noise (r9/r10 precedent: sketch_accuracy_gates
-    # stamped at a 4.3x spike bench had itself diagnosed as noise,
-    # re-measured standalone at baseline). Re-measure each such entry
-    # standalone — fresh warm-up + the same sample count, keep the
-    # better median — BEFORE stamping the sidecar, so the committed
-    # record never carries a self-diagnosed spike. A plan CHANGE is
-    # never re-measured away: that is a real regression to record.
-    # Both measurements land in the sidecar under noise_remeasured for
-    # the audit trail.
+    # Noise re-measure: an entry over REGRESSION_RATIO against the
+    # previous record with a VERIFIED-unchanged plan is almost always
+    # scheduler noise on this box. Re-measure it standalone and stamp
+    # the better median, so the record never carries a spike the
+    # harness has itself diagnosed as noise. A plan change is never
+    # re-measured away; an unverifiable fingerprint is recorded under
+    # noise_unverified with its first timing.
     remeasured: dict[str, list[float]] = {}
     noise_unverified: dict[str, list[str | None]] = {}
     if exclusive and prev is not None:
         prev_queries = prev[1].get("queries", {})
         prev_shas_pre = prev[1].get("plan_shas", {})
-        fns = registry.queries()
         for name in sorted(timings):
             pt = prev_queries.get(name)
             if not pt or timings[name] / pt <= REGRESSION_RATIO:
                 continue
-            if not _fingerprint_verified_unchanged(
-                prev_shas_pre.get(name), plan_shas.get(name)
-            ):
-                # ADVICE r11: only a VERIFIED-unchanged plan (both shas
-                # present and equal) earns a standalone re-measure. A
-                # changed plan is a real regression to record; a
-                # missing/failed sha is unverifiable — record it
-                # separately so the audit trail shows the spike was
-                # neither confirmed nor laundered.
-                if not _fingerprint_changed(
-                    prev_shas_pre.get(name), plan_shas.get(name)
-                ):
-                    noise_unverified[name] = [
-                        prev_shas_pre.get(name), plan_shas.get(name)
-                    ]
+            pair = [prev_shas_pre.get(name), plan_shas.get(name)]
+            if not _fingerprint_verified_unchanged(*pair):
+                if not _fingerprint_changed(*pair):
+                    noise_unverified[name] = pair
                 continue
-            fn = fns[name]
-            fn(spark, sf_dir).count()  # fresh warm-up
-            re_samples = []
-            for _ in range(runs):
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).count()
-                re_samples.append(time.perf_counter() - t0)
-            gc.collect()
-            re_med = round(statistics.median(re_samples), 4)
+            re_med, _ = _measure(fns[name], spark, sf_dir, runs)
             remeasured[name] = [timings[name], re_med]
             print(
                 f"NOISE RE-MEASURE {name}: {timings[name]}s -> {re_med}s "
@@ -844,19 +458,16 @@ def main() -> int:
     except OSError:
         load_end = None
 
-    # headline-only stdout: r01/r04/r05 proved that inlining the
-    # per-query map truncates the driver's tail window ("parsed": null)
     result = {
         "metric": "total_median_query_sec",
         "value": round(sum(timings.values()), 4),
         "unit": "sec",
         "n_queries": len(timings),
         "sf": sf,
-        # the judge reads this against the sidecar record: a False here
-        # means the number above was taken on a loaded box and the
-        # committed sidecars deliberately kept the last exclusive run.
-        # Key matches the sidecar's pre-JVM sample (loadavg_pre_session)
-        # — the sidecar's loadavg_start is a DIFFERENT, post-JVM sample.
+        # False means the number above was taken on a loaded box and the
+        # committed sidecars kept the last exclusive run. Same pre-JVM
+        # sample as the sidecar's loadavg_pre_session (its loadavg_start
+        # is a later, post-JVM sample).
         "exclusive": exclusive,
         "loadavg_pre_session": pre_load,
     }
@@ -873,42 +484,20 @@ def main() -> int:
         "loadavg_end": load_end,
         "queries": timings,
         "plan_shas": plan_shas,
-        # {name: [first_median, standalone_re_median]} for entries that
-        # crossed REGRESSION_RATIO with an unchanged plan; the stamped
-        # value above is the min of the two (see the noise re-measure
-        # block in main)
+        # the traced warm-up's work per entry (see _measure)
+        "counters": counters,
+        # {name: [first_median, standalone_re_median]}; the stamped
+        # value in "queries" is the min of the two
         "noise_remeasured": remeasured,
         # {name: [prev_sha, cur_sha]} for spikes whose fingerprints
-        # could NOT be verified unchanged (a sha missing/failed): the
-        # first timing stands un-re-measured — neither confirmed as a
-        # regression nor laundered (ADVICE r11)
+        # could not be verified unchanged; the first timing stands
         "noise_unverified": noise_unverified,
     }
     if exclusive:
-        try:
-            with open(os.path.join(repo_dir, "BENCH_queries.json"), "w") as fh:
-                json.dump(queries_sidecar, fh, indent=1)
-        except OSError as exc:
-            print(f"WARN: could not write BENCH_queries.json: {exc}", file=sys.stderr)
+        _write_sidecar(repo_dir, "BENCH_queries.json", queries_sidecar)
     else:
-        print(
-            "WARN: BENCH_queries.json NOT overwritten (loaded run)",
-            file=sys.stderr,
-        )
-    # r17 (r16 verdict item 5, additions-only): a clearly-marked
-    # NON-AUTHORITATIVE per-query sidecar stamped on EVERY run, loaded
-    # or idle, so a busy host still leaves per-query ground truth for
-    # the driver's PERF diff instead of two rounds of empty per_query
-    # maps. Contract (one line): BENCH_last_run.json = the exact
-    # queries_sidecar payload of THIS run, with "exclusive" inside
-    # telling consumers whether it is record-grade; the committed
-    # exclusive record (BENCH_queries.json / BENCH_vs_prev.json) keeps
-    # its refusal semantics byte-identically — nothing above changed.
-    try:
-        with open(os.path.join(repo_dir, "BENCH_last_run.json"), "w") as fh:
-            json.dump(queries_sidecar, fh, indent=1)
-    except OSError as exc:
-        print(f"WARN: could not write BENCH_last_run.json: {exc}", file=sys.stderr)
+        print("WARN: BENCH_queries.json NOT overwritten (loaded run)", file=sys.stderr)
+    _write_sidecar(repo_dir, "BENCH_last_run.json", queries_sidecar)
 
     if prev is not None:
         prev_name, prev_data = prev
@@ -926,8 +515,6 @@ def main() -> int:
             (n for n, r in ratios.items() if r > REGRESSION_RATIO),
             key=lambda n: -ratios[n],
         )
-        # flag only plan-fingerprint changes or >ABS_DELTA_SEC absolute
-        # slowdowns; ratio-only blips on sub-second entries are noise
         regressions = [
             n for n in over_ratio
             if _plan_changed(n)
@@ -938,30 +525,18 @@ def main() -> int:
             "loadavg_start": load_start,
             "loadavg_end": load_end,
             "abs_delta_gate_sec": ABS_DELTA_SEC,
+            # ratios already reflect re-measured values
             "ratios": ratios,
             "regressions": regressions,
             "regressions_with_plan_change": [
                 n for n in regressions if _plan_changed(n)
             ],
             "noise_suppressed": [n for n in over_ratio if n not in regressions],
-            # entries that spiked >REGRESSION_RATIO with an unchanged
-            # plan and were re-measured standalone before stamping;
-            # ratios above already reflect the re-measured values
             "noise_remeasured": remeasured,
-            # spikes whose fingerprints could not be verified unchanged
-            # (sha missing on either side) — first timing stands, no
-            # re-measure (ADVICE r11)
             "noise_unverified": noise_unverified,
         }
         if exclusive:
-            try:
-                with open(os.path.join(repo_dir, "BENCH_vs_prev.json"), "w") as fh:
-                    json.dump(vs_prev, fh, indent=1)
-            except OSError as exc:
-                print(
-                    f"WARN: could not write BENCH_vs_prev.json: {exc}",
-                    file=sys.stderr,
-                )
+            _write_sidecar(repo_dir, "BENCH_vs_prev.json", vs_prev)
         else:
             print(
                 "WARN: BENCH_vs_prev.json NOT overwritten (loaded run)",
@@ -974,22 +549,25 @@ def main() -> int:
                 file=sys.stderr,
             )
 
-    # The gate must never break the single-JSON-line stdout contract
-    # (the exact failure mode this file's docstring documents): any
-    # gate error — missing sf dirs on a foreign sandbox, a Spark
-    # hiccup — degrades to a stderr warning, headline still prints.
-    if os.environ.get("SPARK_GRAFT_BENCH_SCALING", "1") != "0":
-        if exclusive:
-            try:
-                _scaling_gate(spark, repo_dir)
-            except Exception as exc:
-                print(f"WARN: scaling gate skipped: {exc}", file=sys.stderr)
-        else:
-            print(
-                "WARN: scaling gate skipped (loaded run; BENCH_scaling.json "
-                "keeps the last exclusive record)",
-                file=sys.stderr,
-            )
+    small_dir = (
+        os.path.join(os.path.dirname(sf_dir.rstrip("/")), f"sf{sf / 10:g}")
+        if sf else None
+    )
+    if not exclusive:
+        print(
+            "WARN: scaling gate skipped (loaded run; BENCH_scaling.json "
+            "keeps the last exclusive record)",
+            file=sys.stderr,
+        )
+    elif small_dir is None or not os.path.isdir(small_dir):
+        print(
+            f"WARN: scaling gate skipped: no data dir one SF decade below {sf_dir}",
+            file=sys.stderr,
+        )
+    else:
+        big = {n: (timings[n], counters[n]) for n in fns}
+        scaling = _scaling_gate(spark, fns, small_dir, sf_dir, big, runs)
+        _write_sidecar(repo_dir, "BENCH_scaling.json", scaling)
 
     print(json.dumps(result))
     return 0

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from dbitool_spark.ops import dedup
 from dbitool_spark.ops.temporal import asof_join, range_join
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_ORACLE, SF_SMOKE
 
 
 def test_range_join_exact_beyond_double_precision(spark):
@@ -276,37 +276,36 @@ def test_bench_plan_normalization_strips_session_counters():
 
 
 def test_bench_thunk_imports_resolve():
-    """bench._scaling_gate reports any exception as "scaling gate
-    skipped", so a thunk importing a deleted name would silently turn
-    the whole gate off. Every `from X import Y` inside the thunk
-    factories, and every attribute they read off an imported module,
-    must resolve (no Spark needed: nothing is called)."""
+    """bench's fingerprint pass treats any exception as "no sha", so a
+    lazy twin importing a deleted name would silently lose its
+    fingerprint. Every `from X import Y` inside _lazy_plan_variants,
+    and every attribute it reads off an imported module, must resolve
+    (no Spark needed: nothing is called)."""
     import ast
     import importlib
     import inspect
 
     import bench
 
-    for factory in (bench._scaling_ops, bench._lazy_plan_variants):
-        tree = ast.parse(inspect.getsource(factory))
-        modules: dict[str, object] = {}
-        for node in ast.walk(tree):
-            if isinstance(node, ast.ImportFrom):
-                mod = importlib.import_module(node.module)
-                for a in node.names:
-                    if not hasattr(mod, a.name):  # a submodule import
-                        importlib.import_module(f"{node.module}.{a.name}")
-                    modules[a.asname or a.name] = getattr(mod, a.name)
-        refs = [
-            (node.value.id, node.attr)
-            for node in ast.walk(tree)
-            if isinstance(node, ast.Attribute)
-            and isinstance(node.value, ast.Name)
-            and inspect.ismodule(modules.get(node.value.id))
-        ]
-        assert modules and refs, factory.__name__
-        missing = [f"{m}.{a}" for m, a in refs if not hasattr(modules[m], a)]
-        assert missing == [], (factory.__name__, missing)
+    tree = ast.parse(inspect.getsource(bench._lazy_plan_variants))
+    modules: dict[str, object] = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom):
+            mod = importlib.import_module(node.module)
+            for a in node.names:
+                if not hasattr(mod, a.name):  # a submodule import
+                    importlib.import_module(f"{node.module}.{a.name}")
+                modules[a.asname or a.name] = getattr(mod, a.name)
+    refs = [
+        (node.value.id, node.attr)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Attribute)
+        and isinstance(node.value, ast.Name)
+        and inspect.ismodule(modules.get(node.value.id))
+    ]
+    assert modules and refs
+    missing = [f"{m}.{a}" for m, a in refs if not hasattr(modules[m], a)]
+    assert missing == []
 
 
 def test_bench_noise_remeasure_stamps_better_median(spark, monkeypatch, tmp_path):
@@ -342,7 +341,6 @@ def test_bench_noise_remeasure_stamps_better_median(spark, monkeypatch, tmp_path
     monkeypatch.setenv("SPARK_GRAFT_BENCH_REPO_DIR", str(tmp_path))
     monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
     monkeypatch.setenv("SPARK_GRAFT_BENCH_RUNS", "1")
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_SCALING", "0")
     monkeypatch.setenv("SPARK_GRAFT_BENCH_MAX_LOAD", "9999")
 
     # fabricated prev record: qa and qc absurdly fast (any real run
@@ -359,6 +357,8 @@ def test_bench_noise_remeasure_stamps_better_median(spark, monkeypatch, tmp_path
     (tmp_path / "BENCH_queries.json").write_text(json.dumps(prev))
 
     assert bench.main() == 0
+    # sf0.001 has no data dir one SF decade below: the gate is skipped
+    assert not (tmp_path / "BENCH_scaling.json").exists()
 
     data = json.loads((tmp_path / "BENCH_queries.json").read_text())
     assert "qa" in data["noise_remeasured"], data
@@ -426,7 +426,6 @@ def test_bench_last_run_sidecar_stamped_even_on_loaded_run(
     monkeypatch.setenv("SPARK_GRAFT_BENCH_REPO_DIR", str(tmp_path))
     monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
     monkeypatch.setenv("SPARK_GRAFT_BENCH_RUNS", "1")
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_SCALING", "0")
     monkeypatch.setenv("SPARK_GRAFT_BENCH_MAX_LOAD", "9999")
 
     # --- loaded run: a foreign JVM at start fails the exclusivity gate
@@ -445,3 +444,105 @@ def test_bench_last_run_sidecar_stamped_even_on_loaded_run(
     last2 = json.loads((tmp_path / "BENCH_last_run.json").read_text())
     assert record["exclusive"] is True
     assert last2 == record  # same payload object, stamped twice
+    # neither run writes the scaling gate: loaded, then no sf0.0001 dir
+    assert not (tmp_path / "BENCH_scaling.json").exists()
+
+
+def test_bench_prev_record_is_the_sidecar_only(tmp_path):
+    """vs_prev diffs against the previous run's BENCH_queries.json and
+    nothing else: a legacy BENCH_r<NN>.json carrying a "queries" map
+    at the same sf must not stand in for a missing sidecar."""
+    import bench
+
+    legacy = {"sf": 0.1, "queries": {"qa": 1.0}}
+    (tmp_path / "BENCH_r03.json").write_text(json.dumps({"parsed": legacy}))
+    (tmp_path / "BENCH_r02.json").write_text(json.dumps(legacy))
+    assert bench._load_prev_bench(str(tmp_path), 0.1) is None
+
+    (tmp_path / "BENCH_queries.json").write_text(json.dumps(legacy))
+    assert bench._load_prev_bench(str(tmp_path), 0.1) == (
+        "BENCH_queries.json(prev-run)", legacy
+    )
+    assert bench._load_prev_bench(str(tmp_path), 0.01) is None
+
+
+def test_bench_measure_counters_repeat(spark):
+    """The warm-up counters bench stamps per entry are deterministic:
+    one registry entry's jobs and stages are equal across two
+    _measure calls, and the second (warm) call reads the same rows."""
+    import bench
+    from dbitool_spark.plans import registry
+
+    fn = registry.queries()["q3_shipping_priority"]
+    _, first = bench._measure(fn, spark, SF_SMOKE, 1)
+    _, second = bench._measure(fn, spark, SF_SMOKE, 1)
+    assert first["jobs"] > 0 and first["stages"] > 0
+    assert first["rows"] > 0 and first["shuffle_bytes"] > 0
+    assert (first["jobs"], first["stages"], first["rows"]) == (
+        second["jobs"], second["stages"], second["rows"]
+    )
+
+
+def test_bench_scaling_gate_reds_all_pairs_growth_and_errors(
+    spark, monkeypatch, tmp_path, capsys
+):
+    """The scaling gate runs over the registry at the sibling SF one
+    decade down (sf0.01 -> sf0.001). A groupBy stays green (shuffle
+    tracks rows); a self-join on a 25-value key followed by a pair
+    groupBy grows with rows squared and goes red on shuffle bytes; an
+    entry that raises only at the smaller SF goes red with its error
+    while the others are still gated. stdout stays one JSON line."""
+    import bench
+    from dbitool_spark.plans import registry as reg
+
+    def groupby(s, d):
+        li = s.read.parquet(os.path.join(d, "lineitem.parquet"))
+        return li.groupBy("l_orderkey").agg(F.sum("l_quantity"))
+
+    def pairs(s, d):
+        cu = s.read.parquet(os.path.join(d, "customer.parquet"))
+        cu = cu.select("c_custkey", "c_nationkey")
+        a = cu.select(F.col("c_custkey").alias("a"), "c_nationkey")
+        b = cu.select(F.col("c_custkey").alias("b"), "c_nationkey")
+        return a.join(b, "c_nationkey").groupBy("a", "b").count()
+
+    def fails_small(s, d):
+        if d.rstrip("/").endswith("sf0.001"):
+            raise ValueError("planted failure at the small SF")
+        return s.read.parquet(os.path.join(d, "region.parquet"))
+
+    monkeypatch.setattr(
+        reg, "queries",
+        lambda: {"groupby": groupby, "pairs": pairs, "fails_small": fails_small},
+    )
+    monkeypatch.setattr(bench, "_foreign_java_pids", lambda: [])
+    monkeypatch.setattr(bench, "_lazy_plan_variants", lambda: {})
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_REPO_DIR", str(tmp_path))
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", SF_ORACLE)
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_RUNS", "1")
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_MAX_LOAD", "9999")
+
+    capsys.readouterr()
+    assert bench.main() == 0
+    out = capsys.readouterr().out.strip().splitlines()
+    assert len(out) == 1 and json.loads(out[0])["n_queries"] == 3
+
+    gate = json.loads((tmp_path / "BENCH_scaling.json").read_text())
+    assert gate["sfs"] == ["sf0.001", "sf0.01"]
+    assert sorted(gate["red"]) == ["fails_small", "pairs"]
+    assert "planted failure" in gate["errors"]["fails_small"]
+    assert set(gate["entries"]) == {"groupby", "pairs"}
+    green = gate["entries"]["groupby"]
+    assert green["shuffle_ratio"] <= bench.SCALING_RED_RATIO
+    assert green["wall_ratio"] <= bench.SCALING_RED_RATIO
+    assert gate["entries"]["pairs"]["shuffle_ratio"] > bench.SCALING_RED_RATIO
+    for point in ("sf0.001", "sf0.01"):
+        assert set(green[point]) == {
+            "median_s", "rows", "jobs", "stages", "tasks", "shuffle_bytes"
+        }
+    # the gate's big side is the timing loop's measurement, stamped
+    # into the queries sidecar as the entry's counters
+    record = json.loads((tmp_path / "BENCH_queries.json").read_text())
+    assert record["counters"]["pairs"] == {
+        k: v for k, v in gate["entries"]["pairs"]["sf0.01"].items() if k != "median_s"
+    }

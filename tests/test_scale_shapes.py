@@ -11,8 +11,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from dbitool_spark import catalog
-from dbitool_spark.ops import dedup, scale
-from tests.conftest import SF_SMOKE
+from dbitool_spark.ops import dedup, scale, text
+from tests.conftest import SF_ORACLE, SF_SMOKE
 
 
 def _plan(df) -> str:
@@ -837,3 +837,83 @@ def test_global_pack_avoids_single_partition_data_window(spark):
     plan = _plan(df)
     assert "rangepartitioning" in plan.lower()
     assert "__pid" in plan  # the data-side window is partition-local
+
+
+def test_scaling_gate_on_ops_no_registry_entry_covers(spark):
+    """The scaling gate at sf0.01 -> sf0.1 on three ops or code paths
+    no registry entry reaches, with the inputs the old hand-written
+    gate used: edit_distance_pairs on each document's first-4-word
+    title plus a copy with character 7 deleted; with_running_total (a
+    two-phase prefix sum whose only global step is one row per
+    partition); and kmeans_distributed at iters=5, whose 'auto' mode
+    takes the cluster-side centroid-update path (the registry's kmeans
+    leg runs iters=2, the driver path). (At sf0.001 and sf0.01
+    `documents` has the same 500 rows, so the pair starts at sf0.01.)
+
+    Both sides are timed the same way: one traced run, after an untimed
+    run of the op at sf0.01 has warmed the JIT and the generated-code
+    cache. (The bench's warm-up plus timed run per side would put
+    edit_distance_join's sf0.1 side alone near 30 s.)
+
+    Every op must be green on both ratios, except the known defect
+    below, which is reported as an expected failure whenever it is red:
+    on this 31-word corpus edit_distance_pairs' prefix-filter
+    candidates grow ~109x for 10x rows (59,228 -> 6,443,006; the
+    trigram vocabulary saturates at 642 -> 916), verified inside the
+    partitions, so its shuffle ratio stays ~8.6x while its wall ratio
+    straddles the 15x line (6-16x depending on how warm the JVM is).
+    Its shuffle ratio and row counts are still asserted."""
+    import bench
+    from dbitool_spark.ops import similarity
+
+    def edit_distance_join(s, d):
+        docs = catalog.load(s, d, "documents")
+        titles = docs.select(
+            F.col("doc_id").alias("id"),
+            F.concat_ws(
+                " ", F.slice(F.split(F.lower(F.trim("text")), r"\s+"), 1, 4)
+            ).alias("name"),
+        )
+        planted = titles.select(
+            (F.col("id") + 1_000_000).alias("id"),
+            F.concat(
+                F.col("name").substr(F.lit(1), F.lit(6)),
+                F.col("name").substr(F.lit(8), F.length("name")),
+            ).alias("name"),
+        )
+        return dedup.edit_distance_pairs(
+            titles.unionByName(planted), "id", "name", max_dist=2, q=3
+        )
+
+    def global_pack(s, d):
+        docs = catalog.load(s, d, "documents")
+        toks = docs.select("doc_id", text.token_count(F.col("text")).alias("n_tok"))
+        return scale.with_running_total(
+            toks, ["doc_id"], "n_tok", total_col="before", inclusive=False
+        )
+
+    def kmeans_cluster_updates(s, d):
+        emb = catalog.load(s, d, "embeddings")
+        return similarity.kmeans_distributed(emb, "vec_id", "embedding", k=8, iters=5)
+
+    fns = {
+        "edit_distance_join": edit_distance_join,
+        "global_pack": global_pack,
+        "kmeans_cluster_updates": kmeans_cluster_updates,
+    }
+    big_dir = SF_ORACLE.replace("sf0.01", "sf0.1")
+    big = {}
+    for name, fn in fns.items():
+        fn(spark, SF_ORACLE).count()  # warms both timed sides alike
+        big[name] = bench._measure(fn, spark, big_dir, 0)
+    gate = bench._scaling_gate(spark, fns, SF_ORACLE, big_dir, big, 0)
+    assert gate["errors"] == {}, gate
+    for name, entry in gate["entries"].items():
+        assert entry["shuffle_ratio"] <= bench.SCALING_RED_RATIO, gate
+        assert entry["sf0.1"]["rows"] >= entry["sf0.01"]["rows"] > 0, gate
+    assert set(gate["red"]) <= {"edit_distance_join"}, gate
+    if gate["red"]:
+        pytest.xfail(
+            "edit_distance_pairs' candidates grow ~109x for 10x rows: wall ratio "
+            f"{gate['entries']['edit_distance_join']['wall_ratio']}x"
+        )
