@@ -39,17 +39,18 @@ fails, so of two writers racing the same generation exactly one
 commits and the loser raises NdbWriteConflict (re-read and retry) —
 no torn state, no lost update, even with the advisory writer lock
 disabled. The committed-generation authority is the in-dir marker
-(max committed v{gen}); the legacy `current` pointer file is kept as
-a compatibility cache and the fallback for pre-protocol tables. A
-crashed writer leaves only an unpublished staging dir (GC'd once its
-pid is dead) or a markerless `v{gen}` from the pre-protocol format
-(cleared and retried on the next commit). Honest scope: atomic
-rename is a local/POSIX-filesystem guarantee — on S3-class object
-stores the same protocol needs a log/CAS service, exactly as
-Delta/Iceberg require there. That swap is a named SEAM since r15:
-CommitBackend (committed_gens + rename_cas) with the shipped
-PosixCommitBackend; implement those two calls against a conditional-
-put log service and the rest of the engine carries over unchanged.
+(max committed v{gen}) or the backend's commit log; nothing else
+names the head. A crashed writer leaves only an unpublished staging
+dir, GC'd once its pid is dead. Every committed version has one
+shape: `v{gen}/` holding only `__ndb_bucket=<i>/` subdirectories,
+the `_committed` marker and (when the key type serializes)
+`_manifest.json`. Honest scope: atomic rename is a local/POSIX-
+filesystem guarantee — on S3-class object stores the same protocol
+needs a log/CAS service, exactly as Delta/Iceberg require there.
+That swap is a named SEAM: CommitBackend (committed_gens +
+rename_cas) with the shipped PosixCommitBackend; implement those two
+calls against a conditional-put log service and the rest of the
+engine carries over unchanged.
 SqliteCommitBackend is the shipped REFERENCE log backend — commit
 authority in an ACID sqlite table, the insert and the data rename
 bracketed by one transaction — proving the seam with a real
@@ -70,7 +71,6 @@ from pyspark.sql.window import Window
 
 _GEN = "__ndb_gen"
 _BUCKET = "__ndb_bucket"
-_POINTER = "current"
 _META = "meta.json"
 _LOCK = ".writer_lock"
 # in-dir commit marker: a v{gen} dir is a COMMITTED snapshot iff it
@@ -86,8 +86,9 @@ _COMMITTED = "_committed"
 # their entry by relpath (hardlinks keep relpaths stable), so pruned
 # upserts and compact selection stop re-probing stored files on
 # every write — at object-store scale that turns per-file GETs into
-# one small JSON read. Optional everywhere: pre-manifest versions
-# (and non-JSON-serializable key types) fall back to footer probes.
+# one small JSON read. Optional everywhere: a version without one
+# (non-JSON-serializable key types, e.g. dates) falls back to footer
+# probes.
 _MANIFEST = "_manifest.json"
 
 
@@ -104,8 +105,8 @@ _ALIVE_UNREADABLE = -1
 # stamp sentinel: the WRITER could not read its own start ticks
 # (non-Linux, masked procfs) so PID-reuse detection is impossible for
 # this lock; checkers must ASSUME the owner is alive rather than
-# classify it PID-recycled and silently steal (ADVICE r12: a 0 stamp
-# made every lock stealable on such platforms — guard became a no-op)
+# classify it PID-recycled and silently steal (a 0 stamp would make
+# every lock stealable on such platforms — the guard a no-op)
 _NO_SELF_IDENTITY = -2
 
 
@@ -166,20 +167,14 @@ class CommitBackend:
       dir for inspection on a raise and cleans it on a conflict.
     """
 
-    #: True only for filesystem backends, where a lost CAS can mean
-    #: pre-protocol crash debris (a markerless v{gen} dir) that the
-    #: caller may clear via atomic-rename graves. Log-service
-    #: backends have no debris concept.
-    handles_fs_debris = False
-
     #: Written as the _committed marker's CONTENT by the table layer,
     #: so a later reader can tell WHICH commit protocol published a
     #: dir: under POSIX the marker's presence IS the commit record
     #: ("posix"), under a log backend it is advisory debris metadata
-    #: ("log"). A log backend uses this to distinguish a genuinely
-    #: committed pre-migration POSIX generation (refuse to destroy)
-    #: from its own rename-then-died crash debris (safe to clear) —
-    #: review finding r15. Legacy empty markers read as "posix".
+    #: ("log:<path>"). A log backend uses this to distinguish a
+    #: generation genuinely committed under another authority (refuse
+    #: to destroy) from its own rename-then-died crash debris (safe to
+    #: clear).
     marker_tag = "posix"
 
     def committed_gens(self, table_path: str) -> list[int]:
@@ -195,16 +190,16 @@ class CommitBackend:
         the dir; log-service backends override."""
 
     def verify_table(self, table_path: str) -> None:
-        """Open-time authority check (ADVICE r15, the 'on open' half):
-        a marker-committed generation this backend's log never
-        recorded means the table was written under ANOTHER commit
-        authority (a POSIX table opened with a log backend, or a
-        second log misconfigured onto one table). rename_cas catches
-        the case where the foreign generation collides with a staged
-        slot, but the legacy `current` pointer can steer a fresh log
-        PAST the foreign generations entirely — the two authorities
-        would then interleave gens, and retention GC under either
-        would eventually destroy the other's committed data. No-op by
+        """Open-time authority check: a marker-committed generation
+        this backend's log never recorded means the table was written
+        under ANOTHER commit authority (a POSIX table opened with a
+        log backend, or a second log misconfigured onto one table).
+        rename_cas catches the case where the foreign generation
+        collides with a staged slot, but a fresh log whose head is
+        empty stages v0 — BELOW foreign generations that retention
+        already moved past v0 — so the two authorities would
+        interleave gens, and retention GC under either would
+        eventually destroy the other's committed data. No-op by
         default: on POSIX the markers ARE the log, so the mismatch
         cannot exist; log-service backends override."""
 
@@ -214,8 +209,6 @@ class PosixCommitBackend(CommitBackend):
     fails with EEXIST/ENOTEMPTY, so one os.rename IS the CAS, and the
     in-dir _committed marker (written into staging before the rename)
     makes data + commit record visible in the same atomic step."""
-
-    handles_fs_debris = True
 
     def committed_gens(self, table_path: str) -> list[int]:
         out = []
@@ -258,10 +251,10 @@ class SqliteCommitBackend(CommitBackend):
     renamed-but-unlogged dir is as invisible as a staging dir — no
     torn window between data and log. A rename failure rolls the
     insert back (conflict errnos -> CAS loss; anything else
-    re-raises with the staging dir intact). handles_fs_debris stays
-    False: a markerless v{gen} dir under a log backend is unlogged
-    garbage that the rename-collision path reports as a plain CAS
-    loss, never cleared (the log, not the dir listing, is truth).
+    re-raises with the staging dir intact). A dir already in an
+    accepted slot is unlogged (the log, not the dir listing, is
+    truth): its marker decides between clearing it as this log's own
+    crash remnant and refusing it as another authority's commit.
 
     Scope note (honest): sqlite's locking is a LOCAL-disk guarantee —
     this backend demonstrates and tests the seam's contract; an
@@ -338,12 +331,12 @@ class SqliteCommitBackend(CommitBackend):
             # for the rename->commit crash window; the held
             # transaction excludes concurrent loggers of this slot, so
             # the clear races nobody (review finding: this remnant
-            # otherwise wedged the table permanently). A marker that
-            # reads "posix" (or a legacy EMPTY marker) instead means a
-            # generation GENUINELY COMMITTED under the POSIX protocol
-            # that this log never recorded — a table migrated between
-            # backends mid-life. Destroying it would be silent data
-            # loss, so refuse with a migration error (ADVICE r15).
+            # otherwise wedged the table permanently). Any other tag
+            # ("posix", another log's, or an empty marker) instead
+            # means a generation GENUINELY COMMITTED under an
+            # authority this log never recorded — a table migrated
+            # between backends mid-life. Destroying it would be
+            # silent data loss, so refuse with a migration error.
             for attempt in (0, 1):
                 try:
                     os.rename(staging, final)
@@ -359,7 +352,7 @@ class SqliteCommitBackend(CommitBackend):
                     if os.path.exists(marker):
                         try:
                             with open(marker) as fh:
-                                tag = fh.read().strip() or "posix"
+                                tag = fh.read().strip()
                         except OSError:
                             tag = "posix"  # unreadable: assume committed
                         if tag != self.marker_tag:
@@ -430,7 +423,7 @@ class SqliteCommitBackend(CommitBackend):
                 continue  # markerless staging/debris: rename_cas heals
             try:
                 with open(marker) as fh:
-                    tag = fh.read().strip() or "posix"
+                    tag = fh.read().strip()
             except OSError:
                 tag = "posix"  # unreadable: assume committed
             if tag != self.marker_tag:
@@ -482,15 +475,15 @@ class NdbTable:
         # rewritten deltas, exactly like a table format's log. The
         # default None means "2 for a new table, meta's value on
         # reopen"; an EXPLICIT arg wins on reopen in both directions
-        # (ADVICE r13: max(meta, arg) silently ignored an explicit
-        # smaller value, so a one-time accidental widening retained
-        # extra snapshots forever), floored at 2 (current + the
-        # crash-recovery previous, the historical behavior).
+        # (max(meta, arg) would silently ignore an explicit smaller
+        # value, so a one-time accidental widening would retain extra
+        # snapshots forever), floored at 2 (current + the
+        # crash-recovery previous).
         self.keep_versions = 2 if keep_versions is None else max(2, int(keep_versions))
         # advisory cross-PROCESS writer guard (default on): two live
-        # processes upserting the same table would race the pointer
-        # flip and silently drop one's merge — the lost-update case a
-        # table format's optimistic concurrency rejects. Same-process
+        # processes upserting the same table race for each commit, and
+        # the loser's work ends in NdbWriteConflict; the lock turns
+        # that into an upfront error. Same-process
         # writers (nested merge_upsert->upsert, multiple instances,
         # sequential foreachBatch micro-batches) always pass. Stale
         # locks (dead or PID-recycled owner, proven via the kernel
@@ -510,9 +503,9 @@ class NdbTable:
         self.evolve_schema = bool(evolve_schema)
         self._evolved = False  # any evolution recorded in meta
         self._columns: list[str] | None = None  # stored payload columns
-        # files_per_bucket > 1 enables INTRA-bucket pruning (r11
-        # verdict item 7): each bucket's data is written as ~this many
-        # key-RANGE files, sorted by key inside each file (tight
+        # files_per_bucket > 1 enables INTRA-bucket pruning: each
+        # bucket's data is written as ~this many key-RANGE files,
+        # sorted by key inside each file (tight
         # parquet row-group min/max stats), so a pruned upsert reads
         # only the files whose key range intersects the batch's
         # per-bucket key range and HARDLINKS the rest forward —
@@ -554,8 +547,7 @@ class NdbTable:
             # recorded window — it never narrows IMPLICITLY, so
             # already-retained snapshots stay readable; an EXPLICIT
             # arg wins in both directions (widening is the remediation
-            # replay(as_of)'s error message prescribes — ADVICE r12;
-            # honoring explicit narrowing is ADVICE r13), floored at 2
+            # replay(as_of)'s error message prescribes), floored at 2
             if keep_versions is None:
                 self.keep_versions = max(2, int(meta.get("keep_versions", 2)))
             self._key_type = meta.get("key_type")
@@ -586,21 +578,7 @@ class NdbTable:
         if cols is not None:
             self._columns = list(cols)
 
-    # -- state pointer ---------------------------------------------------
-
-    def _pointer_gen(self) -> int | None:
-        """Generation named by the legacy `current` pointer file —
-        the compatibility cache / pre-protocol fallback."""
-        ptr = os.path.join(self.path, _POINTER)
-        if not os.path.exists(ptr):
-            return None
-        with open(ptr) as fh:
-            version = fh.read().strip()
-        if not version:
-            return None
-        if not version.startswith("v"):
-            raise ValueError(f"ndb pointer names a non-version dir {version!r}")
-        return int(version[1:])
+    # -- committed head --------------------------------------------------
 
     def _committed_gens(self) -> list[int]:
         """Generations with a published commit record — delegated to
@@ -608,19 +586,13 @@ class NdbTable:
         return self._backend.committed_gens(self.path)
 
     def _current_gen(self) -> int | None:
-        """The newest COMMITTED generation: max over in-dir commit
-        markers, falling back to (and never below) the legacy pointer
-        for pre-protocol tables. Deriving it from max(__ndb_gen) over
-        the stored rows would (a) pay a full state scan per upsert and
-        (b) go stale after an empty batch (a v2 written from an empty
-        upsert still carries only _GEN=1 rows, so the next max()+1
-        would collide with the LIVE v2 dir and overwrite the path
-        being read)."""
-        cands = self._committed_gens()
-        ptr = self._pointer_gen()
-        if ptr is not None:
-            cands.append(ptr)
-        return max(cands) if cands else None
+        """The newest COMMITTED generation (max over the commit
+        records). Deriving it from max(__ndb_gen) over the stored rows
+        would (a) pay a full state scan per upsert and (b) go stale
+        after an empty batch (a v2 written from an empty upsert still
+        carries only _GEN=1 rows, so the next max()+1 would collide
+        with the LIVE v2 dir and overwrite the path being read)."""
+        return max(self._committed_gens(), default=None)
 
     def _current_dir(self) -> str | None:
         gen = self._current_gen()
@@ -631,36 +603,33 @@ class NdbTable:
         the optimistic-concurrency commit. The marker is written into
         the staging dir FIRST, so the single rename makes data and
         marker visible together; rename-onto-existing fails, so of
-        two racers exactly one wins. A markerless v{gen} in the way
-        can only be pre-protocol crash debris (a committed dir always
-        carries its marker): it is moved aside with an ATOMIC rename
-        into a pid-unique grave — never rmtree'd in place, so two
-        racers clearing the same debris get exactly one winner and a
-        just-committed dir can never be deleted out from under its
-        writer (review finding; the grave is marker-verified after
-        the move, the one unwinnable interleaving restores it and
-        fails LOUDLY rather than losing a commit). Raises
-        NdbWriteConflict (staging cleaned up) only for genuine
-        commit collisions (EEXIST/ENOTEMPTY/ENOTDIR); any other
-        rename failure (permissions, I/O) re-raises as itself with
-        the staging dir left intact for inspection.
+        two racers exactly one wins. A non-empty dir in the way fails
+        the POSIX CAS and the commit conflicts; this method never
+        touches it: no writer leaves a markerless v{gen} above the
+        head (data only reaches v{gen} by renaming a staging dir that
+        already holds the marker, and GC removes only generations at
+        or below the retained window), so such a dir is foreign and
+        not this writer's to clear. Raises NdbWriteConflict (staging
+        cleaned up) only for genuine commit collisions (EEXIST/
+        ENOTEMPTY/ENOTDIR); any other rename failure (permissions,
+        I/O) re-raises as itself with the staging dir left intact for
+        inspection.
 
-        STALE-PUBLISH GUARD (ADVICE r13, the protocol hole): a writer
-        stalled across >= keep_versions newer commits targets a v{gen}
-        slot GC already VACATED — its rename succeeds (nothing in the
-        way) and would publish a generation BELOW the table's real
-        head, after which its own retention GC (keyed off its stale
-        gen) would delete every newer committed version. Two checks
-        close it: (a) before renaming, any committed generation >= gen
-        means this writer's read is stale — conflict, nothing
-        published; (b) after a successful rename, any committed
-        generation > gen can only be the same staleness seen through
-        the residual check->rename window (a LEGITIMATE successor
-        would have had to read this very commit and finish a full
-        Spark write inside microseconds), so the just-published dir is
-        moved aside and the writer conflicts. _gc_versions carries the
-        matching clamp (never deletes committed generations above the
-        published one) as defense in depth.
+        STALE-PUBLISH GUARD: a writer stalled across >= keep_versions
+        newer commits targets a v{gen} slot GC already VACATED — its
+        rename succeeds (nothing in the way) and would publish a
+        generation BELOW the table's real head, after which its own
+        retention GC (keyed off its stale gen) would delete every newer
+        committed version. Two checks close it: (a) before renaming, any
+        committed generation >= gen means this writer's read is stale —
+        conflict, nothing published; (b) after a successful rename, any
+        committed generation > gen can only be the same staleness seen
+        through the residual check->rename window (a LEGITIMATE
+        successor would have had to read this very commit and finish a
+        full Spark write inside microseconds), so the just-published dir
+        is moved aside and the writer conflicts. _gc_versions carries
+        the matching clamp (never deletes committed generations above
+        the published one) as defense in depth.
 
         The CAS itself and the committed-generation listing go
         through self._backend (the CommitBackend seam): on POSIX the
@@ -686,118 +655,45 @@ class NdbTable:
         # its own crash debris — see SqliteCommitBackend.rename_cas
         with open(os.path.join(staging, _COMMITTED), "w") as fh:
             fh.write(self._backend.marker_tag)
-        for attempt in (0, 1):
-            # a non-conflict failure inside rename_cas RAISES (staging
-            # left intact for inspection); False is a genuine CAS loss
-            if self._backend.rename_cas(staging, final):
-                # post-rename stale-publish check (guard (b) above):
-                # a committed generation ABOVE ours at this instant
-                # means our slot had been GC-vacated and we published
-                # below the table's head — unpublish and conflict
-                newest = max(self._committed_gens(), default=gen)
-                if newest > gen:
-                    stale_grave = f"{final}.stale.pid{os.getpid()}"
-                    try:
-                        os.rename(final, stale_grave)
-                        shutil.rmtree(stale_grave, ignore_errors=True)
-                    except OSError:
-                        pass  # a racer moved it first; either way: conflict
-                    # retire the unpublished generation's commit record
-                    # too (review finding: a log backend would otherwise
-                    # keep a committed row for data that no longer
-                    # exists — phantom head risk + unbounded growth; a
-                    # no-op on POSIX, where the marker left with the dir)
-                    self._backend.forget(self.path, gen)
-                    raise NdbWriteConflict(
-                        f"ndb commit conflict at {self.path}: v{gen} was "
-                        f"published below the committed head v{newest} "
-                        "(stale read across a GC'd window) — re-read the "
-                        "table state and retry the write"
-                    )
-                return final
-            if (
-                self._backend.handles_fs_debris
-                and attempt == 0
-                and os.path.isdir(final)
-                and not os.path.exists(os.path.join(final, _COMMITTED))
-            ):
-                grave = f"{final}.debris.pid{os.getpid()}"
-                # marker re-check IMMEDIATELY before the move
-                # (ADVICE r13: shrink the clear-vs-fresh-commit
-                # window to the rename itself)
-                if os.path.exists(os.path.join(final, _COMMITTED)):
-                    break  # a racer just committed: genuine conflict
-                try:
-                    os.rename(final, grave)  # atomic: one winner
-                except OSError:
-                    continue  # another racer moved it; retry rename
-                if os.path.exists(os.path.join(grave, _COMMITTED)):
-                    # the narrow check->move window: a racer cleared
-                    # the debris AND committed before our move, so
-                    # we just hid a LIVE commit — restore it
-                    try:
-                        os.rename(grave, final)
-                    except OSError as restore_exc:
-                        raise RuntimeError(
-                            f"ndb debris clearing at {self.path} "
-                            f"displaced a committed v{gen} and could "
-                            f"not restore it (now at {grave}) — "
-                            "manual inspection required"
-                        ) from restore_exc
-                    break  # their commit stands: genuine conflict
-                shutil.rmtree(grave, ignore_errors=True)
-                continue
-            break
-        shutil.rmtree(staging, ignore_errors=True)
-        raise NdbWriteConflict(
-            f"ndb commit conflict at {self.path}: generation v{gen} was "
-            "committed by another writer between this writer's read and "
-            "its publish — re-read the table state and retry the write"
-        )
+        # a non-conflict failure inside rename_cas RAISES (staging left
+        # intact for inspection); False is a genuine CAS loss
+        if not self._backend.rename_cas(staging, final):
+            shutil.rmtree(staging, ignore_errors=True)
+            raise NdbWriteConflict(
+                f"ndb commit conflict at {self.path}: generation v{gen} was "
+                "committed by another writer between this writer's read and "
+                "its publish — re-read the table state and retry the write"
+            )
+        # post-rename stale-publish check (guard (b) above): a
+        # committed generation ABOVE ours at this instant means our
+        # slot had been GC-vacated and we published below the table's
+        # head — unpublish and conflict
+        newest = max(self._committed_gens(), default=gen)
+        if newest > gen:
+            stale_grave = f"{final}.stale.pid{os.getpid()}"
+            try:
+                os.rename(final, stale_grave)
+                shutil.rmtree(stale_grave, ignore_errors=True)
+            except OSError:
+                pass  # a racer moved it first; either way: conflict
+            # retire the unpublished generation's commit record too: a
+            # log backend would otherwise keep a committed row for data
+            # that no longer exists — phantom head risk + unbounded
+            # growth (a no-op on POSIX, where the marker left with the
+            # dir)
+            self._backend.forget(self.path, gen)
+            raise NdbWriteConflict(
+                f"ndb commit conflict at {self.path}: v{gen} was "
+                f"published below the committed head v{newest} "
+                "(stale read across a GC'd window) — re-read the "
+                "table state and retry the write"
+            )
+        return final
 
     def _staging_dir(self, gen: int) -> str:
         """Private, pid-unique staging path for building v{gen} —
         concurrent racers never write into each other's files."""
         return os.path.join(self.path, f".stage-v{gen}-pid{os.getpid()}")
-
-    def _flip_pointer(self, version: str) -> None:
-        """Update the compat pointer cache. pid-unique tmp: two
-        lock-disabled writers flipping concurrently must not share a
-        tmp path (the loser's os.replace would hit FileNotFoundError
-        after its commit already succeeded — review finding), and the
-        flip is FORWARD-ONLY so a slower lower-generation writer
-        cannot regress the cache under a newer commit. The guard is
-        read-then-write, not atomic, so two lock-disabled writers can
-        still interleave check/replace with the lower flip landing
-        last — SELF-HEALING loop (ADVICE r13): after each replace,
-        re-read; if the pointer regressed below the newest committed
-        generation, re-flip to that head. Each writer only ever flips
-        UP, so the loop converges (bounded retries; marker-based
-        readers never consult this cache anyway — it exists for
-        pre-protocol readers)."""
-        ptr = os.path.join(self.path, _POINTER)
-        target = int(version[1:])
-        for _ in range(4):
-            try:
-                ptr_gen = self._pointer_gen()
-            except ValueError:
-                ptr_gen = None
-            if ptr_gen is not None and ptr_gen >= target:
-                return
-            tmp = f"{ptr}.tmp.{os.getpid()}"
-            with open(tmp, "w") as fh:
-                fh.write(f"v{target}")
-            os.replace(tmp, ptr)  # atomic on POSIX
-            # heal: did a concurrent lower-generation flip land after
-            # ours, regressing the cache below the committed head?
-            head = max(self._committed_gens(), default=target)
-            target = max(target, head)
-            try:
-                now = self._pointer_gen()
-            except ValueError:
-                now = None
-            if now is not None and now >= target:
-                return
 
     def _write_meta(self) -> None:
         meta_path = os.path.join(self.path, _META)
@@ -840,8 +736,7 @@ class NdbTable:
 
     @staticmethod
     def _bucket_dirs(version_dir: str) -> dict[int, str]:
-        """bucket value -> subdir name for a bucket-layout version dir
-        (empty for the legacy flat layout)."""
+        """bucket value -> subdir name for a version dir."""
         out: dict[int, str] = {}
         for name in os.listdir(version_dir):
             if name.startswith(f"{_BUCKET}="):
@@ -906,15 +801,20 @@ class NdbTable:
         return NdbTable._file_stats(path, key)[0]
 
     def _load_manifest(self, version_dir: str | None) -> dict | None:
-        """The version's file-range manifest, or None (pre-manifest
-        version / unreadable — callers fall back to footer probes)."""
+        """The version's file-range manifest ({relpath: {"r": [lo, hi]
+        | null, "n": rows}}), or None when it is missing, unreadable
+        or not in that shape — callers then fall back to footer
+        probes."""
         if version_dir is None:
             return None
         try:
             with open(os.path.join(version_dir, _MANIFEST)) as fh:
-                return json.load(fh)
+                man = json.load(fh)
         except (OSError, ValueError):
             return None
+        if not all(isinstance(e, dict) for e in man.values()):
+            return None
+        return man
 
     def _manifest_range(self, manifest: dict | None, version_dir: str, full: str):
         """File key range from the manifest when it has an entry,
@@ -922,27 +822,22 @@ class NdbTable:
         same safe-over-read contract _file_key_range returns None
         for."""
         if manifest is not None:
-            rel = os.path.relpath(full, version_dir)
-            if rel in manifest:
-                ent = manifest[rel]
-                if isinstance(ent, dict):  # v2: {"r": range, "n": rows}
-                    rng = ent.get("r")
-                    return None if rng is None else (rng[0], rng[1])
-                return None if ent is None else (ent[0], ent[1])
+            ent = manifest.get(os.path.relpath(full, version_dir))
+            if ent is not None:
+                rng = ent["r"]
+                return None if rng is None else (rng[0], rng[1])
         return self._file_key_range(full, self.key)
 
     def _write_manifest(self, out_dir: str, prev_dir: str | None) -> None:
         """Build the staged version's manifest: carried files reuse
         the previous manifest's entry by relpath — verified by
         os.path.samefile so a reused relpath with FRESH content is
-        re-probed instead of silently inheriting a stale range
-        (ADVICE r14: a carried stale range would mis-prune the next
-        upsert); freshly written files are footer-probed ONCE here,
-        capturing key range AND row count in the same read (manifest
-        v2 entries {"r": [lo, hi] | null, "n": rows}; v1 bare-list
-        entries from older versions carry forward verbatim and every
-        reader handles both). Written before the commit rename, so it
-        publishes atomically with the data. Best-effort by design: a
+        re-probed instead of silently inheriting a stale range (a
+        carried stale range would mis-prune the next upsert); freshly
+        written files are footer-probed ONCE here, capturing key range
+        AND row count in the same read (entries {"r": [lo, hi] | null,
+        "n": rows}). Written before the commit rename, so it publishes
+        atomically with the data. Best-effort by design: a
         non-serializable key type skips the manifest and every reader
         falls back to probing."""
         prev = self._load_manifest(prev_dir) or {}
@@ -972,16 +867,7 @@ class NdbTable:
             payload = json.dumps(man)
         except (TypeError, ValueError):
             return  # non-JSON key type: readers keep probing footers
-        tgt = os.path.join(out_dir, _MANIFEST)
-        try:
-            # the legacy whole-dir _link_tree path can have HARDLINKED
-            # the previous version's manifest here — writing through
-            # that shared inode would rewrite the retained snapshot's
-            # manifest, so break the link first
-            os.unlink(tgt)
-        except FileNotFoundError:
-            pass
-        with open(tgt, "w") as fh:
+        with open(os.path.join(out_dir, _MANIFEST), "w") as fh:
             fh.write(payload)
 
     def _split_touched_files(
@@ -1010,8 +896,8 @@ class NdbTable:
         mis-carry that would duplicate keys."""
         if rng is None and self._range_safe_key_type():
             # fallback probe for callers that did not pre-collect the
-            # ranges in their touched-set job (r17: upsert normally
-            # passes rng — this job only runs on the _touched path)
+            # ranges in their touched-set job (upsert normally passes
+            # rng — this job only runs on the _touched path)
             rng = {
                 r[0]: (r[1], r[2])
                 for r in batch.groupBy(_BUCKET)
@@ -1065,14 +951,13 @@ class NdbTable:
         bucket set is one bounded collect (n_buckets rows); on
         files_per_bucket>1 tables that same aggregation also carries
         the per-bucket key ranges the intra-bucket file prune needs
-        (r17, verdict item 7 — previously a SECOND collect job inside
-        _split_touched_files). prune=False skips the probe job and
+        (no second collect job). prune=False skips the probe job and
         does the full merge-rewrite — measured ~0.2s/upsert cheaper
         when the caller KNOWS its keys spread over every bucket
         (uniform hash keys, e.g. an LSH index), where the prune job
         can never pay for itself.
 
-        _touched (internal, r17): a caller that already collected the
+        _touched (internal): a caller that already collected the
         batch's bucket set in its own bounded job (merge_upsert)
         passes it here, skipping this upsert's probe job — and, on
         files_per_bucket=1 tables, the batch persist whose only
@@ -1124,16 +1009,6 @@ class NdbTable:
             new_key_type = self._key_type or batch_key_type
             payload = sorted(df.columns)
             known = self._columns
-            if known is None and self._current_dir() is not None:
-                # legacy table (meta predates the columns record):
-                # derive the stored payload columns from the footer
-                # once, so the drift check protects pre-existing
-                # tables too
-                state0 = self._state()
-                if state0 is not None:
-                    known = sorted(
-                        c for c in state0.columns if c not in (_GEN, _BUCKET)
-                    )
             new_evolved = self._evolved
             if known is None:
                 new_columns = payload
@@ -1163,10 +1038,10 @@ class NdbTable:
             )
             batch_rng: dict | None = None
             if prune and _touched is not None:
-                # r17 (verdict item 7): the caller already collected the
-                # batch's bucket set in its own bounded aggregation —
-                # skip this upsert's probe job. On files_per_bucket=1
-                # tables the write below is then the batch lineage's
+                # the caller already collected the batch's bucket set
+                # in its own bounded aggregation — skip this upsert's
+                # probe job. On files_per_bucket=1 tables the write
+                # below is then the batch lineage's
                 # single evaluation, so the persist goes too; on
                 # files_per_bucket>1 the range probe still reads the
                 # batch, so the persist stays.
@@ -1178,16 +1053,15 @@ class NdbTable:
                 # persisted: the batch lineage feeds BOTH the
                 # touched-set probe and the merged write below —
                 # without this an expensive upstream transform would
-                # evaluate twice per upsert (review finding r9)
+                # evaluate twice per upsert
                 batch = batch.persist()
                 batch_persisted = True
                 if self.files_per_bucket > 1 and self._range_safe_key_type():
-                    # r17 (verdict item 7): ONE bounded aggregation
-                    # serves BOTH driver edges of the intra-bucket
-                    # pruned path — the touched-bucket set AND the
-                    # per-bucket key ranges _split_touched_files
-                    # previously collected in a second job. Either way
-                    # at most n_buckets rows cross the driver edge.
+                    # ONE bounded aggregation serves BOTH driver edges
+                    # of the intra-bucket pruned path — the
+                    # touched-bucket set AND the per-bucket key ranges
+                    # _split_touched_files needs. Either way at most
+                    # n_buckets rows cross the driver edge.
                     rng_rows = (
                         batch.groupBy(_BUCKET)
                         .agg(
@@ -1207,7 +1081,6 @@ class NdbTable:
                 touched = None  # full merge-rewrite; nothing links
 
             bucket_dirs = self._bucket_dirs(current) if current is not None else {}
-            legacy = current is not None and not bucket_dirs
             carry_files: list[str] = []  # intra-bucket carryover links
             merged: DataFrame | None
             if current is None:
@@ -1215,20 +1088,9 @@ class NdbTable:
             elif touched is None:
                 # prune=False: read the whole state, rewrite every bucket
                 state = self._reader().parquet(current)
-                if _BUCKET not in state.columns:
-                    state = state.withColumn(_BUCKET, self._bucket_expr())
                 merged = state.unionByName(batch, allowMissingColumns=self.evolve_schema)
-            elif legacy and touched:
-                # flat pre-bucket layout (an empty first write, or a table
-                # from before bucketing): full rewrite migrates it into
-                # the bucket layout — nothing can link
-                state = self._reader().parquet(current)
-                if _BUCKET not in state.columns:
-                    state = state.withColumn(_BUCKET, self._bucket_expr())
-                merged = state.unionByName(batch, allowMissingColumns=self.evolve_schema)
-                touched = None
             elif touched:
-                if self.files_per_bucket > 1 and bucket_dirs:
+                if self.files_per_bucket > 1:
                     # intra-bucket file pruning: read only the touched
                     # buckets' files whose key range intersects the
                     # batch; the rest hardlink forward below
@@ -1260,7 +1122,6 @@ class NdbTable:
             else:
                 merged = None  # empty batch: pure link-forward version
 
-            version = f"v{gen}"
             # build the full version in a private staging dir; the
             # atomic rename in _commit_version publishes it (see the
             # module docstring's commit protocol)
@@ -1286,13 +1147,7 @@ class NdbTable:
                     .filter(F.col("__rn") == 1)
                     .drop("__rn")
                 )
-                if touched == []:
-                    # first write with an empty batch: a partitioned write
-                    # of zero rows leaves no readable footer, so write one
-                    # flat schema-carrying file; the first real upsert
-                    # migrates it to the bucket layout (legacy branch)
-                    resolved.coalesce(1).write.mode("overwrite").parquet(out_dir)
-                else:
+                if touched != []:  # [] = an empty first batch: no rows
                     n_parts = len(touched) if touched else self.n_buckets
                     if self.files_per_bucket > 1:
                         # key-RANGE files inside each bucket, sorted by
@@ -1316,41 +1171,40 @@ class NdbTable:
                         .mode("overwrite")
                         .parquet(out_dir)
                     )
-                    if not self._bucket_dirs(out_dir):
-                        # zero rows materialized (prune=False on an empty
-                        # batch creating a table): a partitioned write of
-                        # nothing leaves no readable footer — write the
-                        # flat schema-carrying file instead
-                        resolved.coalesce(1).write.mode("overwrite").parquet(out_dir)
+                if touched == [] or not self._bucket_dirs(out_dir):
+                    # zero rows (an empty batch creating the table,
+                    # prune on or off): a partitioned write of nothing
+                    # leaves no readable footer, so write one zero-row
+                    # schema-carrying file into bucket 0 — the version
+                    # keeps the one bucket layout
+                    resolved.drop(_BUCKET).coalesce(1).write.parquet(
+                        os.path.join(out_dir, f"{_BUCKET}=0")
+                    )
             # hardlink everything the batch did not touch from the
             # previous version into the new one — byte-identical carryover.
-            # touched=None means EVERYTHING was rewritten (prune=False or
-            # legacy migration): linking then would merge stale files into
-            # freshly-written bucket dirs, so nothing may link.
+            # touched=None means EVERYTHING was rewritten (prune=False):
+            # linking then would merge stale files into freshly-written
+            # bucket dirs, so nothing may link.
             if current is not None and touched is not None:
-                if legacy:
-                    if merged is None:  # empty batch on a flat state
-                        _link_tree(current, out_dir)
-                else:
-                    keep = set(touched)
-                    for bval, name in bucket_dirs.items():
-                        if bval not in keep:
-                            _link_tree(
-                                os.path.join(current, name), os.path.join(out_dir, name)
-                            )
-                    # intra-bucket carryover: files inside TOUCHED
-                    # buckets whose key range the batch provably
-                    # missed (files_per_bucket > 1 path) — hardlinked
-                    # alongside the freshly written range files; Spark
-                    # part-file names are UUID-unique so no collision
-                    for src in carry_files:
-                        rel = os.path.relpath(src, current)
-                        dst = os.path.join(out_dir, rel)
-                        os.makedirs(os.path.dirname(dst), exist_ok=True)
-                        try:
-                            os.link(src, dst)
-                        except OSError:
-                            shutil.copy2(src, dst)
+                keep = set(touched)
+                for bval, name in bucket_dirs.items():
+                    if bval not in keep:
+                        _link_tree(
+                            os.path.join(current, name), os.path.join(out_dir, name)
+                        )
+                # intra-bucket carryover: files inside TOUCHED buckets
+                # whose key range the batch provably missed
+                # (files_per_bucket > 1 path) — hardlinked alongside the
+                # freshly written range files; Spark part-file names are
+                # UUID-unique so no collision
+                for src in carry_files:
+                    rel = os.path.relpath(src, current)
+                    dst = os.path.join(out_dir, rel)
+                    os.makedirs(os.path.dirname(dst), exist_ok=True)
+                    try:
+                        os.link(src, dst)
+                    except OSError:
+                        shutil.copy2(src, dst)
             self._write_manifest(out_dir, current)
             if new_evolved and not self._evolved:
                 # persist the MONOTONE evolved flag BEFORE the commit
@@ -1372,7 +1226,6 @@ class NdbTable:
             self._columns = new_columns
             self._evolved = new_evolved
             self._write_meta()
-            self._flip_pointer(version)
             self._gc_versions(keep=self._retention_keep(gen))
         finally:
             if owns_lock:
@@ -1447,7 +1300,7 @@ class NdbTable:
                         raise RuntimeError(
                             f"ndb table at {self.path} is locked by "
                             f"{who}; concurrent cross-process upserts "
-                            "would race the pointer flip (pass "
+                            "would race each commit (pass "
                             "single_writer=False to override at your "
                             "own risk)"
                         )
@@ -1492,24 +1345,14 @@ class NdbTable:
 
     def versions(self) -> list[int]:
         """Retained snapshot generations, oldest first — each readable
-        via replay(as_of=gen). Bounded by keep_versions. A version
-        counts if it carries the commit marker OR (pre-protocol
-        tables) sits at/below the legacy pointer — never a markerless
-        dir above the pointer (crash debris)."""
-        current = self._current_gen()
-        if current is None:
-            return []
-        ptr = self._pointer_gen()
-        committed = set(self._committed_gens())
-        out = []
-        for name in os.listdir(self.path):
-            if name.startswith("v") and name[1:].isdigit():
-                g = int(name[1:])
-                if not os.path.isdir(os.path.join(self.path, name)):
-                    continue
-                if g in committed or (ptr is not None and g <= ptr):
-                    out.append(g)
-        return sorted(out)
+        via replay(as_of=gen). Bounded by keep_versions. Only
+        committed generations count; a dir without a commit record is
+        never a snapshot."""
+        return sorted(
+            g
+            for g in self._committed_gens()
+            if os.path.isdir(os.path.join(self.path, f"v{g}"))
+        )
 
     def history(self) -> list[dict]:
         """Retained-snapshot audit, oldest first — the DESCRIBE
@@ -1537,27 +1380,21 @@ class NdbTable:
                     total += st.st_size
                     if st.st_nlink == 1:
                         own += st.st_size
-            marker = os.path.join(vdir, _COMMITTED)
-            # row count from the v2 manifest when EVERY entry carries
-            # one ("n"); v1 entries / missing manifest -> None (the
-            # honest answer — history() never reads data to find out)
+            # row count from the manifest when EVERY entry carries one
+            # ("n"); a missing manifest -> None (the honest answer —
+            # history() never reads data to find out)
             man = self._load_manifest(vdir)
             n_rows = None
             if man is not None:
-                counts = [
-                    e.get("n") if isinstance(e, dict) else None
-                    for e in man.values()
-                ]
+                counts = [e.get("n") for e in man.values()]
                 if all(c is not None for c in counts):
                     n_rows = sum(counts)
             out.append(
                 {
                     "generation": g,
-                    "committed_at": (
-                        os.stat(marker).st_mtime
-                        if os.path.exists(marker)
-                        else None  # pre-protocol snapshot
-                    ),
+                    "committed_at": os.stat(
+                        os.path.join(vdir, _COMMITTED)
+                    ).st_mtime,
                     "n_files": n_files,
                     "n_rows": n_rows,
                     "total_bytes": total,
@@ -1571,20 +1408,19 @@ class NdbTable:
         return out
 
     def _gc_versions(self, keep: set[str]) -> None:
-        """Delete superseded version dirs after the pointer flip —
-        without this, every micro-batch of a long-running
-        stream_upsert_ndb leaves a full state copy behind (unbounded
-        disk growth). The immediately-previous version is kept as the
-        crash-recovery fallback; anything older is garbage. Hardlinked
-        bucket files shared with live versions survive the rmtree (the
-        inode outlives this name). Also reclaims staging dirs whose
-        writer pid is provably dead (a crashed writer's unpublished
-        build — never another LIVE writer's in-progress staging), and
-        grave dirs (v*.debris.pid* / v*.stale.pid*) orphaned by a
-        clearer that crashed between the move-aside and the rmtree
-        (ADVICE r13: these were never swept).
+        """Delete superseded version dirs after a commit — without
+        this, every micro-batch of a long-running stream_upsert_ndb
+        leaves a full state copy behind (unbounded disk growth). The
+        immediately-previous version is kept as the crash-recovery
+        fallback; anything older is garbage. Hardlinked bucket files
+        shared with live versions survive the rmtree (the inode
+        outlives this name). Also reclaims staging dirs whose writer
+        pid is provably dead (a crashed writer's unpublished build —
+        never another LIVE writer's in-progress staging), and grave
+        dirs (v*.stale.pid* / v*.unlogged.pid*) orphaned by a clearer
+        that crashed between the move-aside and the rmtree.
 
-        CLAMP (ADVICE r13, the commit-protocol hole's second half):
+        CLAMP (the stale-publish guard's second half):
         a COMMITTED generation ABOVE the window this GC was keyed on
         is another writer's newer commit seen through a stale read —
         it is NEVER deleted here, whatever the keep set says. Without
@@ -1618,34 +1454,17 @@ class NdbTable:
                 # prevent, one layer up
                 self._backend.forget(self.path, int(name[1:]))
             elif (
-                (
-                    ".debris.pid" in name
-                    or ".stale.pid" in name
-                    # sqlite-backend remnant graves (rename_cas clears
-                    # unlogged dirs into these; review finding: a
-                    # clearer crash between move and rmtree leaked
-                    # them forever). The log is the authority there,
-                    # so a marker inside one is meaningless — sweeps
-                    # like .stale (the .debris marker-preservation
-                    # branch below stays .debris-only).
-                    or ".unlogged.pid" in name
-                )
+                # a stale publish moved below the live head, or a
+                # sqlite-backend remnant (rename_cas clears unlogged
+                # dirs into these): either way nothing committed, so a
+                # marker inside one means nothing
+                (".stale.pid" in name or ".unlogged.pid" in name)
                 and name.startswith("v")
                 and os.path.isdir(full)
             ):
                 # orphaned grave from a crashed clearer: reclaim only
                 # when the mover is provably dead (same liveness rule
                 # as staging below — unknowable liveness never deletes)
-                if ".debris.pid" in name and os.path.exists(
-                    os.path.join(full, _COMMITTED)
-                ):
-                    # a DISPLACED COMMITTED version (the restore-failed
-                    # path raises RuntimeError naming this dir): keep
-                    # it for the manual inspection that error demands.
-                    # (.stale.pid graves carry a marker too but are by
-                    # construction a stale publish below the live head
-                    # — those sweep normally.)
-                    continue
                 if _proc_start_ticks(os.getpid()) is None:
                     continue
                 pid_s = name.rsplit(".pid", 1)[-1]
@@ -1678,8 +1497,8 @@ class NdbTable:
         intersecting files with ~files_per_bucket new ones), costing a
         footer probe + file open per upsert. Compaction rewrites the
         affected buckets only; untouched buckets hardlink forward into
-        a new version dir and the pointer flips after the write, so a
-        crashed compaction never corrupts the live state (same
+        a new version dir that commits after the write, so a crashed
+        compaction never corrupts the live state (same
         contract as upsert; state is already one row per key, no merge
         window needed). Returns the bucket ids rewritten.
 
@@ -1690,10 +1509,9 @@ class NdbTable:
         path — overlapping footer ranges.
 
         Holds the same advisory writer lock as upsert()/merge_upsert()
-        for the whole read-rewrite-flip (ADVICE r12: an unguarded
-        compact racing a cross-process upsert could flip the pointer
-        over the other writer's version and GC it — the lost-update
-        case the guard exists to prevent)."""
+        for the whole read-rewrite-commit: an unguarded compact
+        racing a cross-process upsert would leave one of them to lose
+        its rewrite to NdbWriteConflict."""
         owns_lock = self._acquire_writer_lock()
         try:
             return self._compact_locked(buckets)
@@ -1706,8 +1524,6 @@ class NdbTable:
         if current is None:
             raise ValueError(f"ndb table at {self.path} is empty")
         bucket_dirs = self._bucket_dirs(current)
-        if not bucket_dirs:
-            return []  # legacy flat layout: the next upsert migrates it
         if buckets is None:
             buckets = []
             manifest = self._load_manifest(current)
@@ -1725,9 +1541,8 @@ class NdbTable:
                 # the ntile rewrite below converges to <= fpb files per
                 # bucket by construction (equal (bucket, slot) keys stay
                 # together), so anything above fpb is selectable without
-                # re-select churn (ADVICE r12: the old +1 slack dated
-                # from the sample-estimated repartitionByRange straddle
-                # and left fpb+1-file buckets never coalescing)
+                # re-select churn (a +1 slack would leave fpb+1-file
+                # buckets never coalescing)
                 if (
                     len(ranges) > self.files_per_bucket
                     or any(r is None for r in ranges)
@@ -1742,7 +1557,6 @@ class NdbTable:
             return []
         prev_gen = self._current_gen()
         gen = 0 if prev_gen is None else prev_gen + 1
-        version = f"v{gen}"
         out_dir = self._staging_dir(gen)  # stage-then-commit protocol
         state = self._reader().parquet(current).filter(
             F.col(_BUCKET).isin(sel)
@@ -1786,7 +1600,6 @@ class NdbTable:
         self._write_manifest(out_dir, current)
         self._commit_version(out_dir, gen)
         self._write_meta()
-        self._flip_pointer(version)
         self._gc_versions(keep=self._retention_keep(gen))
         return sel
 
@@ -1814,7 +1627,7 @@ class NdbTable:
         upsert write — O(state*b/n + batch), never the accumulated
         history.
 
-        RETRY CONTRACT under additive rules (ADVICE r14): an
+        RETRY CONTRACT under additive rules: an
         NdbWriteConflict raised by the post-rename stale-publish
         guard (commit protocol guard (b)) fires AFTER this writer's
         version was briefly published; the guard unpublishes it, but
@@ -1847,20 +1660,19 @@ class NdbTable:
             )
         # persisted: the batch lineage otherwise evaluates twice (the
         # fused dup/touched probe and the joined upsert write) — the
-        # r9 double-evaluation finding, one call deeper (review
-        # finding). df is rebound below; `src` keeps the unpersist
+        # same double evaluation upsert's persist avoids, one call
+        # deeper. df is rebound below; `src` keeps the unpersist
         # handle.
         df = df.persist()
         src = df
         try:
-            # r17 (verdict item 7): ONE bounded aggregation replaces
-            # the duplicate-key probe job AND the touched-bucket
-            # collect job — group to (bucket, key) counts, reduce to a
-            # per-bucket max, collect n_buckets rows: any max > 1 is
-            # the old dup predicate exactly, and the bucket set feeds
-            # the state prune here and the nested upsert via _touched
-            # (skipping its probe job too). Three probe jobs per
-            # merge_upsert become one.
+            # ONE bounded aggregation serves as the duplicate-key probe
+            # AND the touched-bucket collect — group to (bucket, key)
+            # counts, reduce to a per-bucket max, collect n_buckets
+            # rows: any max > 1 is a duplicated key, and the bucket set
+            # feeds the state prune here and the nested upsert via
+            # _touched (skipping its probe job too): one probe job per
+            # merge_upsert, not three.
             stats = (
                 df.withColumn(_BUCKET, self._bucket_expr())
                 .groupBy(_BUCKET, self.key)
@@ -1887,11 +1699,9 @@ class NdbTable:
         try:
             current = self._current_dir()
             if current is not None:
-                state = self._reader().parquet(current)
-                if _BUCKET in state.columns:
-                    state = state.filter(
-                        F.col(_BUCKET).isin([int(t) for t in touched])
-                    )
+                state = self._reader().parquet(current).filter(
+                    F.col(_BUCKET).isin([int(t) for t in touched])
+                )
                 stored_cols = set(state.columns)
                 old = state.drop(_GEN, _BUCKET).select(
                     F.col(self.key),
@@ -1939,7 +1749,7 @@ class NdbTable:
                 df = df.join(old, self.key, "left").select(*merged_cols)
             # the joined frame carries the batch's exact key set, so
             # its bucket set is `touched` — the nested upsert skips its
-            # own probe job (r17, see the stats aggregation above)
+            # own probe job (see the stats aggregation above)
             self.upsert(df, _touched=touched)
         finally:
             src.unpersist()
@@ -1988,7 +1798,7 @@ class NdbTable:
         tables known bounded; otherwise the join shuffles on the key
         and AQE decides.
 
-        prune (r15): for left/inner/semi joins the TABLE side is
+        prune: for left/inner/semi joins the TABLE side is
         bucket-pruned to the probe's key buckets before the join —
         the deterministic key hash means a bucket the probe never
         hashes into cannot hold a matching key, and stored rows are
@@ -2008,7 +1818,7 @@ class NdbTable:
         sorted with tight row-group stats, the surviving buckets
         additionally skip whole files/row groups. Right/full/anti
         joins need the table's unmatched rows and fall back to the
-        full replay, as does the legacy flat layout; set prune=False
+        full replay; set prune=False
         when the probe is itself table-sized (the pruning pass then
         costs more than it saves). last_lookup_stats records the
         selection."""
@@ -2042,7 +1852,6 @@ class NdbTable:
             prune
             and how in prunable
             and state is not None
-            and _BUCKET in state.columns
             and probe_kt is not None
             and probe_kt == stored_kt
         ):

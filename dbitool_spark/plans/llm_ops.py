@@ -2960,9 +2960,7 @@ ORDER BY query_id, rank
 _PPL_FLAG_MILLIBITS = 4_925
 
 
-def perplexity_score_documents(
-    spark: SparkSession, sf_dir: str, *, materialize: bool = True
-) -> DataFrame:
+def perplexity_score_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram-LM cross-entropy quality scoring — the perplexity-
     filtering half of CCNet (Wenzek et al. 2020: score documents under
     a reference LM, keep the low-perplexity head; the reference's
@@ -2990,9 +2988,9 @@ def perplexity_score_documents(
     The count table is PERSISTED once: it feeds both the token join
     and the N/V scalar agg, and an unshared plan would re-run the
     full reference-token aggregation for each (the
-    simhash_recall_planted precedent; lazy callers get a release
-    handle via attach_persists)."""
-    from dbitool_spark.ops.cache import attach_persists, materialize_release
+    simhash_recall_planted precedent); the checkpointed result
+    releases it."""
+    from dbitool_spark.ops.cache import materialize_release
 
     docs = catalog.load(spark, sf_dir, "documents")
     toks = docs.select(
@@ -3039,8 +3037,6 @@ def perplexity_score_documents(
         )
         .orderBy("doc_id")
     )
-    if not materialize:
-        return attach_persists(result, counts)  # lazy: caller releases
     return materialize_release(result, counts)
 
 
@@ -3122,9 +3118,7 @@ _DSIR_WEIGHT_MB_SQL = f"""CAST(CASE
 END AS BIGINT)"""
 
 
-def dsir_weights_documents(
-    spark: SparkSession, sf_dir: str, *, materialize: bool = True
-) -> DataFrame:
+def dsir_weights_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR-style importance-resampling weights (Xie et al. 2023,
     "Data Selection for Language Models via Importance Resampling"):
     score every raw-pool document by how much more likely its tokens
@@ -3166,7 +3160,7 @@ def dsir_weights_documents(
     stream joins the count table on token (shuffle ~ token stream,
     never doc x doc), one per-doc agg. The count table is persisted
     once and released (it feeds the join and the scalar agg)."""
-    from dbitool_spark.ops.cache import attach_persists, materialize_release
+    from dbitool_spark.ops.cache import materialize_release
 
     docs = catalog.load(spark, sf_dir, "documents")
     is_target = F.col("source").isin(*_DSIR_TARGET_SOURCES)
@@ -3205,8 +3199,6 @@ def dsir_weights_documents(
         )
         .orderBy("doc_id")
     )
-    if not materialize:
-        return attach_persists(result, counts)  # lazy: caller releases
     return materialize_release(result, counts)
 
 

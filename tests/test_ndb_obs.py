@@ -70,10 +70,10 @@ def test_ndb_empty_replay_raises(spark, tmpdir):
 
 
 def test_ndb_empty_batch_then_upsert(spark, tmpdir):
-    """Regression (r8 review): the generation counter comes from the
-    pointer, not max(_GEN) over rows — an EMPTY upsert batch used to
-    leave max(_GEN) stale so the NEXT upsert recomputed the same gen
-    and overwrote the live version dir it was reading from."""
+    """Regression: the generation counter comes from the committed
+    head, not max(_GEN) over rows — an EMPTY upsert batch leaves
+    max(_GEN) stale, so a counter read off the rows would recompute
+    the same gen and overwrite the live version dir it reads from."""
     t = NdbTable(spark, os.path.join(tmpdir, "kv"), key="k")
     t.upsert(spark.createDataFrame([(1, "a")], "k bigint, v string"))
     t.upsert(spark.createDataFrame([], "k bigint, v string"))  # empty batch
@@ -82,8 +82,39 @@ def test_ndb_empty_batch_then_upsert(spark, tmpdir):
     assert got == [(1, "b"), (2, "c")]
 
 
+@pytest.mark.parametrize("prune", [True, False])
+def test_ndb_empty_first_batch_commits_bucket_layout(spark, tmpdir, prune):
+    """An empty batch creating the table commits v0 in the one bucket
+    layout (only __ndb_bucket=* subdirectories, no flat data file),
+    replays as 0 rows with the batch's columns, and the table then
+    upserts, looks up and compacts last-write-wins. No `current`
+    file is ever written."""
+    path = os.path.join(tmpdir, "kv")
+    t = NdbTable(spark, path, key="k", n_buckets=4)
+    t.upsert(spark.createDataFrame([], "k bigint, v string"), prune=prune)
+    v0 = os.path.join(path, "v0")
+    assert t.versions() == [0]
+    names = os.listdir(v0)
+    dirs = [n for n in names if os.path.isdir(os.path.join(v0, n))]
+    assert dirs and all(n.startswith("__ndb_bucket=") for n in dirs)
+    # no data file beside them (only _committed/_manifest.json/_SUCCESS)
+    assert not [n for n in names if n not in dirs and not n.startswith((".", "_"))]
+    empty = t.replay()
+    assert empty.count() == 0
+    assert sorted(empty.columns) == ["k", "v"]
+
+    t.upsert(spark.createDataFrame([(1, "a"), (2, "b")], "k bigint, v string"))
+    t.upsert(spark.createDataFrame([(2, "B"), (3, "c")], "k bigint, v string"))
+    probe = spark.createDataFrame([(1,), (2,), (9,)], "k bigint")
+    got = {r.k: r.v for r in t.lookup(probe, how="left").collect()}
+    assert got == {1: "a", 2: "B", 9: None}
+    t.compact()
+    assert {r.k: r.v for r in t.replay().collect()} == {1: "a", 2: "B", 3: "c"}
+    assert not os.path.exists(os.path.join(path, "current"))
+
+
 def test_ndb_version_gc(spark, tmpdir):
-    """Superseded version dirs are deleted after the pointer flip
+    """Superseded version dirs are deleted after each commit
     (keep current + previous as the crash-recovery fallback) — a
     long-running upsert stream must not accumulate one full state
     copy per micro-batch."""
@@ -808,7 +839,7 @@ def test_ndb_merge_upsert_matches_batch_groupby(spark, tmpdir):
 def test_ndb_writer_lock_blocks_live_foreign_owner(spark, tmpdir):
     """The advisory single-writer guard: a lock held by a LIVE foreign
     process (here: pid 1 with its true kernel start time) makes
-    upsert raise instead of racing the pointer flip; a STALE lock
+    upsert raise instead of racing the other writer's commit; a STALE lock
     (dead pid, or a live pid whose start time mismatches — i.e. PID
     reuse) is stolen silently; single_writer=False bypasses the guard
     entirely."""
@@ -907,38 +938,11 @@ def test_ndb_schema_evolution_add_and_drop_columns(spark, tmpdir):
     assert got[5] == ("v5", None, None)
 
 
-def test_ndb_legacy_table_gains_drift_protection_on_reopen(spark, tmpdir):
-    """A table whose meta predates the columns record (simulated by
-    stripping the key) derives its stored payload columns from the
-    parquet footer on the first reopened upsert — pre-existing tables
-    get the drift check too, not just freshly created ones."""
-    import json as _json
-
-    path = os.path.join(tmpdir, "kv")
-    t = NdbTable(spark, path, key="k", n_buckets=2)
-    t.upsert(spark.createDataFrame([(1, "a")], "k bigint, v string"))
-    meta_path = os.path.join(path, "meta.json")
-    with open(meta_path) as fh:
-        meta = _json.load(fh)
-    meta.pop("columns", None)
-    meta.pop("evolved", None)
-    with open(meta_path, "w") as fh:
-        _json.dump(meta, fh)
-
-    t2 = NdbTable(spark, path, key="k")
-    with pytest.raises(ValueError, match="schema drift"):
-        t2.upsert(
-            spark.createDataFrame([(2, "b", 1)], "k bigint, v string, extra bigint")
-        )
-    t2.upsert(spark.createDataFrame([(2, "b")], "k bigint, v string"))
-    assert {r.k for r in t2.replay().collect()} == {1, 2}
-
-
 def test_ndb_compact_holds_writer_lock(spark, tmpdir):
-    """compact() takes the same advisory writer guard as upsert()
-    (ADVICE r12): a live foreign owner's lock makes it raise instead
-    of flipping the pointer over the other writer's version, and a
-    dead owner's lock is stolen so maintenance still proceeds."""
+    """compact() takes the same advisory writer guard as upsert(): a
+    live foreign owner's lock makes it raise instead of racing the
+    other writer's commit, and a dead owner's lock is stolen so
+    maintenance still proceeds."""
     from dbitool_spark.ndb import _proc_start_ticks
 
     path = os.path.join(tmpdir, "kv")
@@ -1143,26 +1147,34 @@ def test_ndb_commit_conflict_loser_raises_and_cleans_staging(spark, tmpdir):
     assert {r.k: r.v for r in t.replay().collect()} == {1: "a", 2: "b"}
 
 
-def test_ndb_markerless_debris_is_cleared_and_commit_retries(spark, tmpdir):
-    """A markerless v{gen} dir (pre-protocol crash debris — a
-    committed dir always carries its in-dir marker) must not block
-    the table forever: the next commit clears it once and publishes."""
+def test_ndb_markerless_dir_above_head_conflicts_untouched(spark, tmpdir):
+    """A non-empty markerless v{head+1} dir is no writer's output (a
+    committed dir always carries its in-dir marker, and GC only
+    removes generations at or below the retained window): it is
+    never a snapshot, the commit that collides with it raises
+    NdbWriteConflict, and the dir is left byte-identical."""
+    from dbitool_spark.ndb import NdbWriteConflict
+
     path = os.path.join(tmpdir, "kv")
     t = NdbTable(spark, path, key="k", n_buckets=2)
     t.upsert(spark.createDataFrame([(1, "a")], "k bigint, v string"))  # v0
 
-    debris = os.path.join(path, "v1")
-    os.makedirs(debris)
-    with open(os.path.join(debris, "junk.parquet"), "w") as fh:
+    foreign = os.path.join(path, "v1")
+    os.makedirs(foreign)
+    junk = os.path.join(foreign, "junk.parquet")
+    with open(junk, "w") as fh:
         fh.write("not parquet")
-    # debris is ignored as a snapshot and as the current gen
+    before = (os.listdir(foreign), os.stat(junk).st_ino, open(junk).read())
+    # ignored as a snapshot and as the current gen
     assert t._current_gen() == 0
     assert t.versions() == [0]
 
-    t.upsert(spark.createDataFrame([(2, "b")], "k bigint, v string"))
-    assert os.path.exists(os.path.join(path, "v1", "_committed"))
-    assert not os.path.exists(os.path.join(path, "v1", "junk.parquet"))
-    assert {r.k for r in t.replay().collect()} == {1, 2}
+    with pytest.raises(NdbWriteConflict, match="committed by another writer"):
+        t.upsert(spark.createDataFrame([(2, "b")], "k bigint, v string"))
+    assert (os.listdir(foreign), os.stat(junk).st_ino, open(junk).read()) == before
+    assert t.versions() == [0]
+    assert not [n for n in os.listdir(path) if n.startswith(".stage")]
+    assert {r.k for r in t.replay().collect()} == {1}
 
 
 def test_ndb_dead_writer_staging_is_reclaimed(spark, tmpdir):
@@ -1312,47 +1324,26 @@ def test_ndb_gc_clamp_never_deletes_newer_committed_heads(spark, tmpdir):
 
 
 def test_ndb_orphaned_graves_swept_displaced_commits_kept(spark, tmpdir):
-    """Grave-dir hygiene (ADVICE r13): markerless debris graves from
-    dead clearers are reclaimed by the GC sweep; a grave holding a
-    DISPLACED COMMITTED version (the restore-failed manual-inspection
-    case) is preserved; a live clearer's grave is left alone."""
+    """Grave-dir hygiene: stale-publish and unlogged-remnant graves
+    whose mover is dead are reclaimed by the GC sweep (a marker inside
+    one means nothing: it never held a live commit); a live mover's
+    grave is left alone."""
     path = os.path.join(tmpdir, "kv")
     t = NdbTable(spark, path, key="k", n_buckets=2)
     t.upsert(spark.createDataFrame([(1, "a")], "k bigint, v string"))
 
-    dead_grave = os.path.join(path, "v9.debris.pid99999999")
-    live_grave = os.path.join(path, "v8.debris.pid1")  # pid 1 is alive
-    displaced = os.path.join(path, "v7.debris.pid99999998")
+    dead_grave = os.path.join(path, "v9.unlogged.pid99999999")
+    live_grave = os.path.join(path, "v8.stale.pid1")  # pid 1 is alive
     stale_grave = os.path.join(path, "v6.stale.pid99999997")
-    for d in (dead_grave, live_grave, displaced, stale_grave):
+    for d in (dead_grave, live_grave, stale_grave):
         os.makedirs(d)
-    open(os.path.join(displaced, "_committed"), "w").close()
     open(os.path.join(stale_grave, "_committed"), "w").close()
 
     t.upsert(spark.createDataFrame([(2, "b")], "k bigint, v string"))
     assert not os.path.exists(dead_grave)  # swept
     assert not os.path.exists(stale_grave)  # stale publishes sweep too
     assert os.path.exists(live_grave)  # live owner: untouched
-    assert os.path.exists(displaced)  # displaced commit: preserved
     shutil.rmtree(live_grave)
-    shutil.rmtree(displaced)
-
-
-def test_ndb_flip_pointer_self_heals_to_committed_head(spark, tmpdir):
-    """_flip_pointer self-healing (ADVICE r13): a flip that lands
-    while the committed head is already higher (the interleaved
-    lower-generation flip) re-flips up to the head instead of leaving
-    the compat cache regressed."""
-    path = os.path.join(tmpdir, "kv")
-    t = NdbTable(spark, path, key="k", n_buckets=2, keep_versions=4)
-    for i in range(4):  # committed head v3
-        t.upsert(spark.createDataFrame([(1, f"x{i}")], "k bigint, v string"))
-
-    # simulate the regressed cache a slow lower-gen writer leaves
-    with open(os.path.join(path, "current"), "w") as fh:
-        fh.write("v0")
-    t._flip_pointer("v1")  # the slow writer's own (stale) flip
-    assert t._pointer_gen() == 3  # healed to the committed head
 
 
 def test_ndb_keep_versions_explicit_narrowing_honored(spark, tmpdir):
@@ -1782,10 +1773,11 @@ def test_ndb_manifest_reused_relpath_reprobed(spark, tmpdir):
 
 
 def test_ndb_manifest_v1_entries_still_read(spark, tmpdir):
-    """Backward compat: a v1 manifest (bare [lo, hi] / null entries,
-    pre-row-count format) still drives pruning, carries forward
-    verbatim through a hardlink inherit, and history() reports
-    n_rows=None for it rather than guessing."""
+    """A manifest not in the {"r", "n"} entry shape (here bare
+    [lo, hi] / null entries) is ignored like a missing one: history()
+    reports n_rows=None rather than guessing, a pruned upsert falls
+    back to footer probes (no error), and the next version's manifest
+    is written fresh in the one shape."""
     import json as _json
 
     path = os.path.join(tmpdir, "kv")
@@ -1807,8 +1799,8 @@ def test_ndb_manifest_v1_entries_still_read(spark, tmpdir):
     h0 = [r for r in t.history() if r["is_current"]][0]
     assert h0["n_rows"] is None  # v1 entries carry no counts
 
-    # a pruned upsert still selects off the v1 manifest (no error),
-    # and the carried entries stay v1 while fresh files get v2
+    # a pruned upsert probes footers instead (no error), and the next
+    # version's manifest is back in the {"r", "n"} shape
     t.upsert(spark.createDataFrame([(1, "b")], "k bigint, v string"))
     cur = t._current_dir()
     with open(os.path.join(cur, "_manifest.json")) as fh:
@@ -1823,7 +1815,7 @@ def test_ndb_commit_backend_seam_log_service(spark, tmpdir):
     authority from its own record instead of filesystem markers, and
     the whole table engine (upsert, pruning, retention, replay) runs
     unchanged through it."""
-    from dbitool_spark.ndb import CommitBackend, PosixCommitBackend
+    from dbitool_spark.ndb import CommitBackend
 
     class LogServiceBackend(CommitBackend):
         # authority lives HERE, not in _committed markers; data
@@ -1883,9 +1875,6 @@ def test_ndb_commit_backend_seam_log_service(spark, tmpdir):
     assert {r.k: r.v for r in t2.replay().collect()} == {
         1: "a", 2: "b", 3: "b", 4: "c",
     }
-    # non-fs backend never attempts debris-grave recovery
-    assert not ConflictOnce(backend).handles_fs_debris
-    assert PosixCommitBackend().handles_fs_debris
 
 def test_ndb_lookup_bucket_pruned(spark, tmpdir):
     """lookup() bucket-prunes the table side for left/inner/semi joins
@@ -2272,11 +2261,11 @@ def test_ndb_two_sqlite_logs_misconfigured_refuse(spark, tmpdir):
     """End-to-end instance-tag scenario: a table written under log A,
     then opened with a DIFFERENT sqlite log B (the misconfiguration
     the instance tag exists for). B's log knows none of the table's
-    committed generations — and the legacy `current` pointer would
-    steer B PAST them to fresh gen numbers, silently interleaving two
-    commit authorities (whose retention GC would then destroy each
-    other's data). verify_table refuses at OPEN. A's data survives;
-    A itself still works."""
+    committed generations, so B would number its commits from v0
+    underneath them, silently interleaving two commit authorities
+    (whose retention GC would then destroy each other's data).
+    verify_table refuses at OPEN. A's data survives; A itself still
+    works."""
     from dbitool_spark.ndb import SqliteCommitBackend
 
     path = os.path.join(tmpdir, "kv")
