@@ -5,30 +5,45 @@ The reference ties a DB_File hash: each incoming row overwrites the
 row stored under its key (hash semantics = last-write-wins in stream
 order), the table replays as a source in unordered key order, and the
 TODO (:61-72) earmarks it as the lookup/join side. The Spark-native
-realization is a parquet-backed keyed table:
+realization is a parquet-backed keyed table, MERGE-ON-READ (the
+Delta Lake / Iceberg MoR shape, Armbrust et al. VLDB 2020):
 
-- `upsert(df)` resolves the new batch against the stored state with
-  one key-partitioned window (max generation wins; within a batch an
-  explicit `order_by` — or deterministic struct-max — breaks ties,
-  since DataFrames have no stream order to inherit);
-- `replay()` is a parquet scan (schema stored in the footer — the
-  reference's `_col` entry for free);
-- `lookup(other, ...)` joins the table into a stream; small tables
-  broadcast, large ones shuffle on the key.
+- `upsert(df)` APPENDS: it resolves the batch within itself (an
+  explicit `order_by` — or a deterministic struct-max — breaks ties,
+  since DataFrames have no stream order to inherit), tags every row
+  with its generation (`__ndb_gen`) and key-hash bucket
+  (`__ndb_bucket`) as data columns, and writes ONE delta file. It
+  never reads the stored state, so a batch costs O(batch) whatever
+  the table size or key spread;
+- every read (`replay()`, `replay(as_of=)`, `lookup()`, the state
+  read of `merge_upsert`) resolves last-write-wins: per key, the row
+  with the highest `__ndb_gen` over the base files plus the deltas
+  wins. A version without deltas is a plain parquet scan; with
+  deltas, the base rows whose key a delta holds are dropped by an
+  anti-join against the delta keys (the fold bound keeps that side a
+  few batches, so the planner broadcasts it) and the deltas resolve
+  among themselves by one key window. `lookup` applies its bucket
+  and key-range filters to every source BEFORE resolving, so it only
+  resolves the probed buckets;
+- `compact()` is the FOLD: it merges the pending deltas into the
+  bucket files, rewriting only the buckets the deltas touch (and,
+  with files_per_bucket > 1, only the key-range files inside them the
+  deltas intersect); untouched buckets and range-missed files
+  hardlink forward byte-identical. `upsert` runs the fold itself once
+  a version holds more than _FOLD_AFTER deltas, which bounds what
+  every read resolves. With no deltas pending, `compact()` coalesces
+  buckets whose file count grew past files_per_bucket (OPTIMIZE).
 
-Scale: state is hive-partitioned into `n_buckets` key-hash bucket
-directories (`__ndb_bucket=<i>/`), and upsert is a BUCKET-PRUNED
-partial rewrite: only the buckets whose keys appear in the batch are
-read (partition pruning), merged, and rewritten; every untouched
-bucket's parquet files are HARDLINKED from the previous version —
-byte-identical, zero data movement (pytest pins this). A batch that
-touches b of n buckets therefore pays O(state*b/n + batch), which is
-the merge-on-parquet analogue of Delta/Iceberg MERGE's file pruning —
-that remains the production swap behind this same API, adding
-row-group-level skipping and a transaction log. Honest caveat: a
-batch whose keys spread uniformly (e.g. LSH bucket ids) touches all n
-buckets and degrades to the full rewrite; pruning pays off exactly
-when key locality exists (per-user/per-entity streams).
+ON-DISK FORMAT. Every committed version is one directory `v{gen}/`:
+`__ndb_bucket=<i>/` subdirectories holding the folded base (payload
+columns + `__ndb_gen`, the bucket as the hive partition), an optional
+`_delta/` subdirectory of `<gen>.parquet` files (payload + `__ndb_gen`
++ `__ndb_bucket`, one row per key each, named by the generation that
+wrote them — the underscore keeps Spark's file index from listing
+them in the base scan), the `_committed` marker and (when the key
+type serializes) `_manifest.json` with one entry per base AND delta
+file. Every file of the previous version hardlinks forward, so a
+commit costs its own delta plus one link per file.
 
 COMMIT PROTOCOL (optimistic concurrency, the Delta-log shape on a
 filesystem): every write builds its FULL version content — parquet
@@ -41,16 +56,15 @@ no torn state, no lost update, even with the advisory writer lock
 disabled. The committed-generation authority is the in-dir marker
 (max committed v{gen}) or the backend's commit log; nothing else
 names the head. A crashed writer leaves only an unpublished staging
-dir, GC'd once its pid is dead. Every committed version has one
-shape: `v{gen}/` holding only `__ndb_bucket=<i>/` subdirectories,
-the `_committed` marker and (when the key type serializes)
-`_manifest.json`. Honest scope: atomic rename is a local/POSIX-
-filesystem guarantee — on S3-class object stores the same protocol
-needs a log/CAS service, exactly as Delta/Iceberg require there.
-That swap is a named SEAM: CommitBackend (committed_gens +
-rename_cas) with the shipped PosixCommitBackend; implement those two
-calls against a conditional-put log service and the rest of the
-engine carries over unchanged.
+dir, GC'd once its pid is dead. A fold is an ordinary commit of its
+own generation: the snapshot it publishes reads exactly like the one
+before it. Honest scope: atomic rename is a local/POSIX-filesystem
+guarantee — on S3-class object stores the same protocol needs a
+log/CAS service, exactly as Delta/Iceberg require there. That swap is
+a named SEAM: CommitBackend (committed_gens + rename_cas) with the
+shipped PosixCommitBackend; implement those two calls against a
+conditional-put log service and the rest of the engine carries over
+unchanged.
 SqliteCommitBackend is the shipped REFERENCE log backend — commit
 authority in an ACID sqlite table, the insert and the data rename
 bracketed by one transaction — proving the seam with a real
@@ -79,17 +93,27 @@ _LOCK = ".writer_lock"
 # prefix keeps parquet readers from treating it as data.
 _COMMITTED = "_committed"
 # per-version file-range manifest (the Delta/Iceberg checkpoint
-# analog at this module's scale): {relpath: [key_min, key_max] |
-# null} for every data file, written INTO the staging dir so the
+# analog at this module's scale): {relpath: {"r": [key_min, key_max]
+# | null, "n": rows}} for every base and delta file, written INTO the
+# staging dir so the
 # commit rename publishes data + manifest atomically. Each file's
 # range is footer-probed ONCE at creation; carried files inherit
-# their entry by relpath (hardlinks keep relpaths stable), so pruned
-# upserts and compact selection stop re-probing stored files on
-# every write — at object-store scale that turns per-file GETs into
+# their entry by relpath (hardlinks keep relpaths stable), so folds
+# and compact selection stop re-probing stored files on every
+# write — at object-store scale that turns per-file GETs into
 # one small JSON read. Optional everywhere: a version without one
 # (non-JSON-serializable key types, e.g. dates) falls back to footer
 # probes.
 _MANIFEST = "_manifest.json"
+# merge-on-read delta files (one `<gen>.parquet` per upsert) live in
+# this subdir of a version dir; the underscore keeps Spark's file
+# index from listing them in the base (`__ndb_bucket=<i>/`) scan
+_DELTA = "_delta"
+# the fold bound: an upsert whose version holds more delta files than
+# this folds them into the bucket files (one more commit by the same
+# writer). Each read resolves base + deltas, so read cost grows with
+# the delta count; see ROADMAP "ndb commit" for the measurement
+_FOLD_AFTER = 8
 
 
 class NdbWriteConflict(RuntimeError):
@@ -469,10 +493,10 @@ class NdbTable:
         # dirs are retained across upserts/compactions and replay(
         # as_of=gen) reads any retained snapshot — the transaction-log
         # facility of the Delta/Iceberg swap, on plain parquet.
-        # Retention is CHEAP by construction: untouched buckets and
-        # range-missed files hardlink forward between versions, so K
-        # snapshots share inodes and cost only the per-version
-        # rewritten deltas, exactly like a table format's log. The
+        # Retention is CHEAP by construction: every file a commit did
+        # not write hardlinks forward between versions, so K snapshots
+        # share inodes and cost only each version's own delta (or
+        # fold output), exactly like a table format's log. The
         # default None means "2 for a new table, meta's value on
         # reopen"; an EXPLICIT arg wins on reopen in both directions
         # (max(meta, arg) would silently ignore an explicit smaller
@@ -504,21 +528,20 @@ class NdbTable:
         self._evolved = False  # any evolution recorded in meta
         self._columns: list[str] | None = None  # stored payload columns
         # files_per_bucket > 1 enables INTRA-bucket pruning: each
-        # bucket's data is written as ~this many key-RANGE files,
-        # sorted by key inside each file (tight
-        # parquet row-group min/max stats), so a pruned upsert reads
-        # only the files whose key range intersects the batch's
-        # per-bucket key range and HARDLINKS the rest forward —
-        # O(state*b/n * hit_fraction + batch) when key locality
-        # exists. Range disjointness is PRESERVED across upserts
-        # (see compact()); what accumulates is small files — each
-        # pruned upsert replaces the intersecting files with
-        # ~files_per_bucket new ones — and compact() is the bounded
-        # OPTIMIZE analog that coalesces them.
+        # bucket's base is written as ~this many key-RANGE files,
+        # sorted by key inside each file (tight parquet row-group
+        # min/max stats), so a fold reads only the files whose key
+        # range intersects the deltas' per-bucket key range and
+        # HARDLINKS the rest forward — O(state*b/n * hit_fraction +
+        # deltas) when key locality exists. Range disjointness is
+        # PRESERVED across folds (see compact()); what accumulates is
+        # small files — each fold replaces the intersecting files with
+        # ~files_per_bucket new ones — and compact() on a delta-free
+        # head is the bounded OPTIMIZE analog that coalesces them.
         self.files_per_bucket = max(1, int(files_per_bucket))
-        #: observability: stats of the last pruned upsert's intra-
-        #: bucket file selection ({} until a files_per_bucket>1 table
-        #: prunes) — read by pytest and by curious operators.
+        #: observability: stats of the last fold's intra-bucket file
+        #: selection ({} until a files_per_bucket>1 table folds) —
+        #: read by pytest and by curious operators.
         self.last_prune_stats: dict = {}
         #: observability: the last lookup()'s bucket/range selection
         #: ({} until a prunable lookup runs — same contract as
@@ -729,7 +752,75 @@ class NdbTable:
         current = self._current_dir()
         if current is None:
             return None
-        return self._reader().parquet(current)
+        return self._read(current)
+
+    @staticmethod
+    def _delta_files(version_dir: str) -> list[str]:
+        """The version's delta files, oldest generation first (names
+        are zero-padded generations, so name order is gen order)."""
+        ddir = os.path.join(version_dir, _DELTA)
+        if not os.path.isdir(ddir):
+            return []
+        return sorted(
+            os.path.join(ddir, n)
+            for n in os.listdir(ddir)
+            if not n.startswith((".", "_"))
+        )
+
+    def _newest(self, rows: DataFrame) -> DataFrame:
+        """One row per key: the one with the highest generation. Each
+        generation holds at most one row per key, so the order is
+        total."""
+        w = Window.partitionBy(self.key).orderBy(F.desc(_GEN))
+        return (
+            rows.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1)
+            .drop("__rn")
+        )
+
+    def _read(
+        self,
+        version_dir: str,
+        *,
+        buckets: list[int] | None = None,
+        key_range: tuple | None = None,
+    ) -> DataFrame:
+        """The version's visible rows (with _GEN and _BUCKET), one per
+        key: last-write-wins over the base bucket files plus the
+        deltas. `buckets`/`key_range` narrow EVERY source before the
+        resolution — both depend only on the key, so all versions of a
+        key are kept or dropped together. Without deltas this is the
+        plain (partition-pruned) scan. With them, base rows whose key
+        any delta holds are dropped by a null-safe anti-join against
+        the delta keys — at most _FOLD_AFTER + 1 batches, so on a table
+        much larger than a batch the planner broadcasts them and the
+        base scan does not shuffle — and the deltas resolve among
+        themselves by one key window."""
+        reader = self._reader()
+
+        def narrow(df: DataFrame) -> DataFrame:
+            if buckets is not None:
+                df = df.filter(F.col(_BUCKET).isin([int(b) for b in buckets]))
+            if key_range is not None:
+                lo, hi = key_range
+                df = df.filter(F.col(self.key).between(F.lit(lo), F.lit(hi)))
+            return df
+
+        base = (
+            narrow(reader.parquet(version_dir))
+            if self._bucket_dirs(version_dir)
+            else None
+        )
+        deltas = self._delta_files(version_dir)
+        if not deltas:
+            return base
+        rows = narrow(reader.parquet(*deltas))
+        delta = self._newest(rows) if len(deltas) > 1 else rows
+        if base is None:
+            return delta
+        keys = rows.select(self.key)
+        kept = base.join(keys, base[self.key].eqNullSafe(keys[self.key]), "left_anti")
+        return kept.unionByName(delta, allowMissingColumns=self._evolved)
 
     def _bucket_expr(self):
         return F.pmod(F.xxhash64(F.col(self.key)), F.lit(self.n_buckets)).cast("int")
@@ -833,7 +924,7 @@ class NdbTable:
         the previous manifest's entry by relpath — verified by
         os.path.samefile so a reused relpath with FRESH content is
         re-probed instead of silently inheriting a stale range (a
-        carried stale range would mis-prune the next upsert); freshly
+        carried stale range would mis-prune the next fold); freshly
         written files are footer-probed ONCE here, capturing key range
         AND row count in the same read (entries {"r": [lo, hi] | null,
         "n": rows}). Written before the commit rename, so it publishes
@@ -871,41 +962,30 @@ class NdbTable:
             fh.write(payload)
 
     def _split_touched_files(
-        self, batch: DataFrame, current: str,
-        bucket_dirs: dict[int, str], touched: list[int],
-        rng: dict | None = None,
+        self, current: str, bucket_dirs: dict[int, str],
+        touched: list[int], rng: dict,
     ) -> tuple[list[str], list[str]]:
         """Intra-bucket pruning (files_per_bucket > 1): partition the
-        touched buckets' data files into (read_files, carry_files) by
-        intersecting each file's footer key range with the batch's
-        per-bucket key range. A carry file's range is DISJOINT from
-        the batch's [min, max], so it cannot hold any batch key — it
-        hardlinks forward untouched and per-key uniqueness survives.
-        Range-vs-range (not range-vs-key-set) keeps the driver edge
-        bounded: one n_buckets-row aggregate plus one footer per
-        touched-bucket file.
+        touched buckets' base files into (read_files, carry_files) by
+        intersecting each file's footer key range with the deltas'
+        per-bucket key range `rng` ({bucket: (lo, hi)}). A carry
+        file's range is DISJOINT from the deltas' [min, max], so it
+        cannot hold any delta key — it hardlinks forward untouched and
+        per-key uniqueness survives. Range-vs-range (not
+        range-vs-key-set) keeps the driver edge bounded: one
+        n_buckets-row aggregate plus one manifest entry (or footer)
+        per touched-bucket file.
 
         Domain gate (review finding): footer statistics live in
         pyarrow's value domain — bytes decode to str, timestamps come
-        back as naive-UTC datetimes — while the batch range is
+        back as naive-UTC datetimes — while the delta range is
         Spark-collected (bytearray; session-timezone datetimes). The
         comparison is only sound for key types whose two domains
-        coincide (ints, strings, floats, decimals, dates); anything
-        else (binary, timestamps) reads every touched-bucket file —
-        the safe over-read, never a TypeError or a tz-offset
-        mis-carry that would duplicate keys."""
-        if rng is None and self._range_safe_key_type():
-            # fallback probe for callers that did not pre-collect the
-            # ranges in their touched-set job (upsert normally passes
-            # rng — this job only runs on the _touched path)
-            rng = {
-                r[0]: (r[1], r[2])
-                for r in batch.groupBy(_BUCKET)
-                .agg(F.min(self.key).alias("lo"), F.max(self.key).alias("hi"))
-                .collect()
-            }
-        elif rng is None:
-            rng = {}  # lo=None per bucket -> every file reads
+        coincide (ints, strings, floats, decimals, dates); for
+        anything else (binary, timestamps) the caller passes no
+        ranges and every touched-bucket file is read — the safe
+        over-read, never a TypeError or a tz-offset mis-carry that
+        would duplicate keys."""
         manifest = self._load_manifest(current)
         read: list[str] = []
         carry: list[str] = []
@@ -937,31 +1017,23 @@ class NdbTable:
         df: DataFrame,
         *,
         order_by: str | list[str] | None = None,
-        prune: bool = True,
-        _touched: list[int] | None = None,
     ) -> None:
-        """Merge a batch: per key, the newest generation wins; within
+        """Append a batch: per key, the newest generation wins; within
         this batch, `order_by` desc wins (defaults to a deterministic
         struct-max over all non-key columns — DataFrames carry no
         stream order, so unordered batches need an explicit rule).
 
-        Bucket-pruned: only the hash buckets whose keys occur in the
-        batch are read/merged/rewritten; untouched buckets hardlink
-        from the previous version (module docstring). The touched-
-        bucket set is one bounded collect (n_buckets rows); on
-        files_per_bucket>1 tables that same aggregation also carries
-        the per-bucket key ranges the intra-bucket file prune needs
-        (no second collect job). prune=False skips the probe job and
-        does the full merge-rewrite — measured ~0.2s/upsert cheaper
-        when the caller KNOWS its keys spread over every bucket
-        (uniform hash keys, e.g. an LSH index), where the prune job
-        can never pay for itself.
-
-        _touched (internal): a caller that already collected the
-        batch's bucket set in its own bounded job (merge_upsert)
-        passes it here, skipping this upsert's probe job — and, on
-        files_per_bucket=1 tables, the batch persist whose only
-        second consumer that job was."""
+        Merge-on-read (module docstring): the batch is resolved within
+        itself, tagged with this commit's generation and each row's
+        key-hash bucket, and written as ONE delta file into the staged
+        version; every file of the previous version hardlinks forward.
+        The stored state is never read, so the cost is O(batch) — one
+        job for the resolution and the write — whatever the table
+        size or how many buckets the keys spread over. Once the
+        committed version holds more than _FOLD_AFTER deltas the same
+        call folds them (compact()); a conflict lost by that fold is
+        left to the next upsert, because this batch is already
+        committed and a retry would apply it twice."""
         if self.key not in df.columns:
             raise ValueError(f"key {self.key!r} not in columns {df.columns}")
         claimed = [
@@ -976,23 +1048,21 @@ class NdbTable:
                 f"{df.columns}"
             )
         owns_lock = self._acquire_writer_lock()
-        batch_persisted = False
-        batch: DataFrame = df
         try:
             # the schema-authority snapshot must be CURRENT for the
             # decisions below: re-read meta under the writer lock
             # (review finding: a writer instance whose cached snapshot
-            # predates another process's schema evolution would read
-            # touched buckets without mergeSchema, rewrite them without
-            # the evolved column — silent data loss — then regress meta)
+            # predates another process's schema evolution would write
+            # without recording the evolution, and every read after
+            # would skip mergeSchema — then regress meta)
             self._refresh_schema_state()
             # the bucket hash (xxhash64) is TYPE-sensitive: the same key
             # value under a drifted dtype (int vs bigint, int vs string)
-            # hashes to a different bucket, the pruned read would miss
-            # the stored row's bucket, and replay would silently return
-            # TWO rows for one key. Pin the key dtype in meta at first
-            # write and refuse drifted batches loudly — casting silently
-            # could corrupt keys (e.g. string->int nulls).
+            # hashes to a different bucket, a fold would rewrite the
+            # wrong bucket and replay would silently return TWO rows
+            # for one key. Pin the key dtype in meta at first write and
+            # refuse drifted batches loudly — casting silently could
+            # corrupt keys (e.g. string->int nulls).
             batch_key_type = df.schema[self.key].dataType.simpleString()
             if self._key_type is not None and batch_key_type != self._key_type:
                 raise ValueError(
@@ -1023,188 +1093,48 @@ class NdbTable:
                         "union by name with NULL backfill, or align the batch"
                     )
                 # schema EVOLUTION: record it so every future read
-                # merges parquet footers (version dirs now
-                # legitimately hold mixed-schema files via hardlink
-                # carryover)
+                # merges parquet footers (a version now legitimately
+                # holds mixed-schema base and delta files)
                 new_evolved = True
                 new_columns = sorted(set(known) | set(payload))
             else:
                 new_columns = known
-            current = self._current_dir()
             prev_gen = self._current_gen()
+            current = (
+                None if prev_gen is None
+                else os.path.join(self.path, f"v{prev_gen}")
+            )
             gen = 0 if prev_gen is None else prev_gen + 1
+            if order_by is None:
+                others = [c for c in df.columns if c != self.key]
+                tie = (
+                    [F.struct(*[F.col(c) for c in others]).alias("__tie")]
+                    if others
+                    else []
+                )
+            else:
+                cols = [order_by] if isinstance(order_by, str) else list(order_by)
+                tie = [F.col(c) for c in cols]
             batch = df.withColumn(_GEN, F.lit(gen).cast("long")).withColumn(
                 _BUCKET, self._bucket_expr()
             )
-            batch_rng: dict | None = None
-            if prune and _touched is not None:
-                # the caller already collected the batch's bucket set
-                # in its own bounded aggregation — skip this upsert's
-                # probe job. On files_per_bucket=1 tables the write
-                # below is then the batch lineage's
-                # single evaluation, so the persist goes too; on
-                # files_per_bucket>1 the range probe still reads the
-                # batch, so the persist stays.
-                touched: list[int] | None = sorted(int(t) for t in _touched)
-                if self.files_per_bucket > 1:
-                    batch = batch.persist()
-                    batch_persisted = True
-            elif prune:
-                # persisted: the batch lineage feeds BOTH the
-                # touched-set probe and the merged write below —
-                # without this an expensive upstream transform would
-                # evaluate twice per upsert
-                batch = batch.persist()
-                batch_persisted = True
-                if self.files_per_bucket > 1 and self._range_safe_key_type():
-                    # ONE bounded aggregation serves BOTH driver edges
-                    # of the intra-bucket pruned path — the
-                    # touched-bucket set AND the per-bucket key ranges
-                    # _split_touched_files needs. Either way at most
-                    # n_buckets rows cross the driver edge.
-                    rng_rows = (
-                        batch.groupBy(_BUCKET)
-                        .agg(
-                            F.min(self.key).alias("lo"),
-                            F.max(self.key).alias("hi"),
-                        )
-                        .collect()
-                    )
-                    touched = sorted(int(r[0]) for r in rng_rows)
-                    batch_rng = {int(r[0]): (r[1], r[2]) for r in rng_rows}
-                else:
-                    # bounded by n_buckets values — the prune driver edge
-                    touched = sorted(
-                        r[0] for r in batch.select(_BUCKET).distinct().collect()
-                    )
-            else:
-                touched = None  # full merge-rewrite; nothing links
-
-            bucket_dirs = self._bucket_dirs(current) if current is not None else {}
-            carry_files: list[str] = []  # intra-bucket carryover links
-            merged: DataFrame | None
-            if current is None:
-                merged = batch
-            elif touched is None:
-                # prune=False: read the whole state, rewrite every bucket
-                state = self._reader().parquet(current)
-                merged = state.unionByName(batch, allowMissingColumns=self.evolve_schema)
-            elif touched:
-                if self.files_per_bucket > 1:
-                    # intra-bucket file pruning: read only the touched
-                    # buckets' files whose key range intersects the
-                    # batch; the rest hardlink forward below
-                    read_files, carry_files = self._split_touched_files(
-                        batch, current, bucket_dirs, touched, rng=batch_rng
-                    )
-                    self.last_prune_stats = {
-                        "touched_buckets": len(touched),
-                        "files_read": len(read_files),
-                        "files_carried": len(carry_files),
-                        "bytes_read": sum(os.path.getsize(p) for p in read_files),
-                        "bytes_carried": sum(
-                            os.path.getsize(p) for p in carry_files
-                        ),
-                    }
-                    if read_files:
-                        state = self._reader().option(
-                            "basePath", current
-                        ).parquet(*read_files)
-                        merged = state.unionByName(batch, allowMissingColumns=self.evolve_schema)
-                    else:
-                        merged = batch  # all-new key ranges: nothing to merge
-                else:
-                    # partition-pruned read: the touched buckets' files
-                    state = self._reader().parquet(current).filter(
-                        F.col(_BUCKET).isin([int(t) for t in touched])
-                    )
-                    merged = state.unionByName(batch, allowMissingColumns=self.evolve_schema)
-            else:
-                merged = None  # empty batch: pure link-forward version
-
+            w = Window.partitionBy(self.key).orderBy(
+                F.desc(_GEN), *[F.desc(t) for t in tie]
+            )
+            resolved = (
+                batch.withColumn("__rn", F.row_number().over(w))
+                .filter(F.col("__rn") == 1)
+                .drop("__rn")
+            )
             # build the full version in a private staging dir; the
             # atomic rename in _commit_version publishes it (see the
             # module docstring's commit protocol)
             out_dir = self._staging_dir(gen)
-            if merged is None:
-                os.makedirs(out_dir, exist_ok=True)
-            else:
-                if order_by is None:
-                    others = [c for c in df.columns if c != self.key]
-                    tie = (
-                        [F.struct(*[F.col(c) for c in others]).alias("__tie")]
-                        if others
-                        else []
-                    )
-                else:
-                    cols = [order_by] if isinstance(order_by, str) else list(order_by)
-                    tie = [F.col(c) for c in cols]
-                w = Window.partitionBy(self.key).orderBy(
-                    F.desc(_GEN), *[F.desc(t) for t in tie]
-                )
-                resolved = (
-                    merged.withColumn("__rn", F.row_number().over(w))
-                    .filter(F.col("__rn") == 1)
-                    .drop("__rn")
-                )
-                if touched != []:  # [] = an empty first batch: no rows
-                    n_parts = len(touched) if touched else self.n_buckets
-                    if self.files_per_bucket > 1:
-                        # key-RANGE files inside each bucket, sorted by
-                        # key within each file: tight row-group min/max
-                        # stats (predicate scans skip row groups) and
-                        # the footer ranges _split_touched_files prunes
-                        # on next upsert. A range partition straddling
-                        # a bucket boundary just writes one small file
-                        # into each side — correctness is unaffected.
-                        shaped = resolved.repartitionByRange(
-                            max(n_parts, 1) * self.files_per_bucket,
-                            F.col(_BUCKET),
-                            F.col(self.key),
-                        ).sortWithinPartitions(_BUCKET, self.key)
-                    else:
-                        shaped = resolved.repartition(
-                            max(n_parts, 1), F.col(_BUCKET)
-                        )
-                    (
-                        shaped.write.partitionBy(_BUCKET)
-                        .mode("overwrite")
-                        .parquet(out_dir)
-                    )
-                if touched == [] or not self._bucket_dirs(out_dir):
-                    # zero rows (an empty batch creating the table,
-                    # prune on or off): a partitioned write of nothing
-                    # leaves no readable footer, so write one zero-row
-                    # schema-carrying file into bucket 0 — the version
-                    # keeps the one bucket layout
-                    resolved.drop(_BUCKET).coalesce(1).write.parquet(
-                        os.path.join(out_dir, f"{_BUCKET}=0")
-                    )
-            # hardlink everything the batch did not touch from the
-            # previous version into the new one — byte-identical carryover.
-            # touched=None means EVERYTHING was rewritten (prune=False):
-            # linking then would merge stale files into freshly-written
-            # bucket dirs, so nothing may link.
-            if current is not None and touched is not None:
-                keep = set(touched)
-                for bval, name in bucket_dirs.items():
-                    if bval not in keep:
-                        _link_tree(
-                            os.path.join(current, name), os.path.join(out_dir, name)
-                        )
-                # intra-bucket carryover: files inside TOUCHED buckets
-                # whose key range the batch provably missed
-                # (files_per_bucket > 1 path) — hardlinked alongside the
-                # freshly written range files; Spark part-file names are
-                # UUID-unique so no collision
-                for src in carry_files:
-                    rel = os.path.relpath(src, current)
-                    dst = os.path.join(out_dir, rel)
-                    os.makedirs(os.path.dirname(dst), exist_ok=True)
-                    try:
-                        os.link(src, dst)
-                    except OSError:
-                        shutil.copy2(src, dst)
+            shutil.rmtree(out_dir, ignore_errors=True)
+            os.makedirs(out_dir)
+            if current is not None:
+                self._carry(current, out_dir)
+            self._write_delta(resolved, out_dir, gen)
             self._write_manifest(out_dir, current)
             if new_evolved and not self._evolved:
                 # persist the MONOTONE evolved flag BEFORE the commit
@@ -1219,7 +1149,7 @@ class NdbTable:
                 # loser's retry into a spurious drop-evolution).
                 self._evolved = True
                 self._write_meta()
-            self._commit_version(out_dir, gen)
+            final = self._commit_version(out_dir, gen)
             # the commit published: NOW the schema decisions become
             # instance + meta state (a conflict loser never gets here)
             self._key_type = new_key_type
@@ -1227,11 +1157,45 @@ class NdbTable:
             self._evolved = new_evolved
             self._write_meta()
             self._gc_versions(keep=self._retention_keep(gen))
+            if len(self._delta_files(final)) > _FOLD_AFTER:
+                try:
+                    self._fold_locked()
+                except NdbWriteConflict:
+                    pass  # a racer moved the head; the next upsert folds
         finally:
             if owns_lock:
                 self._release_writer_lock()
-            if batch_persisted:
-                batch.unpersist()
+
+    def _carry(
+        self, current: str, out_dir: str, *,
+        skip_buckets: set[int] = frozenset(), deltas: bool = True,
+    ) -> None:
+        """Hardlink the previous version's data forward into the staged
+        one: every bucket dir not in `skip_buckets` and, when `deltas`,
+        the delta files — byte-identical carryover at zero copy cost.
+        The marker and the manifest are per-version and never carry."""
+        for bval, name in self._bucket_dirs(current).items():
+            if bval not in skip_buckets:
+                _link_tree(os.path.join(current, name), os.path.join(out_dir, name))
+        if deltas and os.path.isdir(os.path.join(current, _DELTA)):
+            _link_tree(os.path.join(current, _DELTA), os.path.join(out_dir, _DELTA))
+
+    @staticmethod
+    def _write_delta(rows: DataFrame, out_dir: str, gen: int) -> None:
+        """Write `rows` as the one delta file `_delta/<gen>.parquet` of
+        the staged version: a single writer task (maxRecordsPerFile
+        pinned off so a session conf cannot split it), then the part
+        file is renamed into place. A zero-row batch still writes one
+        schema-carrying file."""
+        ddir = os.path.join(out_dir, _DELTA)
+        tmp = os.path.join(ddir, f".write-{gen}")
+        rows.coalesce(1).write.option("maxRecordsPerFile", 0).parquet(tmp)
+        (part,) = [
+            n for n in os.listdir(tmp)
+            if n.endswith(".parquet") and not n.startswith((".", "_"))
+        ]
+        os.rename(os.path.join(tmp, part), os.path.join(ddir, f"{gen:012d}.parquet"))
+        shutil.rmtree(tmp)
 
     def _acquire_writer_lock(self) -> bool:
         """Take the advisory writer lock. Returns True when THIS call
@@ -1358,12 +1322,17 @@ class NdbTable:
         """Retained-snapshot audit, oldest first — the DESCRIBE
         HISTORY analog of the Delta/Iceberg swap this module
         documents. Per generation: commit-marker mtime (the publish
-        instant), data file count, total bytes, DISTINCT inode bytes
-        (what this snapshot would actually free on GC — hardlink
-        carry means most bytes are shared with neighbors), whether it
-        is the current head, and manifest presence. Pure driver-side
-        metadata (os.walk over <= keep_versions dirs); never reads
-        data."""
+        instant), data file count (base + delta), the number of
+        pending delta files, total bytes, DISTINCT inode bytes (what
+        this snapshot would actually free on GC — hardlink carry means
+        most bytes are shared with neighbors), whether it is the
+        current head, and manifest presence. n_rows is the visible
+        row count, known from the manifest only for a version without
+        deltas: a delta row may replace a base row or an older delta
+        row, so summing file counts would overstate it — with deltas
+        pending n_rows is None (fold first for an exact count). Pure
+        driver-side metadata (os.walk over <= keep_versions dirs);
+        never reads data."""
         out = []
         cur = self._current_gen()
         for g in self.versions():
@@ -1381,11 +1350,12 @@ class NdbTable:
                     if st.st_nlink == 1:
                         own += st.st_size
             # row count from the manifest when EVERY entry carries one
-            # ("n"); a missing manifest -> None (the honest answer —
-            # history() never reads data to find out)
+            # ("n") and no delta is pending; otherwise None (the honest
+            # answer — history() never reads data to find out)
             man = self._load_manifest(vdir)
+            n_deltas = len(self._delta_files(vdir))
             n_rows = None
-            if man is not None:
+            if man is not None and not n_deltas:
                 counts = [e.get("n") for e in man.values()]
                 if all(c is not None for c in counts):
                     n_rows = sum(counts)
@@ -1396,6 +1366,7 @@ class NdbTable:
                         os.path.join(vdir, _COMMITTED)
                     ).st_mtime,
                     "n_files": n_files,
+                    "n_deltas": n_deltas,
                     "n_rows": n_rows,
                     "total_bytes": total,
                     "exclusive_bytes": own,
@@ -1485,44 +1456,141 @@ class NdbTable:
                         shutil.rmtree(full, ignore_errors=True)
 
     def compact(self, buckets: list[int] | None = None) -> list[int]:
-        """Coalesce buckets that have accumulated too many small data
-        files back to ~files_per_bucket fresh sorted range files — the
-        OPTIMIZE analog of the Delta/Iceberg swap this module
-        documents. Range-intersection selection plus range-partitioned
-        rewrite PRESERVES range disjointness across upserts (a carried
-        file never overlaps the batch span, and every stored file the
-        new span could reach gets selected — induction from the
-        disjoint first write), so pruning never degrades by overlap;
-        what grows is the FILE COUNT (each pruned upsert replaces the
-        intersecting files with ~files_per_bucket new ones), costing a
-        footer probe + file open per upsert. Compaction rewrites the
-        affected buckets only; untouched buckets hardlink forward into
-        a new version dir that commits after the write, so a crashed
-        compaction never corrupts the live state (same
-        contract as upsert; state is already one row per key, no merge
-        window needed). Returns the bucket ids rewritten.
+        """Table maintenance; returns the bucket ids rewritten ([] when
+        there is nothing to do).
 
-        Default bucket selection (bounded: one driver-side footer
-        probe per file): more data files than files_per_bucket, any
-        file missing key statistics, or — the belt-and-braces check
-        for states not written by this module's invariant-preserving
-        path — overlapping footer ranges.
+        With deltas pending, compact() is the FOLD: the deltas merge
+        into the bucket files and the new version holds none. Only the
+        buckets the deltas touch are read and rewritten (one bounded
+        aggregation over the deltas finds them); on files_per_bucket>1
+        tables only the key-range files intersecting the deltas'
+        per-bucket key range are read, and the rest hardlink forward —
+        last_prune_stats records that selection. Untouched buckets
+        hardlink forward byte-identical. upsert() runs the fold itself
+        once a version holds more than _FOLD_AFTER deltas. Range-
+        intersection selection plus range-partitioned rewrite
+        PRESERVES range disjointness across folds (a carried file never
+        overlaps the deltas' span, and every stored file the span
+        could reach gets selected), so pruning never degrades by
+        overlap; what grows is the FILE COUNT (each fold replaces the
+        intersecting files with ~files_per_bucket new ones).
 
-        Holds the same advisory writer lock as upsert()/merge_upsert()
-        for the whole read-rewrite-commit: an unguarded compact
-        racing a cross-process upsert would leave one of them to lose
-        its rewrite to NdbWriteConflict."""
+        With no deltas pending, compact() is the OPTIMIZE analog that
+        bounds that growth: it coalesces the selected buckets (default:
+        more data files than files_per_bucket, a file missing key
+        statistics, or overlapping footer ranges; or the explicit
+        `buckets`) back to <= files_per_bucket sorted range files. So
+        compact() until it returns [] leaves a fully folded and
+        coalesced table.
+
+        Either way the rewrite commits as a new version through the
+        same stage-then-rename protocol as upsert (a crashed
+        compaction never corrupts the live state) and holds the same
+        advisory writer lock: an unguarded compact racing a
+        cross-process upsert would leave one of them to lose its
+        write to NdbWriteConflict."""
         owns_lock = self._acquire_writer_lock()
         try:
-            return self._compact_locked(buckets)
+            current = self._current_dir()
+            if current is None:
+                raise ValueError(f"ndb table at {self.path} is empty")
+            if self._delta_files(current):
+                return self._fold_locked()
+            return self._compact_locked(current, buckets)
         finally:
             if owns_lock:
                 self._release_writer_lock()
 
-    def _compact_locked(self, buckets: list[int] | None) -> list[int]:
-        current = self._current_dir()
-        if current is None:
-            raise ValueError(f"ndb table at {self.path} is empty")
+    def _fold_locked(self) -> list[int]:
+        """Fold the head's deltas into its bucket files (compact()'s
+        first mode; the caller holds the writer lock)."""
+        prev_gen = self._current_gen()
+        current = os.path.join(self.path, f"v{prev_gen}")
+        gen = prev_gen + 1
+        deltas = self._reader().parquet(*self._delta_files(current))
+        bucket_dirs = self._bucket_dirs(current)
+        # ONE bounded aggregation (<= n_buckets rows) gives the touched
+        # buckets and, where the key domain allows range pruning
+        # (_split_touched_files), each bucket's delta key range
+        ranged = self.files_per_bucket > 1 and self._range_safe_key_type()
+        aggs = (
+            [F.min(self.key).alias("lo"), F.max(self.key).alias("hi")]
+            if ranged
+            else [F.count(F.lit(1)).alias("n")]
+        )
+        rows = deltas.groupBy(_BUCKET).agg(*aggs).collect()
+        touched = sorted(int(r[0]) for r in rows)
+        rng = {int(r[0]): (r[1], r[2]) for r in rows} if ranged else {}
+        carry_files: list[str] = []
+        state: DataFrame | None = None
+        if self.files_per_bucket > 1:
+            read_files, carry_files = self._split_touched_files(
+                current, bucket_dirs, touched, rng
+            )
+            self.last_prune_stats = {
+                "touched_buckets": len(touched),
+                "files_read": len(read_files),
+                "files_carried": len(carry_files),
+                "bytes_read": sum(os.path.getsize(p) for p in read_files),
+                "bytes_carried": sum(os.path.getsize(p) for p in carry_files),
+            }
+            if read_files:
+                state = self._reader().option("basePath", current).parquet(*read_files)
+        elif bucket_dirs and touched:
+            state = self._reader().parquet(current).filter(F.col(_BUCKET).isin(touched))
+        merged = (
+            deltas if state is None
+            else state.unionByName(deltas, allowMissingColumns=self._evolved)
+        )
+        resolved = self._newest(merged)
+        out_dir = self._staging_dir(gen)  # stage-then-commit protocol
+        shutil.rmtree(out_dir, ignore_errors=True)
+        if touched:
+            n_parts = len(touched)
+            if self.files_per_bucket > 1:
+                # key-RANGE files inside each bucket, sorted by key
+                # within each file: tight row-group min/max stats
+                # (predicate scans skip row groups) and the footer
+                # ranges _split_touched_files prunes on the next fold.
+                # A range partition straddling a bucket boundary just
+                # writes one small file into each side — correctness
+                # is unaffected.
+                shaped = resolved.repartitionByRange(
+                    n_parts * self.files_per_bucket, F.col(_BUCKET), F.col(self.key)
+                ).sortWithinPartitions(_BUCKET, self.key)
+            else:
+                shaped = resolved.repartition(n_parts, F.col(_BUCKET))
+            shaped.write.partitionBy(_BUCKET).mode("overwrite").parquet(out_dir)
+        elif not bucket_dirs:
+            # only zero-row deltas and no base: a partitioned write of
+            # nothing leaves no readable footer, so write one zero-row
+            # schema-carrying file into bucket 0 — the version keeps
+            # the one bucket layout
+            resolved.drop(_BUCKET).coalesce(1).write.parquet(
+                os.path.join(out_dir, f"{_BUCKET}=0")
+            )
+        os.makedirs(out_dir, exist_ok=True)
+        self._carry(current, out_dir, skip_buckets=set(touched), deltas=False)
+        # intra-bucket carryover: files inside TOUCHED buckets whose
+        # key range the deltas provably missed — hardlinked alongside
+        # the freshly written range files (Spark part-file names are
+        # UUID-unique, so no collision)
+        for src in carry_files:
+            dst = os.path.join(out_dir, os.path.relpath(src, current))
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            try:
+                os.link(src, dst)
+            except OSError:
+                shutil.copy2(src, dst)
+        self._write_manifest(out_dir, current)
+        self._commit_version(out_dir, gen)
+        self._write_meta()
+        self._gc_versions(keep=self._retention_keep(gen))
+        return touched
+
+    def _compact_locked(self, current: str, buckets: list[int] | None) -> list[int]:
+        """Coalesce grown buckets of a delta-free head (compact()'s
+        second mode; the caller holds the writer lock)."""
         bucket_dirs = self._bucket_dirs(current)
         if buckets is None:
             buckets = []
@@ -1555,8 +1623,7 @@ class NdbTable:
         sel = sorted(int(b) for b in buckets)
         if not sel:
             return []
-        prev_gen = self._current_gen()
-        gen = 0 if prev_gen is None else prev_gen + 1
+        gen = int(os.path.basename(current)[1:]) + 1
         out_dir = self._staging_dir(gen)  # stage-then-commit protocol
         state = self._reader().parquet(current).filter(
             F.col(_BUCKET).isin(sel)
@@ -1591,12 +1658,7 @@ class NdbTable:
         else:
             shaped = state.repartition(len(sel), F.col(_BUCKET))
         shaped.write.partitionBy(_BUCKET).mode("overwrite").parquet(out_dir)
-        keep = set(sel)
-        for bval, name in bucket_dirs.items():
-            if bval not in keep:
-                _link_tree(
-                    os.path.join(current, name), os.path.join(out_dir, name)
-                )
+        self._carry(current, out_dir, skip_buckets=set(sel))
         self._write_manifest(out_dir, current)
         self._commit_version(out_dir, gen)
         self._write_meta()
@@ -1621,11 +1683,11 @@ class NdbTable:
         construction; duplicated keys raise — silently combining
         within a batch would hide a missing groupBy upstream).
 
-        Cost shape: one bucket-pruned read of the touched buckets'
-        current rows (the same prune the plain upsert pays), one
-        keyed left-join of batch-vs-state, then the standard pruned
-        upsert write — O(state*b/n + batch), never the accumulated
-        history.
+        Cost shape: one bucket-pruned, last-write-wins resolved read
+        of the touched buckets' current rows (base + deltas), one
+        keyed left-join of batch-vs-state, then the standard append
+        of the combined rows as one delta — O(state*b/n + batch),
+        never the accumulated history.
 
         RETRY CONTRACT under additive rules: an
         NdbWriteConflict raised by the post-rename stale-publish
@@ -1659,10 +1721,8 @@ class NdbTable:
                 f"(batch columns: {df.columns})"
             )
         # persisted: the batch lineage otherwise evaluates twice (the
-        # fused dup/touched probe and the joined upsert write) — the
-        # same double evaluation upsert's persist avoids, one call
-        # deeper. df is rebound below; `src` keeps the unpersist
-        # handle.
+        # fused dup/touched probe and the joined upsert write). df is
+        # rebound below; `src` keeps the unpersist handle.
         df = df.persist()
         src = df
         try:
@@ -1670,9 +1730,7 @@ class NdbTable:
             # AND the touched-bucket collect — group to (bucket, key)
             # counts, reduce to a per-bucket max, collect n_buckets
             # rows: any max > 1 is a duplicated key, and the bucket set
-            # feeds the state prune here and the nested upsert via
-            # _touched (skipping its probe job too): one probe job per
-            # merge_upsert, not three.
+            # prunes the state read below.
             stats = (
                 df.withColumn(_BUCKET, self._bucket_expr())
                 .groupBy(_BUCKET, self.key)
@@ -1699,9 +1757,7 @@ class NdbTable:
         try:
             current = self._current_dir()
             if current is not None:
-                state = self._reader().parquet(current).filter(
-                    F.col(_BUCKET).isin([int(t) for t in touched])
-                )
+                state = self._read(current, buckets=touched)
                 stored_cols = set(state.columns)
                 old = state.drop(_GEN, _BUCKET).select(
                     F.col(self.key),
@@ -1747,10 +1803,7 @@ class NdbTable:
                         expr.cast(df.schema[c].dataType).alias(c)
                     )
                 df = df.join(old, self.key, "left").select(*merged_cols)
-            # the joined frame carries the batch's exact key set, so
-            # its bucket set is `touched` — the nested upsert skips its
-            # own probe job (see the stats aggregation above)
-            self.upsert(df, _touched=touched)
+            self.upsert(df)
         finally:
             src.unpersist()
             if owns_lock:
@@ -1779,7 +1832,7 @@ class NdbTable:
                     f"(retained: {self.versions()}; raise keep_versions "
                     "to widen the window)"
                 )
-            return self._reader().parquet(vdir).drop(_GEN, _BUCKET)
+            return self._read(vdir).drop(_GEN, _BUCKET)
         state = self._state()
         if state is None:
             raise ValueError(f"ndb table at {self.path} is empty")
@@ -1798,30 +1851,28 @@ class NdbTable:
         tables known bounded; otherwise the join shuffles on the key
         and AQE decides.
 
-        prune: for left/inner/semi joins the TABLE side is
+        prune: for left/inner/semi/anti joins the TABLE side is
         bucket-pruned to the probe's key buckets before the join —
         the deterministic key hash means a bucket the probe never
-        hashes into cannot hold a matching key, and stored rows are
-        already last-write-wins resolved per key within their bucket,
-        so dropping whole bucket partitions cannot change the result
-        (unmatched probe rows still emit NULLs under 'left'). Cost:
-        ONE probe-side distinct over the computed bucket id — map-side
-        combinable to <= n_buckets rows, a bounded driver edge by
-        construction. At 100 TB this is the difference between a
-        point-lookup enrich reading b/n of the table and reading all
-        of it — the lookup analogue of upsert's partition pruning.
-        The SAME probe pass also takes the probe's global [min, max]
-        key range, and the table filter adds key BETWEEN lo AND hi —
-        keys outside the probe's range cannot match either, and the
-        between pushes down to the parquet scan (PushedFilters), so
-        on files_per_bucket>1 tables, whose files are key-range
-        sorted with tight row-group stats, the surviving buckets
-        additionally skip whole files/row groups. Right/full/anti
-        joins need the table's unmatched rows and fall back to the
-        full replay; set prune=False
-        when the probe is itself table-sized (the pruning pass then
-        costs more than it saves). last_lookup_stats records the
-        selection."""
+        hashes into cannot hold a matching key. Cost: ONE probe-side
+        distinct over the computed bucket id — map-side combinable to
+        <= n_buckets rows, a bounded driver edge by construction. At
+        100 TB this is the difference between a point-lookup enrich
+        reading b/n of the table and reading all of it. The SAME probe
+        pass also takes the probe's global [min, max] key range, and
+        the table filter adds key BETWEEN lo AND hi — keys outside the
+        probe's range cannot match either, and the between pushes down
+        to the parquet scan (PushedFilters), so on files_per_bucket>1
+        tables, whose files are key-range sorted with tight row-group
+        stats, the surviving buckets additionally skip whole files/row
+        groups. Both filters apply to the base files AND the deltas
+        BEFORE the last-write-wins resolution (they depend only on the
+        key, so every version of a key survives or goes together):
+        only the probed buckets are ever resolved. Right/full joins
+        need the table's unmatched rows and fall back to the full
+        replay; set prune=False when the probe is itself table-sized
+        (the pruning pass then costs more than it saves).
+        last_lookup_stats records the selection."""
         self.last_lookup_stats: dict = {}
         # left/inner/semi: pruned table rows can't match any probe
         # key. anti is safe for the same reason — removing table rows
@@ -1832,28 +1883,26 @@ class NdbTable:
             "semi", "left_semi", "leftsemi",
             "anti", "left_anti", "leftanti",
         }
-        state = self._state()
+        current = self._current_dir()
+        if current is None:
+            return self.replay()  # raises the canonical empty-table error
         # the bucket hash is TYPE-sensitive (the upsert drift guard's
         # reason): a probe whose key dtype differs from the stored one
         # would hash into the WRONG buckets and the pruned join would
         # silently miss real matches (the unpruned join coerces fine)
         # — dtype drift falls back to the full replay instead
-        stored_kt = self._key_type or (
-            state.schema[self.key].dataType.simpleString()
-            if state is not None and self.key in state.columns
-            else None
-        )
         probe_kt = (
             other.schema[self.key].dataType.simpleString()
             if self.key in other.columns
             else None
         )
+        if self._key_type is None:
+            self._refresh_schema_state()  # another handle created the table
         if (
             prune
             and how in prunable
-            and state is not None
             and probe_kt is not None
-            and probe_kt == stored_kt
+            and probe_kt == self._key_type
         ):
             # ONE probe pass: distinct bucket ids (<= n_buckets via
             # map-side combine) + the global key range, one driver row
@@ -1871,19 +1920,14 @@ class NdbTable:
                     None if sel["lo"] is None else [sel["lo"], sel["hi"]]
                 ),
             }
-            table = state.filter(F.col(_BUCKET).isin(touched))
-            if sel["lo"] is not None:
-                table = table.filter(
-                    F.col(self.key).between(F.lit(sel["lo"]), F.lit(sel["hi"]))
-                )
-            table = table.drop(_GEN, _BUCKET)
-        elif state is None:
-            return self.replay()  # raises the canonical empty-table error
+            table = self._read(
+                current,
+                buckets=touched,
+                key_range=None if sel["lo"] is None else (sel["lo"], sel["hi"]),
+            )
         else:
-            # fallback reuses the already-resolved state reader instead
-            # of paying a second _current_gen + parquet resolution via
-            # replay() (review finding)
-            table = state.drop(_GEN, _BUCKET)
+            table = self._read(current)
+        table = table.drop(_GEN, _BUCKET)
         if broadcast:
             table = F.broadcast(table)
         return other.join(table, on=self.key, how=how)

@@ -26,16 +26,48 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
+#: Logical plan nodes that plan an exchange (a shuffle, a broadcast or
+#: a single-partition gather). A Sort plans one only when global and a
+#: Repartition only when it shuffles (coalesce does not).
+_EXCHANGE_NODES = frozenset({
+    "Aggregate", "Join", "Window", "Distinct", "Deduplicate",
+    "DeduplicateWithinWatermark", "Intersect", "Except",
+    "RepartitionByExpression", "RebalancePartitions", "GlobalLimit",
+    "Tail", "Offset", "WindowGroupLimit", "CoGroup", "FlatMapGroupsInPandas",
+    "FlatMapCoGroupsInPandas", "FlatMapGroupsInPandasWithState",
+    "FlatMapGroupsWithState", "MapGroups",
+})
+
+
+def _exchange_nodes(df: DataFrame) -> list[str]:
+    """Names of the nodes of `df`'s analyzed logical plan that plan an
+    exchange. Analysis only, on the driver: no job runs."""
+    found = []
+    stack = [df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if (
+            name in _EXCHANGE_NODES
+            or (name == "Sort" and getattr(node, "global")())
+            or (name == "Repartition" and node.shuffle())
+        ):
+            found.append(name)
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return found
+
+
 def rebalance_to_parallelism(df: DataFrame, key: str) -> DataFrame:
     """Hash-rebalance `df` on `key` to the session's default
     parallelism WHEN the frame has fewer input partitions than that —
-    a no-op otherwise (r16 optimization round; guide §2.5 input skew /
-    §6 input split size, generalizing the winnow kernel's measured
-    lesson: a small parquet file yields 1-2 scan splits and serializes
-    every pre-exchange projection and partial aggregation on 1-2 of
-    the session's cores — the shingle builds, signature sums, gram
-    explodes and Arrow matmuls that dominate the text/embedding
-    operators all run BELOW their first exchange).
+    a no-op otherwise (guide §2.5 input skew / §6 input split size,
+    generalizing the winnow kernel's measured lesson: a small parquet
+    file yields 1-2 scan splits and serializes every pre-exchange
+    projection and partial aggregation on 1-2 of the session's cores —
+    the shingle builds, signature sums, gram explodes and Arrow
+    matmuls that dominate the text/embedding operators all run BELOW
+    their first exchange).
 
     Scale behavior: at 100 TB, maxPartitionBytes already yields many
     scan splits, the partition-count probe sees >= parallelism, and
@@ -45,13 +77,21 @@ def rebalance_to_parallelism(df: DataFrame, key: str) -> DataFrame:
     and fully-ordered windows are partition-invariant; that invariance
     is what the oracle hash already relies on).
 
-    Contract (ADVICE r16): call this on EXCHANGE-FREE frames only —
-    scans and pure projections/unions of scans. getNumPartitions() on
-    such a frame reads the file index driver-side with no job; on a
-    plan that already contains an Exchange, .rdd under AQE forces
+    Contract: `df` must be EXCHANGE-FREE — scans and projections,
+    filters and unions of scans. getNumPartitions() on such a frame
+    reads the file index driver-side with no job; on a plan that
+    already holds an exchange, .rdd under AQE forces
     getFinalPhysicalPlan, which would submit (and discard) the
-    upstream shuffle stages. Every call site in the repo is a
-    pre-exchange scan shape; keep it that way."""
+    upstream shuffle stages. The analyzed plan is checked first
+    (driver-side, no job): an aggregate, join, window, global sort,
+    shuffling repartition, distinct or limit raises ValueError."""
+    bad = _exchange_nodes(df)
+    if bad:
+        raise ValueError(
+            "rebalance_to_parallelism needs an exchange-free frame (scans "
+            "plus projections, filters and unions); the plan holds "
+            f"{sorted(set(bad))}"
+        )
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     if df.rdd.getNumPartitions() >= target:

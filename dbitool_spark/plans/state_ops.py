@@ -144,21 +144,23 @@ _LAST_RANGE_PRUNE_STATS: dict = {}
 
 
 def ndb_range_pruned_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ndb upsert/replay through the INTRA-bucket pruned path (r12,
-    NdbTable files_per_bucket=4): batch 1 is the full per-user
-    max-event state; batch 2 synthesizes one marker row per user in
-    the contiguous [_NDB_RANGE_LO, _NDB_RANGE_HI) id range —
-    last-write-wins makes the marker the final row for exactly those
-    users. The narrow range is the point: its keys hash across every
-    bucket, so BUCKET-level pruning cannot help, but within each
-    touched bucket only the range files intersecting [lo, hi) are
-    read — the rest hardlink forward (read-fraction pinned in
-    pytest via _LAST_RANGE_PRUNE_STATS; this driver row proves the
-    pruned path's END RESULT against the oracle).
+    """ndb upsert/fold/replay through the INTRA-bucket pruned fold
+    (NdbTable files_per_bucket=4): batch 1 is the full per-user
+    max-event state, folded into key-range files; batch 2 synthesizes
+    one marker row per user in the contiguous [_NDB_RANGE_LO,
+    _NDB_RANGE_HI) id range — last-write-wins makes the marker the
+    final row for exactly those users. Each upsert appends one delta;
+    compact() folds it. The narrow range is the point: its keys hash
+    across every bucket, so BUCKET-level pruning cannot help, but
+    within each touched bucket the marker fold reads only the range
+    files intersecting [lo, hi) — the rest hardlink forward
+    (read-fraction pinned in pytest via _LAST_RANGE_PRUNE_STATS; this
+    driver row proves the pruned fold's END RESULT against the
+    oracle).
 
     Repeated calls in one process are deterministic: each call
-    replays upsert(full) then upsert(markers) onto the surviving
-    state, and last-write-wins lands on the same rows."""
+    replays upsert(full) then upsert(markers), each folded, onto the
+    surviving state, and last-write-wins lands on the same rows."""
     ev = catalog.load(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
@@ -172,6 +174,7 @@ def ndb_range_pruned_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, path, key="user_id", n_buckets=8, files_per_bucket=4
     )
     table.upsert(ev, order_by=["ts_us", "event_id"])
+    table.compact()
     markers = (
         ev.filter(
             (F.col("user_id") >= _NDB_RANGE_LO)
@@ -187,6 +190,7 @@ def ndb_range_pruned_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     table.upsert(markers, order_by=["ts_us", "event_id"])
+    table.compact()
     global _LAST_RANGE_PRUNE_STATS
     _LAST_RANGE_PRUNE_STATS = dict(table.last_prune_stats)
     return (
@@ -751,7 +755,7 @@ def streaming_lsh_near_dup_documents(spark: SparkSession, sf_dir: str) -> DataFr
     (simhash_recall_planted).
 
     A 1-in-2 deterministic subset keeps the entry's bench cost
-    proportionate (the drain pays per-batch ndb rewrites and the
+    proportionate (the drain pays per-batch ndb reads and folds and the
     parity re-hashes the corpus; the guarantees are per-doc, so a
     subset checks the same theorem — the simhash_recall_planted
     precedent). Both halves of each planted pair survive: the subset
@@ -938,9 +942,10 @@ def ndb_time_travel_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     scripts/dbitool.pl:2561-2694, extended with the table-format
     facility the module docstring documents as the production swap).
 
-    Retention is cheap by construction: untouched buckets hardlink
-    across versions, so the three snapshots share inodes and the
-    window costs only the per-version rewritten deltas. The table
+    Retention is cheap by construction: each upsert appends one delta
+    file and hardlinks every earlier file forward, so the three
+    snapshots share inodes and the window costs only each version's
+    own delta. The table
     rebuilds from scratch each call (rmtree) so repeated in-process
     calls — bench runs every entry 5x — see identical generation
     numbers."""
@@ -1057,8 +1062,8 @@ def _rollup_merge_batch(spark, table, batch_df, batch_id: int) -> None:
     )
     # the first-class MERGE-with-aggregation table op (r12): the
     # additive fold into dimension-sized state is the table's job,
-    # not every caller's — bucket-pruned read + keyed left-join +
-    # pruned rewrite, O(state*b/n + batch)
+    # not every caller's — bucket-pruned resolved read + keyed
+    # left-join + one appended delta, O(state*b/n + batch)
     table.merge_upsert(
         partial.select(
             "rollup_key", "hour", "event_type", "n", "sum_v", "bmax"
@@ -1074,7 +1079,7 @@ def streaming_rollup_ndb_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hour, event_type) partial counts + exact-decimal sums and MERGES
     them additively into an ndb table (read-modify-write inside
     foreachBatch — the Delta MERGE per-batch pattern, here on the
-    bucket-pruned ndb store). Unlike the windowed streaming entries,
+    merge-on-read ndb store). Unlike the windowed streaming entries,
     the aggregate state lives in a TABLE: queryable mid-stream,
     durable across restarts (availableNow + checkpoint give
     exactly-once per input file), and time-travelable like any ndb
@@ -1083,8 +1088,9 @@ def streaming_rollup_ndb_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per-batch partials are map-side-combined aggregates
     over the batch only; the merge joins |distinct keys-in-batch| rows
-    against dimension-sized rollup state on the key; the rewrite is
-    bucket-pruned to the touched keys' buckets. The table rebuilds
+    against dimension-sized rollup state (read bucket-pruned to the
+    touched keys' buckets) on the key, and the result appends as one
+    delta. The table rebuilds
     from scratch each call (rmtree, fresh checkpoint) so repeated
     in-process calls are deterministic."""
     import uuid

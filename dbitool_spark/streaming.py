@@ -463,16 +463,18 @@ def stream_near_dup_lsh(
       (ops.dedup.lsh_near_dup_flags); arrival flags are the
       first-arrival-wins view of the same index.
     - availableNow + checkpoint give exactly-once per input file.
-    - honest cost note: NdbTable.upsert is a BUCKET-PRUNED partial
-      rewrite (only the hash buckets a batch's keys touch are merged
-      and rewritten; the rest hardlink forward — ndb.py). For THIS
-      workload the keys are LSH bucket hashes, which spread uniformly,
-      so a non-trivial batch touches all n_buckets and the upsert
-      degrades to the full O(|index| + |batch|) rewrite — fine while
-      the index fits a compaction budget (it is bands * |corpus|
-      longs, tiny next to the corpus). Raising index n_buckets only
-      helps once batches are small relative to it; the production
-      answer past that point is Delta/Iceberg MERGE behind the same
+    - honest cost note: NdbTable.upsert is a merge-on-read APPEND
+      (ndb.py): each micro-batch's owner merge writes one delta file,
+      O(|batch|), however uniformly the LSH bucket keys spread. The
+      O(|index|) work moved to the reads and the fold: every batch's
+      index.replay() resolves the folded index plus its pending
+      deltas (a broadcast anti-join against the small delta keys, so
+      the index itself never shuffles), and every _FOLD_AFTER
+      batches the upsert folds the deltas back into the touched
+      buckets — with uniform keys that is all of them, a full
+      O(|index|) rewrite per fold instead of per batch. The index is
+      bands * |corpus| longs, tiny next to the corpus; past a fold
+      budget the production answer is Delta/Iceberg behind the same
       NdbTable API."""
     from pyspark.sql.window import Window
 
@@ -517,11 +519,7 @@ def stream_near_dup_lsh(
             new_owners = joined.groupBy("bucket").agg(
                 F.least(F.min("owner"), F.min("bmin")).alias("owner")
             )
-            # prune=False: LSH bucket keys are uniform hashes, so any
-            # non-trivial batch touches every ndb bucket — the prune
-            # job would cost one extra Spark job per micro-batch and
-            # never prune anything (honest-cost note above)
-            index.upsert(new_owners, prune=False)
+            index.upsert(new_owners)
         finally:
             joined.unpersist()
 

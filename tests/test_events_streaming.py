@@ -709,3 +709,53 @@ def test_streaming_lsh_overlap_emits_sequential_run_row(spark):
     r = rows[0]
     assert r.n_docs == 2 * n_even
     assert r.index_mismatches == 0 and r.flag_mismatches == 0
+
+
+def test_streaming_dedup_native_equals_custom_operator(spark):
+    """The registry entry's native streaming dropDuplicates must emit
+    the same key set as the custom applyInPandasWithState operator it
+    replaced (both are first-wins per key across all micro-batches;
+    the entry projects the keys, so the sets must be identical)."""
+    from dbitool_spark import streaming
+    from dbitool_spark.plans.state_ops import (
+        _drain_streaming_entry,
+        streaming_dedup_events,
+    )
+
+    got = sorted(
+        map(tuple, streaming_dedup_events(spark, SF_SMOKE).collect())
+    )
+    ev = catalog.load(spark, SF_SMOKE, "events").select("user_id", "event_type")
+    sink = _drain_streaming_entry(
+        spark,
+        SF_SMOKE,
+        prefix="stream_dedup_custom_",
+        source_df=ev,
+        schema="user_id bigint, event_type string",
+        plan=lambda stream: streaming.stream_dedup_first_wins(
+            stream, ["user_id", "event_type"]
+        ),
+        output_mode="append",
+    )
+    want = sorted(
+        map(tuple, sink.select("user_id", "event_type").collect())
+    )
+    assert got == want and len(got) > 0
+
+
+def test_streaming_hourly_composite_matches_batch_rule(spark):
+    """The parallel-drain composite's streaming variants must still
+    equal the batch hourly aggregation row for row (the emitted-set
+    invariance the entry claims — parallelism must not change each
+    query's own micro-batch boundaries)."""
+    from dbitool_spark.plans.state_ops import streaming_hourly_composite
+
+    out = streaming_hourly_composite(spark, SF_SMOKE)
+    rows = out.collect()
+    by_variant: dict[str, set] = {}
+    for r in rows:
+        by_variant.setdefault(r.variant, set()).add((r.hour, r.event_type, r.n))
+    assert by_variant["complete"] == by_variant["batch"]
+    # append emits only closed windows: must be a subset of batch
+    assert by_variant["append"] <= by_variant["batch"]
+    assert len(by_variant["append"]) > 0

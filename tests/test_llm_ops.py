@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from dbitool_spark import catalog
 from dbitool_spark.ops import dedup, multimodal, similarity, text
@@ -2341,3 +2342,159 @@ def test_leakage_safe_split_clusters_atomic(spark):
             leaked_by_plain += 1
     assert all(len(s) == 1 for s in by_cluster.values())  # atomic
     assert leaked_by_plain > 0  # the safe leg changes real outcomes
+
+
+def _rows(df, cols):
+    return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+
+def test_ngram_variants_shared_core_equals_standalone_calls(spark):
+    """ngram_jaccard_pairs_variants (one shared shingle/freq pass)
+    must emit exactly the union of the two standalone operator calls
+    it replaced inside ngram_jaccard_variants_documents."""
+    from dbitool_spark.plans.llm_ops import _SKEWGUARD_MAX_DF, _perturbed_corpus
+
+    docs = _perturbed_corpus(catalog.load(spark, SF_SMOKE, "documents"))
+    fused = dedup.ngram_jaccard_pairs_variants(
+        docs, "doc_id", "text", shingle_k=3, threshold=0.5,
+        max_doc_freq=_SKEWGUARD_MAX_DF,
+    )
+    exact = dedup.ngram_jaccard_pairs(
+        docs, "doc_id", "text", shingle_k=3, threshold=0.5
+    ).select(F.lit("exact").alias("variant"), "id_a", "id_b", "jaccard")
+    guarded = dedup.ngram_jaccard_pairs(
+        docs, "doc_id", "text", shingle_k=3, threshold=0.5,
+        max_doc_freq=_SKEWGUARD_MAX_DF,
+    ).select(F.lit("skewguard").alias("variant"), "id_a", "id_b", "jaccard")
+    cols = ["variant", "id_a", "id_b", "jaccard"]
+    want = _rows(exact.unionByName(guarded), cols)
+    got = _rows(fused, cols)
+    assert got == want and len(got) > 0
+
+
+def test_kmeans_min_struct_assignment_equals_window_argmin(spark):
+    """The min(struct(d, cid, v)) assignment must pick the same
+    (cid, d) per vector as the row_number window it replaced
+    (orderBy d, cid — cid unique per group, so the trailing v is
+    never compared)."""
+    emb = catalog.load(spark, SF_SMOKE, "embeddings")
+    vec = emb.select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    )
+    seeds = vec.orderBy("vec_id").limit(4).collect()
+    cents = [(i, list(r.v)) for i, r in enumerate(seeds)]
+    cdf = spark.createDataFrame(cents, "cid int, c array<double>")
+    sq_dist = F.aggregate(
+        F.zip_with("v", "c", lambda a, b: (a - b) * (a - b)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    scored = vec.crossJoin(cdf).withColumn("d", sq_dist)
+    w = Window.partitionBy("vec_id").orderBy("d", "cid")
+    want = _rows(
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select("vec_id", "cid", "d"),
+        ["vec_id", "cid", "d"],
+    )
+    got = _rows(
+        scored.groupBy("vec_id")
+        .agg(F.min(F.struct("d", "cid", "v")).alias("m"))
+        .select("vec_id", F.col("m.cid").alias("cid"), F.col("m.d").alias("d")),
+        ["vec_id", "cid", "d"],
+    )
+    assert got == want and len(got) > 0
+    # and the operator end-to-end still agrees with itself across the
+    # driver/cluster update paths (the pre-existing parity contract)
+    a = _rows(
+        similarity.kmeans_distributed(
+            emb, "vec_id", "embedding", k=4, iters=2, centroid_updates="driver"
+        ),
+        ["cluster_id", "n_vecs", "inertia_r"],
+    )
+    b = _rows(
+        similarity.kmeans_distributed(
+            emb, "vec_id", "embedding", k=4, iters=2, centroid_updates="cluster"
+        ),
+        ["cluster_id", "n_vecs", "inertia_r"],
+    )
+    assert a == b
+
+
+def test_quantized_topk_matmul_equals_interpreted_dot(spark):
+    """The Arrow-batched int64-matmul scoring (batch-local top-k +
+    final window) must emit exactly the rows of the pre-optimization
+    construction: broadcast-NLJ with the per-element int_dot lambda,
+    globally ranked. Integer dots are order-free, so equality is
+    bit-level, not approximate."""
+    from dbitool_spark.ops.similarity import int_dot, quantize_int8
+
+    emb = catalog.load(spark, SF_SMOKE, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 10)
+    qc = quantize_int8(emb, "embedding")
+    q = quantize_int8(queries, "embedding").select(
+        F.col("vec_id").alias("query_id"), F.col("qvec").alias("qq")
+    )
+    c = qc.select(F.col("vec_id").alias("neighbor_id"), F.col("qvec").alias("cq"))
+    scored = c.join(
+        F.broadcast(q), F.col("neighbor_id") != F.col("query_id")
+    ).withColumn("dot", int_dot(F.col("qq"), F.col("cq")))
+    w = Window.partitionBy("query_id").orderBy(F.desc("dot"), F.asc("neighbor_id"))
+    cols = ["query_id", "neighbor_id", "rank", "dot"]
+    want = _rows(
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= 5)
+        .select(*cols),
+        cols,
+    )
+    got = _rows(similarity.quantized_topk(emb, queries, k=5), cols)
+    assert got == want and len(got) > 0
+
+
+def test_dedup_representatives_agg_equals_window_argmax(spark):
+    """The entry's max-of-struct per-cluster selection (plus lazy
+    pairs with explicit release) must emit exactly the rows of the
+    pre-optimization construction: checkpointed pairs, rk=1
+    row_number window ordered (q_r DESC, doc_id ASC), count window."""
+    from dbitool_spark.ops import text
+    from dbitool_spark.plans.llm_ops import (
+        _perturbed_corpus,
+        dedup_representatives_documents,
+    )
+
+    docs = catalog.load(spark, SF_SMOKE, "documents")
+    corpus = _perturbed_corpus(docs)
+    pairs = dedup.minhash_near_dup_pairs(
+        corpus, "doc_id", "text", shingle_k=3, threshold=0.7
+    )
+    comp = dedup.connected_components(pairs).select(
+        F.col("id").alias("doc_id"), "cluster_id"
+    )
+    clusters = corpus.join(comp, "doc_id", "left").select(
+        "doc_id",
+        F.coalesce("cluster_id", F.col("doc_id")).alias("cluster_id"),
+        "text",
+    )
+    q = text.quality_score(clusters).select(
+        "doc_id", "cluster_id", F.col("quality_score").alias("q_r")
+    )
+    w = Window.partitionBy("cluster_id").orderBy(F.desc("q_r"), F.asc("doc_id"))
+    want = _rows(
+        q.withColumn("rk", F.row_number().over(w))
+        .withColumn(
+            "n_members", F.count(F.lit(1)).over(Window.partitionBy("cluster_id"))
+        )
+        .filter(F.col("rk") == 1)
+        .select(
+            "cluster_id",
+            F.col("doc_id").alias("rep_doc_id"),
+            "n_members",
+            F.col("q_r").alias("rep_quality"),
+        ),
+        ["cluster_id", "rep_doc_id", "n_members", "rep_quality"],
+    )
+    got = _rows(
+        dedup_representatives_documents(spark, SF_SMOKE),
+        ["cluster_id", "rep_doc_id", "n_members", "rep_quality"],
+    )
+    assert got == want and len(got) > 0

@@ -82,23 +82,29 @@ def test_ndb_empty_batch_then_upsert(spark, tmpdir):
     assert got == [(1, "b"), (2, "c")]
 
 
-@pytest.mark.parametrize("prune", [True, False])
-def test_ndb_empty_first_batch_commits_bucket_layout(spark, tmpdir, prune):
-    """An empty batch creating the table commits v0 in the one bucket
-    layout (only __ndb_bucket=* subdirectories, no flat data file),
-    replays as 0 rows with the batch's columns, and the table then
-    upserts, looks up and compacts last-write-wins. No `current`
+@pytest.mark.parametrize("fold", [True, False])
+def test_ndb_empty_first_batch_commits_bucket_layout(spark, tmpdir, fold):
+    """An empty batch creating the table commits v0 as ONE zero-row,
+    schema-carrying delta file (no bucket dir, no flat data file) and
+    replays as 0 rows with the batch's columns; folded, it becomes one
+    zero-row file under `__ndb_bucket=0/`. Either way the table then
+    upserts, looks up and compacts last-write-wins, and no `current`
     file is ever written."""
     path = os.path.join(tmpdir, "kv")
     t = NdbTable(spark, path, key="k", n_buckets=4)
-    t.upsert(spark.createDataFrame([], "k bigint, v string"), prune=prune)
+    t.upsert(spark.createDataFrame([], "k bigint, v string"))
     v0 = os.path.join(path, "v0")
     assert t.versions() == [0]
     names = os.listdir(v0)
-    dirs = [n for n in names if os.path.isdir(os.path.join(v0, n))]
-    assert dirs and all(n.startswith("__ndb_bucket=") for n in dirs)
-    # no data file beside them (only _committed/_manifest.json/_SUCCESS)
-    assert not [n for n in names if n not in dirs and not n.startswith((".", "_"))]
+    assert sorted(n for n in names if os.path.isdir(os.path.join(v0, n))) == ["_delta"]
+    assert os.listdir(os.path.join(v0, "_delta")) == ["000000000000.parquet"]
+    # no data file beside it (only _committed/_manifest.json)
+    assert not [n for n in names if n != "_delta" and not n.startswith((".", "_"))]
+    if fold:
+        assert t.compact() == []  # nothing to rewrite: zero rows
+        head = t._current_dir()
+        dirs = [n for n in os.listdir(head) if os.path.isdir(os.path.join(head, n))]
+        assert dirs == ["__ndb_bucket=0"]
     empty = t.replay()
     assert empty.count() == 0
     assert sorted(empty.columns) == ["k", "v"]
@@ -195,24 +201,31 @@ def _bucket_files(vdir):
 
 
 def test_ndb_partial_rewrite_leaves_untouched_buckets_byte_identical(spark, tmpdir):
-    """The bucket-pruned upsert must rewrite ONLY the hash buckets
-    whose keys appear in the batch; every other bucket's parquet files
-    carry over as hardlinks — same inode, therefore byte-identical —
-    and the merged semantics stay exactly last-write-wins."""
+    """An upsert rewrites NO bucket: every base file carries over as a
+    hardlink and the batch lands as one delta file. The fold that
+    follows rewrites ONLY the hash buckets whose keys the delta holds;
+    every other bucket's parquet files carry over as hardlinks — same
+    inode, therefore byte-identical — and the merged semantics stay
+    exactly last-write-wins."""
     path = os.path.join(tmpdir, "kv")
     t = NdbTable(spark, path, key="k", n_buckets=8)
     t.upsert(spark.createDataFrame([(i, f"a{i}") for i in range(64)], "k int, v string"))
-    v0 = os.path.join(path, "v0")
-    before = _bucket_files(v0)
+    t.compact()
+    base = t._current_dir()
+    before = _bucket_files(base)
     assert len(before) > 1  # keys actually spread over buckets
 
-    # second batch touches exactly one key -> exactly one bucket
+    # second batch touches exactly one key -> one delta, no rewrite
     t.upsert(spark.createDataFrame([(7, "NEW")], "k int, v string"))
-    v1 = os.path.join(path, "v1")
-    after = _bucket_files(v1)
-    assert set(after) == set(before)  # same bucket set survives
+    appended = t._current_dir()
+    assert _bucket_files(appended) == before
+    assert len(os.listdir(os.path.join(appended, "_delta"))) == 1
 
-    from pyspark.sql import functions as F
+    # the fold rewrites exactly the one bucket the delta touched
+    assert len(t.compact()) == 1
+    after = _bucket_files(t._current_dir())
+    assert set(after) == set(before)  # same bucket set survives
+    assert not os.path.exists(os.path.join(t._current_dir(), "_delta"))
 
     touched = f"__ndb_bucket={spark.range(1).select(F.pmod(F.xxhash64(F.lit(7).cast('int')), F.lit(8)).cast('int')).first()[0]}"
     assert touched in before
@@ -263,9 +276,11 @@ def test_ndb_gc_preserves_hardlinked_carryover(spark, tmpdir):
 
 
 def test_ndb_prune_false_full_rewrite_matches(spark, tmpdir):
-    """prune=False (the uniform-key fast path, e.g. an LSH index) must
-    produce the same resolved state as the pruned path — full rewrite,
-    no stale links merged into rewritten buckets."""
+    """Merge-on-read and the fold resolve identically: a table left
+    with its deltas pending (every read resolves base + deltas) and one
+    folded after every upsert (every read is a plain scan) hold the
+    same state — no stale row survives a fold, none is lost by the
+    read-side resolution — and a full-table lookup agrees too."""
     pa, pb = os.path.join(tmpdir, "a"), os.path.join(tmpdir, "b")
     ta = NdbTable(spark, pa, key="k", n_buckets=4)
     tb = NdbTable(spark, pb, key="k", n_buckets=4)
@@ -273,11 +288,19 @@ def test_ndb_prune_false_full_rewrite_matches(spark, tmpdir):
     b2 = spark.createDataFrame([(5, "NEW"), (99, "x")], "k int, v string")
     ta.upsert(b1)
     ta.upsert(b2)
-    tb.upsert(b1, prune=False)
-    tb.upsert(b2, prune=False)
+    tb.upsert(b1)
+    tb.compact()
+    tb.upsert(b2)
+    tb.compact()
+    assert len(os.listdir(os.path.join(ta._current_dir(), "_delta"))) == 2
+    assert not os.path.exists(os.path.join(tb._current_dir(), "_delta"))
     ga = sorted((r.k, r.v) for r in ta.replay().collect())
     gb = sorted((r.k, r.v) for r in tb.replay().collect())
     assert ga == gb and len(ga) == 21 and dict(ga)[5] == "NEW"
+    probe = spark.createDataFrame([(k,) for k in range(100)], "k int")
+    la = sorted((r.k, r.v) for r in ta.lookup(probe, how="inner").collect())
+    lb = sorted((r.k, r.v) for r in tb.lookup(probe, how="inner").collect())
+    assert la == lb == ga
 
 
 def test_ndb_reserved_columns_rejected(spark, tmpdir):
@@ -384,30 +407,28 @@ def test_stream_progress_logger(spark, tmp_path):
 
 @pytest.mark.slow
 def test_ndb_bucket_prune_scales_with_touched_fraction(spark, tmpdir):
-    """VERDICT r9 task 4: the bucket-prune claim at REALISTIC state
-    size. State = 2x10^6 keys across 32 buckets (~20 MB parquet);
-    batch touches exactly 2 buckets. The pruned upsert must
-    (a) rewrite bytes ~ state*b/n + batch, NOT ~ state: freshly
-        written (non-hardlinked) bytes stay under 3x the two touched
-        buckets' prior size, and >= 30/32 of the prior bytes carry
-        over as hardlinks (same inode) — THE load-bearing scale
+    """The bucket-prune claim at REALISTIC state size, on the
+    merge-on-read commit. State = 2x10^6 keys across 32 buckets (~20 MB
+    parquet); batch touches exactly 2 buckets.
+    (a) the upsert itself writes ONLY its delta: every base file
+        carries over as a hardlink (same inode) and the fresh bytes are
+        the one delta file, far below the two touched buckets' size;
+    (b) the fold that follows rewrites bytes ~ state*b/n + batch, NOT
+        ~ state: freshly written (non-hardlinked) bytes stay under 3x
+        the two touched buckets' prior size, and >= 30/32 of the prior
+        bytes carry over as hardlinks — THE load-bearing scale
         assertion (deterministic);
-    (b) wall-clock tripwire: best-of-2 pruned vs best-of-2 full on
-        the same state must stay under a 1.15x ceiling. At this state
-        size fixed job overhead (~1s) rivals the I/O saved, so the
-        timing leg is a regression tripwire, not the b/n proof — a
-        warm mid-suite JVM once compressed the gap to 1.31s vs 1.19s
-        while the bytes held exactly (the exclusive-box measurement,
-        recorded in SURVEY r10: 1.66s pruned vs 2.99s full at the
-        1M-key state this test used before r10 grew it to 2M);
-    (c) VERDICT r10 task 4 — the CURVE, not one point: pruned upserts
-        touching b in {1, 4, 8} of 32 buckets must put rewritten
-        bytes on a through-origin linear fit in the touched buckets'
-        prior size (each point within 45% of the fit, slope in
-        [0.4, 2.5], monotone in b) — the O(state*b/n + batch) cost
-        shape asserted as a measured slope (r11 measurement: slope
-        0.95, residuals <= 7%).
-    Numbers are printed for the SURVEY/bench record."""
+    (c) wall-clock tripwire: best-of-2 folds of the 2-bucket batch vs
+        best-of-2 folds of an equally-sized batch spread over all 32
+        buckets (the full rewrite) must stay under a 1.15x ceiling —
+        bytes are the real b/n proof; this only catches the pruned
+        fold becoming pathologically slower than the full one;
+    (d) the CURVE, not one point: folds touching b in {1, 4, 8} of 32
+        buckets must put rewritten bytes on a through-origin linear
+        fit in the touched buckets' prior size (each point within 45%
+        of the fit, slope in [0.4, 2.5], monotone in b) — the
+        O(state*b/n + batch) cost shape asserted as a measured slope.
+    Numbers are printed for the bench record."""
     import time
 
     path = os.path.join(tmpdir, "big_kv")
@@ -418,13 +439,13 @@ def test_ndb_bucket_prune_scales_with_touched_fraction(spark, tmpdir):
         F.concat(F.lit("payload_"), F.col("id")).alias("v"),
     )
     t.upsert(base)
-    v0 = os.path.join(path, "v0")
-    before = _bucket_files(v0)
+    t.compact()
+    before = _bucket_files(t._current_dir())
     assert len(before) == 32
     state_bytes = sum(sz for files in before.values() for (_ino, sz) in files.values())
 
     # batch keys confined to exactly 2 hash buckets, sampled from the
-    # live key range so the merge truly rewrites those buckets
+    # live key range so the fold truly rewrites those buckets
     bucket = F.pmod(F.xxhash64(F.col("k")), F.lit(32)).cast("int")
     batch = (
         spark.range(0, n_state, 97)
@@ -435,70 +456,86 @@ def test_ndb_bucket_prune_scales_with_touched_fraction(spark, tmpdir):
     n_batch = batch.count()
     assert n_batch > 100  # non-trivial batch
 
-    t0 = time.monotonic()
-    t.upsert(batch)
-    pruned_s = time.monotonic() - t0
+    def fresh_bytes(vdir, prior_inodes):
+        """(fresh, linked) data bytes of a version vs prior inodes."""
+        fresh = linked = 0
+        for dirpath, _dirs, files in os.walk(vdir):
+            for fn in files:
+                if fn.startswith((".", "_")):
+                    continue
+                st = os.stat(os.path.join(dirpath, fn))
+                if st.st_ino in prior_inodes:
+                    linked += st.st_size
+                else:
+                    fresh += st.st_size
+        return fresh, linked
 
-    v1 = os.path.join(path, "v1")
-    after = _bucket_files(v1)
-    assert set(after) == set(before)
     prev_inodes = {ino for files in before.values() for (ino, _sz) in files.values()}
-    rewritten_bytes = 0
-    linked_bytes = 0
     touched_dirs = {"__ndb_bucket=0", "__ndb_bucket=1"}
     touched_prior = sum(
         sz for d in touched_dirs for (_ino, sz) in before[d].values()
     )
-    for bname, files in after.items():
-        for _f, (ino, sz) in files.items():
-            if ino in prev_inodes:
-                linked_bytes += sz
-            else:
-                rewritten_bytes += sz
+    # (a) the append: one delta, every base byte linked
+    base_data_bytes = fresh_bytes(t._current_dir(), set())[0]
+    t.upsert(batch)
+    appended = t._current_dir()
+    assert _bucket_files(appended) == before
+    delta_bytes, linked_bytes = fresh_bytes(appended, prev_inodes)
+    assert len(os.listdir(os.path.join(appended, "_delta"))) == 1
+    assert linked_bytes == base_data_bytes
+    assert delta_bytes < touched_prior / 4, (delta_bytes, touched_prior)
+
+    # (b) the fold: bytes scale with b/n
+    t0 = time.monotonic()
+    assert t.compact() == [0, 1]
+    pruned_s = time.monotonic() - t0
+    after = _bucket_files(t._current_dir())
+    assert set(after) == set(before)
+    rewritten_bytes, linked_bytes = fresh_bytes(t._current_dir(), prev_inodes)
     for bname in after:
         if bname not in touched_dirs:
             assert after[bname] == before[bname], f"{bname} must hardlink"
-    # (a) bytes scale with b/n: 2 of 32 buckets rewrote, 30 linked
     assert rewritten_bytes <= 3 * touched_prior, (
         f"rewrote {rewritten_bytes}B vs touched-prior {touched_prior}B "
         f"(state {state_bytes}B) — prune degraded toward full rewrite"
     )
     assert linked_bytes >= state_bytes * 30 / 32 * 0.95
 
-    # (b) wall-clock tripwire: best-of-2 each (first pruned sample is
-    # the one measured above), ceiling 1.15x — bytes above are the
-    # real b/n proof; this only catches the pruned path becoming
-    # pathologically slower than the full rewrite
-    t0 = time.monotonic()
+    # (c) wall-clock tripwire: best-of-2 each (first pruned sample is
+    # the one measured above), ceiling 1.15x
     t.upsert(batch.withColumn("v", F.lit("UPDATED2")))
+    t0 = time.monotonic()
+    t.compact()
     pruned_s = min(pruned_s, time.monotonic() - t0)
+    spread = spark.range(0, n_state, 97 * 16).select(
+        F.col("id").cast("long").alias("k")
+    )
     full_s = float("inf")
     for tag in ("FULL3", "FULL4"):
+        t.upsert(spread.withColumn("v", F.lit(tag)))
         t0 = time.monotonic()
-        t.upsert(batch.withColumn("v", F.lit(tag)), prune=False)
+        assert len(t.compact()) == 32
         full_s = min(full_s, time.monotonic() - t0)
     assert pruned_s < full_s * 1.15, (
-        f"pruned upsert {pruned_s:.2f}s much slower than full {full_s:.2f}s"
+        f"pruned fold {pruned_s:.2f}s much slower than full {full_s:.2f}s"
     )
     print(
         f"\nNDB_PRUNE_SCALE state_rows={n_state} state_bytes={state_bytes} "
-        f"batch_rows={n_batch} rewritten_bytes={rewritten_bytes} "
-        f"linked_bytes={linked_bytes} pruned_s={pruned_s:.2f} full_s={full_s:.2f}"
+        f"batch_rows={n_batch} delta_bytes={delta_bytes} "
+        f"rewritten_bytes={rewritten_bytes} linked_bytes={linked_bytes} "
+        f"pruned_s={pruned_s:.2f} full_s={full_s:.2f}"
     )
 
-    # (c) VERDICT r10 task 4: the b/n SLOPE, not one point. Sweep
-    # b in {1, 4, 8} touched buckets on successive pruned upserts over
-    # the same 2M-key state and assert rewritten (non-hardlinked)
-    # bytes track a THROUGH-ORIGIN linear fit in the touched buckets'
-    # prior size — the O(state*b/n + batch) cost shape as a measured
-    # slope rather than a single ratio. Also: per-step hardlink
-    # carryover of the (32-b) untouched buckets, and monotone growth
-    # in b.
+    # (d) the b/n SLOPE: sweep b in {1, 4, 8} touched buckets on
+    # successive upsert + fold rounds over the same 2M-key state and
+    # assert rewritten (non-hardlinked) bytes track a THROUGH-ORIGIN
+    # linear fit in the touched buckets' prior size. Also: per-step
+    # hardlink carryover of the (32-b) untouched buckets, and monotone
+    # growth in b.
     sweep = []  # (b, touched_prior_bytes, rewritten_bytes)
-    version = 4  # v0 base + 4 upserts above
     bucket_sets = {1: (3,), 4: (4, 5, 6, 7), 8: tuple(range(8, 16))}
     for b, bset in bucket_sets.items():
-        prior = _bucket_files(os.path.join(path, f"v{version}"))
+        prior = _bucket_files(t._current_dir())
         prior_inodes = {
             ino for files in prior.values() for (ino, _sz) in files.values()
         }
@@ -516,20 +553,8 @@ def test_ndb_bucket_prune_scales_with_touched_fraction(spark, tmpdir):
             .filter(bucket.isin(*bset))
             .withColumn("v", F.lit(f"SWEEP{b}"))
         )
-        version += 1
-        cur = _bucket_files(os.path.join(path, f"v{version}"))
-        rw = sum(
-            sz
-            for files in cur.values()
-            for (ino, sz) in files.values()
-            if ino not in prior_inodes
-        )
-        lk = sum(
-            sz
-            for files in cur.values()
-            for (ino, sz) in files.values()
-            if ino in prior_inodes
-        )
+        assert t.compact() == list(bset)
+        rw, lk = fresh_bytes(t._current_dir(), prior_inodes)
         assert lk >= state_now * (32 - b) / 32 * 0.95, (b, lk, state_now)
         sweep.append((b, tp, rw))
     slope = sum(tp * rw for _b, tp, rw in sweep) / sum(
@@ -537,7 +562,7 @@ def test_ndb_bucket_prune_scales_with_touched_fraction(spark, tmpdir):
     )
     # rewriting a touched bucket costs ~its own size (re-encode of the
     # same rows +- compression drift); a slope drifting high means the
-    # prune is rewriting more than it touches
+    # fold is rewriting more than it touches
     assert 0.4 <= slope <= 2.5, f"rewrite slope {slope:.2f} off the b/n line"
     for b, tp, rw in sweep:
         assert abs(rw - slope * tp) <= 0.45 * slope * tp, (
@@ -559,20 +584,20 @@ def test_ndb_bucket_prune_scales_with_touched_fraction(spark, tmpdir):
 
 @pytest.mark.slow
 def test_ndb_intra_bucket_file_pruning(spark, tmpdir):
-    """VERDICT r11 task 7: row-group/file-level pruning WITHIN a
-    touched bucket. files_per_bucket=4 writes each bucket as key-range
-    files sorted by key (tight parquet min/max footer stats); a batch
+    """Row-group/file-level pruning WITHIN a touched bucket, in the
+    fold. files_per_bucket=4 writes each bucket as key-range files
+    sorted by key (tight parquet min/max footer stats); a delta
     confined to a narrow key range must
-    (a) read only the intersecting files: bytes_read strictly under
-        half the touched buckets' prior bytes, with the skipped files
-        hardlinked forward (same inode in the new version);
+    (a) be folded reading only the intersecting files: bytes_read
+        strictly under half the touched buckets' prior bytes, with the
+        skipped files hardlinked forward (same inode in the new
+        version); the upsert before it wrote one delta and linked
+        every base file;
     (b) keep exact upsert semantics: updated keys win, every other
         row carries over;
     (c) write sorted files: each data file's footer key range is
-        tight (non-overlapping row-group ranges within the file would
-        follow from the sort; we assert file-level monotonicity —
-        min <= max and intra-bucket ranges cover disjoint key spans
-        on the FIRST write, before drift);
+        tight and intra-bucket ranges cover disjoint key spans on the
+        FIRST fold, before drift;
     (d) a reopened table keeps files_per_bucket from meta."""
     path = os.path.join(tmpdir, "fpb_kv")
     t = NdbTable(spark, path, key="k", n_buckets=8, files_per_bucket=4)
@@ -582,7 +607,8 @@ def test_ndb_intra_bucket_file_pruning(spark, tmpdir):
         F.concat(F.lit("payload_"), F.col("id")).alias("v"),
     )
     t.upsert(base)
-    v0 = os.path.join(path, "v0")
+    t.compact()
+    v0 = t._current_dir()
 
     def data_files(vdir):
         out = {}
@@ -617,12 +643,13 @@ def test_ndb_intra_bucket_file_pruning(spark, tmpdir):
         F.col("id").cast("long").alias("k"), F.lit("UPDATED").alias("v")
     )
     t.upsert(batch)
+    assert data_files(t._current_dir()) == before  # the append linked all
+    t.compact()
     stats = t.last_prune_stats
     touched_prior = stats["bytes_read"] + stats["bytes_carried"]
     assert stats["files_carried"] > 0
     assert stats["bytes_read"] < 0.5 * touched_prior, stats
-    v1 = os.path.join(path, "v1")
-    after = data_files(v1)
+    after = data_files(t._current_dir())
     carried_inodes = {ino for (ino, _sz) in before.values()} & {
         ino for (ino, _sz) in after.values()
     }
@@ -646,13 +673,14 @@ def test_ndb_intra_bucket_file_pruning(spark, tmpdir):
 
 
 def test_ndb_compact_coalesces_file_growth(spark, tmpdir):
-    """compact() — the OPTIMIZE analog. Two claims:
-    (1) the pruned-upsert invariant: range-intersection selection +
+    """compact() on a delta-free head — the OPTIMIZE analog. Two
+    claims:
+    (1) the fold invariant: range-intersection selection +
         range-partitioned rewrite PRESERVES intra-bucket range
         disjointness (no bucket ever holds overlapping files), so
         pruning never degrades by overlap — what grows is the file
         count (~files_per_bucket new files per touched bucket per
-        upsert);
+        fold);
     (2) compact() coalesces exactly the grown buckets back to ~fpb
         sorted range files, hardlinks untouched buckets by inode,
         preserves every row, and is idempotent."""
@@ -662,13 +690,16 @@ def test_ndb_compact_coalesces_file_growth(spark, tmpdir):
         F.col("id").alias("k"), (F.col("id") * 2).alias("v")
     )
     t.upsert(base)
-    # three narrow upserts (updates + some brand-new keys) grow files
+    t.compact()
+    # three narrow upserts (updates + some brand-new keys), each folded,
+    # grow files
     for lo in (1_000, 9_000, 41_000):
         t.upsert(
             spark.range(lo, lo + 500).select(
                 F.col("id").alias("k"), F.lit(-1).cast("long").alias("v")
             )
         )
+        assert t.compact(), "the fold rewrote nothing"
 
     def ranges_by_bucket(vdir):
         out = {}
@@ -719,9 +750,7 @@ def test_ndb_compact_coalesces_file_growth(spark, tmpdir):
     after = ranges_by_bucket(cur2)
     assert overlapping(after) == [], after
     # coalesced: every rewritten bucket is back to AT MOST fpb files —
-    # deterministic by construction since the r12 ntile-slot rewrite
-    # (repartitionByRange's sample-estimated boundaries could straddle
-    # a bucket across fpb+2 partitions on an unlucky RDD-id seed)
+    # deterministic by construction (the ntile-slot rewrite)
     for b in after:
         if int(b.split("=", 1)[1]) in set(rewritten):
             assert len(after[b]) <= 3, (b, len(after[b]))
@@ -1009,21 +1038,23 @@ def test_ndb_keep_versions_widens_on_reopen(spark, tmpdir):
 
 
 def test_ndb_compact_selects_fpb_plus_one_file_buckets(spark, tmpdir):
-    """The selection threshold is now exactly files_per_bucket
-    (ADVICE r12): a bucket left at fpb+1 files by an upsert straddle
-    is selected and coalesced, not skipped forever — and compact
-    stays idempotent because the ntile rewrite converges to <= fpb."""
+    """The coalesce threshold is exactly files_per_bucket: a bucket
+    left at fpb+1 files by a fold straddle is selected and coalesced,
+    not skipped forever — and compact stays idempotent because the
+    ntile rewrite converges to <= fpb."""
     path = os.path.join(tmpdir, "kv")
     t = NdbTable(spark, path, key="k", n_buckets=1, files_per_bucket=2)
     t.upsert(
         spark.range(1_000).select(F.col("id").alias("k"), F.col("id").alias("v"))
     )
-    # one narrow update adds files: bucket ends above fpb
+    assert t.compact() == [0]  # the fold writes the base
+    # one narrow update, folded, adds files: bucket ends above fpb
     t.upsert(
         spark.range(10, 20).select(
             F.col("id").alias("k"), F.lit(-1).cast("long").alias("v")
         )
     )
+    assert t.compact() == [0]
     cur = t._current_dir()
     bdir = next(
         os.path.join(cur, d) for d in os.listdir(cur)
@@ -1039,6 +1070,7 @@ def test_ndb_compact_selects_fpb_plus_one_file_buckets(spark, tmpdir):
                 F.col("id").alias("k"), F.lit(-2).cast("long").alias("v")
             )
         )
+        assert t.compact() == [0]
     assert t.compact() == [0]
     assert t.compact() == []  # converged: idempotent at <= fpb files
     assert t.replay().count() == 1_000
@@ -1606,10 +1638,11 @@ spark.stop()
 
 def test_ndb_manifest_written_and_reused(spark, tmpdir):
     """The per-version manifest (Delta-checkpoint analog): every data
-    file gets a range entry, carried files inherit entries by relpath
-    without re-probing, and the pruned-upsert selection consults the
-    manifest instead of parquet footers (probe count drops to the
-    freshly-written files only)."""
+    file — the delta an upsert writes and the base files a fold writes
+    — gets a range entry, carried files inherit entries by relpath
+    without re-probing, and the fold's file selection consults the
+    manifest instead of parquet footers (probes hit only freshly
+    written files)."""
     import json as _json
 
     path = os.path.join(tmpdir, "kv")
@@ -1619,29 +1652,40 @@ def test_ndb_manifest_written_and_reused(spark, tmpdir):
             [(j, "a") for j in range(40)], "k bigint, v string"
         )
     )
-    man_path = os.path.join(path, "v0", "_manifest.json")
-    assert os.path.exists(man_path)
-    with open(man_path) as fh:
-        man = _json.load(fh)
+
+    def data_files(vdir):
+        return sorted(
+            os.path.relpath(os.path.join(dp, fn), vdir)
+            for dp, _, fns in os.walk(vdir)
+            for fn in fns
+            if not fn.startswith((".", "_"))
+        )
+
+    def manifest(vdir):
+        with open(os.path.join(vdir, "_manifest.json")) as fh:
+            return _json.load(fh)
+
+    # the append: one entry, for the one delta file, with its count
+    man0 = manifest(os.path.join(path, "v0"))
+    assert list(man0) == ["_delta/000000000000.parquet"]
+    assert man0["_delta/000000000000.parquet"] == {"r": [0, 39], "n": 40}
+
+    t.compact()  # the fold: one entry per base file
+    v1 = t._current_dir()
+    man = manifest(v1)
     # one entry per data file, each with a sane [lo, hi]
-    data_files = [
-        os.path.relpath(os.path.join(dp, fn), os.path.join(path, "v0"))
-        for dp, _, fns in os.walk(os.path.join(path, "v0"))
-        for fn in fns
-        if not fn.startswith((".", "_"))
-    ]
-    assert sorted(man) == sorted(data_files) and len(man) >= 2
+    assert sorted(man) == data_files(v1) and len(man) >= 2
     for ent in man.values():
-        # v2 entries: {"r": [lo, hi] | None, "n": rows} — the row
-        # count rides along in the same footer read
+        # {"r": [lo, hi] | None, "n": rows} — the row count rides
+        # along in the same footer read
         assert set(ent) == {"r", "n"} and ent["n"] >= 1
         assert ent["r"] is None or (
             len(ent["r"]) == 2 and ent["r"][0] <= ent["r"][1]
         )
 
-    # second upsert: the selection must consult the manifest, probing
-    # zero STORED files (probes happen only in _write_manifest, for
-    # fresh files not carried from v0)
+    # second upsert + fold: the selection must consult the manifest,
+    # probing zero STORED files (probes happen only in _write_manifest,
+    # for fresh files in the staging dirs)
     probes = []
     real = NdbTable._file_key_range
 
@@ -1654,26 +1698,25 @@ def test_ndb_manifest_written_and_reused(spark, tmpdir):
         t.upsert(
             spark.createDataFrame([(1, "b"), (2, "b")], "k bigint, v string")
         )
+        t.compact()
     finally:
         t._file_key_range = staticmethod(real)
-    assert all("/v0/" not in p for p in probes), probes  # no stored re-probe
+    assert all("/.stage-v" in p for p in probes), probes
 
-    # v1's manifest carried v0's untouched entries verbatim
-    with open(os.path.join(path, "v1", "_manifest.json")) as fh:
-        man1 = _json.load(fh)
-    carried = set(man) & set(man1)
+    # the fold's manifest carried v1's untouched entries verbatim
+    man3 = manifest(t._current_dir())
+    carried = set(man) & set(man3)
     assert carried  # hardlinked files share relpaths across versions
     for rel in carried:
-        if os.path.exists(os.path.join(path, "v0", rel)):
-            assert man1[rel] == man[rel]
+        assert man3[rel] == man[rel]
     assert {r.k for r in t.replay().collect()} == set(range(40))
 
 
 def test_ndb_manifest_fallback_and_compact_equivalence(spark, tmpdir):
     """Deleting the manifest (a pre-manifest version) must change
-    NOTHING except the probe path: pruned upserts and compact still
-    select identically off parquet footers, and compact rebuilds the
-    manifest for its new version."""
+    NOTHING except the probe path: the fold (compact) still selects
+    identically off parquet footers and rebuilds the manifest for its
+    new version."""
     path = os.path.join(tmpdir, "kv")
     t = NdbTable(spark, path, key="k", n_buckets=2, files_per_bucket=2)
     for i in range(3):  # grow intra-bucket files so compact has work
@@ -1703,8 +1746,11 @@ def test_ndb_manifest_fallback_and_compact_equivalence(spark, tmpdir):
 
 def test_ndb_history_audit(spark, tmpdir):
     """history() — the DESCRIBE HISTORY analog: one row per retained
-    generation with publish time, file counts, total vs exclusive
-    (hardlink-aware) bytes, head flag, and manifest presence."""
+    generation with publish time, file and pending-delta counts, total
+    vs exclusive (hardlink-aware) bytes, head flag, and manifest
+    presence. n_rows is the VISIBLE row count: unknown (None) while
+    deltas are pending — a delta row may replace another row, so
+    their counts do not add up — and exact once folded."""
     path = os.path.join(tmpdir, "kv")
     t = NdbTable(spark, path, key="k", n_buckets=4, keep_versions=3)
     for i in range(3):
@@ -1713,20 +1759,29 @@ def test_ndb_history_audit(spark, tmpdir):
                 [(i, f"v{i}")], "k bigint, v string"  # one bucket touched
             )
         )
+    t.upsert(spark.createDataFrame([(0, "again")], "k bigint, v string"))
     h = t.history()
-    assert [r["generation"] for r in h] == [0, 1, 2]
+    assert [r["generation"] for r in h] == [1, 2, 3]
     assert [r["is_current"] for r in h] == [False, False, True]
     assert all(r["has_manifest"] for r in h)
-    assert all(r["n_files"] >= 1 and r["total_bytes"] > 0 for r in h)
-    # manifest-v2 row counts surface per snapshot: each upsert added
-    # one new key, so the retained generations hold 1, 2, 3 rows
-    assert [r["n_rows"] for r in h] == [1, 2, 3]
+    assert [r["n_deltas"] for r in h] == [2, 3, 4]
+    assert [r["n_files"] for r in h] == [2, 3, 4]
+    assert all(r["total_bytes"] > 0 for r in h)
+    # four delta rows but three visible keys: never summed
+    assert [r["n_rows"] for r in h] == [None, None, None]
     # publish order is monotone in the marker mtimes
     times = [r["committed_at"] for r in h]
     assert all(t is not None for t in times) and times == sorted(times)
-    # hardlink awareness: v1 shares untouched-bucket files with v0/v2,
-    # so its exclusive bytes are strictly below its total
+    # hardlink awareness: v2 shares its delta files with v1/v3, so its
+    # exclusive bytes are strictly below its total
     assert h[1]["exclusive_bytes"] < h[1]["total_bytes"]
+
+    # the fold: no delta pending, the manifest counts are the rows
+    t.compact()
+    head = t.history()[-1]
+    assert head["is_current"] and head["n_deltas"] == 0
+    assert head["n_rows"] == 3
+
 
 def test_ndb_manifest_reused_relpath_reprobed(spark, tmpdir):
     """ADVICE r14: _write_manifest must NOT inherit a previous
@@ -1775,9 +1830,9 @@ def test_ndb_manifest_reused_relpath_reprobed(spark, tmpdir):
 def test_ndb_manifest_v1_entries_still_read(spark, tmpdir):
     """A manifest not in the {"r", "n"} entry shape (here bare
     [lo, hi] / null entries) is ignored like a missing one: history()
-    reports n_rows=None rather than guessing, a pruned upsert falls
-    back to footer probes (no error), and the next version's manifest
-    is written fresh in the one shape."""
+    reports n_rows=None rather than guessing, the next upsert falls
+    back to footer probes (no error), and its version's manifest is
+    written fresh in the one shape."""
     import json as _json
 
     path = os.path.join(tmpdir, "kv")
@@ -1799,7 +1854,7 @@ def test_ndb_manifest_v1_entries_still_read(spark, tmpdir):
     h0 = [r for r in t.history() if r["is_current"]][0]
     assert h0["n_rows"] is None  # v1 entries carry no counts
 
-    # a pruned upsert probes footers instead (no error), and the next
+    # the next upsert probes footers instead (no error), and its
     # version's manifest is back in the {"r", "n"} shape
     t.upsert(spark.createDataFrame([(1, "b")], "k bigint, v string"))
     cur = t._current_dir()
@@ -1877,11 +1932,13 @@ def test_ndb_commit_backend_seam_log_service(spark, tmpdir):
     }
 
 def test_ndb_lookup_bucket_pruned(spark, tmpdir):
-    """lookup() bucket-prunes the table side for left/inner/semi joins
-    (r15): a small probe touches few buckets, the scan carries a
-    partition filter on the bucket column, and the result is
-    identical to the unpruned join. Right joins need unmatched table
-    rows and fall back to the full replay."""
+    """lookup() bucket-prunes the table side for left/inner/semi joins:
+    a small probe touches few buckets, the base scan carries a
+    partition filter on the bucket column, the bucket and key-range
+    filters reach the delta scan too (before the last-write-wins
+    resolution), and the result is identical to the unpruned join.
+    Right joins need unmatched table rows and fall back to the full
+    replay."""
     import contextlib
     import io as _io
 
@@ -1891,6 +1948,10 @@ def test_ndb_lookup_bucket_pruned(spark, tmpdir):
         spark.createDataFrame(
             [(i, f"name{i}") for i in range(200)], "k bigint, name string"
         )
+    )
+    t.compact()  # base in bucket dirs ...
+    t.upsert(  # ... plus one pending delta over it
+        spark.createDataFrame([(7, "NEW7"), (150, "NEW150")], "k bigint, name string")
     )
     probe = spark.createDataFrame([(3, "x"), (7, "y"), (999, "z")], "k bigint, tag string")
 
@@ -1903,8 +1964,9 @@ def test_ndb_lookup_bucket_pruned(spark, tmpdir):
     assert t.last_lookup_stats == {}  # fallback records no selection
     key = lambda r: (r["k"], r["tag"], r["name"])  # noqa: E731
     assert sorted(map(key, pruned.collect())) == sorted(map(key, full.collect()))
-    # the missing key still emits its NULL row under 'left'
-    assert any(r["k"] == 999 and r["name"] is None for r in pruned.collect())
+    # the delta's write wins, and the missing key emits its NULL row
+    got = {r["k"]: r["name"] for r in pruned.collect()}
+    assert got == {3: "name3", 7: "NEW7", 999: None}
 
     # the prune is REAL partition pruning, not a post-scan filter
     buf = _io.StringIO()
@@ -1912,9 +1974,12 @@ def test_ndb_lookup_bucket_pruned(spark, tmpdir):
         pruned.explain("formatted")
     plan = buf.getvalue()
     assert "PartitionFilters" in plan and "__ndb_bucket" in plan
-    # the key-range prune reached the parquet scan as a pushed filter
-    # (row-group skipping on range-sorted files comes free from it)
-    assert "PushedFilters" in plan and "GreaterThanOrEqual(k" in plan
+    # the key-range prune reached the parquet scans as a pushed filter
+    # (row-group skipping on range-sorted files comes free from it):
+    # the base scan and both reads of the delta
+    assert "PushedFilters" in plan
+    assert plan.count("GreaterThanOrEqual(k") >= 3, plan
+    assert plan.count("In(__ndb_bucket") >= 2, plan
 
     # inner join agrees too; right join falls back to the full table
     inner_p = t.lookup(probe, how="inner").collect()
@@ -1923,6 +1988,7 @@ def test_ndb_lookup_bucket_pruned(spark, tmpdir):
     right = t.lookup(probe, how="right")
     assert t.last_lookup_stats == {}
     assert right.count() == 200  # every table row survives a right join
+
 
 def test_ndb_sqlite_commit_backend_end_to_end(spark, tmpdir):
     """SqliteCommitBackend — the REAL log-service implementation of
@@ -2285,3 +2351,106 @@ def test_ndb_two_sqlite_logs_misconfigured_refuse(spark, tmpdir):
     assert {r.k: r.v for r in t_a.replay().collect()} == {1: "a"}
     t_a.upsert(spark.createDataFrame([(3, "c")], "k bigint, v string"))
     assert {r.k: r.v for r in t_a.replay().collect()} == {1: "a", 3: "c"}
+
+
+def test_ndb_append_commit_counters(spark, tmpdir):
+    """The merge-on-read commit, counted with
+    dbitool_spark.profile.counters: three Zipf-keyed upserts into a
+    fresh table never read the stored state — each is one shuffle job
+    (the within-batch resolution) plus its one-task write job — and
+    each commit adds exactly one data file, its delta. The pruned
+    lookup that follows resolves only the probed buckets: its shuffle
+    bytes stay a fraction of the unpruned lookup's, which resolves the
+    whole table, and it returns each probed key's last write."""
+    import random
+
+    from dbitool_spark import profile
+    from dbitool_spark.ndb import _DELTA
+
+    rng = random.Random(7)
+    n_keys = 2_000
+    weights = [1.0 / (i + 1) for i in range(n_keys)]
+    latest: dict[int, tuple[str, int]] = {}
+    batches = []
+    seq = 0
+    for _ in range(3):
+        rows = []
+        for k in rng.choices(range(n_keys), weights, k=1_000):
+            seq += 1
+            rows.append((k, f"v{seq}", seq))
+            latest[k] = (f"v{seq}", seq)
+        batches.append(spark.createDataFrame(rows, "k bigint, v string, seq bigint"))
+
+    t = NdbTable(spark, os.path.join(tmpdir, "kv"), key="k")  # 32 buckets
+
+    def data_files():
+        head = t._current_dir()
+        return sorted(
+            os.path.relpath(os.path.join(dp, fn), head)
+            for dp, _, fns in os.walk(head)
+            for fn in fns
+            if not fn.startswith((".", "_"))
+        )
+
+    files = []
+    with profile.counters(spark) as up:
+        for df in batches:
+            t.upsert(df, order_by="seq")
+            files.append(data_files())
+    assert up["jobs"] == 6, up
+    assert up["tasks"] == 3 * (spark.sparkContext.defaultParallelism + 1), up
+    for g, names in enumerate(files):
+        assert names == [f"{_DELTA}/{i:012d}.parquet" for i in range(g + 1)]
+
+    # probe three stored keys: the hottest (rewritten by every batch)
+    # and two from the Zipf tail
+    tail = sorted(latest)[-2:]
+    probe = spark.createDataFrame([(k,) for k in [0, *tail]], "k bigint")
+    with profile.counters(spark) as pruned:
+        got = {r.k: (r.v, r.seq) for r in t.lookup(probe).collect()}
+    assert t.last_lookup_stats["buckets_probed"] <= 3
+    assert got == {k: latest[k] for k in [0, *tail]}
+    assert pruned["jobs"] <= 6, pruned
+    with profile.counters(spark) as full:
+        t.lookup(probe, prune=False).collect()
+    assert 0 < pruned["shuffle_bytes"] * 3 < full["shuffle_bytes"], (pruned, full)
+
+
+def test_ndb_base_scan_skips_delta_dir(spark, tmpdir):
+    """Pending deltas live in `v{gen}/_delta/`, which Spark's file index
+    skips (underscore prefix): a plain scan of the version dir sees the
+    base bucket files only, while replay() resolves the delta over
+    them."""
+    path = os.path.join(tmpdir, "kv")
+    t = NdbTable(spark, path, key="k", n_buckets=4)
+    t.upsert(spark.createDataFrame([(i, "base") for i in range(10)], "k bigint, v string"))
+    t.compact()
+    t.upsert(spark.createDataFrame([(1, "new"), (99, "new")], "k bigint, v string"))
+    head = t._current_dir()
+    assert os.listdir(os.path.join(head, "_delta"))
+    raw = spark.read.parquet(head)
+    assert raw.count() == 10 and {r.v for r in raw.collect()} == {"base"}
+    got = {r.k: r.v for r in t.replay().collect()}
+    assert len(got) == 11 and got[1] == got[99] == "new" and got[0] == "base"
+
+
+def test_ndb_upsert_folds_past_the_delta_bound(spark, tmpdir):
+    """An upsert that leaves more than _FOLD_AFTER deltas in its version
+    folds them in one further commit: the head then holds no delta,
+    reads the same, and the next upsert starts a fresh delta run."""
+    from dbitool_spark.ndb import _FOLD_AFTER
+
+    path = os.path.join(tmpdir, "kv")
+    t = NdbTable(spark, path, key="k", n_buckets=4)
+    for i in range(_FOLD_AFTER):
+        t.upsert(spark.createDataFrame([(i % 3, f"v{i}")], "k bigint, v string"))
+    assert len(t._delta_files(t._current_dir())) == _FOLD_AFTER
+    assert t._current_gen() == _FOLD_AFTER - 1
+    t.upsert(spark.createDataFrame([(7, "last")], "k bigint, v string"))
+    assert t._current_gen() == _FOLD_AFTER + 1  # the append, then the fold
+    assert t._delta_files(t._current_dir()) == []
+    want = {i % 3: f"v{i}" for i in range(_FOLD_AFTER)} | {7: "last"}
+    assert {r.k: r.v for r in t.replay().collect()} == want
+    t.upsert(spark.createDataFrame([(0, "after")], "k bigint, v string"))
+    assert len(t._delta_files(t._current_dir())) == 1
+    assert {r.k: r.v for r in t.replay().collect()} == want | {0: "after"}

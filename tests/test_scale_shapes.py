@@ -917,3 +917,74 @@ def test_scaling_gate_on_ops_no_registry_entry_covers(spark):
             "edit_distance_pairs' candidates grow ~109x for 10x rows: wall ratio "
             f"{gate['entries']['edit_distance_join']['wall_ratio']}x"
         )
+
+
+def test_rebalance_to_parallelism_refuses_exchange_bearing_frames(spark):
+    """rebalance_to_parallelism checks its exchange-free contract on the
+    analyzed logical plan, driver-side: an aggregate raises before any
+    partition count is asked for, while the scan + projection +
+    unionAll shape of the perturbed corpus passes without running a
+    job and keeps every row."""
+    from dbitool_spark import profile
+    from dbitool_spark.plans.llm_ops import _perturbed_corpus
+
+    docs = catalog.load(spark, SF_SMOKE, "documents")
+    with pytest.raises(ValueError, match=r"exchange-free.*Aggregate"):
+        scale.rebalance_to_parallelism(docs.groupBy("doc_id").count(), "doc_id")
+    corpus = _perturbed_corpus(docs)
+    with profile.counters(spark) as work:
+        out = scale.rebalance_to_parallelism(corpus, "doc_id")
+    assert work["jobs"] == 0
+    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, corpus.collect()))
+
+
+def test_bloom_decontaminate_single_pass_equals_two_pass(spark):
+    """The single-pass bloom rewrite was measured SLOWER and rejected
+    (see the operator's r16 note) — this pins that the rejection was
+    performance-only: the fused construction (built inline here, the
+    rejected shape) reports the same (recall, n_exact) as the
+    registered two-pass entry, so the decision can be revisited at a
+    different scale without a correctness question."""
+    from dbitool_spark.ops import scale
+    from dbitool_spark.plans.pipeline_ops import (
+        _BLOOM_K,
+        _BLOOM_M_BITS,
+        DECONTAM_NGRAM,
+        bench_gram_set,
+        bloom_decontaminate_documents,
+    )
+
+    docs = catalog.load(spark, SF_SMOKE, "documents")
+    bench = bench_gram_set(docs)
+    bloom = scale.bloom_build(bench, "gram", m_bits=_BLOOM_M_BITS, k=_BLOOM_K)
+    bloom_df = spark.createDataFrame([(bloom,)], "bloom array<bigint>")
+    grams = docs.select(
+        "doc_id",
+        F.explode(dedup.shingles(F.col("text"), DECONTAM_NGRAM)).alias("gram"),
+    )
+    per_doc = (
+        grams.join(bench.withColumn("__b", F.lit(1)), "gram", "left")
+        .crossJoin(F.broadcast(bloom_df))
+        .groupBy("doc_id")
+        .agg(
+            F.max(
+                scale.bloom_contains_expr(
+                    "gram", "bloom", _BLOOM_M_BITS, _BLOOM_K
+                ).cast("int")
+            ).alias("__hit"),
+            F.max(F.col("__b").isNotNull().cast("int")).alias("__exact"),
+        )
+    )
+    want = (
+        per_doc.filter(F.col("__exact") == 1)
+        .agg(
+            F.when(F.count(F.lit(1)) == 0, F.lit(1.0))
+            .otherwise((F.sum("__hit") / F.count(F.lit(1))).cast("double"))
+            .alias("recall"),
+            F.count(F.lit(1)).alias("n_exact"),
+        )
+        .collect()[0]
+    )
+    got = bloom_decontaminate_documents(spark, SF_SMOKE).collect()[0]
+    assert (got.recall, got.n_exact) == (want.recall, want.n_exact)
+    assert got.n_exact > 0  # non-vacuous at this SF
