@@ -22,9 +22,12 @@ Delta Lake / Iceberg MoR shape, Armbrust et al. VLDB 2020):
   deltas, the base rows whose key a delta holds are dropped by an
   anti-join against the delta keys (the fold bound keeps that side a
   few batches, so the planner broadcasts it) and the deltas resolve
-  among themselves by one key window. `lookup` applies its bucket
-  and key-range filters to every source BEFORE resolving, so it only
-  resolves the probed buckets;
+  among themselves by one key window. `lookup` on a table larger
+  than the session's broadcast bound applies its bucket and
+  key-range filters to every source BEFORE resolving, so it only
+  resolves the probed buckets; a table within the bound (data files
+  summed on the driver) is broadcast whole, resolved in one task,
+  with no probe pass;
 - `compact()` is the FOLD: it merges the pending deltas into the
   bucket files, rewriting only the buckets the deltas touch (and,
   with files_per_bucket > 1, only the key-range files inside them the
@@ -543,10 +546,12 @@ class NdbTable:
         #: selection ({} until a files_per_bucket>1 table folds) —
         #: read by pytest and by curious operators.
         self.last_prune_stats: dict = {}
-        #: observability: the last lookup()'s bucket/range selection
-        #: ({} until a prunable lookup runs — same contract as
-        #: last_prune_stats; review finding: reading it pre-lookup
-        #: raised AttributeError)
+        #: observability: why the last lookup() read what it read —
+        #: {"table_bytes", "broadcast_threshold"} when the table fit the
+        #: broadcast bound and no bucket was probed, the bucket/range
+        #: selection when the probe pass ran, {} for a full replay
+        #: (prune=False, right/full joins, key dtype drift) and before
+        #: any lookup
         self.last_lookup_stats: dict = {}
         os.makedirs(path, exist_ok=True)
         # the stored layout is authoritative: a reopened table keeps
@@ -754,6 +759,23 @@ class NdbTable:
             return None
         return self._read(current)
 
+    def _broadcast_bound(self) -> int:
+        """The session's spark.sql.autoBroadcastJoinThreshold in bytes
+        (-1 when broadcasting is off)."""
+        return self.spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+
+    @staticmethod
+    def _data_bytes(version_dir: str) -> int:
+        """Bytes of the version's data files (base bucket files plus
+        deltas; markers, manifest and checksums excluded), summed on
+        the driver without a Spark job."""
+        return sum(
+            os.path.getsize(os.path.join(dp, fn))
+            for dp, _, fns in os.walk(version_dir)
+            for fn in fns
+            if not fn.startswith((".", "_"))
+        )
+
     @staticmethod
     def _delta_files(version_dir: str) -> list[str]:
         """The version's delta files, oldest generation first (names
@@ -784,6 +806,7 @@ class NdbTable:
         *,
         buckets: list[int] | None = None,
         key_range: tuple | None = None,
+        one_task: bool = False,
     ) -> DataFrame:
         """The version's visible rows (with _GEN and _BUCKET), one per
         key: last-write-wins over the base bucket files plus the
@@ -795,7 +818,10 @@ class NdbTable:
         the delta keys — at most _FOLD_AFTER + 1 batches, so on a table
         much larger than a batch the planner broadcasts them and the
         base scan does not shuffle — and the deltas resolve among
-        themselves by one key window."""
+        themselves by one key window. `one_task` coalesces every source
+        to one partition first (for tables small enough to broadcast):
+        a single partition already satisfies the window's clustering,
+        so the resolution runs as one task with no exchange."""
         reader = self._reader()
 
         def narrow(df: DataFrame) -> DataFrame:
@@ -804,7 +830,7 @@ class NdbTable:
             if key_range is not None:
                 lo, hi = key_range
                 df = df.filter(F.col(self.key).between(F.lit(lo), F.lit(hi)))
-            return df
+            return df.coalesce(1) if one_task else df
 
         base = (
             narrow(reader.parquet(version_dir))
@@ -1872,7 +1898,20 @@ class NdbTable:
         need the table's unmatched rows and fall back to the full
         replay; set prune=False when the probe is itself table-sized
         (the pruning pass then costs more than it saves).
-        last_lookup_stats records the selection."""
+
+        Broadcast-sized tables skip the probe pass: when the current
+        version's data files (bucket files plus deltas, summed on the
+        driver without a Spark job) total no more than the session's
+        spark.sql.autoBroadcastJoinThreshold, the planner broadcasts
+        the resolved table whatever the probe selects, so pruning
+        could only add its two jobs and the extra probe scan. The
+        table is then resolved whole in one task (no exchange), and
+        the probe is scanned once, by the join. A threshold of -1
+        always takes the pruned path.
+
+        last_lookup_stats records the choice: {"table_bytes",
+        "broadcast_threshold"} on the broadcast path, the bucket/range
+        selection on the pruned path, {} on a full replay."""
         self.last_lookup_stats: dict = {}
         # left/inner/semi: pruned table rows can't match any probe
         # key. anti is safe for the same reason — removing table rows
@@ -1898,12 +1937,22 @@ class NdbTable:
         )
         if self._key_type is None:
             self._refresh_schema_state()  # another handle created the table
-        if (
+        if not (
             prune
             and how in prunable
             and probe_kt is not None
             and probe_kt == self._key_type
         ):
+            table = self._read(current)
+        elif (size := self._data_bytes(current)) <= (
+            bound := self._broadcast_bound()
+        ):
+            # the planner broadcasts a table this small whatever the
+            # probe holds, so a probe pass could only cost: skip it and
+            # resolve the whole table in one task
+            self.last_lookup_stats = {"table_bytes": size, "broadcast_threshold": bound}
+            table = self._read(current, one_task=True)
+        else:
             # ONE probe pass: distinct bucket ids (<= n_buckets via
             # map-side combine) + the global key range, one driver row
             sel = other.agg(
@@ -1925,8 +1974,6 @@ class NdbTable:
                 buckets=touched,
                 key_range=None if sel["lo"] is None else (sel["lo"], sel["hi"]),
             )
-        else:
-            table = self._read(current)
         table = table.drop(_GEN, _BUCKET)
         if broadcast:
             table = F.broadcast(table)

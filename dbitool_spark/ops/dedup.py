@@ -412,15 +412,15 @@ def ngram_jaccard_pairs(
     (bigint array_intersect measured ~2.5x faster than ~25-byte
     strings over 1.2M candidate pairs). Exact up to 64-bit collisions:
     P(any collision among S distinct shingles) ~ S^2/2^65, negligible
-    below ~10^8 shingles (the r4 plan carried the same exposure on its
-    join-counted intersections). Pass False for bit-exact string
-    processing end to end.
+    below ~10^8 shingles (the inverted-index plan carried the same
+    exposure on its join-counted intersections). Pass False for
+    bit-exact string processing end to end.
 
-    NOTE the BENCH_r03 number for this query was cache-flattered:
-    minhash ran earlier in the suite and leaked its plan-identical
-    persisted shingle table, which the CacheManager silently reused
-    here. Cold ratios: r3 shape ~6x the r4 index plan; the
-    prefix-filtered plan ~0.65x of r4.
+    Time this query cold: a plan-identical shingle table left
+    persisted by an earlier minhash call is silently reused by the
+    CacheManager and flatters the number. Cold, the plan before the
+    inverted index cost ~6x the index plan, and this prefix-filtered
+    plan costs ~0.65x of it.
 
     Returns (id_a, id_b, jaccard) with id_a < id_b.
     """
@@ -1147,7 +1147,7 @@ def simhash_candidates(
     the persist: a post-persist raise would leave the signature plan
     registered in the CacheManager with no release point, and any
     later plan-identical signature subplan would silently materialize
-    through the orphaned entry (the BENCH_r03 silent-reuse leak)."""
+    through the orphaned entry and flatter its timing."""
     _validate_simhash_banding(n_blocks, bits_per_block)
     sig = simhash_signatures(df, id_col, text_col).persist()
     result = simhash_band_candidates(

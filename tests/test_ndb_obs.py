@@ -166,24 +166,32 @@ def test_ndb_time_travel_snapshots(spark, tmpdir):
 
 
 def test_ndb_time_travel_snapshots_share_untouched_bucket_inodes(spark, tmpdir):
-    """Retained snapshots cost only the rewritten deltas: a bucket a
-    later upsert did not touch hardlinks forward, so the SAME inode
-    appears in every retained version dir that carries it."""
+    """Retained snapshots cost only their own deltas: an upsert
+    rewrites no bucket file and no earlier delta, so every file of the
+    previous version hardlinks forward and the SAME inode appears in
+    every retained version dir that carries it."""
+    from dbitool_spark.ndb import _DELTA
+
     path = os.path.join(tmpdir, "kv")
     t = NdbTable(spark, path, key="k", n_buckets=8, keep_versions=3)
     t.upsert(
         spark.createDataFrame([(i, f"v{i}") for i in range(64)], "k bigint, v string")
     )
+    t.compact()  # fold the first batch into the bucket files
+    folded = t._current_dir()
     t.upsert(spark.createDataFrame([(0, "V0")], "k bigint, v string"))
-    b0 = _bucket_files(os.path.join(path, "v0"))
-    b1 = _bucket_files(os.path.join(path, "v1"))
-    shared = [
-        name for name in b0
-        if name in b1 and b0[name] == b1[name]
-    ]
-    # the single-key second batch touches exactly one bucket; every
-    # other bucket must be inode-shared between the two snapshots
-    assert len(shared) >= len(b0) - 1, (b0.keys(), b1.keys(), shared)
+    appended = t._current_dir()
+    t.upsert(spark.createDataFrame([(1, "V1")], "k bigint, v string"))
+    head = t._current_dir()
+    b0 = _bucket_files(folded)
+    assert len(b0) == 8, b0.keys()  # 64 keys reach every bucket
+    # no bucket file is rewritten by either upsert: all are inode-shared
+    assert _bucket_files(appended) == b0
+    assert _bucket_files(head) == b0
+    # the first upsert's delta carries into the next snapshot by link
+    delta = os.path.join(_DELTA, os.listdir(os.path.join(appended, _DELTA))[0])
+    assert os.path.samefile(os.path.join(appended, delta), os.path.join(head, delta))
+    assert {r.k: r.v for r in t.replay().filter("k < 2").collect()} == {0: "V0", 1: "V1"}
 
 
 def _bucket_files(vdir):
@@ -1931,6 +1939,93 @@ def test_ndb_commit_backend_seam_log_service(spark, tmpdir):
         1: "a", 2: "b", 3: "b", 4: "c",
     }
 
+def _broadcast_bound_session(spark, bound: int):
+    """A child of `spark` whose spark.sql.autoBroadcastJoinThreshold is
+    `bound` bytes (-1: off); the shared session's conf never changes."""
+    child = spark.newSession()
+    child.conf.set("spark.sql.autoBroadcastJoinThreshold", str(bound))
+    return child
+
+
+def test_ndb_lookup_broadcast_sized_table_skips_probe_pass(spark, tmpdir):
+    """A table whose data files fit the session's broadcast bound is
+    broadcast whatever the probe selects, so lookup skips the probe
+    pass (two jobs and a probe scan) and resolves the table in one
+    task: no shuffle at all. last_lookup_stats says why no bucket was
+    probed, and the results equal the unpruned join's. A bound between
+    two tables' sizes sends the larger one down the pruned path."""
+    from dbitool_spark import profile
+
+    def make(name, n, deltas):
+        t = NdbTable(spark, os.path.join(tmpdir, name), key="k", n_buckets=8)
+        for g in range(deltas):
+            t.upsert(
+                spark.createDataFrame(
+                    [(i, f"{name}{g}_{i}") for i in range(g, n, g + 1)],
+                    "k bigint, v string",
+                )
+            )
+        return t
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    off = _broadcast_bound_session(spark, -1)
+    t = make("small", 300, 3)  # delta-only: three pending deltas
+    bound = t._broadcast_bound()
+    assert not t._bucket_dirs(t._current_dir())
+    size = NdbTable._data_bytes(t._current_dir())
+    assert 0 < size <= bound
+    t_off = NdbTable(off, t.path, key="k")
+    keys = [(k,) for k in (0, 2, 3, 149, 299, 5000)]
+    probe = spark.createDataFrame(keys, "k bigint")
+    probe_off = off.createDataFrame(keys, "k bigint")
+
+    with profile.counters(spark) as gated:
+        got = rows(t.lookup(probe))
+    assert t.last_lookup_stats == {"table_bytes": size, "broadcast_threshold": bound}
+    with profile.counters(spark) as pruned:
+        assert rows(t_off.lookup(probe_off)) == got
+    assert t_off.last_lookup_stats["buckets_probed"] >= 1
+    assert gated["jobs"] <= pruned["jobs"] - 2, (gated, pruned)
+    assert gated["shuffle_bytes"] == 0 < pruned["shuffle_bytes"], (gated, pruned)
+    assert dict(got) == {0: "small0_0", 2: "small2_2", 3: "small1_3",
+                         149: "small2_149", 299: "small2_299", 5000: None}
+
+    # a folded base under pending deltas resolves in one task too
+    base = make("base", 300, 1)
+    base.compact()
+    base.upsert(spark.createDataFrame([(3, "new3"), (777, "new777")], "k bigint, v string"))
+    assert base._bucket_dirs(base._current_dir())
+    for table in (t, base):
+        for how in ("left", "inner", "left_semi", "left_anti"):
+            gated_rows = rows(table.lookup(probe, how=how))
+            assert "table_bytes" in table.last_lookup_stats
+            assert gated_rows == rows(table.lookup(probe, how=how, prune=False)), how
+            assert table.last_lookup_stats == {}
+    assert dict(rows(base.lookup(probe, how="inner"))) == {
+        0: "base0_0", 2: "base0_2", 3: "new3", 149: "base0_149", 299: "base0_299",
+    }
+    # the fallbacks still record no selection under the bound
+    table_rows = t.lookup(probe, how="right").count()
+    assert t.last_lookup_stats == {} and table_rows == 300
+    t.lookup(spark.createDataFrame([(3,)], "k int"))
+    assert t.last_lookup_stats == {}
+
+    # a bound between two tables' sizes: the larger one is pruned
+    big = make("big", 3_000, 2)
+    big_size = NdbTable._data_bytes(big._current_dir())
+    assert size < big_size
+    mid = _broadcast_bound_session(spark, (size + big_size) // 2)
+    probe_mid = mid.createDataFrame(keys, "k bigint")
+    for path, gated_path in ((t.path, True), (big.path, False)):
+        tm = NdbTable(mid, path, key="k")
+        got = rows(tm.lookup(probe_mid))
+        assert ("table_bytes" in tm.last_lookup_stats) is gated_path
+        assert ("buckets_probed" in tm.last_lookup_stats) is not gated_path
+        assert got == rows(tm.lookup(probe_mid, prune=False))
+
+
 def test_ndb_lookup_bucket_pruned(spark, tmpdir):
     """lookup() bucket-prunes the table side for left/inner/semi joins:
     a small probe touches few buckets, the base scan carries a
@@ -1938,10 +2033,12 @@ def test_ndb_lookup_bucket_pruned(spark, tmpdir):
     filters reach the delta scan too (before the last-write-wins
     resolution), and the result is identical to the unpruned join.
     Right joins need unmatched table rows and fall back to the full
-    replay."""
+    replay. The table is far below the default broadcast bound, so it
+    lives in a session with broadcasting off."""
     import contextlib
     import io as _io
 
+    spark = _broadcast_bound_session(spark, -1)
     path = os.path.join(tmpdir, "kv")
     t = NdbTable(spark, path, key="k", n_buckets=16)
     t.upsert(
@@ -2075,7 +2172,10 @@ def test_ndb_lookup_dtype_drift_falls_back(spark, tmpdir):
     """Review finding: the bucket hash is type-sensitive, so a probe
     whose key dtype differs from the stored one must NOT prune (it
     would hash into the wrong buckets and silently miss matches) —
-    it falls back to the full replay, where join coercion is fine."""
+    it falls back to the full replay, where join coercion is fine.
+    Broadcasting is off in the table's session, so the matched dtype
+    takes the pruned path."""
+    spark = _broadcast_bound_session(spark, -1)
     path = os.path.join(tmpdir, "kv")
     t = NdbTable(spark, path, key="k", n_buckets=8)
     t.upsert(
@@ -2361,12 +2461,15 @@ def test_ndb_append_commit_counters(spark, tmpdir):
     each commit adds exactly one data file, its delta. The pruned
     lookup that follows resolves only the probed buckets: its shuffle
     bytes stay a fraction of the unpruned lookup's, which resolves the
-    whole table, and it returns each probed key's last write."""
+    whole table, and it returns each probed key's last write.
+    Broadcasting is off in the table's session: the table is far below
+    the default bound, which would skip the pruning."""
     import random
 
     from dbitool_spark import profile
     from dbitool_spark.ndb import _DELTA
 
+    spark = _broadcast_bound_session(spark, -1)
     rng = random.Random(7)
     n_keys = 2_000
     weights = [1.0 / (i + 1) for i in range(n_keys)]
