@@ -1949,9 +1949,10 @@ def _broadcast_bound_session(spark, bound: int):
 
 def test_ndb_lookup_broadcast_sized_table_skips_probe_pass(spark, tmpdir):
     """A table whose data files fit the session's broadcast bound is
-    broadcast whatever the probe selects, so lookup skips the probe
-    pass (two jobs and a probe scan) and resolves the table in one
-    task: no shuffle at all. last_lookup_stats says why no bucket was
+    resolved whole, so lookup skips the probe pass (two jobs and a
+    probe scan); the join broadcasts the table, so the only exchange
+    left is the deltas' own key window, and a table with at most one
+    delta shuffles nothing. last_lookup_stats says why no bucket was
     probed, and the results equal the unpruned join's. A bound between
     two tables' sizes sends the larger one down the pruned path."""
     from dbitool_spark import profile
@@ -1988,15 +1989,23 @@ def test_ndb_lookup_broadcast_sized_table_skips_probe_pass(spark, tmpdir):
         assert rows(t_off.lookup(probe_off)) == got
     assert t_off.last_lookup_stats["buckets_probed"] >= 1
     assert gated["jobs"] <= pruned["jobs"] - 2, (gated, pruned)
-    assert gated["shuffle_bytes"] == 0 < pruned["shuffle_bytes"], (gated, pruned)
     assert dict(got) == {0: "small0_0", 2: "small2_2", 3: "small1_3",
                          149: "small2_149", 299: "small2_299", 5000: None}
 
-    # a folded base under pending deltas resolves in one task too
+    # a folded base under one pending delta: no window, and the delta
+    # keys, the table and the probe all join by broadcast
     base = make("base", 300, 1)
     base.compact()
     base.upsert(spark.createDataFrame([(3, "new3"), (777, "new777")], "k bigint, v string"))
     assert base._bucket_dirs(base._current_dir())
+    base_off = NdbTable(off, base.path, key="k")
+    with profile.counters(spark) as gated:
+        got = rows(base.lookup(probe))
+    assert "table_bytes" in base.last_lookup_stats
+    with profile.counters(off) as pruned:
+        assert rows(base_off.lookup(probe_off)) == got
+    assert gated["jobs"] <= pruned["jobs"] - 2, (gated, pruned)
+    assert gated["shuffle_bytes"] == 0 < pruned["shuffle_bytes"], (gated, pruned)
     for table in (t, base):
         for how in ("left", "inner", "left_semi", "left_anti"):
             gated_rows = rows(table.lookup(probe, how=how))
