@@ -10,9 +10,9 @@ ONLY the headline scalar:
 
 Inlining the per-query map would outgrow the driver's stdout tail
 window and truncate the JSON; everything per-query goes to sidecars:
-- BENCH_queries.json: per-query medians, plan fingerprints, the
-  warm-up's work counters and machine load. Written only by an
-  exclusive run (idle box, no foreign JVM), so it is the perf record.
+- BENCH_queries.json: per-query medians, the warm-up's work counters
+  and machine load. Written only by an exclusive run (idle box, no
+  foreign JVM), so it is the perf record.
 - BENCH_last_run.json: the same payload, written by every run, with
   its inner "exclusive" flag telling whether it is record-grade.
 - BENCH_vs_prev.json: per-query ratios against the previous record at
@@ -26,13 +26,17 @@ median is the entry's time. A run is plan + execution to a count()
 action: count, not collect, so driver-side row transfer does not
 dominate; value correctness is the oracle suite's job.
 
-Regression gate: a >1.5x ratio against the previous record is flagged
-only when the plan fingerprint changed or the slowdown exceeds 0.5 s;
-ratio-only blips land in noise_suppressed. Before stamping, an entry
-over 1.5x whose plan fingerprint is verified unchanged is measured
+Regression gate: the work counters tell "the entry does different
+work" from "the host was loaded". An entry's work is unchanged when
+its jobs and stages equal those of the previous record. A >1.5x ratio
+against the previous record is flagged only when the work changed or
+the slowdown exceeds 0.5 s; ratio-only blips land in noise_suppressed.
+Before stamping, an entry over 1.5x with unchanged work is measured
 again standalone and the better median is stamped (both under
-noise_remeasured); a spike whose fingerprint cannot be verified is
-recorded under noise_unverified and never re-measured away.
+noise_remeasured); a spike without previous counters to compare is
+listed under noise_unverified and never re-measured away. An entry
+whose counts flip between AQE outcomes reads as changed: the
+conservative side.
 
 Scaling gate: every entry is also measured at the sibling data dir one
 scale-factor decade smaller (sf0.1 -> sf0.01) and compared with its
@@ -48,7 +52,6 @@ from __future__ import annotations
 import gc
 import json
 import os
-import re
 import statistics
 import sys
 import time
@@ -56,44 +59,28 @@ import time
 from dbitool_spark import profile
 
 REGRESSION_RATIO = 1.5
-# sub-second entries flap 2x under load with unchanged plans, so a
+# sub-second entries flap 2x under load with unchanged work, so a
 # ratio alone is not a finding: a regression is flagged only when the
-# plan fingerprint changed or the slowdown exceeds this many seconds
+# work changed or the slowdown exceeds this many seconds
 ABS_DELTA_SEC = 0.5
 # Candidate generation must grow near-linearly (bucket equi-joins,
 # never all-pairs): 15x for 10x the rows allows log factors and Spark's
 # fixed job overhead moving between numerator and denominator, while
 # all-pairs growth (~100x) stays far above it.
 SCALING_RED_RATIO = 15.0
+# the counters that repeat across runs of one entry (pinned in
+# tests/test_hardening.py); shuffle bytes move between runs on some
+# entries
+WORK_COUNTERS = ("jobs", "stages")
 
 
-def _fingerprint_changed(prev_sha: str | None, cur_sha: str | None) -> bool:
-    """True only for a verified plan change: both fingerprints present,
-    different, and neither the vacuous 'checkpointed' marker (a
-    checkpointed-vs-checkpointed pair proves nothing and must not
-    count as 'changed' OR 'verified unchanged')."""
-    return bool(
-        prev_sha
-        and cur_sha
-        and prev_sha != cur_sha
-        and "checkpointed" not in (prev_sha, cur_sha)
-    )
-
-
-def _fingerprint_verified_unchanged(
-    prev_sha: str | None, cur_sha: str | None
-) -> bool:
-    """True only when BOTH fingerprints are present and equal (and not
-    the vacuous 'checkpointed' marker). The noise re-measure requires
-    this, not merely 'not changed': an entry whose sha failed to
-    compute is unverifiable and its spike may be a real plan-change
-    regression, so it must never be min()-ed away."""
-    return bool(
-        prev_sha
-        and cur_sha
-        and prev_sha == cur_sha
-        and "checkpointed" not in (prev_sha, cur_sha)
-    )
+def _work(counters: dict | None) -> tuple | None:
+    """The (jobs, stages) an entry's warm-up ran: the counters that
+    decide whether two measurements did the same work. None without
+    a record of them."""
+    if not counters or not all(k in counters for k in WORK_COUNTERS):
+        return None
+    return tuple(counters[k] for k in WORK_COUNTERS)
 
 
 def _measure(fn, spark, sf_dir: str, runs: int) -> tuple[float, dict]:
@@ -176,112 +163,6 @@ def _load_prev_bench(repo_dir: str, sf: float | None) -> tuple[str, dict] | None
     if isinstance(data.get("queries"), dict) and data.get("sf") == sf:
         return "BENCH_queries.json(prev-run)", data
     return None
-
-
-def _plan_sha(df) -> str:
-    """Normalized fingerprint of the optimized physical plan: expression
-    ids (#123), plan ids, and object hashes stripped so the hash is
-    stable across sessions. Lets the next round's vs_prev distinguish
-    'slower because the plan changed' from 'slower because the sandbox
-    was loaded' — a timing ratio plus an unchanged plan_sha is noise.
-
-    materialize_release'd (localCheckpoint-ed) results explain() as a
-    bare checkpoint scan — hashing that would silently report
-    'unchanged' for exactly the ops the fingerprint was added for.
-    Those return the literal marker 'checkpointed' (consumers must
-    treat it as vacuous, not as a stable hash); entries with a lazy
-    materialize=False variant get a REAL fingerprint via
-    _lazy_plan_variants() instead."""
-    import contextlib
-    import hashlib
-    import io as _io
-
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    text = buf.getvalue()
-    if "Scan ExistingRDD" in text and "Scan parquet" not in text:
-        return "checkpointed"
-    return hashlib.sha256(_normalize_plan_text(text).encode()).hexdigest()[:16]
-
-
-def _normalize_plan_text(text: str) -> str:
-    """The normalization behind _plan_sha, separated so the session-
-    and process-dependent components it must strip are unit-testable
-    without a SparkSession."""
-    text = re.sub(r"#\d+", "#", text)
-    text = re.sub(r"plan_id=\d+", "plan_id=", text)
-    text = re.sub(r"@[0-9a-f]{6,}", "@", text)
-    text = re.sub(r"Statistics\([^)]*\)", "Statistics()", text)
-    # streaming/ndb entries republish inputs under per-process scratch
-    # dirs (/tmp/dbitool_scratch_<q>_<sf>/pid<PID>/tid<TID>/...); the
-    # path lands in the scan node, so without this the fingerprint
-    # changes every process and vs_prev flags a phantom plan change.
-    # Anchored to the full scratch layout so an unrelated 'pid<N>'
-    # substring in a predicate literal or path can never be collapsed.
-    text = re.sub(r"(dbitool_scratch_[\w.]+/)pid\d+/tid\d+", r"\1pid/tid", text)
-    # format-chain entries stage files under tempfile.mkdtemp dirs
-    # (/tmp/dbitool_fmt_chain_nation_<8 random chars>/...); the random
-    # suffix lands in the scan's Location and would move the sha every
-    # run while the plan itself is identical. Anchored to the
-    # /tmp/dbitool_ prefix + component boundary so nothing else can be
-    # collapsed.
-    text = re.sub(
-        r"(file:/tmp/dbitool_[\w.]*)_[0-9a-z_]{8}(?=[/\]])", r"\1_TMP", text
-    )
-    # higher-order-function lambda variables carry a SESSION-GLOBAL
-    # counter in the NAME itself (lambda x_1# fresh vs lambda x_195#
-    # after other queries compiled lambdas) — the #id strip above
-    # misses it, so every array/lambda entry's sha would be a function
-    # of how many lambda-bearing plans ran earlier in the process, i.e.
-    # of registry order. Anchored to the 'lambda ' keyword so a real
-    # column named like x_12 can never be collapsed.
-    text = re.sub(r"\b(lambda [A-Za-z]\w*?)_\d+#", r"\1_#", text)
-    # driver-built local DataFrames (createDataFrame of bounded rows —
-    # kmeans' k·dim centroid table, semdedup's threshold row) scan as
-    # 'Scan ExistingRDD' whose argument embeds the SESSION-GLOBAL RDD
-    # id (MapPartitionsRDD[62] fresh vs [638] mid-bench) — another
-    # registry-order leak. Anchored to the RDD[...] form so data
-    # literals can't collapse.
-    text = re.sub(r"\b(\w*RDD)\[\d+\]", r"\1[#]", text)
-    return text
-
-
-def _lazy_plan_variants():
-    """Entries whose registered callable checkpoints its result expose
-    a materialize=False twin here so the fingerprint hashes the REAL
-    optimized plan. The lazy call may leave an operator-internal
-    persist registered (caller-owned in lazy mode); the caller clears
-    the cache after fingerprinting."""
-    from dbitool_spark.plans import llm_ops, pipeline_ops
-
-    def _entry_lazy(fn):
-        return lambda spark, sf_dir: fn(spark, sf_dir, materialize=False)
-
-    return {
-        # composites thread materialize= through to their checkpointing
-        # constituents (kmeans_embeddings, top_terms_per_source)
-        "embedding_audit_composite": _entry_lazy(llm_ops.embedding_audit_composite),
-        "source_profile_documents": _entry_lazy(llm_ops.source_profile_documents),
-        "curation_pipeline_documents": _entry_lazy(
-            pipeline_ops.curation_pipeline_documents
-        ),
-        # the dedup/similarity family — the entries whose plan shape IS
-        # the 100 TB story, so a real regression-detectable fingerprint
-        # matters most exactly here
-        "simhash_recall_planted": _entry_lazy(llm_ops.simhash_recall_planted),
-        "ngram_jaccard_variants_documents": _entry_lazy(
-            llm_ops.ngram_jaccard_variants_documents
-        ),
-        "ngram_containment_documents": _entry_lazy(
-            llm_ops.ngram_containment_documents
-        ),
-        # semantic_dedup_composite has no lazy twin: connected_
-        # components' sizing count makes plan construction eager
-        # regardless (the dedup_representatives precedent), so its
-        # fingerprint hashes the checkpoint-backed plan
-        "bm25_topk_documents": _entry_lazy(llm_ops.bm25_topk_documents),
-    }
 
 
 def _ancestor_pids() -> set[int]:
@@ -371,7 +252,6 @@ def main() -> int:
             file=sys.stderr,
         )
 
-    from dbitool_spark.ops.cache import release_persists
     from dbitool_spark.plans import registry
     from dbitool_spark.session import get_session
 
@@ -399,56 +279,44 @@ def main() -> int:
     prev = _load_prev_bench(repo_dir, sf)
 
     fns = registry.queries()
-    lazy_variants = _lazy_plan_variants()
     timings: dict[str, float] = {}
     counters: dict[str, dict] = {}
-    plan_shas: dict[str, str] = {}
-    # Fingerprint pass FIRST, from a clean cache, separate from the
-    # timing loop: mid-run the optimized plan can pick up cache state
-    # left by whichever queries ran earlier (InMemoryRelation vs
-    # parquet scan), so a fingerprint taken there would be a function
-    # of registry order, not of the query.
-    for name, fn in fns.items():
-        try:
-            spark.catalog.clearCache()
-            lazy_df = lazy_variants.get(name, fn)(spark, sf_dir)
-            plan_shas[name] = _plan_sha(lazy_df)
-            release_persists(lazy_df)
-        except Exception:
-            pass  # fingerprint is advisory; never fail the bench on it
-        # non-lazy checkpointing entries execute eagerly here; their
-        # executor blocks free only once the DataFrame is collected
-        gc.collect()
-    spark.catalog.clearCache()
     for name, fn in fns.items():
         timings[name], counters[name] = _measure(fn, spark, sf_dir, runs)
 
+    prev_counters = prev[1].get("counters", {}) if prev is not None else {}
+
+    def _work_changed(n: str) -> bool | None:
+        """Whether n's jobs/stages differ from the previous record's;
+        None when that record has no counters for n."""
+        before = _work(prev_counters.get(n))
+        return None if before is None else before != _work(counters[n])
+
     # Noise re-measure: an entry over REGRESSION_RATIO against the
-    # previous record with a VERIFIED-unchanged plan is almost always
-    # scheduler noise on this box. Re-measure it standalone and stamp
-    # the better median, so the record never carries a spike the
-    # harness has itself diagnosed as noise. A plan change is never
-    # re-measured away; an unverifiable fingerprint is recorded under
+    # previous record with unchanged work is almost always scheduler
+    # noise on this box. Re-measure it standalone and stamp the better
+    # median, so the record never carries a spike the harness has
+    # itself diagnosed as noise. A work change is never re-measured
+    # away; a spike without previous counters is listed under
     # noise_unverified with its first timing.
     remeasured: dict[str, list[float]] = {}
-    noise_unverified: dict[str, list[str | None]] = {}
+    noise_unverified: list[str] = []
     if exclusive and prev is not None:
         prev_queries = prev[1].get("queries", {})
-        prev_shas_pre = prev[1].get("plan_shas", {})
         for name in sorted(timings):
             pt = prev_queries.get(name)
             if not pt or timings[name] / pt <= REGRESSION_RATIO:
                 continue
-            pair = [prev_shas_pre.get(name), plan_shas.get(name)]
-            if not _fingerprint_verified_unchanged(*pair):
-                if not _fingerprint_changed(*pair):
-                    noise_unverified[name] = pair
+            changed = _work_changed(name)
+            if changed is None:
+                noise_unverified.append(name)
+            if changed is not False:
                 continue
             re_med, _ = _measure(fns[name], spark, sf_dir, runs)
             remeasured[name] = [timings[name], re_med]
             print(
                 f"NOISE RE-MEASURE {name}: {timings[name]}s -> {re_med}s "
-                f"(prev {pt}s, plan unchanged)",
+                f"(prev {pt}s, jobs/stages unchanged)",
                 file=sys.stderr,
             )
             timings[name] = min(timings[name], re_med)
@@ -483,14 +351,13 @@ def main() -> int:
         "loadavg_start": load_start,
         "loadavg_end": load_end,
         "queries": timings,
-        "plan_shas": plan_shas,
         # the traced warm-up's work per entry (see _measure)
         "counters": counters,
         # {name: [first_median, standalone_re_median]}; the stamped
         # value in "queries" is the min of the two
         "noise_remeasured": remeasured,
-        # {name: [prev_sha, cur_sha]} for spikes whose fingerprints
-        # could not be verified unchanged; the first timing stands
+        # spikes with no previous counters to compare; the first
+        # timing stands
         "noise_unverified": noise_unverified,
     }
     if exclusive:
@@ -506,18 +373,13 @@ def main() -> int:
             for name, t in timings.items()
             if prev_data["queries"].get(name)
         }
-        prev_shas = prev_data.get("plan_shas", {})
-
-        def _plan_changed(n: str) -> bool:
-            return _fingerprint_changed(prev_shas.get(n), plan_shas.get(n))
-
         over_ratio = sorted(
             (n for n, r in ratios.items() if r > REGRESSION_RATIO),
             key=lambda n: -ratios[n],
         )
         regressions = [
             n for n in over_ratio
-            if _plan_changed(n)
+            if _work_changed(n)
             or timings[n] - prev_data["queries"][n] > ABS_DELTA_SEC
         ]
         vs_prev = {
@@ -529,7 +391,7 @@ def main() -> int:
             "ratios": ratios,
             "regressions": regressions,
             "regressions_with_plan_change": [
-                n for n in regressions if _plan_changed(n)
+                n for n in regressions if _work_changed(n)
             ],
             "noise_suppressed": [n for n in over_ratio if n not in regressions],
             "noise_remeasured": remeasured,

@@ -47,55 +47,3 @@ def materialize_release(result: DataFrame, *intermediates: DataFrame) -> DataFra
         df.unpersist(blocking=False)
     return out
 
-
-def attach_persists(result: DataFrame, *intermediates: DataFrame) -> DataFrame:
-    """Lazy-path counterpart of materialize_release (ADVICE r10): the
-    materialize=False plan-audit variants keep their internal persists
-    IN the plan (so the audited fingerprint shows the same
-    InMemoryRelation boundaries the executed plan has) but hand the
-    caller a real release handle instead of leaking registrations into
-    the session cache. The handle rides on the returned DataFrame —
-    no signature change for audit callers that ignore it.
-
-    CONTRACT (ADVICE r11): the handle rides on this EXACT Python
-    object — any transformation (.select/.filter/...) returns a NEW
-    DataFrame without it, so release_persists on the derived frame is
-    a silent no-op and the persists leak. Callers must either release
-    on the frame attach_persists returned BEFORE deriving from it
-    (bench's fingerprint pass and the plan-shape tests do: explain()
-    then release), or move the handle explicitly with
-    transfer_persists(src, derived)."""
-    result._dbitool_persists = list(intermediates)  # type: ignore[attr-defined]
-    return result
-
-
-def transfer_persists(src: DataFrame, dst: DataFrame) -> DataFrame:
-    """Move an attach_persists handle from `src` onto `dst` (a frame
-    derived from it), returning `dst`. Makes the 'handle rides the
-    exact object' contract workable for callers that must transform
-    the lazy result before releasing — the alternative is a silently
-    dropped handle (ADVICE r11)."""
-    handles = src.__dict__.pop("_dbitool_persists", None)
-    if handles:
-        existing = dst.__dict__.get("_dbitool_persists", [])
-        dst._dbitool_persists = list(existing) + list(handles)  # type: ignore[attr-defined]
-    return dst
-
-
-def release_persists(result: DataFrame) -> int:
-    """Unpersist whatever attach_persists recorded on `result` (no-op
-    for frames without the handle). bench's lazy fingerprint pass and
-    the plan-shape tests call this after explain().
-
-    Returns the number of frames released so a caller that EXPECTS a
-    handle can assert it did not evaporate through an intervening
-    transformation (the silent-no-op failure mode; ADVICE r11).
-
-    __dict__ lookup, not getattr: DataFrame.__getattr__ resolves
-    COLUMN names, so on a frame that happened to carry a column named
-    like the handle, getattr would return a Column instead of the
-    attached list."""
-    handles = result.__dict__.get("_dbitool_persists", ())
-    for df in handles:
-        df.unpersist(blocking=False)
-    return len(handles)

@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from dbitool_spark.ops.cache import attach_persists, materialize_release
+from dbitool_spark.ops.cache import materialize_release
 
 
 def dedup_exact(df: DataFrame, keys: list[str] | None = None) -> DataFrame:
@@ -141,7 +141,6 @@ def edit_distance_pairs(
     name_col: str,
     max_dist: int = 2,
     q: int = 3,
-    materialize: bool = True,
 ) -> DataFrame:
     """Approximate-string self-join under edit distance <= max_dist
     via q-gram prefix filtering (Gravano et al., VLDB 2001 q-gram
@@ -225,8 +224,6 @@ def edit_distance_pairs(
         .filter(F.col("dist") <= d)
         .select("id_a", "id_b", "dist")
     )
-    if not materialize:
-        return attach_persists(result, base, pref)
     return materialize_release(result, base, pref)
 
 
@@ -274,7 +271,6 @@ def minhash_near_dup_pairs(
     n_hashes: int = 64,
     bands: int = 16,
     threshold: float = 0.7,
-    materialize: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs by MinHash-LSH with exact-Jaccard
     verification. Returns (id_a, id_b) with id_a < id_b and
@@ -341,12 +337,6 @@ def minhash_near_dup_pairs(
         .filter(F.col("jaccard") >= threshold)
     )
     result = verified.select("id_a", "id_b", "jaccard")
-    if not materialize:
-        # lazy mode (plan audits/fingerprints): hand the internal
-        # persists back as a release handle (ops/cache contract —
-        # review finding: a bare return made release_persists a
-        # silent 0 and only a global clearCache saved the caller)
-        return attach_persists(result, sh, banded)
     # eagerly materialize the (small) pair set and release the two
     # persisted intermediates so repeated calls in a long session do
     # not accumulate executor storage
@@ -362,7 +352,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     max_doc_freq: int | None = None,
     hash_shingles: bool = True,
-    materialize: bool = True,
 ) -> DataFrame:
     """EXACT n-gram Jaccard near-dup pairs via an inverted shingle
     index. Unlike MinHash-LSH there is no probabilistic recall: any
@@ -398,12 +387,11 @@ def ngram_jaccard_pairs(
       shape that makes the op self-hardening against skew at 100 TB:
       the quadratic term sum(df^2) runs over prefix frequencies, not
       raw frequencies. Relative cost (driver bench, sf0.1): ~0.65x the
-      r4 count-by-join plan; the cold r3 all-pairs-verify shape was
-      ~6x the r4 plan. (Point timings vary ~1.5x with sandbox load —
-      see BENCH_queries.json's loadavg fields — so only ratios are
-      quoted here.)
-    - skew-guard path (max_doc_freq set): the r4 inverted-index plan,
-      unchanged — shingles above the df cap are DROPPED from the
+      plain inverted-index count-by-join plan, which in turn cost
+      ~1/6 of an all-pairs verify. (Point timings vary ~1.5x with host
+      load, so only ratios are quoted here.)
+    - skew-guard path (max_doc_freq set): the plain inverted-index
+      plan — shingles above the df cap are DROPPED from the
       intersection count entirely (bounded fan-out, approximate by
       design, oracle-mirrored in the skewguard query).
 
@@ -492,10 +480,8 @@ def ngram_jaccard_pairs(
             .filter(F.col("jaccard") >= threshold)
             .select("id_a", "id_b", "jaccard")
         )
-        if not materialize:
-            return attach_persists(result, sh, pref)  # lazy: release handle
         return materialize_release(result, sh, pref)
-    # --- skew-guard path (df-capped inverted index, r4 plan) ---
+    # --- skew-guard path (df-capped inverted index) ---
     # persisted for the same two-aliases reason as `pref` above: the
     # freq join would otherwise run once per self-join side
     ix = ix.join(
@@ -522,8 +508,6 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    if not materialize:
-        return attach_persists(result, sh, ix)  # lazy: release handle
     return materialize_release(result, sh, ix)
 
 
@@ -536,7 +520,6 @@ def ngram_jaccard_pairs_variants(
     threshold: float = 0.5,
     max_doc_freq: int,
     hash_shingles: bool = True,
-    materialize: bool = True,
 ) -> DataFrame:
     """BOTH ngram_jaccard_pairs plans — the prefix-filtered exact path
     (variant='exact') and the df-capped skew-guard path
@@ -639,8 +622,6 @@ def ngram_jaccard_pairs_variants(
     result = exact.select(F.lit("exact").alias("variant"), "*").unionByName(
         guarded.select(F.lit("skewguard").alias("variant"), "*")
     )
-    if not materialize:
-        return attach_persists(result, sh, freq, pref, gx)
     return materialize_release(result, sh, freq, pref, gx)
 
 
@@ -653,7 +634,6 @@ def ngram_containment_pairs(
     threshold: float = 0.9,
     hash_shingles: bool = True,
     max_doc_freq: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """EXACT asymmetric n-gram containment pairs: C(A->B) =
     |shingles(A) ∩ shingles(B)| / |shingles(A)| — the Broder
@@ -737,8 +717,6 @@ def ngram_containment_pairs(
         .filter(F.col("containment") >= threshold)
         .select("id_a", "id_b", "containment")
     )
-    if not materialize:
-        return attach_persists(result, sh)  # lazy: release handle
     return materialize_release(result, sh)
 
 
@@ -748,22 +726,16 @@ def jaccard_pairs(
     text_col: str,
     pairs: DataFrame,
     shingle_k: int = 3,
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact word-shingle Jaccard for given (id_a, id_b) pairs —
     the ground-truth verifier used to test LSH recall.
 
-    materialize=True (default) eagerly localCheckpoints the result and
-    releases the internal shingle persist before returning — callers
-    that just collect can't leak executor cache. Pass False to get the
-    lazy plan with an attach_persists release handle instead (the
-    ngram_containment_pairs contract)."""
-    from dbitool_spark.ops.cache import attach_persists, materialize_release
-
+    The result is eagerly localCheckpointed and the internal shingle
+    persist released before returning, so callers that just collect
+    cannot leak executor cache."""
     # persisted: both join sides alias the same shingle plan, and
     # Catalyst does not reuse exchanges across self-join aliases — the
     # dominant shingle construction would run twice per evaluation
-    # (review finding; the caller releases via the attach contract)
     sh = df.select(
         F.col(id_col).alias("id"), shingles(F.col(text_col), shingle_k).alias("sh")
     ).persist()
@@ -779,8 +751,6 @@ def jaccard_pairs(
         )
         .select("id_a", "id_b", "jaccard")
     )
-    if not materialize:
-        return attach_persists(result, sh)  # lazy: release handle
     return materialize_release(result, sh)
 
 
@@ -1105,7 +1075,6 @@ def simhash_candidates(
     n_blocks: int = 4,
     bits_per_block: int = 16,
     max_hamming: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Near-dup candidate pairs by SimHash block banding (the Manku
     block-permutation construction, Manku/Jain/Sarma WWW'07): the
@@ -1134,10 +1103,10 @@ def simhash_candidates(
     within a radius (the common near-dup use) should pass it rather
     than filtering the returned frame: the unfiltered candidate set is
     ~10^5-10^6 rows at sf0.1 and checkpointing all of it only to
-    discard >90% afterwards measured 3x slower end-to-end (the r5
-    bench regression). The pigeonhole recall guarantee is unaffected
-    for any max_hamming >= n_blocks - 1: every guaranteed pair is at
-    hamming <= n_blocks - 1 and survives the filter.
+    discard >90% afterwards measured 3x slower end-to-end. The
+    pigeonhole recall guarantee is unaffected for any max_hamming >=
+    n_blocks - 1: every guaranteed pair is at hamming <= n_blocks - 1
+    and survives the filter.
 
     The signature table is persisted across the self-join (Catalyst
     does not reuse the exchange across self-join aliases) and
@@ -1153,8 +1122,6 @@ def simhash_candidates(
     result = simhash_band_candidates(
         sig, n_blocks=n_blocks, bits_per_block=bits_per_block, max_hamming=max_hamming
     )
-    if not materialize:
-        return attach_persists(result, sig)  # lazy: release handle
     return materialize_release(result, sig)
 
 

@@ -375,7 +375,6 @@ def kmeans_distributed(
     *,
     k: int = 8,
     iters: int = 2,
-    materialize: bool = True,
     centroid_updates: str = "auto",
 ) -> DataFrame:
     """DISTRIBUTED Lloyd's k-means over an embedding column — the
@@ -451,15 +450,14 @@ def kmeans_distributed(
 
     def assign(cdf: DataFrame) -> DataFrame:
         # argmin by (d, cid) as a min-of-struct AGGREGATION, not a
-        # row_number window (r16 optimization round, guide §2.3
-        # "aggregate before you shuffle"): the window shuffled and
-        # sorted all corpus*k scored rows per iteration; the grouped
-        # min carries one partial struct per vec_id through map-side
-        # combine, so the exchange moves |corpus| rows instead of
-        # |corpus|*k. Selection is IDENTICAL: struct ordering is
+        # row_number window (aggregate before you shuffle): a window
+        # would shuffle and sort all corpus*k scored rows per
+        # iteration; the grouped min carries one partial struct per
+        # vec_id through map-side combine, so the exchange moves
+        # |corpus| rows instead of |corpus|*k. Selection equals a
+        # window's orderBy("d", "cid") first row: struct ordering is
         # lexicographic (d, then cid — cid is unique per group, so the
-        # trailing v is never compared), exactly the window's
-        # orderBy("d", "cid") first row.
+        # trailing v is never compared).
         return (
             vec.crossJoin(cdf)
             .withColumn("d", sq_dist)
@@ -547,10 +545,6 @@ def kmeans_distributed(
         )
         .orderBy("cluster_id")
     )
-    if not materialize:
-        # lazy mode for plan inspection (tests): caller owns the
-        # persisted vec lifetime
-        return result
     return materialize_release(result, vec)
 
 
@@ -563,7 +557,6 @@ def embedding_near_dup_pairs(
     threshold: float = 0.95,
     n_tables: int = 8,
     bits: int = 8,
-    materialize: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b,
     cos >= threshold), LSH-bucketed: high-cosine pairs collide in at
@@ -612,8 +605,6 @@ def embedding_near_dup_pairs(
         .filter(F.col("cos") >= threshold)
         .select("id_a", "id_b", "cos")
     )
-    if not materialize:
-        return result  # lazy: persists caller-owned (plan audits)
     return materialize_release(result, sig, normed)
 
 
@@ -701,10 +692,9 @@ def quantized_topk(
     scale the integer dot approximates levels²·cosine (recall@5 ~0.98
     vs the float cosine top-k, pinned in pytest).
 
-    r16 optimization round (guide §4.2 — hand whole batches to
-    vectorized native code): the scoring is one Arrow-batched int64
-    matmul per partition with a batch-local top-k, replacing the
-    broadcast-NLJ + per-element interpreted int_dot lambda over
+    Whole batches go to vectorized native code: the scoring is one
+    Arrow-batched int64 matmul per partition with a batch-local top-k,
+    not a broadcast-NLJ + per-element interpreted int_dot lambda over
     |corpus| x |queries| rows. At bench scale the two are within
     noise (1.28s vs 1.24s medians at sf0.1 — fixed overhead
     dominates 30k dot products); the rewrite is for the 100 TB
@@ -733,11 +723,11 @@ def quantized_topk(
     )
     id_type = corpus.schema[id_col].dataType.simpleString()
     out_schema = f"query_id {id_type}, neighbor_id {id_type}, dot long"
-    # NULL pin (ADVICE r16): the old SQL scoring path dropped NULL ids
-    # via `!=` and yielded a null dot for a NULL vector; the numpy path
-    # would instead pass a NULL id through the != mask and raise on a
-    # NULL vector. Filter both explicitly so the semantics stay the
-    # SQL path's (no current fixture produces nulls — this pins it).
+    # NULL ids and NULL vectors are dropped up front: the numpy path
+    # would pass a NULL id through the != mask and raise on a NULL
+    # vector, while SQL scoring drops NULL ids via `!=` and yields a
+    # null dot for a NULL vector. No current fixture produces nulls;
+    # this pins the SQL semantics.
     c = qc.select(F.col(id_col).alias("nid"), F.col("qvec").alias("cq")).filter(
         F.col("nid").isNotNull() & F.col("cq").isNotNull()
     )

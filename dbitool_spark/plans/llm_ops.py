@@ -145,30 +145,18 @@ def dedup_representatives_documents(spark: SparkSession, sf_dir: str) -> DataFra
     parameterized over the same perturbed corpus — a hash match
     proves cluster assignment, singleton handling, and argmax
     selection all at once."""
-    from dbitool_spark.ops.cache import release_persists
-
     docs = catalog.load(spark, sf_dir, "documents")
     # rebalanced: the shingle build + signature partial aggregation +
     # quality projection all run below their first exchange, i.e. on
     # the scan's 1-2 small-file splits (no-op at 100 TB; see
     # scale.rebalance_to_parallelism — the winnow kernel's lesson)
     corpus = scale.rebalance_to_parallelism(_perturbed_corpus(docs), "doc_id")
-    # r16 optimization round, change 1: the pair table rides LAZY
-    # (materialize=False) instead of localCheckpointing mid-entry —
-    # connected_components materializes everything it needs inside the
-    # call (the fast path returns a LOCAL relation; the flood path's
-    # labels are checkpointed per iteration), so nothing downstream
-    # references the pair plan and the checkpoint's partition
-    # round-trip was pure overhead. The operator-internal persists
-    # release here explicitly (the attach_persists contract).
     pairs = dedup.minhash_near_dup_pairs(
-        corpus, "doc_id", "text", shingle_k=3, threshold=0.7,
-        materialize=False,
+        corpus, "doc_id", "text", shingle_k=3, threshold=0.7
     )
     comp = dedup.connected_components(pairs).select(
         F.col("id").alias("doc_id"), "cluster_id"
     )
-    release_persists(pairs)
     clusters = corpus.join(comp, "doc_id", "left").select(
         "doc_id",
         F.coalesce("cluster_id", F.col("doc_id")).alias("cluster_id"),
@@ -177,16 +165,14 @@ def dedup_representatives_documents(spark: SparkSession, sf_dir: str) -> DataFra
     q = text.quality_score(clusters).select(
         "doc_id", "cluster_id", F.col("quality_score").alias("q_r")
     )
-    # r16 optimization round, change 2 (guide §2.3 — aggregate before
-    # you shuffle): the rk=1 row_number window + count window shuffled
-    # and sorted every corpus row per cluster; ONE aggregation now
-    # carries a partial max-struct + count per cluster through
-    # map-side combine. Selection is IDENTICAL: max(struct(q_r,
-    # -doc_id)) is lexicographic — highest q_r first, then smallest
-    # doc_id (integer negation is exact) — exactly the window's
-    # (q_r DESC, doc_id ASC) first row; q_r itself is never negated,
-    # so rep_quality is the untouched double. Equality pinned in
-    # tests/test_llm_ops.py and by the oracle hash.
+    # one aggregation, not a row_number + count window (aggregate
+    # before you shuffle): a window would shuffle and sort every
+    # corpus row per cluster, while the grouped max-struct + count
+    # combine map-side. max(struct(q_r, -doc_id)) is lexicographic —
+    # highest q_r first, then smallest doc_id (integer negation is
+    # exact) — i.e. the (q_r DESC, doc_id ASC) first row; q_r itself
+    # is never negated, so rep_quality is the untouched double.
+    # Equality pinned in tests/test_llm_ops.py and by the oracle hash.
     agg = q.groupBy("cluster_id").agg(
         F.max(
             F.struct(F.col("q_r").alias("q"), (-F.col("doc_id")).alias("nd"))
@@ -337,9 +323,7 @@ ORDER BY id_a, id_b
 CONST_RECALL_SQL = "SELECT CAST(1.0 AS DOUBLE) AS recall"
 
 
-def simhash_recall_planted(
-    spark: SparkSession, sf_dir: str, *, materialize: bool = True
-) -> DataFrame:
+def simhash_recall_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall of SimHash block banding on its own guarantee set: every
     pair at hamming distance <= n_blocks-1 = 3 shares an untouched
     16-bit block (pigeonhole) and MUST surface as a candidate. Ground
@@ -355,20 +339,16 @@ def simhash_recall_planted(
     # both the doc and its perturbed copy survive the subset because it
     # is taken BEFORE perturbation
     docs = catalog.load(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
-    # r17: the r16 rebalance REVERTED here (r16 verdict item 3) — on
-    # this entry's 1-in-5 subset (~4k perturbed rows at sf0.1) the
-    # added exchange costs more than the parallelized 64-sum kernel
-    # buys back (r16 exclusive record: 2.91 -> 3.13s, the one measured
-    # regression that round; re-measured this round in the interleaved
-    # A/B recorded in OPTIMIZATION_r17.md). The rebalance stays on the
-    # full-corpus kernels (dedup_representatives, jaccard, bloom) where
+    # no rebalance here: on this entry's 1-in-5 subset (~4k perturbed
+    # rows at sf0.1) the added exchange costs more than the
+    # parallelized 64-sum kernel buys back (2.91 -> 3.13 s with it; the
+    # interleaved A/B is in OPTIMIZATION_r17.md). The full-corpus
+    # kernels (dedup_representatives, jaccard, bloom) keep it, where
     # the same exchange measured 2-3.7x wins.
     corpus = _perturbed_corpus(docs)
     # ONE signature pass, persisted: ground truth AND the band join
     # both read it (3 unshared plans would re-run the 64-SUM
-    # aggregation each — measured ~4-5x slower at sf0.1). The persist
-    # stays on the lazy path (plan fidelity); the lazy return carries
-    # a release handle (ADVICE r10, attach_persists).
+    # aggregation each — measured ~4-5x slower at sf0.1).
     sig = dedup.simhash_signatures(corpus, "doc_id", "text").persist()
     a = sig.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
     b = sig.select(
@@ -403,10 +383,6 @@ def simhash_recall_planted(
         .cast("double")
         .alias("recall")
     )
-    if not materialize:
-        from dbitool_spark.ops.cache import attach_persists
-
-        return attach_persists(result, sig)  # lazy: caller releases
     return materialize_release(result, sig)
 
 
@@ -788,23 +764,19 @@ ORDER BY id_a, id_b
 """
 
 
-def ngram_jaccard_variants_documents(
-    spark: SparkSession, sf_dir: str, *, materialize: bool = True
-) -> DataFrame:
+def ngram_jaccard_variants_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Variant-tagged union of the two exact n-gram Jaccard paths:
     the unguarded inverted-index exact path and the max_doc_freq skew-guarded path
     run in one entry, so a single green row proves both the
     complete-recall arithmetic and the guard's exact drop/keep
     behavior.
 
-    r16 optimization round: the two legs now run off ONE shared
-    shingle/frequency pass (dedup.ngram_jaccard_pairs_variants) —
-    previously each standalone call built, persisted and materialized
-    its own shingle table and doc-frequency aggregation, and the two
-    eager checkpoints ran sequentially. Rows are identical (the leg
-    expressions are the operator's verbatim; equality pinned in
-    tests/test_llm_ops.py); only the duplicated corpus passes and the
-    second checkpoint barrier are gone (guide §1.2/§2.3)."""
+    The two legs run off ONE shared shingle/frequency pass
+    (dedup.ngram_jaccard_pairs_variants) and one eager checkpoint,
+    rather than two standalone calls that each build their own
+    shingle table and doc-frequency aggregation. Rows are identical
+    to the two calls (the leg expressions are the operator's
+    verbatim; equality pinned in tests/test_llm_ops.py)."""
     return dedup.ngram_jaccard_pairs_variants(
         scale.rebalance_to_parallelism(
             _perturbed_corpus(catalog.load(spark, sf_dir, "documents")), "doc_id"
@@ -814,7 +786,6 @@ def ngram_jaccard_variants_documents(
         shingle_k=3,
         threshold=0.5,
         max_doc_freq=_SKEWGUARD_MAX_DF,
-        materialize=materialize,
     )
 
 
@@ -1680,9 +1651,7 @@ ORDER BY domain
 # --- distinctive terms per source ------------------------------------
 
 
-def top_terms_per_source(
-    spark: SparkSession, sf_dir: str, *, materialize: bool = True
-) -> DataFrame:
+def top_terms_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 terms per source by in-source frequency, excluding terms
     that appear in more than half the sources (a log-free tf-idf
     analogue: rank by tf with a df cut, all exact integer arithmetic
@@ -1718,11 +1687,7 @@ def top_terms_per_source(
     # persist Catalyst re-runs the corpus explode+agg once per
     # reference (no exchange reuse across subplan aliases — the same
     # reason the minhash band table persists). (source, word) rows are
-    # orders of magnitude below the corpus at any scale. The persist
-    # stays on the LAZY path too so the audited plan shows the same
-    # InMemoryRelation boundaries the executed plan has; the lazy
-    # return carries a release handle instead of leaking the
-    # registration (ADVICE r10, attach_persists).
+    # orders of magnitude below the corpus at any scale.
     tf = words.groupBy("source", "w").agg(F.count(F.lit(1)).alias("tf")).persist()
     df_ = tf.groupBy("w").agg(F.count(F.lit(1)).alias("df"))
     # bounded driver-side scalar: the source key space is tiny by
@@ -1738,10 +1703,6 @@ def top_terms_per_source(
         .select("source", F.col("w").alias("term"), "tf", "df", "rank")
         .orderBy("source", "rank")
     )
-    if not materialize:
-        from dbitool_spark.ops.cache import attach_persists
-
-        return attach_persists(result, tf)  # lazy: caller releases
     return materialize_release(result, tf)
 
 
@@ -1780,9 +1741,7 @@ BM25_B = 0.75
 BM25_TOPK = 15
 
 
-def bm25_topk_documents(
-    spark: SparkSession, sf_dir: str, *, materialize: bool = True
-) -> DataFrame:
+def bm25_topk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 (Robertson/Sparck Jones) top-k retrieval for a fixed query
     over the documents corpus — the retrieval leg of a training-data
     pipeline (quality-weighted corpus search, dedup-aware sampling,
@@ -1815,8 +1774,6 @@ def bm25_topk_documents(
     # the compact (doc_id, dl) table so the corpus tokenizes twice
     # total (tf + dl), not once per dl reference — the same
     # no-repeated-corpus-scan rule top_terms applies to its tf table.
-    # The persist stays on the lazy path (plan fidelity); the lazy
-    # return carries a release handle (ADVICE r10, attach_persists).
     dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl")).persist()
     stats = dl.agg(
         F.count(F.lit(1)).cast("double").alias("n_docs"),
@@ -1868,10 +1825,6 @@ def bm25_topk_documents(
         .orderBy(F.desc("bm25"), "doc_id")
         .limit(BM25_TOPK)
     )
-    if not materialize:
-        from dbitool_spark.ops.cache import attach_persists
-
-        return attach_persists(result, dl, tf)  # lazy: caller releases
     return materialize_release(result, dl, tf)
 
 
@@ -2488,9 +2441,7 @@ ORDER BY c.vec_id
 """
 
 
-def ngram_containment_documents(
-    spark: SparkSession, sf_dir: str, *, materialize: bool = True
-) -> DataFrame:
+def ngram_containment_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric containment pairs (dedup.ngram_containment_pairs)
     over the perturbed corpus at threshold 0.9. The construction makes
     this provably non-vacuous in ONE direction only: the truncated
@@ -2508,16 +2459,10 @@ def ngram_containment_documents(
         # scale.rebalance_to_parallelism)
         scale.rebalance_to_parallelism(_perturbed_corpus(docs), "doc_id"),
         "doc_id", "text", shingle_k=3, threshold=0.9,
-        materialize=materialize,
     )
-    from dbitool_spark.ops.cache import transfer_persists
-
-    return transfer_persists(
-        pairs,
-        pairs.select(
-            "id_a", "id_b", F.round("containment", 6).alias("containment_r")
-        ).orderBy("id_a", "id_b"),
-    )
+    return pairs.select(
+        "id_a", "id_b", F.round("containment", 6).alias("containment_r")
+    ).orderBy("id_a", "id_b")
 
 
 NGRAM_CONTAINMENT_SQL = f"""
@@ -2541,9 +2486,7 @@ _KMEANS_K = 8
 _KMEANS_ITERS = 2
 
 
-def kmeans_embeddings(
-    spark: SparkSession, sf_dir: str, *, materialize: bool = True
-) -> DataFrame:
+def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed Lloyd's k-means (ops.similarity.kmeans_distributed)
     over the full embeddings table: k=8 centroids seeded from the 8
     smallest vec_ids, 2 iterations, squared-L2 in double. The first
@@ -2555,8 +2498,7 @@ def kmeans_embeddings(
     two full rounds of the loop."""
     emb = catalog.load(spark, sf_dir, "embeddings")
     return similarity.kmeans_distributed(
-        emb, "vec_id", "embedding", k=_KMEANS_K, iters=_KMEANS_ITERS,
-        materialize=materialize,
+        emb, "vec_id", "embedding", k=_KMEANS_K, iters=_KMEANS_ITERS
     )
 
 
@@ -2765,18 +2707,15 @@ ORDER BY doc_id
 """
 
 
-def source_profile_documents(
-    spark: SparkSession, sf_dir: str, *, materialize: bool = True
-) -> DataFrame:
+def source_profile_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kind-tagged composite of the two per-source corpus audit
-    entries — the r14 merge candidate per the registry capacity
-    policy (the email_chart_roundtrip shape): domain_stats_documents
-    (per-domain link audit) unioned with top_terms_per_source
-    (distinctive terms, df-cut tf ranking), each through its full
-    original codepath; one driver row, one union hash. Normalized
-    rows: domain rows key on (domain, NULL) carrying (n_links,
-    n_docs, NULL); term rows key on (source, term) carrying (tf, df,
-    rank)."""
+    entries, merged into one registry row (the email_chart_roundtrip
+    shape): domain_stats_documents (per-domain link audit) unioned
+    with top_terms_per_source (distinctive terms, df-cut tf ranking),
+    each through its full original codepath; one driver row, one
+    union hash. Normalized rows: domain rows key on (domain, NULL)
+    carrying (n_links, n_docs, NULL); term rows key on (source, term)
+    carrying (tf, df, rank)."""
     dom = domain_stats_documents(spark, sf_dir).select(
         F.lit("domain").alias("kind"),
         F.col("domain").alias("key1"),
@@ -2785,7 +2724,7 @@ def source_profile_documents(
         F.col("n_docs").alias("n2"),
         F.lit(None).cast("long").alias("n3"),
     )
-    terms = top_terms_per_source(spark, sf_dir, materialize=materialize).select(
+    terms = top_terms_per_source(spark, sf_dir).select(
         F.lit("term").alias("kind"),
         F.col("source").alias("key1"),
         F.col("term").alias("key2"),
@@ -3228,9 +3167,7 @@ FROM scored GROUP BY doc_id ORDER BY doc_id
 """
 
 
-def embedding_audit_composite(
-    spark: SparkSession, sf_dir: str, *, materialize: bool = True
-) -> DataFrame:
+def embedding_audit_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kind-tagged merge of kmeans_embeddings +
     semantic_outliers_documents:
     one driver row drives the distributed Lloyd's kernel
@@ -3239,7 +3176,7 @@ def embedding_audit_composite(
     (kind='outliers': doc counts, outlier counts, rounded avg/min
     cosine, key = source). Scale shapes are the constituents',
     unchanged — see their docstrings."""
-    km = kmeans_embeddings(spark, sf_dir, materialize=materialize).select(
+    km = kmeans_embeddings(spark, sf_dir).select(
         F.lit("kmeans").alias("kind"),
         F.col("cluster_id").cast("string").alias("key"),
         F.col("n_vecs").alias("n"),
@@ -3287,12 +3224,12 @@ def semantic_dedup_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = catalog.load(spark, sf_dir, "embeddings")
     base = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     corpus = base.unionAll(_perturbed_embeddings(base))
-    # materialize=True: the pair table localCheckpoints, so the two
+    # the pair table comes back localCheckpointed, so the two
     # consumers below share the computed candidates instead of
     # re-running the LSH + cosine verify
     pairs = similarity.embedding_near_dup_pairs(
         corpus, id_col="vec_id", vec_col="v", dim=64,
-        threshold=0.95, n_tables=16, bits=10, materialize=True,
+        threshold=0.95, n_tables=16, bits=10,
     )
     pair_rows = pairs.select(
         F.lit("pairs").alias("kind"),

@@ -251,8 +251,8 @@ def bloom_decontaminate_documents(spark: SparkSession, sf_dir: str) -> DataFrame
     # oracle's constant-SELECT over an empty CTE yields the same row),
     # so a corpus with no doc_id % BENCH_MOD == 0 rows mismatches
     # nothing. Non-vacuity at the test SFs is asserted in pytest
-    # (tests/test_scale_shapes.py), not by failing the plan (ADVICE
-    # r11: an engine-side assert_true here diverged from the oracle).
+    # (tests/test_scale_shapes.py), not by failing the plan: an
+    # engine-side assert_true here would diverge from the oracle.
     return exact.join(flagged, "doc_id", "left").agg(
         F.when(F.count(F.lit(1)) == 0, F.lit(1.0))
         .otherwise(
@@ -514,9 +514,7 @@ def corpus_mix_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def curation_pipeline_documents(
-    spark: SparkSession, sf_dir: str, *, materialize: bool = True
-) -> DataFrame:
+def curation_pipeline_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end curation pipeline — the composition no single entry
     exercises: weighted source mix -> exact dedup (keep min doc_id per
     normalized text) -> benchmark decontamination (drop every doc
@@ -572,10 +570,7 @@ def curation_pipeline_documents(
     # stage 5: sequence packing over the surviving train docs
     from dbitool_spark.ops.cache import materialize_release
 
-    result = pack_stats(train)
-    if not materialize:
-        return result  # lazy mode for plan inspection (tests)
-    return materialize_release(result, deduped)
+    return materialize_release(pack_stats(train), deduped)
 
 
 CURATION_PIPELINE_SQL = rf"""
@@ -649,7 +644,7 @@ def concat_positional_supplier_customer(spark: SparkSession, sf_dir: str) -> Dat
     """The `concat` pipeline module driver-visibly: zip supplier and
     customer name columns positionally (each side ordered by its
     unique key), truncating to the shorter stream — the reference
-    TODO:74-76 "join without any expression", closed in r9. Runs the
+    TODO:74-76 "join without any expression". Runs the
     REAL module through a Pipeline (not the helper directly) so the
     registered row proves the module wiring, the per-input orderN=
     args, and ops.scale.with_position's distributed global-position

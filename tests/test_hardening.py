@@ -247,82 +247,20 @@ def test_simhash_max_hamming_matches_post_filter(spark):
     assert len(got) > 0
 
 
-def test_bench_plan_normalization_strips_session_counters():
-    """bench._normalize_plan_text must collapse every session- or
-    process-dependent token, or vs_prev flags phantom plan changes.
-    The r10 instance: higher-order-function lambda variables carry a
-    session-GLOBAL counter in the variable NAME (lambda x_1# fresh vs
-    lambda x_195# mid-bench), invisible to the #id strip — rotation
-    reordered the fingerprint pass and 16 entries flagged phantom
-    changes. A real column named like x_12 must NOT be collapsed."""
-    import bench
-
-    fresh = "filter(embedding#7, lambdafunction((lambda x_1#21 > 0.0), lambda x_1#21, false))"
-    later = "filter(embedding#913, lambdafunction((lambda x_195#4410 > 0.0), lambda x_195#4410, false))"
-    assert bench._normalize_plan_text(fresh) == bench._normalize_plan_text(later)
-
-    # multi-var lambdas (aggregate's accumulator + element) too
-    a = "aggregate(s#1, 0.0, lambdafunction((lambda x_2#5 + lambda y_3#6), lambda x_2#5, lambda y_3#6, false))"
-    b = "aggregate(s#9, 0.0, lambdafunction((lambda x_77#8 + lambda y_78#2), lambda x_77#8, lambda y_78#2, false))"
-    assert bench._normalize_plan_text(a) == bench._normalize_plan_text(b)
-
-    # a genuine column whose NAME looks counter-ish is preserved
-    col = "Project [x_12#4 AS x_12#5]"
-    assert "x_12#" in bench._normalize_plan_text(col)
-
-    # the established strips still hold
-    assert bench._normalize_plan_text("Exchange plan_id=44 @deadbeef #12") == \
-        bench._normalize_plan_text("Exchange plan_id=9 @c0ffee12 #99")
-
-
-def test_bench_thunk_imports_resolve():
-    """bench's fingerprint pass treats any exception as "no sha", so a
-    lazy twin importing a deleted name would silently lose its
-    fingerprint. Every `from X import Y` inside _lazy_plan_variants,
-    and every attribute it reads off an imported module, must resolve
-    (no Spark needed: nothing is called)."""
-    import ast
-    import importlib
-    import inspect
-
-    import bench
-
-    tree = ast.parse(inspect.getsource(bench._lazy_plan_variants))
-    modules: dict[str, object] = {}
-    for node in ast.walk(tree):
-        if isinstance(node, ast.ImportFrom):
-            mod = importlib.import_module(node.module)
-            for a in node.names:
-                if not hasattr(mod, a.name):  # a submodule import
-                    importlib.import_module(f"{node.module}.{a.name}")
-                modules[a.asname or a.name] = getattr(mod, a.name)
-    refs = [
-        (node.value.id, node.attr)
-        for node in ast.walk(tree)
-        if isinstance(node, ast.Attribute)
-        and isinstance(node.value, ast.Name)
-        and inspect.ismodule(modules.get(node.value.id))
-    ]
-    assert modules and refs
-    missing = [f"{m}.{a}" for m, a in refs if not hasattr(modules[m], a)]
-    assert missing == []
-
-
 def test_bench_noise_remeasure_stamps_better_median(spark, monkeypatch, tmp_path):
-    """r10 verdict item: an entry that spikes >1.5x vs the previous
-    exclusive record with an UNCHANGED plan must be re-measured
-    standalone before the sidecar is stamped (min of the two medians),
-    with both measurements recorded under noise_remeasured — so the
-    committed record never carries a spike bench has itself diagnosed
-    as scheduler noise. Runs the real bench.main() against a scratch
-    repo dir with a 2-query registry."""
-    import json
-
+    """An entry that spikes >1.5x vs the previous exclusive record is
+    judged by its work counters. Equal jobs and stages: re-measured
+    standalone before the sidecar is stamped (min of the two medians,
+    both under noise_remeasured). A job-count change: a flagged
+    regression with a work change, never re-measured away. No previous
+    counters: listed under noise_unverified, not re-measured. Runs the
+    real bench.main() against a scratch repo dir with a 4-query
+    registry."""
     import bench
     from dbitool_spark.plans import registry as reg
 
-    sf_dir = "/root/testdata/sf0.001"
-    calls = {"qa": 0, "qc": 0}
+    sf_dir = SF_SMOKE
+    calls = {"qa": 0, "qc": 0, "qd": 0}
 
     def qa(s, d):
         calls["qa"] += 1
@@ -335,25 +273,35 @@ def test_bench_noise_remeasure_stamps_better_median(spark, monkeypatch, tmp_path
         calls["qc"] += 1
         return s.read.parquet(os.path.join(d, "supplier.parquet"))
 
-    monkeypatch.setattr(reg, "queries", lambda: {"qa": qa, "qb": qb, "qc": qc})
+    def qd(s, d):
+        calls["qd"] += 1
+        return s.read.parquet(os.path.join(d, "customer.parquet"))
+
+    monkeypatch.setattr(
+        reg, "queries", lambda: {"qa": qa, "qb": qb, "qc": qc, "qd": qd}
+    )
     monkeypatch.setattr(bench, "_foreign_java_pids", lambda: [])
-    monkeypatch.setattr(bench, "_lazy_plan_variants", lambda: {})
     monkeypatch.setenv("SPARK_GRAFT_BENCH_REPO_DIR", str(tmp_path))
     monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
     monkeypatch.setenv("SPARK_GRAFT_BENCH_RUNS", "1")
     monkeypatch.setenv("SPARK_GRAFT_BENCH_MAX_LOAD", "9999")
 
-    # fabricated prev record: qa and qc absurdly fast (any real run
+    # fabricated prev record: qa, qc and qd absurdly fast (any real run
     # crosses the 1.5x ratio), qb generous (never flags). qa's prev
-    # sha matches the live plan -> VERIFIED unchanged -> re-measure;
-    # qc has NO prev sha -> unverifiable -> recorded, NOT re-measured
-    # (ADVICE r11: a failed sha must never be laundered through min()).
+    # counters are its live ones -> unchanged work -> re-measure; qd's
+    # prev ran one job fewer -> work change; qc has NO prev counters
+    # -> unverifiable, never laundered through min().
+    _, qa_counters = bench._measure(qa, spark, sf_dir, 0)
+    _, qd_counters = bench._measure(qd, spark, sf_dir, 0)
     prev = {
         "sf": 0.001,
-        "queries": {"qa": 1e-6, "qb": 999.0, "qc": 1e-6},
-        "plan_shas": {"qa": bench._plan_sha(qa(spark, sf_dir))},
+        "queries": {"qa": 1e-6, "qb": 999.0, "qc": 1e-6, "qd": 1e-6},
+        "counters": {
+            "qa": qa_counters,
+            "qd": {**qd_counters, "jobs": qd_counters["jobs"] - 1},
+        },
     }
-    calls["qa"] = 0  # the sha probe above is not part of the budget
+    calls.update(qa=0, qd=0)  # the probes above are not part of the budget
     (tmp_path / "BENCH_queries.json").write_text(json.dumps(prev))
 
     assert bench.main() == 0
@@ -361,43 +309,28 @@ def test_bench_noise_remeasure_stamps_better_median(spark, monkeypatch, tmp_path
     assert not (tmp_path / "BENCH_scaling.json").exists()
 
     data = json.loads((tmp_path / "BENCH_queries.json").read_text())
-    assert "qa" in data["noise_remeasured"], data
+    assert sorted(data["noise_remeasured"]) == ["qa"], data
     first, re_med = data["noise_remeasured"]["qa"]
     assert data["queries"]["qa"] == min(first, re_med)
-    assert "qb" not in data["noise_remeasured"]
-    # qa really re-ran: fingerprint + warmup + timed + re-warmup +
-    # re-timed = 5 plan constructions
-    assert calls["qa"] == 5
+    # qa really re-ran: warmup + timed + re-warmup + re-timed
+    assert calls["qa"] == 4
 
-    # qc: spiked but unverifiable — recorded under noise_unverified
-    # with the sha pair, and NOT re-measured (3 constructions only:
-    # fingerprint + warmup + timed)
-    assert "qc" not in data["noise_remeasured"]
-    assert list(data["noise_unverified"]) == ["qc"]
-    assert data["noise_unverified"]["qc"][0] is None
-    assert calls["qc"] == 3
+    # qd: a work change is not re-measured (warmup + timed only) and
+    # is flagged as a regression with a work change
+    assert calls["qd"] == 2
+    # qc: spiked but unverifiable — listed under noise_unverified and
+    # NOT re-measured
+    assert data["noise_unverified"] == ["qc"]
+    assert calls["qc"] == 2
 
-    # the re-measured blip is suppressed, never a flagged regression
-    # (plan unchanged, absolute delta far under the 0.5s gate)
     vs_prev = json.loads((tmp_path / "BENCH_vs_prev.json").read_text())
-    assert vs_prev["regressions"] == []
+    assert vs_prev["regressions"] == ["qd"]
+    assert vs_prev["regressions_with_plan_change"] == ["qd"]
+    # the re-measured blip and the unverifiable one are suppressed
+    # (absolute deltas far under the 0.5s gate)
+    assert sorted(vs_prev["noise_suppressed"]) == ["qa", "qc"]
     assert vs_prev["noise_remeasured"] == data["noise_remeasured"]
     assert vs_prev["noise_unverified"] == data["noise_unverified"]
-
-
-def test_bench_plan_normalization_strips_rdd_ids():
-    """r11 instance of the session-counter family: driver-built local
-    DataFrames scan as ExistingRDD with the session-global RDD id in
-    the argument (MapPartitionsRDD[62] fresh vs [638] mid-bench) —
-    registry order must not move the sha."""
-    import bench
-
-    a = "Arguments: [cid#, c#], MapPartitionsRDD[62] at applySchemaToPythonRDD at NativeMethodAccessorImpl.java:0, ExistingRDD, UnknownPartitioning(0)"
-    b = "Arguments: [cid#, c#], MapPartitionsRDD[638] at applySchemaToPythonRDD at NativeMethodAccessorImpl.java:0, ExistingRDD, UnknownPartitioning(0)"
-    assert bench._normalize_plan_text(a) == bench._normalize_plan_text(b)
-    # a literal [N] NOT attached to an RDD token is preserved
-    keep = "Project [arr#[62] AS x#]"
-    assert "[62]" in bench._normalize_plan_text(keep)
 
 
 def test_bench_last_run_sidecar_stamped_even_on_loaded_run(
@@ -422,7 +355,6 @@ def test_bench_last_run_sidecar_stamped_even_on_loaded_run(
         return s.read.parquet(os.path.join(d, "nation.parquet"))
 
     monkeypatch.setattr(reg, "queries", lambda: {"qa": qa, "qb": qb})
-    monkeypatch.setattr(bench, "_lazy_plan_variants", lambda: {})
     monkeypatch.setenv("SPARK_GRAFT_BENCH_REPO_DIR", str(tmp_path))
     monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
     monkeypatch.setenv("SPARK_GRAFT_BENCH_RUNS", "1")
@@ -467,20 +399,24 @@ def test_bench_prev_record_is_the_sidecar_only(tmp_path):
 
 
 def test_bench_measure_counters_repeat(spark):
-    """The warm-up counters bench stamps per entry are deterministic:
-    one registry entry's jobs and stages are equal across two
-    _measure calls, and the second (warm) call reads the same rows."""
+    """The warm-up counters bench stamps per entry, and judges noise
+    by, are deterministic: a registry entry's jobs and stages are
+    equal across two _measure calls, and the second (warm) call reads
+    the same rows. xls_roundtrip_nation's result is checkpoint-backed,
+    so explain() shows only the checkpoint scan: there the counters
+    are the only work signal."""
     import bench
     from dbitool_spark.plans import registry
 
-    fn = registry.queries()["q3_shipping_priority"]
-    _, first = bench._measure(fn, spark, SF_SMOKE, 1)
-    _, second = bench._measure(fn, spark, SF_SMOKE, 1)
-    assert first["jobs"] > 0 and first["stages"] > 0
-    assert first["rows"] > 0 and first["shuffle_bytes"] > 0
-    assert (first["jobs"], first["stages"], first["rows"]) == (
-        second["jobs"], second["stages"], second["rows"]
-    )
+    for name in ("q3_shipping_priority", "xls_roundtrip_nation"):
+        fn = registry.queries()[name]
+        _, first = bench._measure(fn, spark, SF_SMOKE, 1)
+        _, second = bench._measure(fn, spark, SF_SMOKE, 1)
+        assert first["jobs"] > 0 and first["stages"] > 0, name
+        assert first["rows"] > 0 and first["rows"] == second["rows"], name
+        assert bench._work(first) == bench._work(second), name
+        if name == "q3_shipping_priority":
+            assert first["shuffle_bytes"] > 0
 
 
 def test_bench_scaling_gate_reds_all_pairs_growth_and_errors(
@@ -516,7 +452,6 @@ def test_bench_scaling_gate_reds_all_pairs_growth_and_errors(
         lambda: {"groupby": groupby, "pairs": pairs, "fails_small": fails_small},
     )
     monkeypatch.setattr(bench, "_foreign_java_pids", lambda: [])
-    monkeypatch.setattr(bench, "_lazy_plan_variants", lambda: {})
     monkeypatch.setenv("SPARK_GRAFT_BENCH_REPO_DIR", str(tmp_path))
     monkeypatch.setenv("SPARK_GRAFT_SF_DIR", SF_ORACLE)
     monkeypatch.setenv("SPARK_GRAFT_BENCH_RUNS", "1")

@@ -1165,15 +1165,16 @@ def test_avi_max_frames_cap(spark):
 
 
 def test_bm25_plan_shape_and_semantics(spark, tmp_path):
-    """BM25 retrieval (r10): the top-k must come from
-    TakeOrderedAndProject (per-partition top-k + driver merge, never a
-    global sort), the persisted doc-length table must cap corpus
-    tokenization at two scans, and scores must be finite, positive,
-    and monotone with query-term tf for same-length docs."""
-    import contextlib
-    import io as _io
+    """BM25 retrieval: the top-k must come from TakeOrderedAndProject
+    (per-partition top-k + driver merge, never a global sort), the
+    persisted doc-length table must cap corpus tokenization at two
+    scans, the eager call must release its persists, and scores must
+    be finite, positive, and monotone with query-term tf for
+    same-length docs."""
+    import re as _re
 
     from dbitool_spark.plans import llm_ops
+    from tests.conftest import executed_plans
 
     def _persistent_ids():
         it = spark.sparkContext._jsc.sc().getPersistentRDDs().keySet().iterator()
@@ -1185,44 +1186,26 @@ def test_bm25_plan_shape_and_semantics(spark, tmp_path):
     before = _persistent_ids()
     cache_mgr = spark._jsparkSession.sharedState().cacheManager()
     was_empty = cache_mgr.isEmpty()
-    lazy = llm_ops.bm25_topk_documents(spark, SF_ORACLE, materialize=False)
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        lazy.explain("formatted")
-    plan = buf.getvalue()
-    # ADVICE r10: the lazy variant hands back its internal persists as
-    # a release handle — releasing it must remove every registration
-    # THIS call added, without a global clearCache (delta-based: a
-    # shared mid-suite session legitimately carries other tests'
-    # caches, so an absolute empty-cache assert would be flaky)
-    from dbitool_spark.ops.cache import release_persists
-
-    assert len(lazy.__dict__.get("_dbitool_persists", ())) == 2  # dl, tf
-    # ADVICE r11: the handle rides the EXACT object — a transformation
-    # drops it (returns 0 = the silent-no-op failure mode, now visible
-    # via the return count); transfer_persists moves it explicitly
-    from dbitool_spark.ops.cache import transfer_persists
-
-    derived = lazy.limit(1)
-    assert release_persists(derived) == 0  # dropped handle is visible
-    moved = transfer_persists(lazy, derived)
-    assert moved is derived
-    assert len(lazy.__dict__.get("_dbitool_persists", ())) == 0
-    assert release_persists(derived) == 2
-    leaked = _persistent_ids() - before
-    assert not leaked, f"release_persists left new cached RDDs: {leaked}"
+    with executed_plans(spark) as plans:
+        out = llm_ops.bm25_topk_documents(spark, SF_ORACLE)
+    # the only persistent RDD the call leaves is its own checkpointed
+    # result (delta-based: a shared mid-suite session legitimately
+    # carries other tests' caches, so an absolute assert would be flaky)
+    checkpoint = out._jdf.queryExecution().logical().rdd().id()
+    leaked = _persistent_ids() - before - {checkpoint}
+    assert not leaked, f"the eager call left new cached RDDs: {leaked}"
     if was_empty:
         # logical-plan-level check (registrations exist even before
         # anything computes); only meaningful when this test had the
         # cache to itself — mid-suite, other tests' caches remain
-        assert cache_mgr.isEmpty(), "release_persists left cache entries"
-    assert "TakeOrderedAndProject" in plan
+        assert cache_mgr.isEmpty(), "the eager call left cache entries"
+    topk = [p for p in plans if "TakeOrderedAndProject" in p]
+    assert len(topk) == 1, plans
+    plan = topk[0]
     assert "Sort " not in plan.split("TakeOrderedAndProject")[0]
     # the persisted dl/tf tables cap corpus tokenization at exactly
     # their two cache-build scans: every other reference must hit the
     # InMemoryRelation, so unique parquet-scan NODES stay <= 2
-    import re as _re
-
     scan_ids = set(_re.findall(r"\((\d+)\) Scan parquet", plan))
     assert len(scan_ids) <= 2, plan
     assert "InMemoryTableScan" in plan

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from dbitool_spark import catalog
 from dbitool_spark.ops import dedup, scale, text
-from tests.conftest import SF_ORACLE, SF_SMOKE
+from tests.conftest import SF_ORACLE, SF_SMOKE, executed_plans
 
 
 def _plan(df) -> str:
@@ -343,14 +343,14 @@ def test_top_revenue_suppliers_window_after_aggregate(spark):
 def test_kmeans_assignment_broadcasts_centroid_side(spark):
     """The k-means assignment cross-join must resolve to a broadcast
     nested-loop from the 8-row centroid side — the corpus side never
-    shuffles for assignment (the scale contract of Lloyd's on Spark)."""
-    from dbitool_spark.plans.llm_ops import kmeans_embeddings
-
-    from dbitool_spark import catalog as _cat
+    shuffles for assignment (the scale contract of Lloyd's on Spark).
+    Read from the plans the eager call executed."""
     from dbitool_spark.ops.similarity import kmeans_distributed
 
-    emb = _cat.load(spark, SF_SMOKE, "embeddings")
-    plan = _plan(kmeans_distributed(emb, "vec_id", "embedding", materialize=False))
+    emb = catalog.load(spark, SF_SMOKE, "embeddings")
+    with executed_plans(spark) as plans:
+        kmeans_distributed(emb, "vec_id", "embedding")
+    plan = "\n".join(plans)
     assert "BroadcastNestedLoopJoin" in plan
     assert "CartesianProduct" not in plan
 
@@ -360,8 +360,7 @@ def test_ngram_containment_asymmetry(spark):
     quoted inside a long one scores containment 1.0 in the contained
     direction while the reverse stays below threshold — and Jaccard
     at the same threshold would catch NEITHER direction. (Plan shape
-    is pinned separately via the materialize=False twin in
-    test_near_dup_lazy_plans_are_bucket_local.)"""
+    is pinned separately in test_near_dup_lazy_plans_are_bucket_local.)"""
     from dbitool_spark.ops.dedup import ngram_containment_pairs, ngram_jaccard_pairs
 
     short = "alpha beta gamma delta epsilon zeta"
@@ -379,10 +378,13 @@ def test_ngram_containment_asymmetry(spark):
 
 def test_curation_pipeline_prunes_columns(spark):
     """The five-stage composition still reads only the columns it
-    needs from every documents scan (pruning survives composition)."""
+    needs from every documents scan (pruning survives composition).
+    Read from the plans the eager call executed."""
     from dbitool_spark.plans.pipeline_ops import curation_pipeline_documents
 
-    plan = _plan(curation_pipeline_documents(spark, SF_SMOKE, materialize=False))
+    with executed_plans(spark) as plans:
+        curation_pipeline_documents(spark, SF_SMOKE)
+    plan = "\n".join(plans)
     read = [l for l in plan.splitlines() if "ReadSchema" in l]
     assert read and all("n_chars" not in l and "lang" not in l for l in read)
     assert "CartesianProduct" not in plan
@@ -431,10 +433,9 @@ def test_partsupp_fixture_shapes(spark):
 
 
 def _near_dup_family(spark) -> dict:
-    """name -> callable(materialize=...) for the near-dup family: the
+    """name -> zero-argument callable for the near-dup family: the
     dedup/similarity candidate generators over the planted perturbed
-    corpora at sf0.001, plus the registered entries that take
-    materialize= directly."""
+    corpora at sf0.001, plus the registered entries built on them."""
     from functools import partial
 
     from dbitool_spark.ops import similarity
@@ -445,18 +446,15 @@ def _near_dup_family(spark) -> dict:
     base = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     vecs = base.unionAll(llm_ops._perturbed_embeddings(base))
     family = {
-        "minhash_near_dup_pairs": lambda materialize: dedup.minhash_near_dup_pairs(
-            docs, "doc_id", "text", shingle_k=3, threshold=0.7,
-            materialize=materialize,
+        "minhash_near_dup_pairs": lambda: dedup.minhash_near_dup_pairs(
+            docs, "doc_id", "text", shingle_k=3, threshold=0.7
         ),
-        "simhash_candidates": lambda materialize: dedup.simhash_candidates(
-            docs, "doc_id", "text", max_hamming=3, materialize=materialize
+        "simhash_candidates": lambda: dedup.simhash_candidates(
+            docs, "doc_id", "text", max_hamming=3
         ),
-        "embedding_near_dup_pairs": lambda materialize: (
-            similarity.embedding_near_dup_pairs(
-                vecs, id_col="vec_id", vec_col="v", dim=64, threshold=0.95,
-                n_tables=16, bits=10, materialize=materialize,
-            )
+        "embedding_near_dup_pairs": lambda: similarity.embedding_near_dup_pairs(
+            vecs, id_col="vec_id", vec_col="v", dim=64, threshold=0.95,
+            n_tables=16, bits=10,
         ),
     }
     for fn in (
@@ -470,36 +468,20 @@ def _near_dup_family(spark) -> dict:
 
 
 def test_near_dup_lazy_plans_are_bucket_local(spark):
-    """materialize=False exposes the REAL optimized plans of the
-    near-dup family (the materialized results explain() as checkpoint
-    scans — bench fingerprints the entries' lazy twins). The scale
-    contracts asserted: parquet-rooted (not ExistingRDD), and never
-    an all-pairs CartesianProduct — every candidate generator joins
-    on bucket/shingle/band keys."""
-    try:
-        for name, make in _near_dup_family(spark).items():
-            plan = _plan(make(materialize=False))
-            assert "Scan parquet" in plan, f"{name} not parquet-rooted"
-            assert "CartesianProduct" not in plan, f"{name} all-pairs!"
-            assert "BroadcastNestedLoopJoin" not in plan, (
-                f"{name} has an unkeyed join"
-            )
-    finally:
-        # lazy mode leaves operator-internal persists caller-owned
-        spark.catalog.clearCache()
-
-
-def test_lazy_and_materialized_results_agree(spark):
-    """The lazy twin is the SAME computation — only the eager
-    checkpoint+release differs. Pin value parity on one shingle entry
-    and one embedding op so the twins can't drift from what bench
-    times."""
-    family = _near_dup_family(spark)
-    for name in ("ngram_containment_documents", "embedding_near_dup_pairs"):
-        eager = sorted(map(tuple, family[name](materialize=True).collect()))
-        lazy = sorted(map(tuple, family[name](materialize=False).collect()))
-        spark.catalog.clearCache()
-        assert eager == lazy, name
+    """The plans the near-dup family executes (their results explain()
+    as checkpoint scans, so the status store's executed plans are
+    read instead). The scale contracts asserted: parquet-rooted (not
+    ExistingRDD), and never an all-pairs CartesianProduct — every
+    candidate generator joins on bucket/shingle/band keys."""
+    for name, make in _near_dup_family(spark).items():
+        with executed_plans(spark) as plans:
+            make()
+        plan = "\n".join(plans)
+        assert "Scan parquet" in plan, f"{name} not parquet-rooted"
+        assert "CartesianProduct" not in plan, f"{name} all-pairs!"
+        assert "BroadcastNestedLoopJoin" not in plan, (
+            f"{name} has an unkeyed join"
+        )
 
 
 def test_bloom_membership_and_decontaminate_precision(spark):
@@ -766,24 +748,6 @@ def test_simhash_bit0_votes_are_signed_unit(spark):
     # and the full signature equals the word's own hash bits (single
     # voter: every bit's sign is the hash's bit value)
     assert sig == hs[w]
-
-
-def test_dedup_lazy_variants_carry_release_handles(spark):
-    """Review finding: the dedup-backed lazy twins returned bare
-    frames, so release_persists was a silent 0 and only a global
-    clearCache saved the caller. They now ride the attach/transfer
-    contract like every other lazy entry."""
-    from dbitool_spark.ops.cache import release_persists
-
-    family = _near_dup_family(spark)
-    for name, min_handles in (
-        ("minhash_near_dup_pairs", 2),   # sh + banded
-        ("ngram_containment_documents", 1),  # sh
-        ("ngram_jaccard_variants_documents", 4),  # sh+pref, sh+ix
-        ("simhash_candidates", 1),   # sig
-    ):
-        released = release_persists(family[name](materialize=False))
-        assert released >= min_handles, (name, released)
 
 
 def test_with_running_total_matches_naive_window(spark):

@@ -144,3 +144,27 @@ def test_every_plan_definition_is_reachable_from_the_registry():
         f"{len(unreachable)} plan definitions no registered entry reaches: "
         + ", ".join(unreachable)
     )
+
+
+def test_pair_operators_have_one_execution_path():
+    """No function in ops/ or plans/ takes a `materialize` parameter
+    (an eager/lazy fork of one operator), and ops/cache.py defines
+    materialize_release and nothing else: no persist handle rides on
+    a returned DataFrame."""
+    forks = []
+    for rel, src in _sources().items():
+        if not rel.startswith(("ops/", "plans/")):
+            continue
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+                a = node.args
+                params = a.posonlyargs + a.args + a.kwonlyargs
+                if any(p.arg == "materialize" for p in params):
+                    forks.append(f"{rel}:{getattr(node, 'name', '<lambda>')}")
+    assert forks == []
+    cache = ast.parse((PKG / "ops" / "cache.py").read_text())
+    defined = [
+        n.name for n in ast.walk(cache)
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+    ]
+    assert defined == ["materialize_release"]
